@@ -9,10 +9,19 @@ import org.apache.spark.sql.DataFrame
   * Contract: at-least-once, exactly like the reference (append per epoch,
   * no txn/upsert — SURVEY.md §2.9). Idempotent-upsert would key on
   * (epoch_id, partition) and is left as a deployment concern.
+  *
+  * `write` runs exactly one Spark action over `df`. `StreamRunner`'s
+  * detectors count their rows inside that action (an `Observation` on
+  * `df`) instead of running the batch twice, so the count is only known
+  * once the action has run: a sink that runs none fails the detector
+  * epoch, and a sink that runs several re-executes the batch plan each
+  * time. Every sink here does one `df.write` or `df.collect`.
   */
 trait BatchSink extends Serializable {
 
-  /** Write one micro-batch for logical table `table` at epoch `epochId`. */
+  /** Write one micro-batch for logical table `table` at epoch `epochId`,
+    * in exactly one Spark action over `df`.
+    */
   def write(df: DataFrame, epochId: Long, table: String): Unit
 }
 

@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.graft.ListenerFence
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -41,8 +44,14 @@ final class StreamRunner(
 
   /** foreachBatch writer shared by all queries (K2). The reference
     * computes each detector batch twice (count + write, no cache —
-    * SURVEY.md §3.2); we persist the batch once instead: same results,
-    * one plan execution.
+    * SURVEY.md §3.2). Here the detector's row count rides inside the
+    * write: the batch is handed to the sink under an `Observation`, so the
+    * scan, parse and filter run once, in the sink's one action
+    * ([[BatchSink]] contract). Each detector epoch is therefore exactly one
+    * Spark job on every shipped sink (`DetectorSinkSpec` counts them per
+    * batch), with nothing cached. The count settles on the listener bus
+    * after the action; [[ListenerFence]] bounds that wait, so a sink that
+    * ran no action fails the epoch instead of hanging it.
     */
   private def sinkTo(table: String, alertOnRows: Boolean = false)(df: DataFrame): StreamingQuery = {
     val base = df.writeStream
@@ -52,21 +61,20 @@ final class StreamRunner(
       .fold(base)(base.trigger)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         if (alertOnRows) {
-          batch.persist()
-          try {
-            val n = batch.count()
-            sink.write(batch, epochId, table)
-            // alert AFTER the write lands: a failed write replays the
-            // whole epoch, and alerting first would send one alert per
-            // retry (a crash between write and alert can still repeat
-            // the alert on replay — the at-least-once contract)
-            if (n > 0) alerter.alert(s"$table violations", s"epoch $epochId: $n rows")
-          } finally {
-            // unpersist on the failure path too, or every retry pins
-            // another orphaned cached batch in executor storage
-            batch.unpersist()
-            ()
-          }
+          val written = Observation()
+          sink.write(batch.observe(written, count(lit(1)).as("rows")), epochId, table)
+          // a generous bound: the bus settles the count well within a second
+          val n = ListenerFence
+            .observed(batch.sparkSession.sparkContext, written, 2.minutes)
+            .getOrElse(throw new IllegalStateException(
+              s"sink ${sink.getClass.getName} ran no Spark action over $table epoch $epochId: " +
+                "BatchSink.write must run exactly one action over its DataFrame"))
+            .getLong(0)
+          // alert AFTER the write lands: a failed write replays the
+          // whole epoch, and alerting first would send one alert per
+          // retry (a crash between write and alert can still repeat
+          // the alert on replay — the at-least-once contract)
+          if (n > 0) alerter.alert(s"$table violations", s"epoch $epochId: $n rows")
         } else sink.write(batch, epochId, table)
       }
       .queryName(table)

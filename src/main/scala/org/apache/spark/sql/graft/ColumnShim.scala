@@ -7,7 +7,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Bridge into Spark's `private[sql]` Column↔Expression converters — the
   * standard pattern for extension libraries that define native Catalyst
   * expressions (Spark 4 removed the public `Column(expr)` constructor).
-  * This is the only file outside the `graft` namespace.
+  * This package holds the only files outside the `graft` namespace.
   */
 object ColumnShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -19,6 +19,18 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, 
 
 case class DocRow(doc_id: Long, text: String)
 
+/** A replayable parquet file source of [[Ev]] rows for `StreamRunner`:
+  * MemoryStream truncates on commit and cannot feed six concurrent
+  * queries. Each `add` lands as one file, so a query that drains between
+  * adds sees each add as one epoch.
+  */
+final class EvFiles(spark: org.apache.spark.sql.SparkSession, dir: String) {
+  import spark.implicits._
+  def add(evs: Ev*): Unit = evs.toDS().coalesce(1).write.mode("append").parquet(dir)
+  def stream: org.apache.spark.sql.DataFrame =
+    spark.readStream.schema(org.apache.spark.sql.Encoders.product[Ev].schema).parquet(dir)
+}
+
 class StreamingSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
@@ -141,30 +153,41 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("detectors alert on violations and write only violating rows; clean batches don't alert") {
-    val input = MemoryStream[Ev]
+    // The production alert path: StreamRunner's detector sink, fed epoch
+    // by epoch from a replayable file source.
+    val files = new EvFiles(spark, tmpDir())
     val sink = new CollectingSink
     val alerter = new CollectingAlerter
-    val runner = new StreamRunner(spark, sink, alerter, tmpDir())
-    val q = runner.abnormalValue(input.toDF()).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", tmpDir())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epochId: Long) =>
-        val n = batch.count()
-        if (n > 0) alerter.alert("abnormal_value violations", s"epoch $epochId: $n rows")
-        sink.write(batch, epochId, "abnormal_value")
-      }
-      .start()
+    val queries = new StreamRunner(spark, sink, alerter, tmpDir(), dimDir = sfDir).startAll(files.stream)
     try {
-      input.addData(ev(1, 0, 5, 50.0), ev(2, 0, 6, 0.5), ev(3, 0, 7, 500.0))
-      q.processAllAvailable()
-      val rows = sink.rowsFor("abnormal_value")
-      assert(rows.map(_.getAs[Long]("event_id")).sorted == Seq(2L, 3L))
-      assert(alerter.alerts.size == 1 && alerter.alerts.head._2.contains("2 rows"))
+      files.add(ev(1, 0, 5, 50.0), ev(2, 0, 6, 0.5), ev(3, 0, 7, 500.0))
+      queries.foreach(_.processAllAvailable())
+      files.add(ev(4, 0, 8, 60.0)) // clean epoch for both detectors
+      queries.foreach(_.processAllAvailable())
+      files.add(
+        ev(5, 0, 9, 130.0).copy(props = """{"k": 900}"""),
+        ev(6, 0, 10, 20.0).copy(value = null))
+      queries.foreach(_.processAllAvailable())
 
-      input.addData(ev(4, 0, 8, 60.0)) // clean batch
-      q.processAllAvailable()
-      assert(alerter.alerts.size == 1, "clean batch raised an alert")
-    } finally q.stop()
+      def ids(table: String) = sink.rowsFor(table).map(_.getAs[Long]("event_id")).sorted
+      assert(ids("abnormal_value") == Seq(2L, 3L, 5L))
+      assert(ids("abnormal_discrepancy") == Seq(5L, 6L))
+      // each epoch's alert carries exactly the rows that epoch wrote; an
+      // epoch that wrote none (the clean one included) raises none
+      for (table <- Seq("abnormal_value", "abnormal_discrepancy")) {
+        val written = sink.batches.synchronized(sink.batches.filter(_._2 == table).toList)
+        assert(written.map(_._1).sorted == Seq(0L, 1L, 2L), s"$table epochs")
+        val expected = written.collect { case (e, _, rows) if rows.nonEmpty =>
+          (s"$table violations", s"epoch $e: ${rows.length} rows")
+        }
+        assert(alerter.alerts.filter(_._1 == s"$table violations").toSet == expected.toSet)
+      }
+      assert(alerter.alerts.toSet == Set(
+        ("abnormal_value violations", "epoch 0: 2 rows"),
+        ("abnormal_value violations", "epoch 2: 1 rows"),
+        ("abnormal_discrepancy violations", "epoch 2: 2 rows")))
+      assert(alerter.alerts.size == 3)
+    } finally queries.foreach(_.stop())
   }
 
   test("wire-format parse: empty strings null-normalize and cast (P1-P4)") {
@@ -386,33 +409,40 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("six-query fan-out: all queries run concurrently off one source") {
-    // A replayable source (files, like Kafka in the reference) — MemoryStream
-    // truncates on commit and cannot feed six concurrent queries.
-    val srcDir = tmpDir()
+    val files = new EvFiles(spark, tmpDir())
     val batch1 = Seq(
       ev(1, 0, 10, 50.0), ev(2, 0, 20, 0.2), ev(3, 1, 15, 30.0, "signup"),
       ev(4, 9, 0, 40.0)) // far-future event advances watermark past hours 0-1
-    batch1.toDS().write.mode("append").parquet(srcDir)
-    val source = spark.readStream.schema(batch1.toDS().schema).parquet(srcDir)
+    val batch2 = Seq(ev(5, 10, 0, 41.0)) // second epoch flushes window state
     val sink = new CollectingSink
     val alerter = new CollectingAlerter
-    val runner = new StreamRunner(spark, sink, alerter, tmpDir())
-    val queries = runner.startAll(source)
+    val runner = new StreamRunner(spark, sink, alerter, tmpDir(), dimDir = sfDir)
+    val queries = runner.startAll(files.stream)
     try {
       assert(queries.length == 6)
+      files.add(batch1: _*)
       queries.foreach(_.processAllAvailable())
-      Seq(ev(5, 10, 0, 41.0)).toDS().write.mode("append").parquet(srcDir) // second epoch flushes window state
+      files.add(batch2: _*)
       queries.foreach(_.processAllAvailable())
 
       assert(sink.rowsFor("events_full").size == 5)
       assert(sink.rowsFor("abnormal_value").map(_.getAs[Long]("event_id")) == Seq(2L))
-      assert(sink.rowsFor("avg_revenue_per_hour").nonEmpty)
-      assert(sink.rowsFor("trip_count_per_hour").nonEmpty)
-      assert(sink.rowsFor("trip_count_by_borough").nonEmpty)
-      assert(alerter.alerts.nonEmpty)
-      // windowed sinks only contain finalized (pre-watermark) windows
-      val hours = sink.rowsFor("trip_count_per_hour").map(_.getAs[String]("hour"))
-      assert(hours.forall(h => h < "09:00:00"), s"unfinalized window emitted: $hours")
+      assert(sink.rowsFor("abnormal_discrepancy").isEmpty)
+      assert(alerter.alerts.toSeq == Seq(("abnormal_value violations", "epoch 0: 1 rows")))
+      // windowed sinks hold exactly the finalized windows of their batch
+      // twins: the final watermark is 10:00 - 60 min, so every window
+      // that ends by 09:00 (all on one date) is final and no other is
+      val all = (batch1 ++ batch2).toDF()
+      val twins = Map(
+        "avg_revenue_per_hour" -> RefPipelines.hourlyAvgRevenue(all),
+        "trip_count_per_hour" -> RefPipelines.hourlyTripCount(all),
+        "trip_count_by_borough" ->
+          RefPipelines.hourlyCountByLookup(all, graft.engine.Tables.nation(spark, sfDir)))
+      for ((table, twin) <- twins) {
+        val expected = twin.filter(col("hour") < "09:00:00").collect()
+        assert(expected.nonEmpty, s"$table twin has no finalized window")
+        assert(sink.rowsFor(table).map(_.toString).sorted == expected.map(_.toString).toSeq.sorted, table)
+      }
     } finally queries.foreach(_.stop())
   }
 }
