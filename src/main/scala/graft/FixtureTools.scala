@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * the fixture with `repartition(n)` restores that property so the scan
   * parallelism the plans were designed for is measurable on this machine
   * (same rows, same schema — only the file layout changes, so no oracle
-  * re-check is needed; `tools/multifile_probe.sh` drives the comparison).
+  * re-check is needed; bench both layouts with `tools/bench_subset.sh`).
   *
   * Usage: `runMain graft.RewriteFixture <inDir> <outDir> [nFiles=32]`
   */

@@ -28,7 +28,7 @@ object Caches {
     new java.util.concurrent.ConcurrentHashMap[
       SparkSession, java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]
 
-  private[engine] def registerTransient(df: DataFrame): DataFrame = {
+  private def registerTransient(df: DataFrame): DataFrame = {
     transients
       .computeIfAbsent(df.sparkSession, _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame])
       .add(df)
@@ -67,24 +67,7 @@ object Views {
       (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String),
       DataFrame]
 
-  /** Measurement knob (A/B harness, not a production switch): pin tags
-    * listed in `SPARK_GRAFT_TRANSIENT_PINS` (comma-separated) are built
-    * as per-query TRANSIENTS — cached for the duration of the consuming
-    * query, swept by [[Caches.freeTransient]] — instead of session pins.
-    * This isolates a pin's board-wide residency cost (storage memory +
-    * GC pressure on every OTHER query) from its own amortization win,
-    * which is exactly the attribution question a bench regression poses.
-    * Unset (the default) everywhere except Bench A/B runs.
-    */
-  private val transientTags: Set[String] =
-    sys.env.get("SPARK_GRAFT_TRANSIENT_PINS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-
   def pinned(input: DataFrame, tag: String)(build: DataFrame => DataFrame): DataFrame = {
-    if (transientTags.contains(tag))
-      return Caches.registerTransient(
-        build(input).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val key = (input.sparkSession, input.queryExecution.logical.canonicalized, tag)
     val existing = pins.get(key)
     if (existing != null) return existing

@@ -731,8 +731,9 @@ object Graph {
       // round N would recompute the whole round-N−1 join/window tree per
       // read. The FINAL round's labels feed exactly one downstream
       // aggregate, so caching them is a pure materialization tax
-      // (r10 `graft.LpaProbe`: dropping it is 2.21/1.88 → 1.64/1.81 s
-      // isolated best-of-2 at sf0.1/32; the same probe shows the rounds,
+      // (r10, OPTIMIZATION_r10.md §4.4 and BASELINE.md's round-10
+      // end-of-round notes: dropping it is 2.21/1.88 → 1.64/1.81 s
+      // isolated best-of-2 at sf0.1/32; the same measurement showed the rounds,
       // not the edge build, dominate — prebuilt-edges 1.64-1.67 s — so
       // the remaining ~1.7 s is the iterative |E|-join's inherent cost
       // and a vote-edge pin would shift almost nothing).

@@ -2359,8 +2359,9 @@ object Relational {
     */
   def abcXyzMatrix(lineitem: DataFrame): DataFrame = {
     // MEASURED NEGATIVE (r6; RE-MEASURED r10 after the ANSI default and
-    // the integer widenings — `graft.AbcProbe`, interleaved best-of-2 at
-    // sf0.1/32: two_scan 1.82/2.30 s vs one_scan 2.59/2.78 s): folding
+    // the integer widenings — interleaved best-of-2 at sf0.1/32, receipt
+    // in OPTIMIZATION_r10.md §4.5 and BASELINE.md's round-10 end-of-round
+    // notes: two_scan 1.82/2.30 s vs one_scan 2.59/2.78 s): folding
     // the revenue units into the monthly grid (one lineitem scan, rev
     // rolled up from monthly + cacheT) loses ~0.6 s — the lean map-side
     // groupBy(partkey) revenue aggregate straight off the scan beats

@@ -35,12 +35,14 @@ final class StreamRunner(
     sink: BatchSink,
     alerter: Alerter,
     checkpointRoot: String,
-    watermark: String = "60 minutes",
-    trigger: Option[Trigger] = None,
-    // dimension snapshot for the stream-static lookup join; the env var
-    // is the fallback, not the only channel — StreamMain passes its
-    // [dimDir] argument through here
-    dimDir: String = sys.env.getOrElse("GRAFT_DIM_DIR", "/root/testdata/sf0.001")) {
+    // dimension snapshot for the stream-static lookup join
+    dimDir: String,
+    trigger: Option[Trigger] = None) {
+
+  /** The reference's event-time watermark (SURVEY.md §2.9); the batch
+    * twins of the windowed queries assume this value.
+    */
+  private val watermark = "60 minutes"
 
   /** foreachBatch writer shared by all queries (K2). The reference
     * computes each detector batch twice (count + write, no cache —

@@ -750,14 +750,10 @@ object Dedup {
       .distinct()
       .withColumn("cluster", col("doc_id"))
       .cacheT()
-    val dbg = sys.env.contains("GRAFT_DEBUG_CC")
-    var t0 = System.nanoTime()
     labels.count() // materialize before looping: iterations must not re-run the pair join
-    if (dbg) println(f"CC init ${(System.nanoTime() - t0) / 1e9}%.3f s")
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      t0 = System.nanoTime()
       val propagated = edges
         .join(labels, edges("src") === labels("doc_id"))
         .select(col("dst").as("doc_id"), col("cluster"))
@@ -775,7 +771,6 @@ object Dedup {
       labels = next
       converged = changed == 0
       iter += 1
-      if (dbg) println(f"CC iter $iter ${(System.nanoTime() - t0) / 1e9}%.3f s changed=$changed")
     }
     edges.unpersist()
     pairs.unpersist(false)

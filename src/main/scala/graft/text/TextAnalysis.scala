@@ -1740,31 +1740,23 @@ object TextAnalysis {
         expr("CAST(f2_est - f2_exact AS DOUBLE) / CAST(f2_exact AS DOUBLE)").as("rel_err"))
   }
 
-  /** SpaceSaving heavy-hitter guarantee surface over the corpus token
-    * stream — the self-validating-sketch pattern (like
-    * q_approx_distinct / q_hll): the deterministic output is the
+  /** SpaceSaving top-k guarantee contract over the corpus bigram stream:
+    * the k-candidate summary, the candidate count, and the three
     * guarantee booleans (estimates never undercount, overestimates stay
-    * within 2n/k, every token with true frequency above 4n/k tracked)
-    * checked against the exact counts, plus the candidate count.
+    * within 2n/k, every bigram with true frequency above 4n/k tracked)
+    * checked against the exact counts.
     *
-    * r11 (VERDICT r10 item 1): the k-candidate summary is now the
-    * grouped top-k candidate grid — the map-combined vocabulary count
-    * table's TakeOrdered top-k — instead of the
-    * [[graft.functions.SpaceSavingAggregator]] typed-Aggregator merge.
-    * The typed UDAF never enters whole-stage codegen and deserializes
-    * its Map buffer per row (ObjectHashAggregate), and the board ran
-    * its full stream reduce TWICE (candidate pass + the left-anti
-    * heavy-miss pass). The grid spelling is a valid SpaceSaving
-    * summary — est = f is the zero-slack instance of the invariant
-    * family (est ≥ f, est − f ≤ 2n/k, all k slots filled once the
-    * vocabulary exceeds k, every heavy key tracked: ≤ k/4 − 1 keys can
-    * exceed 4n/k, all inside the top-k) — so the three booleans, the
-    * candidate count and therefore the output row are bit-identical to
-    * the UDAF path, while the stream is counted ONCE by a codegen
-    * HashAggregate whose map side compresses to the vocabulary-bounded
-    * table (the same partial-aggregation shape every other top-k query
-    * here scales on). The UDAF object and its invariant spec stay as
-    * the reference implementation of the mergeable sketch.
+    * The summary is the grouped top-k candidate grid — the map-combined
+    * count table's TakeOrdered top-k — so est is the EXACT count (est = f,
+    * the zero-slack member of the SpaceSaving invariant family) and the
+    * booleans hold by construction: the query reports the contract, it
+    * does not run a sketch. The mergeable sketch,
+    * [[graft.functions.SpaceSavingAggregator]], is guarded by
+    * `SpaceSavingSketchSpec`, which folds the same bigram stream through
+    * it in merged chunks and requires its buffer to yield this row's
+    * candidate count and booleans. (r11 replaced the typed-Aggregator
+    * merge here: it never entered whole-stage codegen and ran the stream
+    * reduce twice; the row is bit-identical.)
     */
   def spaceSavingHeavyHitters(documents: DataFrame): DataFrame = {
     val k = graft.functions.SpaceSavingAggregator.Capacity.toLong

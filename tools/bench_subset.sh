@@ -1,21 +1,29 @@
 #!/usr/bin/env bash
-# Isolated-query bench (r11): run graft.Bench on a comma-separated query
-# subset against a FROZEN snapshot of target/scala-2.13/classes, so source
-# edits during a run can't swap class files under the JVM and no sbt lock
-# is held. Usage:
+# Isolated-query bench: run graft.Bench on a comma-separated query subset
+# against a FROZEN snapshot of target/scala-2.13/classes, so source edits
+# during a run can't swap class files under the JVM and no sbt lock is
+# held. The snapshot lives in a fresh temporary directory that is removed
+# on exit. Usage:
 #   tools/bench_subset.sh <outfile> <q_a,q_b,...> [cpus] [sfdir]
-# Prints the per_query line and total. Same JVM flags/heap as
-# tools/bench_ab.sh so numbers are comparable with the committed boards.
-set -u
+# Prints the per_query, total and load_index lines; Bench's stderr goes to
+# <outfile minus .out>.err. Exits non-zero when the classes are missing,
+# Bench fails, or no board line was printed. Build the classes first with
+# `sbt compile` (or `sbt Test/compile`).
+set -euo pipefail
 OUT=${1:?outfile}
 QUERIES=${2:?query list}
 CPUS=${3:-32}
 SFDIR=${4:-/root/testdata/sf0.1}
-SNAP=${SNAP_DIR:-/tmp/bench_snap}
-if [ "${REUSE_SNAP:-0}" != "1" ] || [ ! -d "$SNAP" ]; then
-  rm -rf "$SNAP"
-  cp -a /root/repo/target/scala-2.13/classes "$SNAP"
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+CLASSES="$ROOT/target/scala-2.13/classes"
+if [ ! -d "$CLASSES/graft" ]; then
+  echo "bench_subset: no compiled classes under $CLASSES; run sbt compile first" >&2
+  exit 1
 fi
+
+SNAP=$(mktemp -d)
+trap 'rm -rf "$SNAP"' EXIT
+cp -a "$CLASSES/." "$SNAP"
 
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -24,6 +32,8 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 
+# 4g matches SBT_OPTS' -Xmx for `sbt runMain graft.Bench`, the heap the
+# committed boards in BASELINE.md were measured at.
 SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$CPUS" \
 SPARK_GRAFT_QUERIES="$QUERIES" \
 java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-4g}" \

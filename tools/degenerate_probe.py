@@ -43,7 +43,7 @@ Usage: python3 tools/degenerate_probe.py [sfDir] [workDir] [q1,q2,...] [v1,v2,..
   v1,...  optional comma-separated variant subset (same caveat)
 
 Requires a compiled target/scala-2.13/classes (run `sbt compile` first);
-Spark runs via java -cp against /opt/spark/jars, same as tools/bench_ab.sh.
+Spark runs via java -cp against the Spark jars, same as tools/bench_subset.sh.
 
 Exit 0 when every (variant, query) cell is OK/BOTH_FAIL or allowlisted
 AND no cell is SLOW (>= SLOW_CELL_S wall seconds on a tiny fixture — an
