@@ -16,6 +16,16 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    // optional comma-separated subset for isolating a query's timing
+    // (SPARK_GRAFT_QUERIES=q_a,q_b); unset, every query runs. An unknown
+    // name exits before Spark starts.
+    val queries =
+      try SparkEntry.select(sys.env.get("SPARK_GRAFT_QUERIES"))
+        .map(d => d.name -> d.build).toMap
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[bench] SPARK_GRAFT_QUERIES: ${e.getMessage}")
+        sys.exit(2)
+      }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -28,15 +38,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // optional comma-separated subset for isolating a query's timing
-    // (SPARK_GRAFT_QUERIES=q_a,q_b); the driver never sets it
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-    val queries = subset match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
 
     // warm-up: JIT/codegen via a full small-sf pass; file listings + footers
     // for the target scale factor (all untimed)

@@ -9,12 +9,18 @@ object Verify {
     // subset (tools/check_oracle.py reads the filtered oracle_sql.json the
     // same way). The driver always passes exactly two args.
     val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, Option.empty[Set[String]])
-      case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
+      case Array(a, b)    => (a, b, Option.empty[String])
+      case Array(a, b, c) => (a, b, Some(c))
       case _ =>
         System.err.println("usage: Verify <sfDir> <outDir> [q_name,q_name,...]")
         sys.exit(2)
     }
+    val selected =
+      try SparkEntry.select(only)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"[verify] ${e.getMessage}")
+        sys.exit(2)
+      }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -24,9 +30,8 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected
+      .foreach { case SparkEntry.QueryDef(name, fn, _) =>
         // Per-query wall time on stderr: the degenerate probe reads the
         // "ok in" lines to flag asymptotic blowups (an O(n²) frame on a
         // 48-row fixture burns minutes while returning correct rows —
@@ -54,9 +59,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected.map(d => s"${q(d.name)}: ${q(d.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -31,19 +31,6 @@ object Stages {
   def nullNorm(c: Column, as: String): Column =
     when(c === lit(""), lit(null)).otherwise(c).as(as)
 
-  /** P7 (reference `spark_streaming.py:157-161`): event-time difference in
-    * minutes via epoch-second casts — `(cast(end as long) - cast(start as
-    * long)) / 60`.
-    */
-  def durationMinutes(start: Column, end: Column): Column =
-    (end.cast("long") - start.cast("long")) / lit(60)
-
-  /** P7 (reference `spark_streaming.py:199-206`): row-local sum of fee
-    * components (the reference's `caculated_total_amount`, typo theirs).
-    */
-  def componentSum(cols: Seq[Column]): Column =
-    cols.reduce(_ + _)
-
   /** F1 (reference `spark_streaming.py:162`): range-violation predicate. */
   def rangeViolation(c: Column, lo: Double, hi: Double): Column =
     c < lo || c > hi

@@ -30,10 +30,30 @@ class RefPipelinesSpec extends AnyFunSuite {
   }
 
   test("every query has matching oracle column names or a documented omission") {
-    for ((name, fn) <- SparkEntry.queries if SparkEntry.oracleSql.contains(name)) {
+    for ((name, fn) <- SparkEntry.queries) {
       val cols = fn(spark, sfDir).columns.toSet
       assert(cols.nonEmpty, s"$name has no columns")
     }
+  }
+
+  test("registry: unique names, non-blank oracles, one key set for queries and oracleSql") {
+    val names = SparkEntry.defs.map(_.name)
+    val dups = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate QueryDef names: ${dups.toSeq.sorted.mkString(", ")}")
+    val blank = SparkEntry.defs.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"blank oracle SQL: ${blank.mkString(", ")}")
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+  }
+
+  test("select: keeps the iteration order of queries, takes all on None, names unknown queries") {
+    val order = SparkEntry.queries.keys.toSeq
+    assert(SparkEntry.select(None).map(_.name) === order)
+    val picked = SparkEntry.select(Some(" q_topk,q_full_table ,q_rollup,q_topk"))
+    assert(picked.map(_.name) === order.filter(Set("q_topk", "q_full_table", "q_rollup")))
+    assert(picked.map(_.oracleSql) === picked.map(d => SparkEntry.oracleSql(d.name)))
+    val e = intercept[IllegalArgumentException](SparkEntry.select(Some("q_topk,q_nope,q_topkk")))
+    assert(e.getMessage === "unknown queries: q_nope, q_topkk")
+    intercept[IllegalArgumentException](SparkEntry.select(Some(" , ")))
   }
 
   test("hourly_avg_revenue: averages are cent-quantized and within value range") {

@@ -7,7 +7,8 @@
 #   tools/bench_subset.sh <outfile> <q_a,q_b,...> [cpus] [sfdir]
 # Prints the per_query, total and load_index lines; Bench's stderr goes to
 # <outfile minus .out>.err. Exits non-zero when the classes are missing,
-# Bench fails, or no board line was printed. Build the classes first with
+# Bench fails (an unknown query name included; the tail of the .err file
+# is echoed), or no board line was printed. Build the classes first with
 # `sbt compile` (or `sbt Test/compile`).
 set -euo pipefail
 OUT=${1:?outfile}
@@ -34,10 +35,15 @@ done
 
 # 4g matches SBT_OPTS' -Xmx for `sbt runMain graft.Bench`, the heap the
 # committed boards in BASELINE.md were measured at.
-SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$CPUS" \
-SPARK_GRAFT_QUERIES="$QUERIES" \
-java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-4g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$SNAP:/opt/spark/jars/*" graft.Bench \
-  > "$OUT" 2> "${OUT%.out}.err"
+ERR="${OUT%.out}.err"
+if ! SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$CPUS" \
+  SPARK_GRAFT_QUERIES="$QUERIES" \
+  java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-4g}" \
+    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+    -cp "$SNAP:/opt/spark/jars/*" graft.Bench \
+    > "$OUT" 2> "$ERR"; then
+  echo "bench_subset: Bench failed; last lines of $ERR:" >&2
+  tail -n 5 "$ERR" >&2
+  exit 1
+fi
 grep '"metric":"per_query"\|"metric":"total"\|"metric":"load_index"' "$OUT"
