@@ -15,7 +15,10 @@ import org.apache.spark.sql.types._
   *
   * Scale notes (100 TB design):
   *  - Hourly aggregations shuffle once on the window key with map-side
-  *    partial aggregation; output cardinality = #hours, tiny.
+  *    partial aggregation; output cardinality = #hours, tiny. In
+  *    streaming they need one reducer: `StreamRunner` runs them on one
+  *    state partition, since each extra one adds a state-store commit
+  *    per trigger.
   *  - The lookup join is an explicit `broadcast` (25-row dim) → zero
   *    shuffle on the fact side, mirroring reference
   *    `spark_streaming.py:311`.

@@ -12,6 +12,8 @@ import org.apache.spark.sql.SparkSession
   * Ctrl-C; checkpoints under `outDir/_checkpoints` make restarts resume
   * exactly where they left off. Swap the source for
   * [[EventSource.kafkaJsonStream]] on a cluster with the Kafka connector.
+  * The session sets no shuffle partitions: the stateless queries have no
+  * exchange, and [[StreamRunner]] pins the windowed ones to one.
   */
 object StreamMain {
   def main(args: Array[String]): Unit = {
@@ -20,7 +22,6 @@ object StreamMain {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
       .appName("graft-stream")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -22,7 +22,13 @@ import graft.engine.{RefPipelines, Stages}
   *    however late, is processed;
   *  - at-least-once into sinks (append per epoch, no dedup);
   *  - per-query checkpoints ⇒ each query re-reads the source with its own
-  *    offsets.
+  *    offsets;
+  *  - the three windowed queries run ONE shuffle/state partition
+  *    ([[windowedStatePartitions]]), fixed in each checkpoint at first
+  *    start. Map-side partial aggregation runs before the exchange, so
+  *    the one reducer sees at most (map tasks × open windows × 25
+  *    boroughs) rows per batch, whatever the input rate; more partitions
+  *    would only add state-store commits to every trigger.
   *
   * Detector analogs on the events stream: the duration detector becomes a
   * value-range violation (F1), the fee detector a discrepancy between
@@ -43,6 +49,17 @@ final class StreamRunner(
     * twins of the windowed queries assume this value.
     */
   private val watermark = "60 minutes"
+
+  /** Shuffle (and so state-store) partitions of the windowed queries.
+    * Each trigger loads, updates and commits one state store per
+    * partition, so the per-trigger cost grows with this number, not with
+    * the data. Map-side partial aggregation runs before the exchange: the
+    * single reducer sees at most (map tasks × open windows × 25 boroughs)
+    * rows per batch, whatever the input rate. A query's first batch
+    * records the value in its offset log and a restart restores it from
+    * there, so a checkpoint written at another count keeps that count.
+    */
+  private val windowedStatePartitions = 1
 
   /** foreachBatch writer shared by all queries (K2). The reference
     * computes each detector batch twice (count + write, no cache —
@@ -118,17 +135,33 @@ final class StreamRunner(
   private def watermarked(events: DataFrame): DataFrame =
     events.withWatermark("ts", watermark)
 
+  /** Start the three windowed queries with [[windowedStatePartitions]]
+    * shuffle partitions. `start()` clones the session synchronously, so the
+    * setting is briefly set on `events`' session and restored (or unset)
+    * afterwards, also when a start throws. The queries stay registered
+    * with the caller's `spark.streams`, whose listeners keep hearing them.
+    */
+  private def startWindowed(events: DataFrame): Seq[StreamingQuery] = {
+    val key = "spark.sql.shuffle.partitions"
+    val conf = events.sparkSession.conf
+    val previous = conf.getAll.get(key)
+    conf.set(key, windowedStatePartitions.toLong)
+    try Seq(
+      sinkTo("avg_revenue_per_hour")(RefPipelines.hourlyAvgRevenue(watermarked(events))),
+      sinkTo("trip_count_per_hour")(RefPipelines.hourlyTripCount(watermarked(events))),
+      sinkTo("trip_count_by_borough")(
+        RefPipelines.hourlyCountByLookup(
+          watermarked(events),
+          graft.engine.Tables.nation(spark, dimDir))))
+    finally previous.fold(conf.unset(key))(conf.set(key, _))
+  }
+
   /** Start all six queries (the reference's fan-out, `:348-353`). */
   def startAll(events: DataFrame): Seq[StreamingQuery] = Seq(
     sinkTo("events_full")(RefPipelines.fullTable(events)),
     sinkTo("abnormal_value", alertOnRows = true)(abnormalValue(events)),
-    sinkTo("abnormal_discrepancy", alertOnRows = true)(abnormalDiscrepancy(events)),
-    sinkTo("avg_revenue_per_hour")(RefPipelines.hourlyAvgRevenue(watermarked(events))),
-    sinkTo("trip_count_per_hour")(RefPipelines.hourlyTripCount(watermarked(events))),
-    sinkTo("trip_count_by_borough")(
-      RefPipelines.hourlyCountByLookup(
-        watermarked(events),
-        graft.engine.Tables.nation(spark, dimDir))))
+    sinkTo("abnormal_discrepancy", alertOnRows = true)(abnormalDiscrepancy(events))) ++
+    startWindowed(events)
 
   /** Block until termination (reference `:355-360`). */
   def awaitAll(queries: Seq[StreamingQuery]): Unit = queries.foreach(_.awaitTermination())

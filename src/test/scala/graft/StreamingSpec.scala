@@ -445,4 +445,86 @@ class StreamingSpec extends AnyFunSuite {
       }
     } finally queries.foreach(_.stop())
   }
+
+  private val windowed = Set("avg_revenue_per_hour", "trip_count_per_hour", "trip_count_by_borough")
+
+  private def statePartitions(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    q.lastProgress.stateOperators(0).numShufflePartitions
+
+  test("windowed queries run one state partition; the caller's shuffle setting is left as it was") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val files = new EvFiles(spark, tmpDir())
+    files.add(ev(1, 0, 10, 50.0), ev(2, 1, 15, 30.0, "signup"), ev(3, 3, 0, 40.0))
+    def runner() = new StreamRunner(spark, new CollectingSink, new CollectingAlerter, tmpDir(), dimDir = sfDir)
+
+    val queries = runner().startAll(files.stream)
+    try {
+      assert(spark.conf.get(key) == before)
+      queries.foreach(_.processAllAvailable())
+      assert(queries.map(_.name).toSet.intersect(windowed) == windowed)
+      for (q <- queries if windowed(q.name)) assert(statePartitions(q) == 1, q.name)
+    } finally queries.foreach(_.stop())
+
+    // a start that throws inside the pinned scope still restores the setting
+    val blocker = files.stream.writeStream
+      .format("noop")
+      .queryName("avg_revenue_per_hour")
+      .option("checkpointLocation", tmpDir())
+      .start()
+    val active = spark.streams.active.map(_.id).toSet
+    try {
+      intercept[IllegalArgumentException](runner().startAll(files.stream))
+      assert(spark.conf.get(key) == before)
+    } finally {
+      spark.streams.active.filterNot(q => active(q.id)).foreach(_.stop())
+      blocker.stop()
+    }
+
+    // and a setting that was unset stays unset
+    spark.conf.unset(key)
+    try {
+      runner().startAll(files.stream).foreach(_.stop())
+      assert(!spark.conf.getAll.contains(key))
+    } finally spark.conf.set(key, before)
+  }
+
+  test("restart: a windowed checkpoint written at four partitions keeps four through startAll") {
+    // The first run starts avg_revenue_per_hour outside startAll, at the
+    // spec session's 4 partitions; startAll then resumes it from that
+    // checkpoint. The hour-1 window holds state from both runs.
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val files = new EvFiles(spark, tmpDir())
+    val root = tmpDir()
+    val sink = new CollectingSink
+    val batch1 = Seq(ev(1, 0, 10, 50.0), ev(2, 1, 15, 30.0), ev(3, 2, 30, 20.0, "signup"))
+    val batch2 = Seq(ev(4, 1, 45, 70.0), ev(5, 4, 0, 41.0)) // 01:45 is behind 02:30 but inside the watermark
+    val table = "avg_revenue_per_hour"
+
+    files.add(batch1: _*)
+    val first = RefPipelines.hourlyAvgRevenue(files.stream.withWatermark("ts", "60 minutes"))
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation", s"$root/$table")
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, e: Long) => sink.write(b, e, table))
+      .start()
+    try first.processAllAvailable()
+    finally first.stop()
+    assert(statePartitions(first) == 4)
+    assert(sink.rowsFor(table).map(_.getAs[String]("hour")) == Seq("00:00:00"))
+
+    files.add(batch2: _*)
+    val queries = new StreamRunner(spark, sink, new CollectingAlerter, root, dimDir = sfDir).startAll(files.stream)
+    try {
+      queries.foreach(_.processAllAvailable())
+      for (q <- queries if windowed(q.name))
+        assert(statePartitions(q) == (if (q.name == table) 4 else 1), q.name)
+      // the final watermark is 03:00: windows that end by then are final
+      val expected = RefPipelines.hourlyAvgRevenue((batch1 ++ batch2).toDF())
+        .filter(col("hour") < "03:00:00")
+        .collect()
+      assert(expected.map(_.getAs[String]("hour")).sorted.toSeq == Seq("00:00:00", "01:00:00", "02:00:00"))
+      assert(sink.rowsFor(table).map(_.toString).sorted == expected.map(_.toString).toSeq.sorted)
+    } finally queries.foreach(_.stop())
+  }
 }
