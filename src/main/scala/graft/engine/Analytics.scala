@@ -4174,8 +4174,8 @@ object Analytics {
       .withColumnRenamed("rank", "rn")
       // cacheT, per quantileTransform's documented rule for this exact
       // pattern: ranked feeds BOTH the n_total aggregate and the decile
-      // aggregation — uncached, the range-shuffle + zipWithIndex
-      // pipeline would materialize twice per run
+      // aggregation — uncached, the range shuffle and the sequence
+      // numbering would run twice per run
       .cacheT()
     // corpus size from the rank's own max via a broadcast scalar (the
     // [[decileStats]] convention) — a driver-side events.count() would

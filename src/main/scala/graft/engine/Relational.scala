@@ -847,20 +847,22 @@ object Relational {
     * reaches the driver.
     */
   def heavyHittersCheck(events: DataFrame, k: Int, eps: Double = 0.001): DataFrame = {
-    val total = events.count()
     val bytes = events
       .agg(count_min_sketch(col("user_id"), lit(eps), lit(0.99), lit(42)).as("s"))
       .head().getAs[Array[Byte]]("s")
     val cms = org.apache.spark.util.sketch.CountMinSketch
       .readFrom(new java.io.ByteArrayInputStream(bytes))
     val est = udf((u: Long) => cms.estimateCount(u))
-    val tol = math.max(1L, (0.01 * total).toLong)
+    // N as a broadcast one-row count, not a build-time events.count();
+    // 0.01D keeps the tolerance in double arithmetic (a bare 0.01 is DECIMAL)
+    val tol = events.agg(expr("greatest(1L, CAST(0.01D * count(1) AS BIGINT))").as("tol"))
     rankedTopK(
       events.groupBy(col("user_id")).agg(count(lit(1)).as("n")),
       k, col("n").desc, col("user_id").asc)
+      .crossJoin(broadcast(tol))
       .withColumn(
         "cms_within_tol",
-        est(col("user_id")) >= col("n") && est(col("user_id")) - col("n") <= lit(tol))
+        est(col("user_id")) >= col("n") && est(col("user_id")) - col("n") <= col("tol"))
       .select(col("rank"), col("user_id"), col("n"), col("cms_within_tol"))
   }
 
@@ -1106,77 +1108,83 @@ object Relational {
 
   /** EXACT global ranking over a total order WITHOUT a single-partition
     * window: range-repartition on the sort key (the same distributed
-    * machinery as a global sort), sort within partitions, then assign
-    * rank = partition offset + local index, where the offsets come from
-    * one per-partition count pass (Spark's own zipWithIndex — the one
-    * sanctioned RDD drop-down: a genuinely per-partition imperative
-    * index). A `row_number() OVER (ORDER BY …)` moves the corpus to ONE
-    * partition; this shape keeps every stage parallel and produces
-    * bit-identical ranks because the sort key is a total order.
+    * machinery as a global sort), sort within partitions, then number the
+    * rows with Spark's `AttachDistributedSequence` node (partition offsets
+    * from one per-partition count pass, plus the local index). A
+    * `row_number() OVER (ORDER BY …)` moves the corpus to ONE partition;
+    * this shape keeps every stage parallel, stays a plan Catalyst sees,
+    * runs no job while it is built, and produces bit-identical ranks
+    * because the sort key is a total order.
     */
   def scalableGlobalRank(df: DataFrame, sortCols: org.apache.spark.sql.Column*): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism, 2)
+    val parts = math.max(df.sparkSession.sparkContext.defaultParallelism, 2)
     val ranged = df.repartitionByRange(parts, sortCols: _*).sortWithinPartitions(sortCols: _*)
-    val schema = org.apache.spark.sql.types.StructType(
-      ranged.schema.fields :+
-        org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.LongType, false))
-    val withIdx = ranged.rdd
-      .zipWithIndex()
-      .map { case (row, idx) => org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (idx + 1L)) }
-    spark.createDataFrame(withIdx, schema)
+    org.apache.spark.sql.graft.ColumnShim
+      .withSequenceColumn(ranged, "_seq")
+      .withColumn("rank", col("_seq") + 1L)
+      .drop("_seq")
   }
 
   /** EXACT global running sum over a total order WITHOUT a corpus-scale
-    * single-partition window — the two-level (blocked) prefix sum:
-    *
-    *   1. [[scalableGlobalRank]] assigns the global rank (all stages
-    *      parallel);
-    *   2. rows bucket into fixed-size blocks of 2²⁰ ranks; per-block sums
-    *      aggregate map-side, and ONLY the block-sum table (corpus/2²⁰
-    *      rows — a 10⁶× compression, so an effectively-bounded input)
-    *      takes a constant-key running-sum window to become block offsets;
-    *   3. offsets broadcast-join back and each block computes its local
-    *      running sum under a per-block window — ≤2²⁰ rows per partition,
-    *      all blocks in parallel.
-    *
-    * Produces `rank` and `cum` (= running sum of `valueCol` in rank
-    * order), bit-identical to `SUM() OVER (ORDER BY …)` because the sort
-    * is a total order and the values are exact integers.
+    * single-partition window: [[scalableGlobalRank]] assigns the global
+    * rank (all stages parallel) and [[blockedRunningSum]] runs the sum
+    * over it. Produces `rank` and `cum` (= running sum of `valueCol` in
+    * rank order), bit-identical to `SUM() OVER (ORDER BY …)` because the
+    * sort is a total order and the values are exact integers; callers
+    * should pass a total order so the ranks themselves are deterministic.
     */
-  def scalableCumSum(df: DataFrame, valueCol: String, sortCols: org.apache.spark.sql.Column*): DataFrame = {
+  def scalableCumSum(df: DataFrame, valueCol: String, sortCols: org.apache.spark.sql.Column*): DataFrame =
+    blockedRunningSum(scalableGlobalRank(df, sortCols: _*), Nil, "rank", col(valueCol), "cum")
+
+  /** Inclusive running sum of `value` per `groups`, in ascending order of
+    * the integer column `order`, WITHOUT a window that ever holds more
+    * than one block — the two-level (blocked) prefix sum:
+    *
+    *   1. rows bucket into blocks of 2²⁰ consecutive `order` values;
+    *      per-(group, block) sums aggregate map-side, and ONLY that
+    *      block-sum table (a 10⁶× compression of a dense key) takes a
+    *      running-sum window per group to become block offsets;
+    *   2. offsets broadcast-join back and each block computes its local
+    *      running sum under a per-(group, block) window, all blocks in
+    *      parallel.
+    *
+    * Returns `df`'s columns, in order, plus `out`. The exclusive sum is
+    * `out - value`; `value = lit(1L)` gives the running count. The input
+    * is cached once (cacheT): it feeds both the block aggregate and the
+    * probe side of the offset join, and an upstream rank must not be
+    * materialized twice. `order` should be unique within a group, or
+    * tied rows take their running sums in an arbitrary order; `value`
+    * should be non-null (coalesce it), or a block whose sum is still
+    * NULL yields NULL where the window would yield the offset.
+    */
+  private[graft] def blockedRunningSum(
+      df: DataFrame, groups: Seq[String], order: String, value: org.apache.spark.sql.Column,
+      out: String): DataFrame = {
     val block = 1L << 20
-    // cacheT: the ranked frame feeds BOTH the block-offset aggregate and
-    // the probe side of the offset join. Uncached, the range-shuffle +
-    // zipWithIndex pipeline would materialize twice per query — and,
-    // worse than the wasted work, rank consistency between the two
-    // materializations would silently depend on `sortCols` being a
-    // TOTAL order (ties could land different ranks per materialization
-    // under differing post-shuffle arrival order). One materialization
-    // removes that hazard entirely; callers should still pass a total
-    // order so the ranks themselves are deterministic.
-    val ranked = scalableGlobalRank(df, sortCols: _*)
-      .withColumn("_blk", expr(s"(rank - 1) div ${block}L"))
+    val keys = groups :+ "_blk"
+    val base = df
+      .withColumn("_blk", expr(s"`$order` div ${block}L"))
       .cacheT()
-    val offsets = ranked
-      .groupBy(col("_blk"))
-      .agg(sum(col(valueCol)).as("_bsum"))
+    val offsets = base
+      .groupBy(keys.map(col): _*)
+      .agg(sum(value).as("_bsum"))
       .withColumn(
         "_off",
         coalesce(
           sum(col("_bsum")).over(
-            Window.partitionBy(lit(1)).orderBy(col("_blk").asc)
+            Window.partitionBy((if (groups.isEmpty) Seq(lit(1)) else groups.map(col)): _*)
+              .orderBy(col("_blk").asc)
               .rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)))
-      .select(col("_blk"), col("_off"))
-    ranked
-      .join(broadcast(offsets), Seq("_blk"))
+      .select((keys :+ "_off").map(col): _*)
+    base
+      .join(broadcast(offsets), keys)
       .withColumn(
-        "cum",
-        col("_off") + sum(col(valueCol)).over(
-          Window.partitionBy(col("_blk")).orderBy(col("rank").asc)
+        out,
+        col("_off") + sum(value).over(
+          Window.partitionBy(keys.map(col): _*).orderBy(col(order).asc)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .drop("_blk", "_off")
+      .select((df.columns.toSeq :+ out).map(c => col(s"`$c`")): _*)
   }
 
   /** One-pass data-quality profile — the schema-health scan a pipeline
@@ -1267,11 +1275,10 @@ object Relational {
     * source→index map is a broadcast-sized dimension, and the output
     * order is total because (rank, source) is unique. At 100 TB there is
     * no global ordering bottleneck anywhere in the plan: the per-source
-    * rank is the blocked two-level shape (the [[scalableCumSum]] idea,
-    * per group) — local rank inside (source, 2²⁰-wide doc_id block)
-    * partitions, ≤2²⁰ rows each, plus per-source block offsets from an
-    * aggregate-bounded running count — so even a source owning most of
-    * the corpus never sorts inside one task.
+    * rank is a [[blockedRunningSum]] running count (local counts inside
+    * (source, 2²⁰-wide doc_id block) partitions plus per-source block
+    * offsets), so even a source owning most of the corpus never sorts
+    * inside one task.
     */
   def interleaveSources(documents: DataFrame): DataFrame = {
     val srcIdx = documents
@@ -1281,27 +1288,8 @@ object Relational {
         "src_idx",
         (row_number().over(Window.partitionBy(lit(1)).orderBy(col("source"))) - 1).cast("long"))
     val nDf = srcIdx.agg(count(lit(1)).as("n_sources"))
-    val block = 1L << 20
-    val base = documents
-      .select(col("doc_id"), col("source"))
-      .withColumn("_blk", expr(s"doc_id div ${block}L"))
-    val offsets = base
-      .groupBy(col("source"), col("_blk"))
-      .agg(count(lit(1)).as("_c"))
-      .withColumn(
-        "_off",
-        sum(col("_c")).over(
-          Window.partitionBy(col("source")).orderBy(col("_blk").asc)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)) - col("_c"))
-      .select(col("source"), col("_blk"), col("_off"))
-    base
-      .withColumn(
-        "_j",
-        row_number()
-          .over(Window.partitionBy(col("source"), col("_blk")).orderBy(col("doc_id").asc))
-          .cast("long"))
-      .join(broadcast(offsets), Seq("source", "_blk"))
-      .withColumn("src_rank", col("_off") + col("_j"))
+    blockedRunningSum(
+      documents.select(col("doc_id"), col("source")), Seq("source"), "doc_id", lit(1L), "src_rank")
       .join(broadcast(srcIdx), Seq("source"))
       .crossJoin(broadcast(nDf))
       .select(
@@ -1640,10 +1628,10 @@ object Relational {
     * so the transform holds its shape at any corpus size.
     */
   def quantileTransform(orders: DataFrame): DataFrame = {
-    // cacheT, per scalableCumSum's documented rule for this exact
+    // cacheT, per blockedRunningSum's documented rule for this exact
     // pattern: the ranked frame feeds BOTH the n aggregate and the
-    // transform — uncached, the range-shuffle + zipWithIndex pipeline
-    // would materialize twice per run
+    // transform — uncached, the range shuffle and the sequence numbering
+    // would run twice per run
     val ranked = scalableGlobalRank(
       orders.select(
         expr(Stages.centsSql("o_totalprice")).as("cents"), col("o_orderkey")),

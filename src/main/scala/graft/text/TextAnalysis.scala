@@ -424,25 +424,20 @@ object TextAnalysis {
     val unigrams = toksDf.select(explode(col("t")).as("w"))
     // One tokenizing pass per n-gram order; the corpus totals come from
     // the vocabulary-sized count tables (cached — they feed both the
-    // totals and the join), never a second scan of the corpus.
+    // totals and the join), never a second scan of the corpus. The totals
+    // ride in as a broadcast one-row aggregate (the tfidfTopTerms
+    // convention), not driver-side head() calls at plan-build time; an
+    // empty count table gives an empty join, as the oracle's empty top-k.
     val biCounts = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_ab")).cacheT()
     val uniCounts = unigrams.groupBy(col("w")).agg(count(lit(1)).as("n_w")).cacheT()
-    // sum over an EMPTY count table is NULL — getLong would NPE at
-    // plan-build time on a corpus with no bigrams (every doc a single
-    // token) where the oracle returns an empty top-k; 1 is a harmless
-    // stand-in denominator since the score join is empty anyway (the
-    // hitsTopK renorm isNullAt convention)
-    def totalOf(df: DataFrame, c: String): Long = {
-      val r = df.agg(sum(col(c))).head()
-      if (r.isNullAt(0)) 1L else r.getLong(0)
-    }
-    val nBi = totalOf(biCounts, "n_ab")
-    val nUni = totalOf(uniCounts, "n_w")
+    val totals = biCounts.agg(sum(col("n_ab")).as("n_bi"))
+      .crossJoin(uniCounts.agg(sum(col("n_w")).as("n_uni")))
     val scoreSql =
-      s"(CAST(n_ab AS DOUBLE) / CAST($nBi AS DOUBLE)) / " +
-        s"((CAST(n_a AS DOUBLE) / CAST($nUni AS DOUBLE)) * (CAST(n_b AS DOUBLE) / CAST($nUni AS DOUBLE)))"
+      "(CAST(n_ab AS DOUBLE) / CAST(n_bi AS DOUBLE)) / " +
+        "((CAST(n_a AS DOUBLE) / CAST(n_uni AS DOUBLE)) * (CAST(n_b AS DOUBLE) / CAST(n_uni AS DOUBLE)))"
     graft.engine.Relational.rankedTopK(
       biCounts
+        .crossJoin(broadcast(totals))
         .join(uniCounts.select(col("w").as("w1"), col("n_w").as("n_a")), "w1")
         .join(uniCounts.select(col("w").as("w2"), col("n_w").as("n_b")), "w2")
         .withColumn("pmi_ratio", expr(scoreSql)),
@@ -569,40 +564,17 @@ object TextAnalysis {
     * row per pack with its doc range and fill level.
     */
   def packSequences(documents: DataFrame, contextTokens: Int): DataFrame = {
-    // Blocked two-level per-source prefix sum (the scalableCumSum idea,
-    // per group): a running token count inside (source, 2²⁰-wide doc_id
-    // block) partitions plus per-source block offsets from an
-    // aggregate-bounded running sum — the straight per-source window
-    // would accumulate corpus/|sources| rows in one task at scale.
-    val block = 1L << 20
-    val W = org.apache.spark.sql.expressions.Window
-    // cacheT: the tokenize pass feeds two branches with different shapes
-    // (block-sum aggregate vs per-block window) — no exchange reuse
-    val base = documents
-      .withColumn("n_tokens", size(tokens(col("text"))).cast("long"))
-      .withColumn("_blk", expr(s"doc_id div ${block}L"))
-      .cacheT()
-    val offsets = base
-      .groupBy(col("source"), col("_blk"))
-      .agg(sum(col("n_tokens")).as("_bsum"))
-      .withColumn(
-        "_off",
-        coalesce(
-          sum(col("_bsum")).over(
-            W.partitionBy(col("source")).orderBy(col("_blk").asc)
-              .rowsBetween(W.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("source"), col("_blk"), col("_off"))
-    base
-      .withColumn(
-        "_local",
-        coalesce(
-          sum(col("n_tokens")).over(
-            W.partitionBy(col("source"), col("_blk")).orderBy(col("doc_id"))
-              .rowsBetween(W.unboundedPreceding, -1)),
-          lit(0L)))
-      .join(broadcast(offsets), Seq("source", "_blk"))
-      .withColumn("cum_before", col("_off") + col("_local"))
+    // per-source tokens-before-this-doc: the exclusive blocked prefix sum,
+    // so no per-source window accumulates more than one 2²⁰-id block in a
+    // task (a straight per-source window would hold corpus/|sources| rows).
+    // A NULL text (NULL n_tokens) counts as 0 tokens.
+    val nTokens = coalesce(col("n_tokens"), lit(0L))
+    graft.engine.Relational
+      .blockedRunningSum(
+        documents.select(
+          col("source"), col("doc_id"), size(tokens(col("text"))).cast("long").as("n_tokens")),
+        Seq("source"), "doc_id", nTokens, "_cum")
+      .withColumn("cum_before", col("_cum") - nTokens)
       .withColumn("pack_id", expr(s"cum_before div $contextTokens"))
       .groupBy(col("source"), col("pack_id"))
       .agg(

@@ -1,10 +1,17 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerFence
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Relational
+import graft.engine.{Caches, Relational, Tables}
 
 /** Property-style tests pinning the distributed primitives to their
   * single-partition reference spellings on many generated inputs — the
@@ -49,6 +56,71 @@ class ScalablePrimitivesPropSpec extends AnyFunSuite {
         .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("cum"))).toMap
       assert(got == expected, s"n=${data.size}")
     }
+  }
+
+  test("blockedRunningSum == SUM OVER (PARTITION BY groups ORDER BY key) across 2^20 blocks") {
+    // sparse keys in [-2^21, 2^23) fall in the blocks -2 to 7 (block 0,
+    // the keys within 2^20 of zero, is twice as wide); each case is
+    // checked to reach at least three of them
+    val rnd = new scala.util.Random(53)
+    (1 to 6).foreach { round =>
+      val nGroups = 1 + rnd.nextInt(4)
+      val data = (0 until nGroups).flatMap { g =>
+        val keys = Iterator.continually(rnd.between(-(1L << 21), 1L << 23))
+          .distinct.take(20 + rnd.nextInt(80)).toSeq
+        keys.map(kv => (s"g$g", kv, (rnd.nextInt(2001) - 1000).toLong))
+      }
+      val df = data.toDF("g", "key", "v")
+      assert(data.map(_._2 / (1L << 20)).distinct.size >= 3, s"round $round spans < 3 blocks")
+      val expected = df
+        .withColumn("cum", sum(col("v")).over(Window.partitionBy(col("g")).orderBy(col("key"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
+      val got = Relational.blockedRunningSum(df, Seq("g"), "key", col("v"), "cum")
+      assert(got.columns.toSeq == Seq("g", "key", "v", "cum"))
+      assert(got.collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap == expected,
+        s"round $round, ${data.size} rows")
+    }
+    Caches.freeTransient(spark)
+  }
+
+  test("building the rank, the running sum and bigramPmi runs no Spark job") {
+    val events = Tables.events(spark, sfDir)
+    val docs = Tables.documents(spark, sfDir)
+    // only jobs submitted from this thread while the builders run count:
+    // they carry the local property set here
+    val tag = s"build-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.build") == tag)) jobs.incrementAndGet()
+    }
+    def buildJobs(build: => DataFrame): (DataFrame, Int) = {
+      jobs.set(0)
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setLocalProperty("graft.spec.build", tag)
+      try {
+        val df = build
+        ListenerFence.await(spark.sparkContext, 1.minute)
+        (df, jobs.get)
+      } finally {
+        spark.sparkContext.setLocalProperty("graft.spec.build", null)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+    val (rank, rankJobs) =
+      buildJobs(Relational.scalableGlobalRank(events, col("value").desc, col("event_id").asc))
+    assert(rankJobs == 0)
+    val (_, cumJobs) = buildJobs(
+      Relational.scalableCumSum(events.select(col("event_id"), col("user_id")), "user_id",
+        col("event_id").asc))
+    assert(cumJobs == 0)
+    val (_, pmiJobs) = buildJobs(graft.text.TextAnalysis.bigramPmi(docs, 15))
+    assert(pmiJobs == 0)
+    val nodes = rank.queryExecution.optimizedPlan.collect { case p => p.nodeName }.toSet
+    assert(nodes.contains("AttachDistributedSequence"), nodes)
+    assert(!nodes.contains("LogicalRDD") && !nodes.contains("ExternalRDD"), nodes)
+    Caches.freeTransient(spark)
   }
 
   test("the integer NTILE fill rule == the ANSI bucket sizes for every (n≤60, k≤7)") {
