@@ -12,6 +12,25 @@ import org.apache.spark.sql.SparkSession
   * parquet footers — not first-query session start-up.
   */
 object Bench {
+
+  /** The `local[cpus]` session the board runs in. [[Explain]] and
+    * [[PlanAudit]] build the same one: partition-count-sensitive plan
+    * shapes must match the configuration the board actually runs, or an
+    * inspection can bless a plan Bench never executes.
+    */
+  def session(cpus: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      // coalesce small post-shuffle stages down to SIZE, not parallelism:
+      // with hundreds of sub-second queries the task-launch overhead of 32
+      // near-empty reducers per stage outweighs any parallelism they buy
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -26,17 +45,7 @@ object Bench {
         System.err.println(s"[bench] SPARK_GRAFT_QUERIES: ${e.getMessage}")
         sys.exit(2)
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // coalesce small post-shuffle stages down to SIZE, not parallelism:
-      // with hundreds of sub-second queries the task-launch overhead of 32
-      // near-empty reducers per stage outweighs any parallelism they buy
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // warm-up: JIT/codegen via a full small-sf pass; file listings + footers

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `runMain graft.Explain <sfDir> [queryName ...]` prints
   * the formatted physical plan of each named query (default: all). Used to
   * keep plans honest — broadcast where expected, filters pushed to scans,
@@ -11,19 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    // Same session knobs as Bench (SPARK_GRAFT_CPUS, AQE coalesce mode):
-    // partition-count-sensitive plan shapes must match the configuration
-    // the board actually runs, or the inspection can bless a plan Bench
-    // never executes.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -54,6 +54,45 @@ object Graph {
   def coOrderEdges(lineitem: DataFrame): DataFrame =
     Views.pinned(lineitem, "coOrderEdges")(buildCoOrderEdges)
 
+  /** Support threshold of the graph the structural operators read: a pair
+    * is an edge when at least this many orders carry both parts. The full
+    * co-order graph's edge count grows with corpus size while repeat-pair
+    * support keeps the strong graph sparse, so wedge and hop joins stay
+    * bounded at any scale, and results rank robust associations instead
+    * of one-off basket noise. The DuckDB oracles spell the same `w >= 2`.
+    */
+  private val SupportThreshold = 2
+
+  /** Hop horizon of the bounded traversals ([[bfsReach]], [[harmonicTopK]]).
+    * Harmonic mass sits on the sixths grid (6 div hop), exact for hops
+    * 1..3, and its report has one count column per hop.
+    */
+  private val Horizon = 3
+
+  /** The support graph: [[coOrderEdges]] pairs co-ordered at least
+    * [[SupportThreshold]] times, with their weight `w`.
+    */
+  private def supportEdges(lineitem: DataFrame): DataFrame =
+    coOrderEdges(lineitem).filter(col("w") >= SupportThreshold)
+
+  /** The support graph as a symmetric adjacency list (src, dst), both
+    * orientations of every edge, hash-partitioned and sorted on `src` and
+    * cached: the cache keeps both, so a degree aggregate on `src` and every
+    * round's join on `src` reuse the partitioning and the sort-merge join
+    * skips the edge-side sort. A per-run transient on purpose, not a pinned
+    * view: the loops re-read this small table every round, and a round-5
+    * measurement of a pinned unfiltered symmetric view (scan + filter the
+    * 2|E| pin per read) was 30-60% slower across every traversal query.
+    */
+  private def adjacency(lineitem: DataFrame): DataFrame = {
+    val e = supportEdges(lineitem)
+    e.select(col("pa").as("src"), col("pb").as("dst"))
+      .union(e.select(col("pb").as("src"), col("pa").as("dst")))
+      .repartition(col("src"))
+      .sortWithinPartitions(col("src"))
+      .cacheT()
+  }
+
   /** Stop cap on WEDGE CENTERS for the link predictors — the graph twin
     * of [[graft.text.Dedup.MaxCandidateBucket]]: a common neighbor z
     * emits C(deg(z), 2) candidate pairs, so one hub of degree 10⁶ is a
@@ -90,11 +129,9 @@ object Graph {
     * |caps| rows — no pair join anywhere, so the report itself is safe
     * to run on a graph whose wedges are NOT.
     */
-  def wedgeCapSweep(lineitem: DataFrame, minSupport: Int = 2): DataFrame = {
+  def wedgeCapSweep(lineitem: DataFrame): DataFrame = {
     val caps = WedgeSweepCaps
-    val e = coOrderEdges(lineitem)
-      .filter(col("w") >= minSupport)
-      .select(col("pa"), col("pb"))
+    val e = supportEdges(lineitem)
     val deg = e.select(col("pa").as("node"))
       .unionAll(e.select(col("pb").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -162,13 +199,13 @@ object Graph {
     * supports, so the scores are engine-identical. Pair supports come
     * from [[coOrderEdges]] (emitted in both directions — rules are
     * directional), item supports from one map-combined count, the order
-    * total from a 1-row aggregate cross-join; `minSupport` prunes the
-    * rule space before ranking, and the ranking itself is the
-    * TakeOrdered top-k — nothing corpus-sized survives past the
-    * supports.
+    * total from a 1-row aggregate cross-join; the support threshold
+    * ([[supportEdges]]) prunes the rule space before ranking, and the
+    * ranking itself is the TakeOrdered top-k — nothing corpus-sized
+    * survives past the supports.
     */
-  def associationRules(lineitem: DataFrame, k: Int, minSupport: Int = 2): DataFrame = {
-    val pairs = coOrderEdges(lineitem).filter(col("w") >= minSupport)
+  def associationRules(lineitem: DataFrame, k: Int): DataFrame = {
+    val pairs = supportEdges(lineitem)
     val both = pairs.select(col("pa").as("ant"), col("pb").as("cons"), col("w"))
       .unionByName(pairs.select(col("pb").as("ant"), col("pa").as("cons"), col("w")))
     val supp = lineitem
@@ -196,15 +233,12 @@ object Graph {
     * object; the per-node tally explodes each triangle into its three
     * corners and map-combines.
     *
-    * Triangles are counted on the SUPPORT-THRESHOLDED graph (edges
-    * co-ordered at least `minSupport` times): the full co-order graph's
-    * edge count grows with corpus size while repeat-pair support keeps
-    * the strong graph sparse, so the wedge join stays bounded at any
-    * scale — measured 40 s → sub-second at sf0.1 — and the result
-    * ranks robust associations instead of one-off basket noise.
+    * Triangles are counted on the SUPPORT-THRESHOLDED graph
+    * ([[supportEdges]]), which keeps the wedge join bounded — measured
+    * 40 s → sub-second at sf0.1 against the full co-order graph.
     */
-  def triangleTopK(lineitem: DataFrame, k: Int, minSupport: Int = 2): DataFrame = {
-    val (deg, perNode) = trianglesPerNode(lineitem, minSupport)
+  def triangleTopK(lineitem: DataFrame, k: Int): DataFrame = {
+    val (deg, perNode) = trianglesPerNode(lineitem)
     Relational
       .rankedTopK(
         perNode.join(deg, "part"),
@@ -217,12 +251,8 @@ object Graph {
     * wedge join bounded). Returns (degrees, per-node triangle counts);
     * nodes in no triangle are absent from the second frame.
     */
-  private def trianglesPerNode(
-      lineitem: DataFrame,
-      minSupport: Int): (DataFrame, DataFrame) = {
-    val e = coOrderEdges(lineitem)
-      .filter(col("w") >= minSupport)
-      .select(col("pa"), col("pb"))
+  private def trianglesPerNode(lineitem: DataFrame): (DataFrame, DataFrame) = {
+    val e = supportEdges(lineitem)
     // |V|-bounded degree table broadcasts onto both endpoints (different
     // keys — no exchange reuse without the cacheT), so the edge stream
     // reaches orientation without shuffling
@@ -263,8 +293,8 @@ object Graph {
     * [[triangleTopK]]; nodes outside any triangle left-join to 0. Output
     * is node-bounded.
     */
-  def clusteringCoefficient(lineitem: DataFrame, minSupport: Int = 2): DataFrame = {
-    val (deg, perNode) = trianglesPerNode(lineitem, minSupport)
+  def clusteringCoefficient(lineitem: DataFrame): DataFrame = {
+    val (deg, perNode) = trianglesPerNode(lineitem)
     deg
       .filter(col("d") >= 2)
       .join(perNode, Seq("part"), "left")
@@ -277,83 +307,71 @@ object Graph {
   }
 
   /** Item-to-item recommendations from co-order evidence: for every
-    * part, its top-k most co-ordered partners. The ranking window
-    * partitions per part (bounded by one node's degree, never the
-    * corpus) and Catalyst's WindowGroupLimit prunes each partition to k
-    * before the shuffle completes.
+    * part, its top-`k` (k ≤ 5) most co-ordered partners, served from the
+    * pinned [[top5Recs]] view (its (w DESC, dst ASC) rule ranks them).
     */
-  def itemRecommendations(lineitem: DataFrame, k: Int = 3): DataFrame =
-    // k ≤ 5 serves straight from the pinned top-5 rec view (identical
-    // (w DESC, dst ASC) ordering rule, so the head-k rows are the same);
-    // larger k rebuilds the window over the pinned edge list.
-    if (k <= 5)
-      top5Recs(lineitem)
-        .filter(col("rk") <= k)
-        .select(
-          col("src").as("part"), col("rk").cast("long").as("rank"),
-          col("dst").as("rec_part"), col("w"))
-    else {
-      val edges = coOrderEdges(lineitem)
-      val bidir = edges
-        .select(col("pa").as("part"), col("pb").as("rec_part"), col("w"))
-        .union(edges.select(col("pb").as("part"), col("pa").as("rec_part"), col("w")))
-      val win = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("part"))
-        .orderBy(col("w").desc, col("rec_part").asc)
-      bidir
-        .withColumn("rank", row_number().over(win).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("part"), col("rank"), col("rec_part"), col("w"))
-    }
+  def itemRecommendations(lineitem: DataFrame, k: Int = 3): DataFrame = {
+    require(k <= 5, s"itemRecommendations serves at most the pinned top 5 (got k = $k)")
+    top5Recs(lineitem)
+      .filter(col("rk") <= k)
+      .select(
+        col("src").as("part"), col("rk").cast("long").as("rank"),
+        col("dst").as("rec_part"), col("w"))
+  }
 
-  /** Bounded BFS over the support-thresholded co-order graph: hop
-    * distance from the max-degree part (ties → min key) out to `maxHops`.
-    * The frontier expands by one distributed join per hop — a FIXED
-    * number of stages, not a convergence loop — and frontiers are WALK
-    * frontiers (no per-hop anti-join against the visited set; exact hop
-    * distances fall out afterwards as min(hop) over appearances — see
-    * the loop comment below). Deliberate tradeoff: a walk frontier never
-    * shrinks (it converges to the reachable set, bounded by |V|), so
-    * there is no empty-frontier early exit and every hop joins and
-    * caches ~|reachable| rows — a measured win at the small fixed
-    * maxHops this operator targets; if maxHops ever grows, add a
-    * stop-when-no-new-min-hop check rather than resurrecting the
-    * anti-join's two reached-sized exchanges per hop. The driver loop
-    * builds the plan; no data touches the driver.
+  /** Bounded BFS over the support graph: hop distance from the
+    * max-degree part (ties → min key) out to the [[Horizon]] — the
+    * one-seed case of [[hopDistances]].
     */
-  def bfsReach(lineitem: DataFrame, maxHops: Int = 3, minSupport: Int = 2): DataFrame = {
-    val edges = coOrderEdges(lineitem).filter(col("w") >= minSupport)
-    // hash-partitioned on the hop-join key: the cache preserves it, so
-    // the degree aggregate and every hop's join reuse the partitioning
-    val bidir = edges.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(edges.select(col("pb").as("src"), col("pa").as("dst")))
-      .repartition(col("src"))
-      .sortWithinPartitions(col("src")) // cached ordering: hop SMJ skips the edge-side sort
-      .cacheT()
-    val seed = bidir
-      .groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("d"))
-      .orderBy(col("d").desc, col("node").asc)
-      .limit(1)
-      .select(col("node"))
-    // Same one-shuffle-per-hop walk-frontier shape as [[harmonicTopK]]:
-    // no per-hop anti-join — frontiers are walk frontiers, re-keyed to
-    // hash(node) so the distinct rides the exchange and the next hop's
-    // join is co-partitioned with the cached edge list; exact BFS hops
-    // fall out afterwards as min(hop) over appearances (minimal walk
-    // length = shortest-path distance), so results are unchanged.
-    var frontier = seed.cacheT()
+  def bfsReach(lineitem: DataFrame): DataFrame = {
+    val adj = adjacency(lineitem)
+    hopDistances(adj, degreeSeeds(adj, 1)).select(col("node"), col("hop"))
+  }
+
+  /** The `k` highest-degree nodes of an [[adjacency]] list (ties → min
+    * key) as a `seed` column, by distributed TakeOrdered.
+    */
+  private def degreeSeeds(adj: DataFrame, k: Int): DataFrame =
+    Relational
+      .rankedTopK(adj.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+        k, col("deg").desc, col("node").asc)
+      .select(col("node").as("seed"))
+
+  /** Hop distance (seed, node, hop) from each seed to every node within the
+    * [[Horizon]] of an [[adjacency]] list, seeds themselves at hop 0. The
+    * frontier expands by one distributed join per hop — a FIXED number of
+    * stages, not a convergence loop; the driver loop builds the plan and
+    * no data touches the driver.
+    *
+    * ONE shuffle per hop: frontiers are WALK frontiers (no per-hop
+    * anti-join against the reached set), re-keyed to hash(node) before the
+    * distinct so (a) the distinct's (seed, node) aggregation rides that
+    * partitioning (node ⊆ keys — no second exchange) and (b) the NEXT
+    * hop's node === src join is co-partitioned with the cached adjacency
+    * list for free. BFS hops are recovered exactly afterwards as min(hop)
+    * over appearances — a node's minimal walk length IS its shortest-path
+    * distance — so results (and oracle hashes) match the anti-join
+    * spelling while dropping its two reached-sized exchanges per hop;
+    * measured 2.3 → 1.75 s isolated best-of-2 at sf0.1/32 (q_harmonic).
+    * The tradeoff: a walk frontier never shrinks (it converges to the
+    * reachable set, bounded by |V|), so there is no empty-frontier early
+    * exit and every hop joins and caches ~|reachable| rows per seed — a
+    * win at this small fixed horizon; a longer one wants a
+    * stop-when-no-new-min-hop check, not the anti-join back.
+    */
+  private def hopDistances(adj: DataFrame, seeds: DataFrame): DataFrame = {
+    var frontier = seeds.select(col("seed"), col("seed").as("node")).cacheT()
     var appearances = frontier.withColumn("hop", lit(0L))
-    for (h <- 1 to maxHops) {
+    for (h <- 1 to Horizon) {
       frontier = frontier
-        .join(bidir, col("node") === col("src"))
-        .select(col("dst").as("node"))
+        .join(adj, col("node") === col("src"))
+        .select(col("seed"), col("dst").as("node"))
         .repartition(col("node"))
         .distinct()
         .cacheT()
       appearances = appearances.union(frontier.withColumn("hop", lit(h.toLong)))
     }
-    appearances.groupBy(col("node")).agg(min(col("hop")).as("hop"))
+    appearances.groupBy(col("seed"), col("node")).agg(min(col("hop")).as("hop"))
   }
 
   /** Bounded k-core peeling on the support-thresholded co-order graph:
@@ -369,10 +387,8 @@ object Graph {
   def kcorePeel(
       lineitem: DataFrame,
       k: Int = 3,
-      rounds: Int = 3,
-      minSupport: Int = 2): DataFrame = {
-    val base = coOrderEdges(lineitem)
-      .filter(col("w") >= minSupport)
+      rounds: Int = 3): DataFrame = {
+    val base = supportEdges(lineitem)
       .select(col("pa"), col("pb"))
       .cacheT()
     var edges = base
@@ -406,19 +422,17 @@ object Graph {
     * adjacency + the same wedge join per query (1.93 s + 1.74 s loaded,
     * BENCH_r07); the round-6 `candidatePairs` precedent applies — when
     * N queries share a generator differing only in read-time
-    * parameters, pin the maximal unfiltered form. The support threshold
-    * changes the edge set itself, so the pin is keyed per minSupport;
-    * k and the score choice are read-time parameters. Wedge centers
+    * parameters, pin the maximal unfiltered form; k and the score
+    * choice are read-time parameters. Wedge centers
     * ride the [[MaxWedgeDegree]] stop cap (the filter lives on the
     * |V|-bounded deg leg the weight join already carries — no extra
     * shuffle).
     */
-  private def wedgeTable(lineitem: DataFrame, minSupport: Int): DataFrame =
-    Views.pinned(lineitem, s"wedgeTable$minSupport") { li =>
+  private def wedgeTable(lineitem: DataFrame): DataFrame =
+    Views.pinned(lineitem, "wedgeTable") { li =>
       // composes on the pinned co-order edge list (~18 graph queries
       // share it), so the wedge build reads the edge pin warm
-      val e = coOrderEdges(li)
-        .filter(col("w") >= minSupport)
+      val e = supportEdges(li)
         .select(col("pa"), col("pb"))
         .cacheT()
       val adj = e.select(col("pa").as("node"), col("pb").as("nb"))
@@ -447,8 +461,8 @@ object Graph {
     * integers; one final division) and the top-k is the TakeOrdered
     * [[graft.engine.Relational.rankedTopK]] shape.
     */
-  def linkPrediction(lineitem: DataFrame, k: Int = 10, minSupport: Int = 2): DataFrame = {
-    val scored = wedgeTable(lineitem, minSupport)
+  def linkPrediction(lineitem: DataFrame, k: Int = 10): DataFrame = {
+    val scored = wedgeTable(lineitem)
       .select(
         col("a"), col("b"), col("cn"),
         expr("CAST(cn AS DOUBLE) / CAST(da + db - cn AS DOUBLE)").as("jaccard"))
@@ -463,13 +477,12 @@ object Graph {
     * contribution e_in/m − (deg/2m)² — Σ contributions is Newman's Q
     * for the brand grouping (kept per-row: the cross-community float sum
     * is the one op whose order an engine could choose). Edges are the
-    * [[coOrderEdges]] pairs with support ≥ `minSupport`; all counts are
+    * [[supportEdges]] pairs; all counts are
     * exact integers off two map-combined aggregates of the edge list,
     * and each contribution is one fixed IEEE tree.
     */
-  def brandModularity(lineitem: DataFrame, part: DataFrame, minSupport: Int = 2): DataFrame = {
-    val edges = coOrderEdges(lineitem)
-      .filter(col("w") >= minSupport)
+  def brandModularity(lineitem: DataFrame, part: DataFrame): DataFrame = {
+    val edges = supportEdges(lineitem)
       .select(col("pa"), col("pb"))
       .cacheT()
     val brands = part.select(col("p_partkey"), col("p_brand"))
@@ -509,9 +522,8 @@ object Graph {
     * [[Stages.momentStatsSql]] — bit-identical anywhere, unlike a builtin
     * corr over doubles.
     */
-  def degreeAssortativity(lineitem: DataFrame, minSupport: Int = 2): DataFrame = {
-    val edges = coOrderEdges(lineitem)
-      .filter(col("w") >= minSupport)
+  def degreeAssortativity(lineitem: DataFrame): DataFrame = {
+    val edges = supportEdges(lineitem)
       .select(col("pa"), col("pb"))
     // |V| is catalog-bounded (part keys — a dimension), so the degree
     // table broadcasts: both endpoint joins go map-side and the 2|E|
@@ -538,70 +550,18 @@ object Graph {
   }
 
   /** Truncated harmonic centrality for the `k` highest-degree seeds of
-    * the support-thresholded co-order graph: Σ 1/d over nodes within
-    * `maxHops`, with 1/d on the SIXTHS grid (6/1, 6/2, 6/3 = 6, 3, 2 —
-    * pure integers, so the cross-node sum is order-free). All-pairs
-    * harmonic centrality is |V|·BFS and off the table at corpus scale;
-    * seeding at the top-k degree nodes bounds the work to k bounded-hop
-    * frontier expansions (each hop ONE co-partitioned join + distinct on
-    * the cached edge list — the same walk-frontier shape, and the same
-    * maxHops/memory tradeoff, as [[bfsReach]]; see the loop comment
-    * below), the ego-network probe an analyst actually runs. Frontiers
-    * carry (seed, node) pairs — k× the single-source cost, never |V|×.
+    * the support graph: Σ 1/d over nodes within the [[Horizon]], with 1/d
+    * on the SIXTHS grid (6/1, 6/2, 6/3 = 6, 3, 2 — pure integers, so the
+    * cross-node sum is order-free). All-pairs harmonic centrality is
+    * |V|·BFS and off the table at corpus scale; seeding at the top-k
+    * degree nodes bounds the work to k bounded-hop frontier expansions
+    * ([[hopDistances]]), the ego-network probe an analyst actually runs.
+    * Frontiers carry (seed, node) pairs — k× the single-source cost,
+    * never |V|×.
     */
-  def harmonicTopK(
-      lineitem: DataFrame,
-      k: Int = 10,
-      maxHops: Int = 3,
-      minSupport: Int = 2): DataFrame = {
-    // the final aggregate reports per-hop counts n1..n3 and harmonic
-    // mass on the SIXTHS grid (6 div hop — exact only for hops 1..3);
-    // a larger horizon would silently mis-weight hop-4+ nodes and leave
-    // them uncounted, so reject it loudly ([[bfsReach]] is the
-    // general-maxHops traversal)
-    require(maxHops <= 3, s"harmonicTopK supports maxHops <= 3 (got $maxHops); use bfsReach for deeper horizons")
-    val edges = coOrderEdges(lineitem).filter(col("w") >= minSupport)
-    // Filtered-symmetrized TRANSIENT, deliberately not a pinned bidir
-    // view: the hop loop re-reads this small table every round, and a
-    // round-5 measurement of the pinned-unfiltered-bidir alternative
-    // (scan + filter the 2|E| pin per read) was 30-60% slower across
-    // every traversal query. Per-run filter+union+cacheT of the pinned
-    // directed edges is the winning shape for loop consumers.
-    // sortWithinPartitions: the cache keeps the ordering too, so a
-    // sort-merge hop join skips the edge-side sort every round.
-    val bidir = edges.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(edges.select(col("pb").as("src"), col("pa").as("dst")))
-      .repartition(col("src")) // cache keeps it: deg + every hop join reuse
-      .sortWithinPartitions(col("src"))
-      .cacheT()
-    val deg = bidir.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-    val seeds = Relational
-      .rankedTopK(deg, k, col("deg").desc, col("node").asc)
-      .select(col("node").as("seed"))
-    // ONE shuffle per hop: frontiers are WALK frontiers (no per-hop
-    // anti-join against the reached set), re-keyed to hash(node) before
-    // the distinct so (a) the distinct's (seed, node) aggregation rides
-    // that partitioning (node ⊆ keys — no second exchange) and (b) the
-    // NEXT hop's node===src join is co-partitioned with the cached edge
-    // list for free. BFS hops are recovered exactly afterwards as
-    // min(hop) over appearances — a node's minimal walk length IS its
-    // shortest-path distance — so results (and oracle hashes) match the
-    // anti-join spelling while dropping its two reached-sized exchanges
-    // per hop; measured 2.3 → 1.75 s isolated best-of-2 at sf0.1/32.
-    var frontier = seeds.select(col("seed"), col("seed").as("node")).cacheT()
-    var appearances = frontier.withColumn("hop", lit(0L))
-    for (h <- 1 to maxHops) {
-      frontier = frontier
-        .join(bidir, col("node") === col("src"))
-        .select(col("seed"), col("dst").as("node"))
-        .repartition(col("node"))
-        .distinct()
-        .cacheT()
-      appearances = appearances.union(frontier.withColumn("hop", lit(h.toLong)))
-    }
-    appearances
-      .groupBy(col("seed"), col("node"))
-      .agg(min(col("hop")).as("hop"))
+  def harmonicTopK(lineitem: DataFrame, k: Int = 10): DataFrame = {
+    val adj = adjacency(lineitem)
+    hopDistances(adj, degreeSeeds(adj, k))
       .filter(col("hop") > 0L)
       .groupBy(col("seed"))
       .agg(
@@ -686,45 +646,35 @@ object Graph {
     * precomputed ra_micro mass — the weight was joined onto the wedge
     * CENTER before pairing); top-k via distributed TakeOrdered.
     */
-  def resourceAllocationTopK(
-      lineitem: DataFrame,
-      k: Int = 10,
-      minSupport: Int = 2): DataFrame =
+  def resourceAllocationTopK(lineitem: DataFrame, k: Int = 10): DataFrame =
     Relational
-      .rankedTopK(wedgeTable(lineitem, minSupport), k,
+      .rankedTopK(wedgeTable(lineitem), k,
         col("ra_micro").desc, col("a").asc, col("b").asc)
       .select(col("rank"), col("a"), col("b"), col("cn"), col("ra_micro"))
 
   /** Synchronous label propagation (2 fixed rounds) on the
-    * support-thresholded co-order graph, with the deterministic update
-    * rule: a node adopts the most frequent label among itself and its
-    * neighbors, ties broken by SMALLEST label — async LPA is
-    * run-order-dependent, so the engine pins the synchronous variant
-    * both engines can replay exactly. Labels start as part keys;
-    * isolated parts (no edge ≥ minSupport) are out of scope. Each round
-    * is one co-partitioned join on the edge key plus one (node, label)
-    * count — the standard distributed LPA shape, |E| work per round.
-    * Output: community label → member count.
+    * support graph, with the deterministic update rule: a node adopts
+    * the most frequent label among itself and its neighbors, ties broken
+    * by SMALLEST label — async LPA is run-order-dependent, so the engine
+    * pins the synchronous variant both engines can replay exactly. Labels
+    * start as part keys; parts with no support edge are out of scope.
+    * Each round is one co-partitioned join on the edge key plus one
+    * (node, label) count — the standard distributed LPA shape, |E| work
+    * per round. Output: community label → member count.
     */
-  def labelPropagation(lineitem: DataFrame, minSupport: Int = 2): DataFrame = {
-    val e = coOrderEdges(lineitem)
-      .filter(col("w") >= minSupport)
-      .select(col("pa"), col("pb"))
-    // hash-partition the cached edge list on the vote-join key: the
-    // cache preserves the partitioning, so BOTH rounds' joins reuse it
-    // and only the (|V|-sized) label side shuffles per round
-    val sym = e.unionAll(e.select(col("pb").as("pa"), col("pa").as("pb")))
-      .repartition(col("pb"))
-      .sortWithinPartitions(col("pb")) // cached ordering: the per-round vote SMJ skips the edge-side sort
-      .cacheT()
-    var labels = sym.select(col("pa").as("v")).distinct().withColumn("lbl", col("v"))
+  def labelPropagation(lineitem: DataFrame): DataFrame = {
+    // the vote join keys on the adjacency list's partitioning column, so
+    // BOTH rounds' joins reuse it and only the (|V|-sized) label side
+    // shuffles per round
+    val sym = adjacency(lineitem)
+    var labels = sym.select(col("dst").as("v")).distinct().withColumn("lbl", col("v"))
     val nRounds = 2
     for (round <- 1 to nRounds) {
       // labels shares lineage with sym — qualify the self-join through
-      // explicit aliases or Spark resolves both `pb`s to one attribute
+      // explicit aliases or Spark resolves both sides' `dst` to one attribute
       val votes = sym.as("s")
-        .join(labels.as("l"), col("s.pb") === col("l.v"))
-        .select(col("s.pa").as("v"), col("l.lbl").as("lbl"))
+        .join(labels.as("l"), col("s.src") === col("l.v"))
+        .select(col("s.dst").as("v"), col("l.lbl").as("lbl"))
         .unionAll(labels)
       // cache each INTERMEDIATE round's labels (|V|-bounded): the next
       // round reads them TWICE (vote join + self-vote union) — uncached,
@@ -756,6 +706,30 @@ object Graph {
     labels
       .groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).cast("long").as("n_members"))
+  }
+
+  /** Connected components of a driver-side edge list: every endpoint
+    * mapped to its component's SMALLEST member, which the callers use as
+    * the component label. Union-find that always hangs the larger root
+    * under the smaller (so each root is its component's minimum), with
+    * path compression. Nodes in no edge are absent from the map. The
+    * small-graph fast path of [[graft.text.Dedup.nearDupClusters]] and
+    * the cell components of [[graft.similarity.Similarity.gridDensityClusters]].
+    */
+  private[graft] def componentMinima(edges: Iterable[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    edges.iterator.flatMap { case (a, b) => Iterator(a, b) }.map(n => n -> find(n)).toMap
   }
 
   /** 1/log₂(rank+1) nDCG discounts for ranks 1..5 — decimal literals
@@ -874,8 +848,8 @@ object Graph {
     * catalog participates at all. The one-row topology summary every
     * graph pipeline logs per build; three map-combined aggregates.
     */
-  def graphCensus(lineitem: DataFrame, minSupport: Int = 2): DataFrame = {
-    val e = coOrderEdges(lineitem).filter(col("w") >= minSupport).cacheT()
+  def graphCensus(lineitem: DataFrame): DataFrame = {
+    val e = supportEdges(lineitem).cacheT()
     val deg = e
       .select(explode(array(col("pa"), col("pb"))).as("part"))
       .groupBy(col("part"))
@@ -891,8 +865,8 @@ object Graph {
         col("n_edges"),
         col("n_catalog"),
         col("max_degree"),
-        // an EMPTY thresholded graph (no pair co-ordered ≥ minSupport
-        // times) still emits its one census row: density/avg_degree are
+        // an EMPTY support graph (no pair co-ordered often enough)
+        // still emits its one census row: density/avg_degree are
         // NULL via lazy integer CASEs — unguarded, Spark ANSI throws
         // DIVIDE_BY_ZERO on 0/0 where DuckDB yields NaN
         expr("""CASE WHEN n_nodes < 2 THEN NULL

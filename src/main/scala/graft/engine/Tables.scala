@@ -44,15 +44,18 @@ object Tables {
       spark.read.parquet(s"$dir/$name.parquet")
     })
 
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = load(spark, dir, "events")
-    // ts arrives as nanos-since-epoch long (fixture values are µs-aligned,
-    // so `div 1000` is lossless); integer division — a double roundtrip
-    // would lose precision above 2^53.
+  def events(spark: SparkSession, dir: String): DataFrame = microsTs(load(spark, dir, "events"))
+
+  /** Events with `ts` as a µs TIMESTAMP. Under the nanosAsLong conf that
+    * [[load]] sets, the fixture's TIMESTAMP(NANOS) `ts` arrives as a
+    * nanos-since-epoch long (values are µs-aligned, so `div 1000` is
+    * lossless; integer division — a double roundtrip would lose precision
+    * above 2^53). Frames whose `ts` is already a timestamp pass unchanged.
+    */
+  private[graft] def microsTs(raw: DataFrame): DataFrame =
     if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       raw.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
     else raw
-  }
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "customer")

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.engine.Caches.CacheOps
+import graft.engine.Graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -946,9 +947,9 @@ object Similarity {
     * components. The corpus never shuffles — one map-combined aggregate
     * compresses it to the ≤(20000/binMilli)² cell table, a CONSTANT
     * bound independent of corpus size, so the component step runs
-    * driver-side union-find on the aggregate (the [[graft.text.Dedup]]
-    * small-graph fast path; the distributed min-label loop is the
-    * fallback if the grid were ever refined past driver memory).
+    * driver-side union-find ([[Graph.componentMinima]], also the
+    * [[graft.text.Dedup]] small-graph fast path; the distributed min-label
+    * loop is the fallback if the grid were ever refined past driver memory).
     * Assumes |component| ≤ 10 per dimension (the fixture embeddings are
     * unit-ball). Per component: min-cell id, cell/point counts, and the
     * bounding box.
@@ -970,26 +971,16 @@ object Similarity {
       .map(r => (r.getAs[Long]("gx"), r.getAs[Long]("gy"), r.getAs[Long]("n")))
     def key(c: (Long, Long)): Long = (c._1 + 2L * off) * 100000L + (c._2 + 2L * off)
     val present = rows.map(r => (r._1, r._2)).toSet
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    for {
-      (gx, gy, _) <- rows
+    val root = Graph.componentMinima(for {
+      (gx, gy, _) <- rows.toSeq
       dx <- -1L to 1L; dy <- -1L to 1L
       if (dx, dy) != ((0L, 0L)) && present((gx + dx, gy + dy))
-    } {
-      val (ra, rb) = (find(key((gx, gy))), find(key((gx + dx, gy + dy))))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
+    } yield (key((gx, gy)), key((gx + dx, gy + dy))))
     val spark = embeddings.sparkSession
     import spark.implicits._
+    // a dense cell with no dense neighbour is its own component
     val labels = rows
-      .map { case (gx, gy, _) => (gx, gy, find(key((gx, gy)))) }
+      .map { case (gx, gy, _) => val k = key((gx, gy)); (gx, gy, root.getOrElse(k, k)) }
       .toSeq.toDF("gx", "gy", "ck")
     cells
       .join(broadcast(labels), Seq("gx", "gy"))

@@ -28,7 +28,6 @@ object StreamMain {
     spark.sparkContext.setLogLevel("WARN")
 
     val dimDir = args.lift(2)
-      .orElse(sys.env.get("GRAFT_DIM_DIR"))
       .getOrElse("/root/testdata/sf0.001")
     // The stream schema must describe the FILES in srcDir, not the
     // post-rebuild frame: the events fixture stores TIMESTAMP(NANOS),
@@ -36,8 +35,8 @@ object StreamMain {
     // — declaring the rebuilt TIMESTAMP schema against such files fails
     // parquet schema conversion on the first micro-batch. Read whatever
     // the files carry (falling back to the dim fixture's RAW schema when
-    // srcDir is still empty), then apply the same µs rebuild
-    // Tables.events does, so fixture-style and already-rebuilt event
+    // srcDir is still empty), then apply Tables.events' µs rebuild
+    // (Tables.microsTs), so fixture-style and already-rebuilt event
     // files both stream correctly.
     graft.engine.Tables.load(spark, dimDir, "events") // sets nanosAsLong/NTZ confs
     // Fall back to the fixture schema ONLY for the expected empty/missing
@@ -54,11 +53,7 @@ object StreamMain {
           graft.engine.Tables.load(spark, dimDir, "events").schema
       }
     val raw = spark.readStream.schema(fileSchema).parquet(srcDir)
-    val source =
-      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn(
-          "ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      else raw
+    val source = graft.engine.Tables.microsTs(raw)
     val runner = new StreamRunner(
       spark,
       new ParquetSink(outDir),

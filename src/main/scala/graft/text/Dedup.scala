@@ -1,6 +1,7 @@
 package graft.text
 
 import graft.engine.Caches.CacheOps
+import graft.engine.Graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -711,25 +712,7 @@ object Dedup {
       import spark.implicits._
       val edgeRows = pairs.as[(Long, Long)].collect()
       pairs.unpersist(false)
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edgeRows.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val labelMap = edgeRows
-        .iterator
-        .flatMap { case (a, b) => Iterator(a, b) }
-        .map(d => (d, find(d)))
-        .toSeq
-        .distinct
-      val labelDf = labelMap.toDF("doc_id", "edge_cluster")
+      val labelDf = Graph.componentMinima(edgeRows).toSeq.toDF("doc_id", "edge_cluster")
       return documents
         .select(col("doc_id"))
         .join(broadcast(labelDf), Seq("doc_id"), "left")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Random
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Graph, Tables}
@@ -120,5 +122,30 @@ class GraphOpsSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("part"), r.getAs[Long]("n_tri")))
     assert(got.toSeq == expectedTop)
     assert(got.nonEmpty && got.head._2 > 0, "fixture must contain triangles")
+  }
+
+  test("componentMinima labels every endpoint with its component's smallest member") {
+    // reference: breadth-first search from each node over the symmetric list
+    def bfsMinima(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupMap(_._1)(_._2)
+      adj.keys.map { n =>
+        val seen = scala.collection.mutable.Set(n)
+        var frontier = Seq(n)
+        while (frontier.nonEmpty) frontier = frontier.flatMap(adj).filter(seen.add)
+        n -> seen.min
+      }.toMap
+    }
+    val rnd = new Random(8)
+    val random = Seq.fill(300) {
+      val nodes = 1 + rnd.nextInt(40)
+      Seq.fill(rnd.nextInt(50))((rnd.nextInt(nodes).toLong, rnd.nextInt(nodes).toLong))
+    }
+    // a 10-node chain whose every union names the larger id first, and two
+    // chains built apart and then joined through their larger ends
+    val descendingChain = (9L to 1L by -1L).map(i => (i, i - 1))
+    val joinedChains = Seq((7L, 6L), (6L, 5L), (3L, 2L), (2L, 1L), (7L, 3L), (9L, 4L))
+    (descendingChain +: joinedChains +: random).foreach { edges =>
+      assert(Graph.componentMinima(edges) == bfsMinima(edges), edges)
+    }
   }
 }

@@ -1,7 +1,15 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerFence
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.engine.{Caches, Tables, Views}
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -34,6 +42,56 @@ class RefPipelinesSpec extends AnyFunSuite {
       val cols = fn(spark, sfDir).columns.toSet
       assert(cols.nonEmpty, s"$name has no columns")
     }
+  }
+
+  /** The builders that run Spark jobs on purpose: iterative driver loops
+    * (HITS/PageRank renorms, power iterations, connected components), a
+    * sketch or filter the driver must hold (count-min, Bloom), a grid
+    * aggregate collected for union-find, and the writes a round trip reads
+    * back. A plan-native HITS/PageRank renorm measured slower, so those
+    * loops stay.
+    */
+  private val buildJobAllowlist = Set(
+    "q_hits", "q_dedup_clusters", "q_pagerank", "q_heavy_hitters", "q_pca2",
+    "q_power_iteration", "q_bloom_prefilter", "q_grid_cluster",
+    "q_roundtrip_parquet", "q_roundtrip_csv", "q_roundtrip_json", "q_roundtrip_orc")
+
+  test("building a query fires no Spark job, except the allowlisted driver loops") {
+    // only jobs submitted from this thread while a builder runs count:
+    // they carry the local property set here
+    val tag = s"build-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.build") == tag)) jobs.incrementAndGet()
+    }
+    // a table's first load infers its parquet schema with a job; that is
+    // a once-per-session read, not part of any build, so load them first
+    RewriteFixture.tables.foreach(Tables.load(spark, sfDir, _))
+    spark.sparkContext.addSparkListener(listener)
+    val counts =
+      try SparkEntry.queries.map { case (name, fn) =>
+        // a pin materialized by an earlier build or suite would skip its
+        // builder's jobs, so every build starts without pins
+        Caches.freeTransient(spark)
+        Views.free(spark)
+        jobs.set(0)
+        spark.sparkContext.setLocalProperty("graft.spec.build", tag)
+        try fn(spark, sfDir)
+        finally spark.sparkContext.setLocalProperty("graft.spec.build", null)
+        ListenerFence.await(spark.sparkContext, 1.minute)
+        name -> jobs.get
+      }
+      finally {
+        spark.sparkContext.removeSparkListener(listener)
+        Caches.freeTransient(spark)
+        Views.free(spark)
+      }
+    val eager = counts.filter(_._2 > 0)
+    assert((eager -- buildJobAllowlist).isEmpty, s"builders that fire jobs: ${eager -- buildJobAllowlist}")
+    // the list only shrinks on purpose: an entry that no longer fires a
+    // job must leave it
+    assert(buildJobAllowlist -- eager.keySet == Set.empty)
   }
 
   test("registry: unique names, non-blank oracles, one key set for queries and oracleSql") {

@@ -15,7 +15,7 @@ class WedgeCapSpec extends AnyFunSuite {
   import SparkTestSession._
 
   /** A co-order graph with one hub of degree hubDeg (each hub–leaf edge
-    * realized as two 2-item orders, clearing the minSupport=2 default)
+    * realized as two 2-item orders, clearing the graph's support-2 threshold)
     * plus a 3-node path 31–32–33 whose center has degree 2 — the one
     * legitimate non-adjacent prediction (31, 33).
     */
