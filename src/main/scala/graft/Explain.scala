@@ -14,6 +14,9 @@ object Explain {
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      // as in Bench and Verify: a later plan must not read frames an
+      // earlier query cached
+      graft.engine.Caches.freeTransient(spark)
     }
     spark.stop()
   }
