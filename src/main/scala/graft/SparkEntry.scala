@@ -443,7 +443,7 @@ object SparkEntry {
     QueryDef("q_linreg", (s, dir) =>
       Relational.linearRegression(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
       {
-      val stats = Stages.linregSql
+      val stats = Stages.linregSql()
         .map { case (name, sql) => s"$sql AS $name" }
         .mkString(",\n                 ")
       s"""WITH m AS (
@@ -3533,7 +3533,7 @@ object SparkEntry {
          FROM f GROUP BY 1 ORDER BY event_type"""),
     QueryDef("q_kcore", (s, dir) =>
       Graph.kcorePeel(Tables.lineitem(s, dir)).orderBy("round"),
-      duckKcoreSql(3, 3, 2)),
+      duckKcoreSql(3, 3)),
     QueryDef("q_bm25", (s, dir) =>
       TextAnalysis.bm25TopDocs(Tables.documents(s, dir)).orderBy("term", "rank"),
       """WITH t AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents),
@@ -3930,7 +3930,7 @@ object SparkEntry {
          FROM f ORDER BY day_epoch"""),
     QueryDef("q_grubbs", (s, dir) =>
       Analytics.grubbsOutlier(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
                            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          mo AS (SELECT CAST(count(*) AS BIGINT) AS n_days, CAST(sum(y) AS BIGINT) AS sx,
@@ -3941,16 +3941,14 @@ object SparkEntry {
                  FROM d, mo),
          top AS (SELECT * FROM dev ORDER BY dev DESC, d ASC LIMIT 1)
          SELECT n_days, d AS day_epoch, y AS y_cents, dev AS abs_dev,
-                dev / nullif(sqrt((CAST(sxx AS DOUBLE) / CAST(n_days AS DOUBLE)
-                  - (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)))
-                  * CAST(n_days AS DOUBLE) / nullif(CAST(n_days AS DOUBLE) - 1.0, 0.0E0)), 0.0E0) AS grubbs_g
+                ${Analytics.grubbsGSql} AS grubbs_g
          FROM top ORDER BY n_days"""),
     QueryDef("q_adf", (s, dir) =>
       Analytics.dickeyFuller(Tables.events(s, dir)).orderBy("n_pairs"),
       {
-      val cxx = graft.engine.Analytics.cmomSql("sxx", "sx", "sx")
-      val cxy = graft.engine.Analytics.cmomSql("sxy", "sx", "sy")
-      val cyy = graft.engine.Analytics.cmomSql("syy", "sy", "sy")
+      val cxx = Stages.cmomSql("sxx", "sx", "sx")
+      val cxy = Stages.cmomSql("sxy", "sx", "sy")
+      val cyy = Stages.cmomSql("syy", "sy", "sy")
       val gamma = s"($cxy / nullif($cxx, 0.0E0))"
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
                             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
@@ -3968,12 +3966,12 @@ object SparkEntry {
     QueryDef("q_granger", (s, dir) =>
       Analytics.grangerF(Tables.events(s, dir)).orderBy("n_triples"),
       {
-      val cll = graft.engine.Analytics.cmomSql("sll", "sl", "sl")
-      val clx = graft.engine.Analytics.cmomSql("slx", "sl", "sx")
-      val cxx = graft.engine.Analytics.cmomSql("sxx", "sx", "sx")
-      val cly = graft.engine.Analytics.cmomSql("sly", "sl", "sy")
-      val cxy = graft.engine.Analytics.cmomSql("sxy", "sx", "sy")
-      val cyy = graft.engine.Analytics.cmomSql("syy", "sy", "sy")
+      val cll = Stages.cmomSql("sll", "sl", "sl")
+      val clx = Stages.cmomSql("slx", "sl", "sx")
+      val cxx = Stages.cmomSql("sxx", "sx", "sx")
+      val cly = Stages.cmomSql("sly", "sl", "sy")
+      val cxy = Stages.cmomSql("sxy", "sx", "sy")
+      val cyy = Stages.cmomSql("syy", "sy", "sy")
       val det = s"($cll * $cxx - $clx * $clx)"
       val b1 = s"(($cly * $cxx - $cxy * $clx) / nullif($det, 0.0E0))"
       val b2 = s"(($cll * $cxy - $clx * $cly) / nullif($det, 0.0E0))"
@@ -3998,11 +3996,11 @@ object SparkEntry {
     QueryDef("q_mediation", (s, dir) =>
       Analytics.mediation(Tables.events(s, dir)).orderBy("n_days"),
       {
-      val cxx = graft.engine.Analytics.cmomSql("sxx", "sx", "sx")
-      val cxm = graft.engine.Analytics.cmomSql("sxm", "sx", "sm")
-      val cmm = graft.engine.Analytics.cmomSql("smm", "sm", "sm")
-      val cxy = graft.engine.Analytics.cmomSql("sxy", "sx", "sy")
-      val cmy = graft.engine.Analytics.cmomSql("smy", "sm", "sy")
+      val cxx = Stages.cmomSql("sxx", "sx", "sx")
+      val cxm = Stages.cmomSql("sxm", "sx", "sm")
+      val cmm = Stages.cmomSql("smm", "sm", "sm")
+      val cxy = Stages.cmomSql("sxy", "sx", "sy")
+      val cmy = Stages.cmomSql("smy", "sm", "sy")
       val aPath = s"($cxm / nullif($cxx, 0.0E0))"
       val total = s"($cxy / nullif($cxx, 0.0E0))"
       val det = s"($cxx * $cmm - $cxm * $cxm)"
@@ -4224,18 +4222,18 @@ object SparkEntry {
     QueryDef("q_white", (s, dir) =>
       Analytics.whiteTest(Tables.events(s, dir)).orderBy("n_days"),
       {
-      val cxx = graft.engine.Analytics.cmomSql("sxx", "sx", "sx")
-      val cxy = graft.engine.Analytics.cmomSql("sxy", "sx", "sy")
+      val cxx = Stages.cmomSql("sxx", "sx", "sx")
+      val cxy = Stages.cmomSql("sxy", "sx", "sy")
       val bTxt = s"($cxy / nullif($cxx, 0.0E0))"
       val aTxt =
         s"(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) - $bTxt * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))"
       val eTxt = s"(CAST(y AS DOUBLE) - ($aTxt + $bTxt * CAST(i AS DOUBLE)))"
-      val cuu = graft.engine.Analytics.cmomSql("suu", "su", "su")
-      val cuv = graft.engine.Analytics.cmomSql("suv", "su", "sv")
-      val cvv = graft.engine.Analytics.cmomSql("svv", "sv", "sv")
-      val cuw = graft.engine.Analytics.cmomSql("suw", "su", "sw")
-      val cvw = graft.engine.Analytics.cmomSql("svw", "sv", "sw")
-      val cww = graft.engine.Analytics.cmomSql("sww", "sw", "sw")
+      val cuu = Stages.cmomSql("suu", "su", "su")
+      val cuv = Stages.cmomSql("suv", "su", "sv")
+      val cvv = Stages.cmomSql("svv", "sv", "sv")
+      val cuw = Stages.cmomSql("suw", "su", "sw")
+      val cvw = Stages.cmomSql("svw", "sv", "sw")
+      val cww = Stages.cmomSql("sww", "sw", "sw")
       val det = s"($cuu * $cvv - $cuv * $cuv)"
       val b1 = s"(($cuw * $cvv - $cvw * $cuv) / nullif($det, 0.0E0))"
       val b2 = s"(($cuu * $cvw - $cuv * $cuw) / nullif($det, 0.0E0))"
@@ -4323,8 +4321,7 @@ object SparkEntry {
         .map(r =>
           s"CAST(sum(CASE WHEN d % 7 = $r THEN y ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS s$r")
         .mkString(",\n                      ")
-      val css =
-        """(CAST(syy AS DOUBLE) - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(sy AS DOUBLE))"""
+      val css = Stages.centredSumSql("syy", "sy", "sy")
       s"""WITH d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
                              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
                       FROM events GROUP BY 1),
@@ -4369,9 +4366,9 @@ object SparkEntry {
     QueryDef("q_cointegration", (s, dir) =>
       Analytics.cointegration(Tables.events(s, dir)).orderBy("n_pairs"),
       {
-      val cxx = graft.engine.Analytics.cmomSql("sxx", "sx", "sx")
-      val cxy = graft.engine.Analytics.cmomSql("sxy", "sx", "sy")
-      val ryy = graft.engine.Analytics.cmomSql("syy", "sy", "sy")
+      val cxx = Stages.cmomSql("sxx", "sx", "sx")
+      val cxy = Stages.cmomSql("sxy", "sx", "sy")
+      val ryy = Stages.cmomSql("syy", "sy", "sy")
       val bTxt = s"($cxy / nullif($cxx, 0.0E0))"
       val aTxt =
         s"(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) - $bTxt * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))"
@@ -4401,9 +4398,9 @@ object SparkEntry {
     QueryDef("q_mahalanobis", (s, dir) =>
       Analytics.mahalanobisOutliers(Tables.events(s, dir)).orderBy("rank"),
       {
-      val cxx = graft.engine.Analytics.cmomSql("sxx", "sx", "sx")
-      val cxy = graft.engine.Analytics.cmomSql("sxy", "sx", "sy")
-      val cyy = graft.engine.Analytics.cmomSql("syy", "sy", "sy")
+      val cxx = Stages.cmomSql("sxx", "sx", "sx")
+      val cxy = Stages.cmomSql("sxy", "sx", "sy")
+      val cyy = Stages.cmomSql("syy", "sy", "sy")
       val mx = "(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"
       val my = "(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))"
       val det = s"($cxx * $cyy - $cxy * $cxy)"
@@ -4455,16 +4452,16 @@ object SparkEntry {
     QueryDef("q_var1", (s, dir) =>
       Analytics.var1(Tables.events(s, dir)).orderBy("n_triples"),
       {
-      val cll = graft.engine.Analytics.cmomSql("sll", "sl", "sl")
-      val clx = graft.engine.Analytics.cmomSql("slx", "sl", "sx")
-      val cxx = graft.engine.Analytics.cmomSql("sxx", "sx", "sx")
+      val cll = Stages.cmomSql("sll", "sl", "sl")
+      val clx = Stages.cmomSql("slx", "sl", "sx")
+      val cxx = Stages.cmomSql("sxx", "sx", "sx")
       val det0 = s"($cll * $cxx - $clx * $clx)"
       def eq(cy: String, cxy: String): (String, String) =
         (s"(($cy * $cxx - $cxy * $clx) / nullif($det0, 0.0E0))", s"(($cll * $cxy - $clx * $cy) / nullif($det0, 0.0E0))")
-      val cyl = graft.engine.Analytics.cmomSql("syl", "sl", "sy")
-      val cyx = graft.engine.Analytics.cmomSql("syx", "sx", "sy")
-      val czl = graft.engine.Analytics.cmomSql("szl", "sl", "sz")
-      val czx = graft.engine.Analytics.cmomSql("szx", "sx", "sz")
+      val cyl = Stages.cmomSql("syl", "sl", "sy")
+      val cyx = Stages.cmomSql("syx", "sx", "sy")
+      val czl = Stages.cmomSql("szl", "sl", "sz")
+      val czx = Stages.cmomSql("szx", "sx", "sz")
       val (a11, a12) = eq(cyl, cyx)
       val (a21, a22) = eq(czl, czx)
       val tr = s"($a11 + $a22)"
@@ -5112,9 +5109,9 @@ object SparkEntry {
     QueryDef("q_adstock", (s, dir) =>
       Analytics.adstockRegression(Tables.events(s, dir)).orderBy("n_days"),
       {
-      val cxx = graft.engine.Analytics.cmomSql("saa", "sa", "sa")
-      val cxy = graft.engine.Analytics.cmomSql("say", "sa", "sy")
-      val cyy = graft.engine.Analytics.cmomSql("syy", "sy", "sy")
+      val cxx = Stages.cmomSql("saa", "sa", "sa")
+      val cxy = Stages.cmomSql("say", "sa", "sy")
+      val cyy = Stages.cmomSql("syy", "sy", "sy")
       s"""WITH RECURSIVE d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
@@ -5614,7 +5611,7 @@ object SparkEntry {
     QueryDef("q_conformal", (s, dir) =>
       Analytics.conformalInterval(Tables.lineitem(s, dir)),
       {
-      val linreg = Stages.linregSql.toMap
+      val linreg = Stages.linregSql().toMap
       s"""WITH b AS (SELECT CASE WHEN CAST(CAST(concat('0x', substring(md5(concat(CAST(l_orderkey AS VARCHAR), '_', CAST(l_linenumber AS VARCHAR))), 1, 8)) AS UBIGINT) AS BIGINT) % 10 < 6 THEN 'train'
                               WHEN CAST(CAST(concat('0x', substring(md5(concat(CAST(l_orderkey AS VARCHAR), '_', CAST(l_linenumber AS VARCHAR))), 1, 8)) AS UBIGINT) AS BIGINT) % 10 < 8 THEN 'cal'
                               ELSE 'test' END AS split,
@@ -5800,7 +5797,7 @@ object SparkEntry {
          FROM nn, tt, cc, hh"""),
     QueryDef("q_paired_shift", (s, dir) =>
       Analytics.pairedShift(Tables.events(s, dir)),
-      """WITH h AS (SELECT user_id, day(CAST(ts AS TIMESTAMP)) <= 15 AS first_half,
+      s"""WITH h AS (SELECT user_id, day(CAST(ts AS TIMESTAMP)) <= 15 AS first_half,
                            CAST(count(*) AS BIGINT) AS n,
                            sum(CAST(round(value * 100) AS BIGINT)) AS s
                     FROM events GROUP BY 1, 2),
@@ -5811,8 +5808,8 @@ object SparkEntry {
          m AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(d) AS s, sum(d * d) AS q FROM d)
          SELECT n AS n_users,
                 (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / 100.0 AS mean_shift_dollars,
-                CASE WHEN n < 2 OR ((CAST(q AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(s AS DOUBLE)) / CAST(n - 1 AS DOUBLE)) <= 0 THEN NULL
-                     ELSE (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / sqrt(((CAST(q AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(s AS DOUBLE)) / CAST(n - 1 AS DOUBLE)) / CAST(n AS DOUBLE)) END AS t_stat
+                CASE WHEN n < 2 OR ${Analytics.pairedShiftVarSql} <= 0 THEN NULL
+                     ELSE (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / sqrt(${Analytics.pairedShiftVarSql} / CAST(n AS DOUBLE)) END AS t_stat
          FROM m"""),
     QueryDef("q_ess", (s, dir) =>
       Analytics.effectiveSampleSize(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
@@ -6085,7 +6082,7 @@ object SparkEntry {
     QueryDef("q_cv_linreg", (s, dir) =>
       Analytics.crossValidatedLinreg(Tables.lineitem(s, dir)).orderBy("fold"),
       {
-      val linreg = Stages.linregSql.toMap
+      val linreg = Stages.linregSql().toMap
       s"""WITH b AS (SELECT CAST(CAST(concat('0x', substring(md5(concat(CAST(l_orderkey AS VARCHAR), '_', CAST(l_linenumber AS VARCHAR))), 1, 8)) AS UBIGINT) AS BIGINT) % 5 AS fold,
                             CAST(round(l_quantity) AS BIGINT) AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
@@ -6255,14 +6252,13 @@ object SparkEntry {
     QueryDef("q_cooks", (s, dir) =>
       Analytics.cooksDistanceTopK(Tables.lineitem(s, dir)).orderBy("rank"),
       {
-      val (nD, sxD, syD, sxyD, sxxD, syyD) =
-        ("CAST(n AS DOUBLE)", "CAST(sx AS DOUBLE)", "CAST(sy AS DOUBLE)",
-          "CAST(sxy AS DOUBLE)", "CAST(sxx AS DOUBLE)", "CAST(syy AS DOUBLE)")
-      val varX = s"($sxxD / $nD - ($sxD / $nD) * ($sxD / $nD))"
-      val varY = s"($syyD / $nD - ($syD / $nD) * ($syD / $nD))"
-      val covar = s"($sxyD / $nD - ($sxD / $nD) * ($syD / $nD))"
-      val h = s"(1.0 / $nD + (CAST(x AS DOUBLE) - $sxD / $nD) * (CAST(x AS DOUBLE) - $sxD / $nD) / nullif($nD * $varX, 0.0E0))"
-      val s2 = s"(($varY - $covar * $covar / nullif($varX, 0.0E0)) * $nD / nullif($nD - 2, 0.0E0))"
+      val nD = Stages.divisorSql(nonZero = false)
+      val cxx = Stages.cmomSql("sxx", "sx", "sx", nD)
+      val cyy = Stages.cmomSql("syy", "sy", "sy", nD)
+      val cxy = Stages.cmomSql("sxy", "sx", "sy", nD)
+      val mx = Stages.meanSql("sx", nD)
+      val h = s"(1.0 / $nD + (CAST(x AS DOUBLE) - $mx) * (CAST(x AS DOUBLE) - $mx) / nullif($nD * $cxx, 0.0E0))"
+      val s2 = s"(($cyy - $cxy * $cxy / nullif($cxx, 0.0E0)) * $nD / nullif($nD - 2, 0.0E0))"
       val cooks =
         s"((${Stages.residualSql} * ${Stages.residualSql}) / (2.0 * $s2) * $h / ((1.0 - $h) * (1.0 - $h)))"
       s"""WITH b AS (SELECT l_orderkey, l_linenumber,
@@ -6321,14 +6317,7 @@ object SparkEntry {
     QueryDef("q_skew_kurt", (s, dir) =>
       Analytics.skewKurtosis(Tables.events(s, dir)).orderBy("event_type"),
       {
-      val (n, s1, s2, s3, s4) =
-        ("CAST(n AS DOUBLE)", "CAST(s1 AS DOUBLE)", "CAST(s2 AS DOUBLE)",
-          "CAST(s3 AS DOUBLE)", "CAST(s4 AS DOUBLE)")
-      val mu = s"($s1 / $n)"
-      val m2 = s"($s2 / $n - $mu * $mu)"
-      val m3 = s"($s3 / $n - 3 * $mu * ($s2 / $n) + 2 * $mu * $mu * $mu)"
-      val m4 =
-        s"($s4 / $n - 4 * $mu * ($s3 / $n) + 6 * $mu * $mu * ($s2 / $n) - 3 * $mu * $mu * $mu * $mu)"
+      val (mu, m2, m3, m4) = Stages.centralMomentsSql
       s"""WITH b AS (SELECT event_type, CAST(round(value) AS BIGINT) AS y FROM events),
          m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(y) AS BIGINT) AS s1, CAST(sum(y * y) AS BIGINT) AS s2,
@@ -6343,13 +6332,11 @@ object SparkEntry {
     QueryDef("q_wls", (s, dir) =>
       Analytics.weightedLinreg(Tables.lineitem(s, dir)),
       {
-      val (sw, swx, swy, swxx, swxy) =
-        ("CAST(sw AS DOUBLE)", "CAST(swx AS DOUBLE)", "CAST(swy AS DOUBLE)",
-          "CAST(swxx AS DOUBLE)", "CAST(swxy AS DOUBLE)")
-      val mx = s"($swx / $sw)"
-      val my = s"($swy / $sw)"
-      val varX = s"($swxx / $sw - $mx * $mx)"
-      val covar = s"($swxy / $sw - $mx * $my)"
+      val sw = Stages.divisorSql("sw", nonZero = false)
+      val mx = s"(${Stages.meanSql("swx", sw)})"
+      val my = s"(${Stages.meanSql("swy", sw)})"
+      val cxx = Stages.cmomSql("swxx", "swx", "swx", sw)
+      val cxy = Stages.cmomSql("swxy", "swx", "swy", sw)
       s"""WITH b AS (SELECT CAST(round(l_quantity) AS BIGINT) AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
                      FROM lineitem),
@@ -6359,8 +6346,8 @@ object SparkEntry {
                       CAST(sum(x * x * y) AS BIGINT) AS swxy
                FROM b)
          SELECT n, sw,
-                CASE WHEN $varX = 0 THEN NULL ELSE $covar / $varX END AS slope,
-                CASE WHEN $varX = 0 THEN NULL ELSE $my - ($covar / $varX) * $mx END AS intercept
+                CASE WHEN $cxx = 0 THEN NULL ELSE $cxy / $cxx END AS slope,
+                CASE WHEN $cxx = 0 THEN NULL ELSE $my - ($cxy / $cxx) * $mx END AS intercept
          FROM m"""
     }),
     QueryDef("q_price_index", (s, dir) =>
@@ -6948,14 +6935,7 @@ object SparkEntry {
     QueryDef("q_jarque_bera", (s, dir) =>
       Analytics.jarqueBera(Tables.events(s, dir)).orderBy("event_type"),
       {
-      val (n, s1, s2, s3, s4) =
-        ("CAST(n AS DOUBLE)", "CAST(s1 AS DOUBLE)", "CAST(s2 AS DOUBLE)",
-          "CAST(s3 AS DOUBLE)", "CAST(s4 AS DOUBLE)")
-      val mu = s"($s1 / $n)"
-      val m2 = s"($s2 / $n - $mu * $mu)"
-      val m3 = s"($s3 / $n - 3 * $mu * ($s2 / $n) + 2 * $mu * $mu * $mu)"
-      val m4 =
-        s"($s4 / $n - 4 * $mu * ($s3 / $n) + 6 * $mu * $mu * ($s2 / $n) - 3 * $mu * $mu * $mu * $mu)"
+      val (mu, m2, m3, m4) = Stages.centralMomentsSql
       val skew = s"($m3 / ($m2 * sqrt($m2)))"
       val exk = s"($m4 / ($m2 * $m2) - 3)"
       s"""WITH b AS (SELECT event_type, CAST(round(value) AS BIGINT) AS y FROM events),
@@ -6967,7 +6947,7 @@ object SparkEntry {
          SELECT event_type, n,
                 CASE WHEN $m2 <= 0 THEN NULL ELSE $skew END AS skewness,
                 CASE WHEN $m2 <= 0 THEN NULL ELSE $exk END AS excess_kurtosis,
-                CASE WHEN $m2 <= 0 THEN NULL ELSE $n / 6.0 * ($skew * $skew + $exk * $exk / 4.0) END AS jb
+                CASE WHEN $m2 <= 0 THEN NULL ELSE ${Stages.divisorSql(nonZero = false)} / 6.0 * ($skew * $skew + $exk * $exk / 4.0) END AS jb
          FROM m ORDER BY event_type"""
     }),
     QueryDef("q_quantile_disc", (s, dir) =>
@@ -7228,9 +7208,7 @@ object SparkEntry {
     QueryDef("q_neyman", (s, dir) =>
       Inference.neymanAllocation(Tables.events(s, dir)).orderBy("event_type"),
       {
-      val sd =
-        """sqrt((CAST(q AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(s AS DOUBLE))
-              / nullif(CAST(n - 1 AS DOUBLE), 0.0E0))"""
+      val sd = s"sqrt(${Stages.sampleCmomSql("q", "s", "s")})"
       s"""WITH b AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events),
          g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS s,
                       CAST(sum(cents * cents) AS BIGINT) AS q
@@ -7321,9 +7299,7 @@ object SparkEntry {
     QueryDef("q_burstiness", (s, dir) =>
       Analytics.burstiness(Tables.events(s, dir)).orderBy("event_type"),
       {
-      val sd =
-        """sqrt((CAST(q AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(n_gaps AS DOUBLE)) * CAST(s AS DOUBLE))
-            / nullif(CAST(n_gaps - 1 AS DOUBLE), 0.0E0))"""
+      val sd = Analytics.burstSdSql
       s"""WITH b AS (SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS t, event_id
                      FROM events),
          g AS (SELECT event_type,
@@ -7388,10 +7364,8 @@ object SparkEntry {
     QueryDef("q_cpk", (s, dir) =>
       Inference.processCapability(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
       {
-      val sd =
-        """sqrt((CAST(q AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(s AS DOUBLE))
-              / nullif(CAST(n - 1 AS DOUBLE), 0.0E0))"""
-      val mu = "(CAST(s AS DOUBLE) / CAST(n AS DOUBLE))"
+      val sd = s"sqrt(${Stages.sampleCmomSql("q", "s", "s")})"
+      val mu = s"(${Stages.meanSql("s", Stages.divisorSql(nonZero = false))})"
       s"""WITH b AS (SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
                      FROM lineitem),
          g AS (SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS s,
@@ -8190,22 +8164,25 @@ object SparkEntry {
         ss AS (SELECT den.n, den.see, w.* FROM den, w)"""
   }
 
-  /** DuckDB k-core peel, generated: the co-order edge build followed by
-    * `rounds` unrolled (degree → keep → prune) CTE stages with a
-    * per-round count report — the oracle twin of
-    * [[graft.engine.Graph.kcorePeel]].
+  /** DuckDB k-core peel, generated: the support-2 co-order edge build
+    * followed by `rounds` unrolled (degree → keep → prune) CTE stages
+    * with a per-round count report — the oracle twin of
+    * [[graft.engine.Graph.kcorePeel]]. The edge and kept-node CTEs are
+    * MATERIALIZED: DuckDB otherwise inlines a CTE once per reference,
+    * and the rounds nest, so the pair self-join would be recomputed a
+    * number of times that grows with every round.
     */
-  private def duckKcoreSql(k: Int, rounds: Int, minSupport: Int): String = {
+  private def duckKcoreSql(k: Int, rounds: Int): String = {
     val base =
       s"""WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         e0 AS (SELECT a.pk AS pa, b.pk AS pb FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-                GROUP BY 1, 2 HAVING count(*) >= $minSupport)"""
+         e0 AS MATERIALIZED (SELECT a.pk AS pa, b.pk AS pb FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
+                GROUP BY 1, 2 HAVING count(*) >= 2)"""
     val stages = (1 to rounds).map { r =>
       s""", d$r AS (SELECT node, count(*) AS deg
                 FROM (SELECT pa AS node FROM e${r - 1} UNION ALL SELECT pb FROM e${r - 1})
                 GROUP BY 1),
-         k$r AS (SELECT node FROM d$r WHERE deg >= $k),
-         e$r AS (SELECT pa, pb FROM e${r - 1}
+         k$r AS MATERIALIZED (SELECT node FROM d$r WHERE deg >= $k),
+         e$r AS MATERIALIZED (SELECT pa, pb FROM e${r - 1}
                  WHERE pa IN (SELECT node FROM k$r) AND pb IN (SELECT node FROM k$r)),
          rep$r AS (SELECT CAST($r AS BIGINT) AS round,
                           (SELECT CAST(count(*) AS BIGINT) FROM k$r) AS n_nodes,

@@ -1,6 +1,7 @@
 package graft.engine
 
 import graft.engine.Caches.CacheOps
+import graft.engine.Stages.cmomSql
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -553,14 +554,9 @@ object Analytics {
       .as("a")
       .join(daily.as("b"), col("b.day") === col("a.day") + 1)
       .select(col("a.cnt").as("x"), col("b.cnt").as("y"))
+    val sums = Stages.bivariateSums(col("x"), col("y"))
     pairs
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         Seq(col("n").as("n_pairs")) ++
           Stages.momentStatsSql
@@ -589,6 +585,7 @@ object Analytics {
         sum(expr(Stages.centsSql("value"))).as("cents"),
         count(lit(1)).as("cnt"))
     val lags = events.sparkSession.range(0, maxLag + 1).select(col("id").as("lag"))
+    val sums = Stages.bivariateSums(col("a.cnt"), col("b.cents"), wide = true)
     hourly
       .as("a")
       .crossJoin(broadcast(lags))
@@ -596,13 +593,7 @@ object Analytics {
         hourly.as("b"),
         col("b.hour") === col("a.hour") + col("lag"))
       .groupBy(col("lag"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("a.cnt")).as("sx"),
-        sum(col("b.cents")).as("sy"),
-        sum(expr("CAST(a.cnt AS DECIMAL(38,0)) * b.cents")).as("sxy"),
-        sum(expr("CAST(a.cnt AS DECIMAL(38,0)) * a.cnt")).as("sxx"),
-        sum(expr("CAST(b.cents AS DECIMAL(38,0)) * b.cents")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         Seq(col("lag"), col("n").as("n_pairs")) ++
           Stages.momentStatsSql
@@ -633,28 +624,22 @@ object Analytics {
     // Callers wanting calendar semantics should densify the hour grid
     // first (the rollingSums rangeBetween treatment).
     val w = Window.orderBy(col("hour")).rowsBetween(-(span - 1), 0)
-    hourly
+    val bands = hourly
       .withColumn("n_win", count(lit(1)).over(w))
       .withColumn("s_win", sum(col("cents")).over(w))
       // DECIMAL(38,0) — 24 squared hourly-cents terms wrap BIGINT on
       // realistic volumes (oracle twin: HUGEINT)
       .withColumn("ss_win", sum(expr("CAST(cents AS DECIMAL(38,0)) * cents")).over(w))
+    val n = Stages.divisorSql("n_win", nonZero = false)
+    val ma = Stages.meanSql("s_win", n)
+    val sd = s"sqrt(${cmomSql("ss_win", "s_win", "s_win", n)})"
+    bands
       .select(
         col("hour"), col("cents"), col("n_win"),
-        expr("CAST(s_win AS DOUBLE) / CAST(n_win AS DOUBLE)").as("ma"),
-        expr("""sqrt(CAST(ss_win AS DOUBLE) / CAST(n_win AS DOUBLE)
-                - (CAST(s_win AS DOUBLE) / CAST(n_win AS DOUBLE))
-                  * (CAST(s_win AS DOUBLE) / CAST(n_win AS DOUBLE)))""").as("sd"),
-        expr("""CASE WHEN CAST(cents AS DOUBLE) >
-                       CAST(s_win AS DOUBLE) / CAST(n_win AS DOUBLE)
-                       + 2 * sqrt(CAST(ss_win AS DOUBLE) / CAST(n_win AS DOUBLE)
-                         - (CAST(s_win AS DOUBLE) / CAST(n_win AS DOUBLE))
-                           * (CAST(s_win AS DOUBLE) / CAST(n_win AS DOUBLE))) THEN 1
-                     WHEN CAST(cents AS DOUBLE) <
-                       CAST(s_win AS DOUBLE) / CAST(n_win AS DOUBLE)
-                       - 2 * sqrt(CAST(ss_win AS DOUBLE) / CAST(n_win AS DOUBLE)
-                         - (CAST(s_win AS DOUBLE) / CAST(n_win AS DOUBLE))
-                           * (CAST(s_win AS DOUBLE) / CAST(n_win AS DOUBLE))) THEN -1
+        expr(ma).as("ma"),
+        expr(sd).as("sd"),
+        expr(s"""CASE WHEN CAST(cents AS DOUBLE) > $ma + 2 * $sd THEN 1
+                     WHEN CAST(cents AS DOUBLE) < $ma - 2 * $sd THEN -1
                      ELSE 0 END""").cast("long").as("signal"))
   }
 
@@ -733,14 +718,13 @@ object Analytics {
       count(lit(1)).as("n"),
       sum(col("cnt")).as("s"),
       sum(col("cnt") * col("cnt")).as("ss"))
+    val n = Stages.divisorSql(nonZero = false)
     hourly
       .crossJoin(broadcast(stats))
       .withColumn(
         "z",
-        expr("""(CAST(cnt AS DOUBLE) - CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                / nullif(sqrt(CAST(ss AS DOUBLE) / CAST(n AS DOUBLE)
-                  - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                    * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))), 0.0E0)"""))
+        expr(s"""(CAST(cnt AS DOUBLE) - ${Stages.meanSql("s", n)})
+                / nullif(sqrt(${cmomSql("ss", "s", "s", n)}), 0.0E0)"""))
       .select(
         col("hour"), col("cnt"), col("z"),
         expr("""CASE WHEN z < -0.6745 THEN 'a' WHEN z < 0.0 THEN 'b'
@@ -1283,14 +1267,9 @@ object Analytics {
         sum(when(col("rel") <= 1L, col("cents")).otherwise(0L)).as("pre"),
         sum(when(col("rel") >= 3L && col("rel") <= 4L, col("cents")).otherwise(0L))
           .as("post"))
+    val sums = Stages.bivariateSums(col("pre"), col("post"))
     perUser
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("pre")).as("sx"),
-        sum(col("post")).as("sy"),
-        sum(col("pre") * col("post")).as("sxy"),
-        sum(col("pre") * col("pre")).as("sxx"),
-        sum(col("post") * col("post")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         Seq(col("n").as("n_users")) ++
           (Stages.momentStatsSql.filter(_._1 == "corr_xy") ++ Stages.cupedSql)
@@ -3003,14 +2982,10 @@ object Analytics {
           .as("split"),
         expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
         expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y")))
+    val sums = Stages.bivariateSums(col("x"), col("y"))
     val stats = base
       .filter(col("split") === "train")
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
     // PINNED (not transient): split fractions and the OLS spec are fixed,
     // so the holdout-with-residuals frame is parameter-free per corpus —
     // the second table the conformal deployment materializes alongside
@@ -3040,8 +3015,8 @@ object Analytics {
         sum(when(col("abs_resid") <= col("qhat_dollars"), 1L).otherwise(0L)).as("n_covered"))
     val fit = stats.select(
       col("n").as("n_train"),
-      expr(Stages.linregSql.toMap.apply("slope")).as("slope"),
-      expr(Stages.linregSql.toMap.apply("intercept")).as("intercept"))
+      expr(Stages.linregSql().toMap.apply("slope")).as("slope"),
+      expr(Stages.linregSql().toMap.apply("intercept")).as("intercept"))
     fit
       .crossJoin(broadcast(nCal))
       .crossJoin(broadcast(qhat))
@@ -3172,15 +3147,12 @@ object Analytics {
     * DOUBLE/0 where DuckDB emits ±inf; the shared guard is the
     * cross-engine alignment — r10 degenerate probe).
     */
-  private def welchVarSql(sfx: String): String =
-    s"((CAST(q$sfx AS DOUBLE) - (CAST(s$sfx AS DOUBLE) / nullif(CAST(n$sfx AS DOUBLE), 0.0E0)) * CAST(s$sfx AS DOUBLE)) / nullif(CAST(n$sfx - 1 AS DOUBLE), 0.0E0))"
+  private[engine] def welchVarSql(sfx: String): String =
+    s"(${Stages.sampleCmomSql(s"q$sfx", s"s$sfx", s"s$sfx", s"n$sfx", nonZero = true)})"
 
   private def welchSe2Sql: String =
     s"(${welchVarSql("1")} / CAST(n1 AS DOUBLE) + ${welchVarSql("2")} / CAST(n2 AS DOUBLE))"
 
-  /** Welch t text over the six integer moment columns — shared verbatim
-    * with the oracle.
-    */
   /** The six two-sample integer moments (n, Σcents, Σcents² per side,
     * suffixes 1/2) every two-sample test reads — ONE spelling shared by
     * [[welchTTest]], [[graft.engine.Inference.cohensD]] and
@@ -3196,6 +3168,9 @@ object Analytics {
     side(typeA, "1") ++ side(typeB, "2")
   }
 
+  /** Welch t text over the six integer moment columns — shared verbatim
+    * with the oracle.
+    */
   def welchTSql: String =
     s"""(CAST(s1 AS DOUBLE) / nullif(CAST(n1 AS DOUBLE), 0.0E0) - CAST(s2 AS DOUBLE) / nullif(CAST(n2 AS DOUBLE), 0.0E0))
               / nullif(sqrt($welchSe2Sql), 0.0E0)"""
@@ -3271,8 +3246,6 @@ object Analytics {
       .select(
         expr("CAST(round(CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) - " +
           "CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE)) AS BIGINT)").as("d"))
-    val vSql =
-      "((CAST(q AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(s AS DOUBLE)) / CAST(n - 1 AS DOUBLE))"
     d.agg(
         count(lit(1)).as("n"),
         sum(col("d")).as("s"),
@@ -3281,10 +3254,15 @@ object Analytics {
         col("n").as("n_users"),
         expr("(CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / 100.0").as("mean_shift_dollars"),
         expr(
-          s"""CASE WHEN n < 2 OR $vSql <= 0 THEN NULL
-              ELSE (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / nullif(sqrt($vSql / CAST(n AS DOUBLE)), 0.0E0) END""")
+          s"""CASE WHEN n < 2 OR $pairedShiftVarSql <= 0 THEN NULL
+              ELSE (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) / nullif(sqrt($pairedShiftVarSql / CAST(n AS DOUBLE)), 0.0E0) END""")
           .as("t_stat"))
   }
+
+  /** Sample variance of the per-user shifts over (n, s, q) — shared
+    * verbatim with the oracle; its CASE tests n < 2 before dividing.
+    */
+  def pairedShiftVarSql: String = s"(${Stages.centredSumSql("q", "s", "s")} / CAST(n - 1 AS DOUBLE))"
 
   /** Effective sample size and design effect of a weighted sample
     * (weights = order quantities), per return flag: ESS = (Σw)²/Σw²
@@ -3506,12 +3484,10 @@ object Analytics {
     * caller's aggregate must match).
     */
   def pairwiseCorrSql(a: String, b: String): String = {
-    val (n, sa, sb, sab, saa, sbb) =
-      ("CAST(n AS DOUBLE)", s"CAST(s_$a AS DOUBLE)", s"CAST(s_$b AS DOUBLE)",
-        s"CAST(s_$a$b AS DOUBLE)", s"CAST(s_$a$a AS DOUBLE)", s"CAST(s_$b$b AS DOUBLE)")
-    val varA = s"($saa / $n - ($sa / $n) * ($sa / $n))"
-    val varB = s"($sbb / $n - ($sb / $n) * ($sb / $n))"
-    val cov = s"($sab / $n - ($sa / $n) * ($sb / $n))"
+    val n = Stages.divisorSql(nonZero = false)
+    val varA = cmomSql(s"s_$a$a", s"s_$a", s"s_$a", n)
+    val varB = cmomSql(s"s_$b$b", s"s_$b", s"s_$b", n)
+    val cov = cmomSql(s"s_$a$b", s"s_$a", s"s_$b", n)
     s"($cov / nullif(sqrt($varA * $varB), 0.0E0))"
   }
 
@@ -3598,7 +3574,7 @@ object Analytics {
         (col("gsx") - col("fsx")).as("sx"), (col("gsy") - col("fsy")).as("sy"),
         (col("gsxy") - col("fsxy")).as("sxy"), (col("gsxx") - col("fsxx")).as("sxx"),
         (col("gsyy") - col("fsyy")).as("syy"))
-    val linreg = Stages.linregSql.toMap
+    val linreg = Stages.linregSql().toMap
     base
       .join(broadcast(train), Seq("fold"))
       .withColumn("r2q", expr(s"CAST(round(${Stages.residualSql} * ${Stages.residualSql}) AS BIGINT)"))
@@ -3761,12 +3737,8 @@ object Analytics {
     val series = hourly
       .crossJoin(broadcast(idx))
       .select((col("h") - col("h0")).as("x"), col("cents").as("y"))
-    val stats = series.agg(
-      count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("y")).as("sxy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("y") * col("y")).as("syy"))
+    val sums = Stages.bivariateSums(col("x"), col("y"))
+    val stats = series.agg(sums.head, sums.tail: _*)
     val resid = series
       .crossJoin(broadcast(stats))
       .withColumn("e", expr(s"CAST(round(${Stages.residualSql}) AS BIGINT)"))
@@ -3800,21 +3772,15 @@ object Analytics {
       col("l_orderkey"), col("l_linenumber"),
       expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
       expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y"))
-    val stats = base.agg(
-      count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("y")).as("sxy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("y") * col("y")).as("syy"))
+    val sums = Stages.bivariateSums(col("x"), col("y"))
+    val stats = base.agg(sums.head, sums.tail: _*)
     // nD rides nullif: the broadcast side evaluates even when the fact
     // side is empty, and n = 0 would 0/0 under ANSI (the r10 probe's
     // empty variant); passthrough for any real corpus
-    val (nD, sxD, syD, sxyD, sxxD, syyD) =
-      ("nullif(CAST(n AS DOUBLE), 0.0E0)", "CAST(sx AS DOUBLE)", "CAST(sy AS DOUBLE)",
-        "CAST(sxy AS DOUBLE)", "CAST(sxx AS DOUBLE)", "CAST(syy AS DOUBLE)")
-    val varX = s"($sxxD / $nD - ($sxD / $nD) * ($sxD / $nD))"
-    val varY = s"($syyD / $nD - ($syD / $nD) * ($syD / $nD))"
-    val covar = s"($sxyD / $nD - ($sxD / $nD) * ($syD / $nD))"
+    val nD = Stages.divisorSql()
+    val cxx = cmomSql("sxx", "sx", "sx")
+    val cyy = cmomSql("syy", "sy", "sy")
+    val cxy = cmomSql("sxy", "sx", "sy")
     // The ROW-INDEPENDENT scalars (slope, the intercept's two terms, n,
     // mean-x, n·var(x), s²) are factored into the broadcast 1-row frame:
     // inlined per row, the composite D_i expression (residual² · h with
@@ -3828,14 +3794,14 @@ object Analytics {
     val scal = stats.select(
       col("n"), col("sx"), col("sy"),
       expr(nD).as("nd"),
-      expr(s"($sxD / $nD)").as("mx"),
-      expr(s"($syD / $nD)").as("myn"),
-      expr(varX).as("var_x"),
+      expr(s"(${Stages.meanSql("sx", nD)})").as("mx"),
+      expr(s"(${Stages.meanSql("sy", nD)})").as("myn"),
+      expr(cxx).as("var_x"),
       // slope's own nullif: the column evaluates eagerly even though
       // the row CASE only reads it when var_x ≠ 0
-      expr(s"($covar / nullif($varX, 0.0E0))").as("slope"),
-      expr(s"nullif($nD * $varX, 0.0E0)").as("hden"),
-      expr(s"(($varY - $covar * $covar / nullif($varX, 0.0E0)) * $nD / nullif($nD - 2, 0.0E0))")
+      expr(s"($cxy / nullif($cxx, 0.0E0))").as("slope"),
+      expr(s"nullif($nD * $cxx, 0.0E0)").as("hden"),
+      expr(s"(($cyy - $cxy * $cxy / nullif($cxx, 0.0E0)) * $nD / nullif($nD - 2, 0.0E0))")
         .as("s2v"))
     val residRow =
       """CASE WHEN var_x = 0 THEN NULL
@@ -4052,14 +4018,7 @@ object Analytics {
     */
   def skewKurtosis(events: DataFrame): DataFrame = {
     val y = "CAST(round(value) AS BIGINT)"
-    val (n, s1, s2, s3, s4) =
-      ("CAST(n AS DOUBLE)", "CAST(s1 AS DOUBLE)", "CAST(s2 AS DOUBLE)",
-        "CAST(s3 AS DOUBLE)", "CAST(s4 AS DOUBLE)")
-    val mu = s"($s1 / $n)"
-    val m2 = s"($s2 / $n - $mu * $mu)"
-    val m3 = s"($s3 / $n - 3 * $mu * ($s2 / $n) + 2 * $mu * $mu * $mu)"
-    val m4 =
-      s"($s4 / $n - 4 * $mu * ($s3 / $n) + 6 * $mu * $mu * ($s2 / $n) - 3 * $mu * $mu * $mu * $mu)"
+    val (mu, m2, m3, m4) = Stages.centralMomentsSql
     events
       .groupBy(col("event_type"))
       .agg(
@@ -4084,14 +4043,7 @@ object Analytics {
     */
   def jarqueBera(events: DataFrame): DataFrame = {
     val y = "CAST(round(value) AS BIGINT)"
-    val (n, s1, s2, s3, s4) =
-      ("CAST(n AS DOUBLE)", "CAST(s1 AS DOUBLE)", "CAST(s2 AS DOUBLE)",
-        "CAST(s3 AS DOUBLE)", "CAST(s4 AS DOUBLE)")
-    val mu = s"($s1 / $n)"
-    val m2 = s"($s2 / $n - $mu * $mu)"
-    val m3 = s"($s3 / $n - 3 * $mu * ($s2 / $n) + 2 * $mu * $mu * $mu)"
-    val m4 =
-      s"($s4 / $n - 4 * $mu * ($s3 / $n) + 6 * $mu * $mu * ($s2 / $n) - 3 * $mu * $mu * $mu * $mu)"
+    val (mu, m2, m3, m4) = Stages.centralMomentsSql
     val skew = s"($m3 / ($m2 * sqrt($m2)))"
     val exk = s"($m4 / ($m2 * $m2) - 3)"
     events
@@ -4106,7 +4058,7 @@ object Analytics {
         col("event_type"), col("n"),
         expr(s"CASE WHEN $m2 <= 0 THEN NULL ELSE $skew END").as("skewness"),
         expr(s"CASE WHEN $m2 <= 0 THEN NULL ELSE $exk END").as("excess_kurtosis"),
-        expr(s"CASE WHEN $m2 <= 0 THEN NULL ELSE $n / 6.0 * ($skew * $skew + $exk * $exk / 4.0) END")
+        expr(s"CASE WHEN $m2 <= 0 THEN NULL ELSE ${Stages.divisorSql(nonZero = false)} / 6.0 * ($skew * $skew + $exk * $exk / 4.0) END")
           .as("jb"))
   }
 
@@ -4254,9 +4206,7 @@ object Analytics {
 
   /** Sample SD of gaps over (n_gaps, s, q) — shared verbatim. nullif:
     * one gap has no sample SD. */
-  def burstSdSql: String =
-    """sqrt((CAST(q AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(n_gaps AS DOUBLE)) * CAST(s AS DOUBLE))
-            / nullif(CAST(n_gaps - 1 AS DOUBLE), 0.0E0))"""
+  def burstSdSql: String = s"sqrt(${Stages.sampleCmomSql("q", "s", "s", "n_gaps")})"
 
   /** Weighted least squares of line-item unit economics: dollars on
     * quantity with quantity itself as the weight (bigger lots count
@@ -4267,13 +4217,12 @@ object Analytics {
     * companion to q_linreg.
     */
   def weightedLinreg(lineitem: DataFrame): DataFrame = {
-    val (sw, swx, swy, swxx, swxy) =
-      ("CAST(sw AS DOUBLE)", "CAST(swx AS DOUBLE)", "CAST(swy AS DOUBLE)",
-        "CAST(swxx AS DOUBLE)", "CAST(swxy AS DOUBLE)")
-    val mx = s"($swx / $sw)"
-    val my = s"($swy / $sw)"
-    val varX = s"($swxx / $sw - $mx * $mx)"
-    val covar = s"($swxy / $sw - $mx * $my)"
+    // the weighted moments: Σw is the divisor
+    val sw = Stages.divisorSql("sw", nonZero = false)
+    val mx = s"(${Stages.meanSql("swx", sw)})"
+    val my = s"(${Stages.meanSql("swy", sw)})"
+    val cxx = cmomSql("swxx", "swx", "swx", sw)
+    val cxy = cmomSql("swxy", "swx", "swy", sw)
     lineitem
       .select(
         expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
@@ -4288,8 +4237,8 @@ object Analytics {
         sum(col("w") * col("x") * col("y")).as("swxy"))
       .select(
         col("n"), col("sw"),
-        expr(s"CASE WHEN $varX = 0 THEN NULL ELSE $covar / $varX END").as("slope"),
-        expr(s"CASE WHEN $varX = 0 THEN NULL ELSE $my - ($covar / $varX) * $mx END")
+        expr(s"CASE WHEN $cxx = 0 THEN NULL ELSE $cxy / $cxx END").as("slope"),
+        expr(s"CASE WHEN $cxx = 0 THEN NULL ELSE $my - ($cxy / $cxx) * $mx END")
           .as("intercept"))
   }
 
@@ -4426,20 +4375,13 @@ object Analytics {
         (fit("hi", "slope") - fit("lo", "slope")).as("slope_diff"))
   }
 
-  /** [[Stages.linregSql]] fragment rewritten onto suffixed moment
-    * columns `n_<sfx>, sx_<sfx>, …` — shared verbatim between
+  /** [[Stages.linregSql]] fragment over the suffixed moment columns
+    * `n_<sfx>, sx_<sfx>, …` — shared verbatim between
     * [[segmentedRegression]] and its oracle so both engines evaluate
     * the identical per-side expression text.
     */
   def linregSideSql(name: String, sfx: String): String =
-    Stages.linregSql.toMap
-      .apply(name)
-      .replace("sxy", s"sxy_$sfx")
-      .replace("sxx", s"sxx_$sfx")
-      .replace("syy", s"syy_$sfx")
-      .replace("CAST(sx ", s"CAST(sx_$sfx ")
-      .replace("CAST(sy ", s"CAST(sy_$sfx ")
-      .replace("CAST(n ", s"CAST(n_$sfx ")
+    Stages.linregSql(s"_$sfx").toMap.apply(name)
 
   /** Cross-correlation ladder between the daily purchase and click
     * revenue series at leads/lags −3..3 — the lead–lag discovery pass
@@ -4541,6 +4483,7 @@ object Analytics {
       .withColumn("n", count(lit(1)).over(Window.partitionBy(lit(1))).cast("long"))
       .withColumn("t", sum(col("y")).over(Window.partitionBy(lit(1))))
       .withColumn("z", col("n") * col("p") - col("k") * col("t"))
+    val sigma = s"sqrt(${cmomSql("sxx", "sx", "sx", Stages.divisorSql("n_days", nonZero = false))})"
     prefixed
       .agg(
         max(col("n")).as("n_days"),
@@ -4552,16 +4495,10 @@ object Analytics {
       .select(
         col("n_days"),
         col("r_scaled"),
-        expr(
-          """sqrt(CAST(sxx AS DOUBLE) / CAST(n_days AS DOUBLE)
-             - (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)))""")
-          .as("sigma"),
+        expr(sigma).as("sigma"),
         // R = r_scaled / n (z is the n-SCALED centred prefix sum, so ONE
         // division by n undoes the scaling); R/S divides that by sigma
-        expr(
-          """(CAST(r_scaled AS DOUBLE) / CAST(n_days AS DOUBLE))
-             / nullif(sqrt(CAST(sxx AS DOUBLE) / CAST(n_days AS DOUBLE)
-             - (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE))), 0.0E0)""")
+        expr(s"(CAST(r_scaled AS DOUBLE) / CAST(n_days AS DOUBLE)) / nullif($sigma, 0.0E0)")
           .as("rs_stat"))
   }
 
@@ -4670,33 +4607,27 @@ object Analytics {
       .agg(
         count(lit(1)).cast("long").as("x"),
         expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    // DECIMAL(38,0) products — Σ(daily cents)² wraps BIGINT at scale
+    // (oracle twin: HUGEINT)
+    val sums = Stages.momentSums(Map('x' -> col("x"), 'y' -> col("y")), wide = true)(
+      "n_days", "sx", "sy", "sxx", "syy", "sxy")
+    val n = Stages.divisorSql("n_days", nonZero = false)
     daily
-      .agg(
-        count(lit(1)).cast("long").as("n_days"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        // DECIMAL(38,0) products — Σ(daily cents)² wraps BIGINT at scale
-        // (oracle twin: HUGEINT)
-        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"),
-        sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         col("n_days"),
         expr(demingSlopeSql).as("slope"),
-        expr(
-          s"""CAST(sy AS DOUBLE) / CAST(n_days AS DOUBLE)
-              - ($demingSlopeSql) * (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE))""").as("intercept"))
+        expr(s"${Stages.meanSql("sy", n)} - ($demingSlopeSql) * (${Stages.meanSql("sx", n)})").as("intercept"))
   }
 
   /** Shared text with the oracle: centred moments in divide-first form,
     * then the positive-root major-axis slope.
     */
   def demingSlopeSql: String = {
-    val mx = "(CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE))"
-    val my = "(CAST(sy AS DOUBLE) / CAST(n_days AS DOUBLE))"
-    val cxx = s"(CAST(sxx AS DOUBLE) / CAST(n_days AS DOUBLE) - $mx * $mx)"
-    val cyy = s"(CAST(syy AS DOUBLE) / CAST(n_days AS DOUBLE) - $my * $my)"
-    val cxy = s"(CAST(sxy AS DOUBLE) / CAST(n_days AS DOUBLE) - $mx * $my)"
+    val n = Stages.divisorSql("n_days", nonZero = false)
+    val cxx = cmomSql("sxx", "sx", "sx", n)
+    val cyy = cmomSql("syy", "sy", "sy", n)
+    val cxy = cmomSql("sxy", "sx", "sy", n)
     s"(($cyy - $cxx + sqrt(($cyy - $cxx) * ($cyy - $cxx) + 4.0 * $cxy * $cxy)) / nullif(2.0 * $cxy, 0.0E0))"
   }
 
@@ -4732,7 +4663,7 @@ object Analytics {
           .as("return_level30_dollars"))
   }
 
-  def gumbelMeanSql: String = "(CAST(sm AS DOUBLE) / CAST(n_blocks AS DOUBLE))"
+  def gumbelMeanSql: String = s"(${Stages.meanSql("sm", Stages.divisorSql("n_blocks", nonZero = false))})"
   def gumbelSigmaSql: String =
     s"""sqrt(CAST(smm AS DOUBLE) / CAST(n_blocks AS DOUBLE)
         - $gumbelMeanSql * $gumbelMeanSql)"""
@@ -4875,12 +4806,10 @@ object Analytics {
     val daily = events
       .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
-    val moments = daily.agg(
-      count(lit(1)).cast("long").as("n_days"),
-      sum(col("y")).as("sx"),
-      // DECIMAL(38,0) — Σ(daily cents)² wraps BIGINT at scale (oracle
-      // twin: HUGEINT)
-      sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("sxx"))
+    // DECIMAL(38,0) — Σ(daily cents)² wraps BIGINT at scale (oracle
+    // twin: HUGEINT)
+    val sums = Stages.momentSums(Map('x' -> col("y")), wide = true)("n_days", "sx", "sxx")
+    val moments = daily.agg(sums.head, sums.tail: _*)
     val dev = daily
       .crossJoin(moments)
       .withColumn(
@@ -4896,31 +4825,21 @@ object Analytics {
         col("d").as("day_epoch"),
         col("y").as("y_cents"),
         col("dev").as("abs_dev"),
-        // Grubbs' G is defined over the SAMPLE standard deviation
-        // (n−1): the population-sd spelling understated s and inflated
-        // G by sqrt(n/(n−1)) — systematically over-eager against the
-        // published critical values that are this statistic's only use.
-        // Divide-first form (the cmomSql discipline), n/(n−1) applied as
-        // a final factor; shared text with the oracle.
-        expr(
-          """dev / nullif(sqrt((CAST(sxx AS DOUBLE) / CAST(n_days AS DOUBLE)
-             - (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)))
-             * CAST(n_days AS DOUBLE) / nullif(CAST(n_days AS DOUBLE) - 1.0, 0.0E0)), 0.0E0)""")
-          .as("grubbs_g"))
+        expr(grubbsGSql).as("grubbs_g"))
   }
 
-  /** Centred-moment SQL text: cov(a,b) in the divide-first form (the
-    * n·s_ab − s_a·s_b product overflows BIGINT at scale). Shared
-    * verbatim between the Spark expressions and the DuckDB oracle so
-    * every downstream double is bit-identical.
+  /** Grubbs' G over (dev, n_days, sx, sxx) — shared verbatim with the
+    * oracle. G is defined over the SAMPLE standard deviation (n−1): the
+    * population-sd spelling understated s and inflated G by
+    * sqrt(n/(n−1)) — systematically over-eager against the published
+    * critical values that are this statistic's only use. Divide-first
+    * form (Stages.cmomSql), n/(n−1) applied as a final factor.
     */
-  def cmomSql(sab: String, sa: String, sb: String): String =
-    // nullif: an ungrouped aggregate over an EMPTY input still emits one
-    // row with n = 0, and under ANSI the 0/0 kills the query where
-    // DuckDB's empty CTE chain just goes quiet (r10 degenerate probe) —
-    // shared text, so both engines carry the same NULL convention
-    s"""(CAST($sab AS DOUBLE) / nullif(CAST(n AS DOUBLE), 0.0E0)
-        - (CAST($sa AS DOUBLE) / nullif(CAST(n AS DOUBLE), 0.0E0)) * (CAST($sb AS DOUBLE) / nullif(CAST(n AS DOUBLE), 0.0E0)))"""
+  def grubbsGSql: String = {
+    val n = Stages.divisorSql("n_days", nonZero = false)
+    s"""dev / nullif(sqrt(${cmomSql("sxx", "sx", "sx", n)}
+       * $n / nullif($n - 1.0, 0.0E0)), 0.0E0)"""
+  }
 
   /** Dickey–Fuller unit-root regression (lag 0, with intercept) on the
     * daily revenue series: Δy_t = α + γ·y_{t−1} + ε. Emits γ̂ and its
@@ -4941,14 +4860,9 @@ object Analytics {
     val cxy = cmomSql("sxy", "sx", "sy")
     val cyy = cmomSql("syy", "sy", "sy")
     val gamma = s"($cxy / nullif($cxx, 0.0E0))"
+    val sums = Stages.momentSums(Map('x' -> col("l"), 'y' -> col("dy")))("n", "sx", "sy", "sxx", "sxy", "syy")
     pairs
-      .agg(
-        count(lit(1)).cast("long").as("n"),
-        sum(col("l")).as("sx"),
-        sum(col("dy")).as("sy"),
-        sum(col("l") * col("l")).as("sxx"),
-        sum(col("l") * col("dy")).as("sxy"),
-        sum(col("dy") * col("dy")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         col("n").as("n_pairs"),
         expr(gamma).as("gamma"),
@@ -4983,18 +4897,10 @@ object Analytics {
     val b2 = s"(($cll * $cxy - $clx * $cly) / nullif($det, 0.0E0))"
     val rssU = s"($cyy - $b1 * $cly - $b2 * $cxy)"
     val rssR = s"($cyy - $cly * $cly / nullif($cll, 0.0E0))"
+    val sums = Stages.momentSums(Map('l' -> col("l"), 'x' -> col("xl"), 'y' -> col("cur")))(
+      "n", "sl", "sx", "sy", "sll", "slx", "sxx", "sly", "sxy", "syy")
     triples
-      .agg(
-        count(lit(1)).cast("long").as("n"),
-        sum(col("l")).as("sl"),
-        sum(col("xl")).as("sx"),
-        sum(col("cur")).as("sy"),
-        sum(col("l") * col("l")).as("sll"),
-        sum(col("l") * col("xl")).as("slx"),
-        sum(col("xl") * col("xl")).as("sxx"),
-        sum(col("l") * col("cur")).as("sly"),
-        sum(col("xl") * col("cur")).as("sxy"),
-        sum(col("cur") * col("cur")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         col("n").as("n_triples"),
         expr(b1).as("b_lag"),
@@ -5032,17 +4938,10 @@ object Analytics {
     val det = s"($cxx * $cmm - $cxm * $cxm)"
     val direct = s"(($cxy * $cmm - $cmy * $cxm) / nullif($det, 0.0E0))"
     val bPath = s"(($cxx * $cmy - $cxm * $cxy) / nullif($det, 0.0E0))"
+    val sums = Stages.momentSums(Map('x' -> col("x"), 'm' -> col("m"), 'y' -> col("y")))(
+      "n", "sx", "sm", "sy", "sxx", "sxm", "smm", "sxy", "smy")
     daily
-      .agg(
-        count(lit(1)).cast("long").as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("m")).as("sm"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("x") * col("m")).as("sxm"),
-        sum(col("m") * col("m")).as("smm"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("m") * col("y")).as("smy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         col("n").as("n_days"),
         expr(aPath).as("a_path"),
@@ -5144,17 +5043,13 @@ object Analytics {
       .withColumn(
         "i",
         row_number().over(Window.partitionBy(lit(1)).orderBy(col("d").asc)).cast("long"))
-    val first = daily.agg(
-      count(lit(1)).cast("long").as("n"),
-      sum(col("i")).as("sx"),
-      sum(col("y")).as("sy"),
-      sum(col("i") * col("i")).as("sxx"),
-      sum(col("i") * col("y")).as("sxy"))
+    val sums = Stages.momentSums(Map('x' -> col("i"), 'y' -> col("y")))("n", "sx", "sy", "sxx", "sxy")
+    val first = daily.agg(sums.head, sums.tail: _*)
     val cxx = cmomSql("sxx", "sx", "sx")
     val cxy = cmomSql("sxy", "sx", "sy")
     val bTxt = s"($cxy / nullif($cxx, 0.0E0))"
-    val aTxt =
-      s"(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) - $bTxt * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))"
+    val n = Stages.divisorSql(nonZero = false)
+    val aTxt = s"(${Stages.meanSql("sy", n)} - $bTxt * (${Stages.meanSql("sx", n)}))"
     val eTxt = s"(CAST(y AS DOUBLE) - ($aTxt + $bTxt * CAST(i AS DOUBLE)))"
     val resid = daily
       .crossJoin(first)
@@ -5245,16 +5140,12 @@ object Analytics {
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
     val aggCols =
       (0 until 7).map(r => sum(when(expr(s"d % 7 = $r"), col("y")).otherwise(0L)).as(s"s$r")) ++
-        Seq(
-          count(lit(1)).cast("long").as("n"),
-          sum(col("y")).as("sy"),
-          // DECIMAL(38,0) — Σ(daily cents)² wraps BIGINT at scale
-          // (oracle twin: HUGEINT)
-          sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"))
+        // DECIMAL(38,0) — Σ(daily cents)² wraps BIGINT at scale (oracle
+        // twin: HUGEINT)
+        Stages.momentSums(Map('y' -> col("y")), wide = true)("n", "sy", "syy")
     val aTxt = periodogram7ATxt
     val bTxt = periodogram7BTxt
-    val cssTxt =
-      """(CAST(syy AS DOUBLE) - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(sy AS DOUBLE))"""
+    val cssTxt = Stages.centredSumSql("syy", "sy", "sy")
     daily
       .agg(aggCols.head, aggCols.tail: _*)
       .select(
@@ -5342,17 +5233,13 @@ object Analytics {
     */
   def cointegration(events: DataFrame): DataFrame = {
     val daily = dailyClickPurchase(events)
-    val first = daily.agg(
-      count(lit(1)).cast("long").as("n"),
-      sum(col("x")).as("sx"),
-      sum(col("y")).as("sy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("x") * col("y")).as("sxy"))
+    val sums = Stages.momentSums(Map('x' -> col("x"), 'y' -> col("y")))("n", "sx", "sy", "sxx", "sxy")
+    val first = daily.agg(sums.head, sums.tail: _*)
     val cxx = cmomSql("sxx", "sx", "sx")
     val cxy = cmomSql("sxy", "sx", "sy")
     val bTxt = s"($cxy / nullif($cxx, 0.0E0))"
-    val aTxt =
-      s"(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) - $bTxt * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))"
+    val n = Stages.divisorSql(nonZero = false)
+    val aTxt = s"(${Stages.meanSql("sy", n)} - $bTxt * (${Stages.meanSql("sx", n)}))"
     val resid = daily
       .crossJoin(first)
       .select(
@@ -5367,15 +5254,10 @@ object Analytics {
     val rxy = cmomSql("sxy", "sx", "sy")
     val ryy = cmomSql("syy", "sy", "sy")
     val gamma = s"($rxy / nullif($rxx, 0.0E0))"
+    val pairSums =
+      Stages.momentSums(Map('x' -> col("l"), 'y' -> col("dy")))("n", "sx", "sy", "sxx", "sxy", "syy")
     pairs
-      .agg(
-        count(lit(1)).cast("long").as("n"),
-        max(col("beta")).as("beta"),
-        sum(col("l")).as("sx"),
-        sum(col("dy")).as("sy"),
-        sum(col("l") * col("l")).as("sxx"),
-        sum(col("l") * col("dy")).as("sxy"),
-        sum(col("dy") * col("dy")).as("syy"))
+      .agg(pairSums.head, max(col("beta")).as("beta") +: pairSums.tail: _*)
       .select(
         col("n").as("n_pairs"),
         col("beta").as("coint_beta"),
@@ -5395,18 +5277,14 @@ object Analytics {
     */
   def mahalanobisOutliers(events: DataFrame, k: Int = 10): DataFrame = {
     val daily = dailyClickPurchase(events)
-    val m = daily.agg(
-      count(lit(1)).cast("long").as("n"),
-      sum(col("x")).as("sx"),
-      sum(col("y")).as("sy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("x") * col("y")).as("sxy"),
-      sum(col("y") * col("y")).as("syy"))
+    val sums = Stages.momentSums(Map('x' -> col("x"), 'y' -> col("y")))("n", "sx", "sy", "sxx", "sxy", "syy")
+    val m = daily.agg(sums.head, sums.tail: _*)
     val cxx = cmomSql("sxx", "sx", "sx")
     val cxy = cmomSql("sxy", "sx", "sy")
     val cyy = cmomSql("syy", "sy", "sy")
-    val mx = "(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"
-    val my = "(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))"
+    val n = Stages.divisorSql(nonZero = false)
+    val mx = s"(${Stages.meanSql("sx", n)})"
+    val my = s"(${Stages.meanSql("sy", n)})"
     val det = s"($cxx * $cyy - $cxy * $cxy)"
     val dx = s"(CAST(x AS DOUBLE) - $mx)"
     val dy = s"(CAST(y AS DOUBLE) - $my)"
@@ -6202,20 +6080,11 @@ object Analytics {
         col("n").as("n_days"),
         expr(s"($cxy / nullif($cxx, 0.0E0))").as("beta"),
         expr(
-          s"""(CAST(sy AS DOUBLE) / nullif(CAST(n AS DOUBLE), 0.0E0)
-              - ($cxy / nullif($cxx, 0.0E0)) * (CAST(sa AS DOUBLE) / nullif(CAST(n AS DOUBLE), 0.0E0)))""").as("intercept"),
+          s"""(${Stages.meanSql("sy", Stages.divisorSql())}
+              - ($cxy / nullif($cxx, 0.0E0)) * (${Stages.meanSql("sa", Stages.divisorSql())}))""").as("intercept"),
         expr(s"(($cxy * $cxy) / nullif($cxx * $cyy, 0.0E0))").as("r2"))
   }
 
-  /** Per-feature ranking power (AUC) battery: for each behavioral count
-    * feature (clicks, views, errors per user), the probability a
-    * converting user outranks a non-converting one — AUC from the
-    * rank-sum identity 2U = 2·#{pos>neg} + #{ties}, computed per
-    * feature over a value-grid cumulative window PARTITIONED BY feature
-    * (one distributed pass for the whole battery, no per-feature job).
-    * Integer to the final division — the model-free feature screen run
-    * before any training job.
-    */
   /** Per-user behavioral counts plus the median-split spend label
     * (spend > the corpus lower-median per-user purchase total — both
     * classes are non-empty at every scale factor, unlike a has-purchase
@@ -6245,6 +6114,15 @@ object Analytics {
       .withColumn("label", when(col("spend") > col("med"), 1L).otherwise(0L))
   }
 
+  /** Per-feature ranking power (AUC) battery: for each behavioral count
+    * feature (clicks, views, errors per user), the probability a
+    * converting user outranks a non-converting one — AUC from the
+    * rank-sum identity 2U = 2·#{pos>neg} + #{ties}, computed per
+    * feature over a value-grid cumulative window PARTITIONED BY feature
+    * (one distributed pass for the whole battery, no per-feature job).
+    * Integer to the final division — the model-free feature screen run
+    * before any training job.
+    */
   def featureAuc(events: DataFrame): DataFrame = {
     val users = userFeaturesLabeled(events)
     val long = users.select(

@@ -539,13 +539,9 @@ object Graph {
       .join(broadcast(deg.select(col("node").as("pa"), col("deg").as("x"))), Seq("pa"))
       .join(broadcast(deg.select(col("node").as("pb"), col("deg").as("y"))), Seq("pb"))
     val corr = Stages.momentStatsSql.toMap.apply("corr_xy")
+    val sums = Stages.bivariateSums(col("x"), col("y"))
     sym
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
       .select(col("n"), expr(corr).as("assortativity"))
   }
 

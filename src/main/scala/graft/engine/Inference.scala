@@ -37,7 +37,7 @@ object Inference {
     // probe): k = 1 group, nn = k (one row per group), or zero
     // within-group variance each zero a denominator — Spark ANSI throws
     // on DOUBLE/0 where DuckDB emits ±inf; F is NULL when undefined.
-    """((CAST(rbq AS DOUBLE) - (CAST(ss AS DOUBLE) / nullif(CAST(nn AS DOUBLE), 0.0E0)) * CAST(ss AS DOUBLE)) / nullif(CAST(k - 1 AS DOUBLE), 0.0E0))
+    s"""(${Stages.centredSumSql("rbq", "ss", "ss", Stages.divisorSql("nn"))} / nullif(CAST(k - 1 AS DOUBLE), 0.0E0))
        / nullif((CAST(qq AS DOUBLE) - CAST(rbq AS DOUBLE)) / nullif(CAST(nn - k AS DOUBLE), 0.0E0), 0.0E0)"""
 
   /** Brown–Forsythe homogeneity-of-variance test (Levene with median
@@ -208,8 +208,7 @@ object Inference {
     // (n = 1), or two constant sides (pooled SD 0) leave d undefined —
     // NULL on both engines instead of an ANSI throw vs a DuckDB ±inf
     // (r10 degenerate probe).
-    def v(sfx: String) =
-      s"((CAST(q$sfx AS DOUBLE) - (CAST(s$sfx AS DOUBLE) / nullif(CAST(n$sfx AS DOUBLE), 0.0E0)) * CAST(s$sfx AS DOUBLE)) / nullif(CAST(n$sfx - 1 AS DOUBLE), 0.0E0))"
+    def v(sfx: String) = Analytics.welchVarSql(sfx)
     s"""(CAST(s1 AS DOUBLE) / nullif(CAST(n1 AS DOUBLE), 0.0E0) - CAST(s2 AS DOUBLE) / nullif(CAST(n2 AS DOUBLE), 0.0E0))
         / nullif(sqrt((CAST(n1 - 1 AS DOUBLE) * ${v("1")} + CAST(n2 - 1 AS DOUBLE) * ${v("2")})
                / nullif(CAST(n1 + n2 - 2 AS DOUBLE), 0.0E0)), 0.0E0)"""
@@ -322,9 +321,7 @@ object Inference {
     // greatest(NULL, 0) is engine-divergent (Spark skips NULLs, so the
     // CASE carries the NULL through both engines identically; r10
     // degenerate probe).
-    val s2 =
-      """(((CAST(spp AS DOUBLE) - (CAST(sp AS DOUBLE) / nullif(CAST(k AS DOUBLE), 0.0E0)) * CAST(sp AS DOUBLE))
-           / nullif(CAST(k - 1 AS DOUBLE), 0.0E0)) / 1000000000000.0)"""
+    val s2 = s"((${Stages.sampleCmomSql("spp", "sp", "sp", "k", nonZero = true)}) / 1000000000000.0)"
     s"""(CASE WHEN $s2 > 0.0 THEN greatest(($ebMuSql) * (1.0 - ($ebMuSql)) / $s2 - 1.0, 0.0) END)"""
   }
 
@@ -415,14 +412,9 @@ object Inference {
       .agg(
         sum(expr(Stages.centsSql("value"))).as("x"),
         count(lit(1)).as("y"))
+    val sums = Stages.momentSums(Map('x' -> col("x"), 'y' -> col("y")))("n", "sx", "sy", "sxx", "sxy", "syy")
     daily
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("y") * col("y")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         col("n").as("n_days"),
         expr("CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE)").as("ratio_cents"),
@@ -437,10 +429,10 @@ object Inference {
     // nullif guards: a single day (n = 1) zeroes every sample-moment
     // denominator — NULL on both engines (r10 degenerate probe)
     val r = "(CAST(sx AS DOUBLE) / nullif(CAST(sy AS DOUBLE), 0.0E0))"
-    val vx = "((CAST(sxx AS DOUBLE) - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(sx AS DOUBLE)) / nullif(CAST(n - 1 AS DOUBLE), 0.0E0))"
-    val vy = "((CAST(syy AS DOUBLE) - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(sy AS DOUBLE)) / nullif(CAST(n - 1 AS DOUBLE), 0.0E0))"
-    val cxy = "((CAST(sxy AS DOUBLE) - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(sy AS DOUBLE)) / nullif(CAST(n - 1 AS DOUBLE), 0.0E0))"
-    val ybar = "(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))"
+    val vx = s"(${Stages.sampleCmomSql("sxx", "sx", "sx")})"
+    val vy = s"(${Stages.sampleCmomSql("syy", "sy", "sy")})"
+    val cxy = s"(${Stages.sampleCmomSql("sxy", "sx", "sy")})"
+    val ybar = s"(${Stages.meanSql("sy", Stages.divisorSql(nonZero = false))})"
     s"(($vx - 2.0 * $r * $cxy + $r * $r * $vy) / nullif(CAST(n AS DOUBLE) * $ybar * $ybar, 0.0E0))"
   }
 
@@ -473,8 +465,7 @@ object Inference {
   def tostTSql(marginCents: Long, lower: Boolean): String = {
     // same degenerate-side nullif guards as [[Analytics.welchTSql]]
     // (r10 degenerate probe)
-    def v(sfx: String) =
-      s"((CAST(q$sfx AS DOUBLE) - (CAST(s$sfx AS DOUBLE) / nullif(CAST(n$sfx AS DOUBLE), 0.0E0)) * CAST(s$sfx AS DOUBLE)) / nullif(CAST(n$sfx - 1 AS DOUBLE), 0.0E0))"
+    def v(sfx: String) = Analytics.welchVarSql(sfx)
     val se = s"nullif(sqrt(${v("1")} / CAST(n1 AS DOUBLE) + ${v("2")} / CAST(n2 AS DOUBLE)), 0.0E0)"
     val sign = if (lower) "+" else "-"
     s"""((CAST(s1 AS DOUBLE) / nullif(CAST(n1 AS DOUBLE), 0.0E0) - CAST(s2 AS DOUBLE) / nullif(CAST(n2 AS DOUBLE), 0.0E0))
@@ -523,8 +514,7 @@ object Inference {
 
   /** DiD variance Σ vᵢ/nᵢ over the four cells — shared verbatim. */
   def didSe2Sql: String = {
-    def v(sfx: String) =
-      s"(((CAST(q$sfx AS DOUBLE) - (CAST(s$sfx AS DOUBLE) / nullif(CAST(n$sfx AS DOUBLE), 0.0E0)) * CAST(s$sfx AS DOUBLE)) / nullif(CAST(n$sfx - 1 AS DOUBLE), 0.0E0)) / CAST(n$sfx AS DOUBLE))"
+    def v(sfx: String) = s"(${Analytics.welchVarSql(sfx)} / CAST(n$sfx AS DOUBLE))"
     s"(${v("00")} + ${v("01")} + ${v("10")} + ${v("11")})"
   }
 
@@ -578,9 +568,7 @@ object Inference {
     // total (every stratum constant) leaves every share undefined —
     // NULL, not an ANSI throw (r10 degenerate probe; oracle twin
     // carries the same guards)
-    val sdSql =
-      """sqrt((CAST(q AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(s AS DOUBLE))
-              / nullif(CAST(n - 1 AS DOUBLE), 0.0E0))"""
+    val sdSql = s"sqrt(${Stages.sampleCmomSql("q", "s", "s")})"
     val g = events
       .groupBy(col("event_type"))
       .agg(
@@ -822,10 +810,8 @@ object Inference {
       lslCents: Long = 10000L,
       uslCents: Long = 100000L): DataFrame = {
     val cents = Stages.centsSql("l_extendedprice")
-    val sd =
-      """sqrt((CAST(q AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * CAST(s AS DOUBLE))
-              / nullif(CAST(n - 1 AS DOUBLE), 0.0E0))"""
-    val mu = "(CAST(s AS DOUBLE) / CAST(n AS DOUBLE))"
+    val sd = s"sqrt(${Stages.sampleCmomSql("q", "s", "s")})"
+    val mu = s"(${Stages.meanSql("s", Stages.divisorSql(nonZero = false))})"
     lineitem
       .groupBy(col("l_returnflag"))
       .agg(

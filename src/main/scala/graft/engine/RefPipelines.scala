@@ -73,10 +73,6 @@ object RefPipelines {
         expr(Stages.halfUpCentiSql("lead_sec", 86400L)).as("lead_days"))
   }
 
-  /** Query 3 analog — abnormal-fee detector (`spark_streaming.py:196-239`).
-    * Recompute the order total from its parts (P7 component sum) and flag
-    * `abs(actual - calculated) > 1 OR actual IS NULL` (F2).
-    */
   /** Per-line charge in integer cents. The per-row double product is
     * bit-identical across engines (same association), and rounding each
     * LINE to cents before summing makes the order total exact integer
@@ -87,6 +83,10 @@ object RefPipelines {
   val lineChargeCentsSql: String =
     "CAST(round(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100) AS BIGINT)"
 
+  /** Query 3 analog — abnormal-fee detector (`spark_streaming.py:196-239`).
+    * Recompute the order total from its parts (P7 component sum) and flag
+    * `abs(actual - calculated) > 1 OR actual IS NULL` (F2).
+    */
   def abnormalFee(lineitem: DataFrame, orders: DataFrame): DataFrame = {
     val calc = lineitem
       .groupBy(col("l_orderkey"))
@@ -110,12 +110,6 @@ object RefPipelines {
         (abs(col("total_cents") - col("calc_cents")) / lit(100.0)).as("discrepancy"))
   }
 
-  /** Query 4 analog — hourly average revenue (`spark_streaming.py:242-269`).
-    * Not-null filter (F3), tumbling 60-minute window (A1), conditional
-    * averages per category (A2 — the reference's credit-card/cash split,
-    * here purchase/signup), then the reference's date_format/round
-    * projection (P8).
-    */
   /** Cents expressions shared verbatim with the DuckDB oracle (see
     * [[Stages.halfUpAvgDollarsSql]] for why plain `round(avg(x),2)` is not
     * cross-engine deterministic).
@@ -124,6 +118,12 @@ object RefPipelines {
   val purchaseCents: String = Stages.centsWhenSql("event_type = 'purchase'", "value")
   val signupCents: String = Stages.centsWhenSql("event_type = 'signup'", "value")
 
+  /** Query 4 analog — hourly average revenue (`spark_streaming.py:242-269`).
+    * Not-null filter (F3), tumbling 60-minute window (A1), conditional
+    * averages per category (A2 — the reference's credit-card/cash split,
+    * here purchase/signup), then the reference's date_format/round
+    * projection (P8).
+    */
   def hourlyAvgRevenue(events: DataFrame): DataFrame =
     events
       .filter(col("value").isNotNull)

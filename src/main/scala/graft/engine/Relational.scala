@@ -348,15 +348,10 @@ object Relational {
       col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
       expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
       expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y"))
+    val sums = Stages.bivariateSums(col("x"), col("y"))
     val moments = base
       .groupBy(col("l_returnflag"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
     base
       .join(broadcast(moments), "l_returnflag")
       .filter(expr(Stages.residualOutlierCondSql(mult)))
@@ -778,21 +773,17 @@ object Relational {
     * runs on Spark and the oracle). At 100 TB this is also the faster
     * plan: five integer sums, map-combined, one narrow shuffle.
     */
-  def sufficientStatsCorr(lineitem: DataFrame): DataFrame =
+  def sufficientStatsCorr(lineitem: DataFrame): DataFrame = {
+    val sums = Stages.bivariateSums(col("x"), col("y"))
     lineitem
       .withColumn("x", expr(s"${Stages.centsSql("l_extendedprice")} div 100"))
       .withColumn("y", expr("CAST(round(l_quantity) AS BIGINT)"))
       .groupBy(col("l_returnflag"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         Seq(col("l_returnflag"), col("n")) ++
           Stages.momentStatsSql.map { case (name, sql) => expr(sql).as(name) }: _*)
+  }
 
   /** Per-group ordinary-least-squares fit (price-vs-quantity line per
     * return flag) from the same exact integer sufficient statistics as
@@ -803,21 +794,17 @@ object Relational {
     * dependent. Group cardinality bounds the output; nothing but the
     * 6-column moment state ever shuffles.
     */
-  def linearRegression(lineitem: DataFrame): DataFrame =
+  def linearRegression(lineitem: DataFrame): DataFrame = {
+    val sums = Stages.bivariateSums(col("x"), col("y"))
     lineitem
       .withColumn("x", expr("CAST(round(l_quantity) AS BIGINT)"))
       .withColumn("y", expr(s"${Stages.centsSql("l_extendedprice")} div 100"))
       .groupBy(col("l_returnflag"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
+      .agg(sums.head, sums.tail: _*)
       .select(
         Seq(col("l_returnflag"), col("n")) ++
-          Stages.linregSql.map { case (name, sql) => expr(sql).as(name) }: _*)
+          Stages.linregSql().map { case (name, sql) => expr(sql).as(name) }: _*)
+  }
 
   /** Distinct count per (possibly skewed) group key via explicit salted
     * two-phase aggregation: phase 1 groups by (key, salt-of-user) and
@@ -1016,12 +1003,10 @@ object Relational {
       col("l_linenumber"),
       col("l_returnflag"),
       expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("x"))
+    val sums = Stages.momentSums(Map('x' -> col("x")))("n", "sx", "sxx")
     val moments = base
       .groupBy(col("l_returnflag"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"),
-        sum(col("x") * col("x")).as("sxx"))
+      .agg(sums.head, sums.tail: _*)
     base
       .join(broadcast(moments), Seq("l_returnflag"))
       .select(
@@ -2319,8 +2304,9 @@ object Relational {
         count(lit(1)).cast("long").as("n_days"),
         sum(col("q")).as("d_total"),
         sum(col("q") * col("q")).as("d_sq"))
-    val mu = "(CAST(d_total AS DOUBLE) / CAST(n_days AS DOUBLE))"
-    val sigma = s"sqrt(CAST(d_sq AS DOUBLE) / CAST(n_days AS DOUBLE) - $mu * $mu)"
+    val n = Stages.divisorSql("n_days", nonZero = false)
+    val mu = s"(${Stages.meanSql("d_total", n)})"
+    val sigma = s"sqrt(${Stages.cmomSql("d_sq", "d_total", "d_total", n)})"
     rankedTopK(stats, k, col("d_total").desc, col("l_partkey").asc)
       .select(
         col("rank"),

@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, DecimalType}
 
 /** Reusable column-building stages, mirroring the reference's projection
   * surface (SURVEY.md §2.3–2.4; reference `src/spark_streaming.py:91-114`,
@@ -121,95 +121,6 @@ object Stages {
       g: String, h: String, i: String): String =
     s"($a * ($e * $i - $f * $h) - $b * ($d * $i - $f * $g) + $c * ($d * $h - $e * $g))"
 
-  /** Closed-form moment statistics from exact integer sufficient
-    * statistics `n, sx, sy, sxy, sxx, syy` (column names fixed): mean,
-    * population variance/stddev/covariance and Pearson correlation. Every
-    * fragment is a fixed IEEE expression tree over exactly-represented
-    * integers (each < 2^53), and `+ − × / sqrt` are all correctly-rounded
-    * IEEE ops — so ANY engine evaluating this text produces bit-identical
-    * doubles, unlike built-in `corr`/`covar` whose double accumulation
-    * varies with partition order. Ordered (name → SQL) pairs; the SAME
-    * text runs in Spark `expr` and the DuckDB oracle.
-    */
-  /** Closed-form z-score from exact integer moments (column names fixed:
-    * `n, sx, sxx` per group, `x` per row): (x − sx/n)/sqrt(sxx/n −
-    * (sx/n)²). Divisions come FIRST — the algebraically equal product
-    * form n·sxx − sx² overflows BIGINT once n·sxx passes 2⁶³ (≈600k rows
-    * of 5-digit values) — and zero/negative variance yields NULL via a
-    * lazy CASE. A fixed IEEE expression tree over exact integers: the
-    * SAME text runs in Spark `expr` and the DuckDB oracle.
-    */
-  val zscoreSql: String = {
-    val (n, sx, sxx) = ("CAST(n AS DOUBLE)", "CAST(sx AS DOUBLE)", "CAST(sxx AS DOUBLE)")
-    val variance = s"($sxx / $n - ($sx / $n) * ($sx / $n))"
-    s"CASE WHEN $variance <= 0 THEN NULL ELSE (CAST(x AS DOUBLE) - $sx / $n) / sqrt($variance) END"
-  }
-
-  val momentStatsSql: Seq[(String, String)] = {
-    val (n, sx, sy, sxy, sxx, syy) =
-      ("CAST(n AS DOUBLE)", "CAST(sx AS DOUBLE)", "CAST(sy AS DOUBLE)",
-        "CAST(sxy AS DOUBLE)", "CAST(sxx AS DOUBLE)", "CAST(syy AS DOUBLE)")
-    val varX = s"($sxx / $n - ($sx / $n) * ($sx / $n))"
-    val varY = s"($syy / $n - ($sy / $n) * ($sy / $n))"
-    val covar = s"($sxy / $n - ($sx / $n) * ($sy / $n))"
-    Seq(
-      "mean_x" -> s"$sx / $n",
-      "mean_y" -> s"$sy / $n",
-      "stddev_pop_x" -> s"sqrt($varX)",
-      "stddev_pop_y" -> s"sqrt($varY)",
-      "covar_pop" -> covar,
-      // zero-variance groups (n=1, or a constant x or y) have undefined
-      // correlation: NULL via a lazy CASE, never a 0/0 division — ANSI
-      // Spark throws DIVIDE_BY_ZERO on doubles where DuckDB yields NaN
-      "corr_xy" -> s"CASE WHEN $varX * $varY = 0 THEN NULL ELSE $covar / sqrt($varX * $varY) END")
-  }
-
-  /** CUPED fragments over the same `n, sx, sy, sxy, sxx, syy` sufficient
-    * statistics (x = pre-period covariate, y = post-period metric):
-    * θ = cov/var(x) — the adjustment coefficient — and the variance
-    * reduction ratio corr², both as the same fixed IEEE expression text
-    * on either engine; degenerate variances yield NULL.
-    */
-  val cupedSql: Seq[(String, String)] = {
-    val (n, sx, sy, sxy, sxx, syy) =
-      ("CAST(n AS DOUBLE)", "CAST(sx AS DOUBLE)", "CAST(sy AS DOUBLE)",
-        "CAST(sxy AS DOUBLE)", "CAST(sxx AS DOUBLE)", "CAST(syy AS DOUBLE)")
-    val varX = s"($sxx / $n - ($sx / $n) * ($sx / $n))"
-    val varY = s"($syy / $n - ($sy / $n) * ($sy / $n))"
-    val covar = s"($sxy / $n - ($sx / $n) * ($sy / $n))"
-    Seq(
-      "theta" -> s"CASE WHEN $varX = 0 THEN NULL ELSE $covar / $varX END",
-      "var_reduction" ->
-        s"""CASE WHEN $varX * $varY = 0 THEN NULL
-            ELSE ($covar / sqrt($varX * $varY)) * ($covar / sqrt($varX * $varY)) END""")
-  }
-
-  /** Ordinary-least-squares line fit from the same exact integer
-    * sufficient statistics as [[momentStatsSql]] (column names fixed:
-    * `n, sx, sy, sxy, sxx, syy`): slope = cov/var(x), intercept =
-    * ȳ − slope·x̄, r² = cov²/(var(x)·var(y)). Divisions come first (the
-    * /n mean form, never n·sxy − sx·sy, which overflows BIGINT at scale);
-    * zero-variance groups yield NULL via a lazy CASE. Fixed IEEE
-    * expression trees over exact integers — the SAME text runs in Spark
-    * `expr` and the DuckDB oracle, so the doubles are bit-identical.
-    */
-  val linregSql: Seq[(String, String)] = {
-    // n rides nullif: an EMPTY side (0-row train fold, empty corpus)
-    // makes the CASE *condition* itself 0/0 before the varX guard can
-    // fire — under ANSI that throws (r10 degenerate probe); shared text
-    val (n, sx, sy, sxy, sxx, syy) =
-      ("nullif(CAST(n AS DOUBLE), 0.0E0)", "CAST(sx AS DOUBLE)", "CAST(sy AS DOUBLE)",
-        "CAST(sxy AS DOUBLE)", "CAST(sxx AS DOUBLE)", "CAST(syy AS DOUBLE)")
-    val varX = s"($sxx / $n - ($sx / $n) * ($sx / $n))"
-    val varY = s"($syy / $n - ($sy / $n) * ($sy / $n))"
-    val covar = s"($sxy / $n - ($sx / $n) * ($sy / $n))"
-    val slope = s"($covar / $varX)"
-    Seq(
-      "slope" -> s"CASE WHEN $varX = 0 THEN NULL ELSE $slope END",
-      "intercept" -> s"CASE WHEN $varX = 0 THEN NULL ELSE $sy / $n - $slope * ($sx / $n) END",
-      "r2" -> s"CASE WHEN $varX * $varY = 0 THEN NULL ELSE ($covar * $covar) / ($varX * $varY) END")
-  }
-
   /** Wilson score lower bound for a binomial proportion (columns `c`
     * successes, `n` trials; z = 1.96): the uncertainty-corrected rate
     * that ranks 3/3 below 80/100 — the standard fix for sorting by raw
@@ -240,38 +151,187 @@ object Stages {
         s"((($xCol >> $i) & 1) << ${2 * i}) + ((($yCol >> $i) & 1) << ${2 * i + 1})")
       .mkString("(", " + ", ")")
 
+  // ---- exact moment statistics -------------------------------------------
+  //
+  // Every mean, variance, covariance, correlation and line fit is a fixed
+  // IEEE expression tree over exact integer sums (each < 2^53), and
+  // `+ − × / sqrt` are all correctly-rounded IEEE ops — so ANY engine
+  // evaluating the text produces bit-identical doubles, unlike built-in
+  // `corr`/`covar`/`stddev`, whose double accumulation varies with
+  // partition order. The SAME text runs in Spark `expr` and the DuckDB
+  // oracle. Divisions come FIRST: the algebraically equal product form
+  // n·s_ab − s_a·s_b overflows BIGINT once n·s_ab passes 2⁶³ (≈600k rows
+  // of 5-digit values). Build new statistics on these fragments.
+
+  /** The row-count column `n` as the moment fragments' divisor,
+    * `CAST(n AS DOUBLE)`. `nonZero` wraps it in nullif: an ungrouped
+    * aggregate over an EMPTY input (an empty side, a 0-row train fold)
+    * still emits one row with n = 0, and under ANSI the 0/0 kills the
+    * query where DuckDB just goes quiet (r10 degenerate probe) — shared
+    * text, so both engines carry the same NULL.
+    */
+  def divisorSql(n: String = "n", nonZero: Boolean = true): String =
+    if (nonZero) s"nullif(CAST($n AS DOUBLE), 0.0E0)" else s"CAST($n AS DOUBLE)"
+
+  /** Mean s_a / n over the divisor text `n` (see [[divisorSql]]). */
+  def meanSql(sa: String, n: String): String = s"CAST($sa AS DOUBLE) / $n"
+
+  /** Centred moment — population covariance of a and b, or variance
+    * when a = b — in the divide-first form s_ab/n − (s_a/n)·(s_b/n),
+    * over the exact sums `sab`, `sa`, `sb` and the divisor text `n`.
+    */
+  def cmomSql(sab: String, sa: String, sb: String, n: String = divisorSql()): String =
+    s"(CAST($sab AS DOUBLE) / $n - (${meanSql(sa, n)}) * (${meanSql(sb, n)}))"
+
+  /** Centred sum of products s_ab − (s_a/n)·s_b over the divisor text
+    * `n`: the numerator of the sample (n−1) moments and of sums of
+    * squares.
+    */
+  def centredSumSql(sab: String, sa: String, sb: String, n: String = divisorSql(nonZero = false)): String =
+    s"(CAST($sab AS DOUBLE) - (${meanSql(sa, n)}) * CAST($sb AS DOUBLE))"
+
+  /** Sample (n−1) covariance of a and b, or variance when a = b, over
+    * the count column `nCol`: [[centredSumSql]] / (n − 1), NULL for a
+    * single row (no sample moment) on both engines. `nonZero` guards the
+    * mean's divisor as in [[divisorSql]].
+    */
+  def sampleCmomSql(sab: String, sa: String, sb: String, nCol: String = "n", nonZero: Boolean = false): String =
+    s"${centredSumSql(sab, sa, sb, divisorSql(nCol, nonZero))} / nullif(CAST($nCol - 1 AS DOUBLE), 0.0E0)"
+
+  /** Mean and the second to fourth central moments (mu, m2, m3, m4)
+    * from the exact power sums `n, s1, s2, s3, s4`, each expanded
+    * divisions-first; m2 is the [[cmomSql]] variance.
+    */
+  val centralMomentsSql: (String, String, String, String) = {
+    val n = divisorSql(nonZero = false)
+    def mean(s: String) = meanSql(s, n)
+    val mu = s"(${mean("s1")})"
+    val m3 = s"(${mean("s3")} - 3 * $mu * (${mean("s2")}) + 2 * $mu * $mu * $mu)"
+    val m4 =
+      s"(${mean("s4")} - 4 * $mu * (${mean("s3")}) + 6 * $mu * $mu * (${mean("s2")}) - 3 * $mu * $mu * $mu * $mu)"
+    (mu, cmomSql("s2", "s1", "s1", n), m3, m4)
+  }
+
+  /** Aggregate columns for the exact integer sums the moment fragments
+    * read, named and ordered as `names` lists them: a name that does not
+    * start with `s` is the row count, `s` + one letter the sum of that
+    * variable in `vars`, `s` + two letters the sum of their product
+    * (first letter's column on the left). `wide` widens each product's
+    * left factor to DECIMAL(38,0) (DuckDB: HUGEINT) — cents products
+    * square past BIGINT at scale.
+    */
+  def momentSums(vars: Map[Char, Column], wide: Boolean = false)(names: String*): Seq[Column] =
+    names.map { name =>
+      val agg =
+        if (!name.startsWith("s")) count(lit(1))
+        else sum(name.tail.map(vars).reduce((a, b) => (if (wide) a.cast(DecimalType(38, 0)) else a) * b))
+      agg.as(name)
+    }
+
+  /** [[momentSums]] `n, sx, sy, sxy, sxx, syy` over x and y: the sums
+    * [[momentStatsSql]], [[cupedSql]], [[linregSql]] and [[residualSql]]
+    * read.
+    */
+  def bivariateSums(x: Column, y: Column, wide: Boolean = false): Seq[Column] =
+    momentSums(Map('x' -> x, 'y' -> y), wide)("n", "sx", "sy", "sxy", "sxx", "syy")
+
+  /** Bivariate moments over the columns `n, sx, sy, sxy, sxx, syy`, each
+    * name followed by `sfx`.
+    */
+  private final case class Moments(sfx: String, nonZero: Boolean) {
+    val n: String = divisorSql(s"n$sfx", nonZero)
+    def mean(a: String): String = meanSql(s"s$a$sfx", n)
+    private def cmom(a: String, b: String) = cmomSql(s"s$a$b$sfx", s"s$a$sfx", s"s$b$sfx", n)
+    val varX: String = cmom("x", "x")
+    val varY: String = cmom("y", "y")
+    val covar: String = cmom("x", "y")
+  }
+
+  /** Closed-form z-score from exact integer moments (column names fixed:
+    * `n, sx, sxx` per group, `x` per row): (x − sx/n)/sqrt(sxx/n −
+    * (sx/n)²); zero/negative variance yields NULL via a lazy CASE.
+    */
+  val zscoreSql: String = {
+    val m = Moments("", nonZero = false)
+    s"CASE WHEN ${m.varX} <= 0 THEN NULL ELSE (CAST(x AS DOUBLE) - ${m.mean("x")}) / sqrt(${m.varX}) END"
+  }
+
+  /** Closed-form moment statistics from exact integer sufficient
+    * statistics `n, sx, sy, sxy, sxx, syy` (column names fixed): mean,
+    * population stddev/covariance and Pearson correlation, as ordered
+    * (name → SQL) pairs.
+    */
+  val momentStatsSql: Seq[(String, String)] = {
+    val m = Moments("", nonZero = false)
+    import m.{covar, varX, varY}
+    Seq(
+      "mean_x" -> m.mean("x"),
+      "mean_y" -> m.mean("y"),
+      "stddev_pop_x" -> s"sqrt($varX)",
+      "stddev_pop_y" -> s"sqrt($varY)",
+      "covar_pop" -> covar,
+      // zero-variance groups (n=1, or a constant x or y) have undefined
+      // correlation: NULL via a lazy CASE, never a 0/0 division — ANSI
+      // Spark throws DIVIDE_BY_ZERO on doubles where DuckDB yields NaN
+      "corr_xy" -> s"CASE WHEN $varX * $varY = 0 THEN NULL ELSE $covar / sqrt($varX * $varY) END")
+  }
+
+  /** CUPED fragments over the same `n, sx, sy, sxy, sxx, syy` sufficient
+    * statistics (x = pre-period covariate, y = post-period metric):
+    * θ = cov/var(x) — the adjustment coefficient — and the variance
+    * reduction ratio corr²; degenerate variances yield NULL.
+    */
+  val cupedSql: Seq[(String, String)] = {
+    val m = Moments("", nonZero = false)
+    import m.{covar, varX, varY}
+    Seq(
+      "theta" -> s"CASE WHEN $varX = 0 THEN NULL ELSE $covar / $varX END",
+      "var_reduction" ->
+        s"""CASE WHEN $varX * $varY = 0 THEN NULL
+            ELSE ($covar / sqrt($varX * $varY)) * ($covar / sqrt($varX * $varY)) END""")
+  }
+
+  /** Ordinary-least-squares line fit from the sufficient statistics
+    * `n, sx, sy, sxy, sxx, syy`, each column name followed by `sfx`
+    * (`n_lo, sx_lo, …` for a per-side fit): slope = cov/var(x),
+    * intercept = ȳ − slope·x̄, r² = cov²/(var(x)·var(y)); zero-variance
+    * groups yield NULL via a lazy CASE. n rides nullif: an EMPTY side
+    * (0-row train fold, empty corpus) makes the CASE *condition* itself
+    * 0/0 before the varX guard can fire.
+    */
+  def linregSql(sfx: String = ""): Seq[(String, String)] = {
+    val m = Moments(sfx, nonZero = true)
+    import m.{covar, varX, varY}
+    val slope = s"($covar / $varX)"
+    Seq(
+      "slope" -> s"CASE WHEN $varX = 0 THEN NULL ELSE $slope END",
+      "intercept" -> s"CASE WHEN $varX = 0 THEN NULL ELSE ${m.mean("y")} - $slope * (${m.mean("x")}) END",
+      "r2" -> s"CASE WHEN $varX * $varY = 0 THEN NULL ELSE ($covar * $covar) / ($varX * $varY) END")
+  }
+
   /** Per-row OLS residual and the model-based outlier predicate, from
     * the same exact integer sufficient statistics as [[linregSql]]
     * (columns `n, sx, sy, sxy, sxx, syy` joined onto each fact row's
     * `x, y`): resid = y − (slope·x + intercept), flagged when |resid|
     * exceeds `mult`·rmse with rmse² = var(y) − cov²/var(x) (the exact
-    * in-sample mse of the fitted line). Fixed IEEE trees over exact
-    * integers — the SAME text runs in Spark `expr` and the DuckDB
-    * oracle, so the filter boundary is bit-identical.
+    * in-sample mse of the fitted line), so the filter boundary is
+    * bit-identical on both engines.
     */
   val residualSql: String = {
     // nullif(n): see linregSql — the n = 0 empty-side case
-    val (n, sx, sy, sxy, sxx) =
-      ("nullif(CAST(n AS DOUBLE), 0.0E0)", "CAST(sx AS DOUBLE)", "CAST(sy AS DOUBLE)",
-        "CAST(sxy AS DOUBLE)", "CAST(sxx AS DOUBLE)")
-    val varX = s"($sxx / $n - ($sx / $n) * ($sx / $n))"
-    val covar = s"($sxy / $n - ($sx / $n) * ($sy / $n))"
-    val slope = s"($covar / $varX)"
+    val m = Moments("", nonZero = true)
+    val slope = s"(${m.covar} / ${m.varX})"
     // NULL when var(x) = 0 (single-row or all-tied group: no line to
     // fit) — the linregSql lazy-CASE convention; unguarded, Spark ANSI
     // throws DIVIDE_BY_ZERO on the slope where DuckDB yields NaN
-    s"""CASE WHEN $varX = 0 THEN NULL
-        ELSE (CAST(y AS DOUBLE) - ($slope * CAST(x AS DOUBLE) + $sy / $n - $slope * ($sx / $n)))
+    s"""CASE WHEN ${m.varX} = 0 THEN NULL
+        ELSE (CAST(y AS DOUBLE) - ($slope * CAST(x AS DOUBLE) + ${m.mean("y")} - $slope * (${m.mean("x")})))
         END"""
   }
 
   def residualOutlierCondSql(mult: String): String = {
-    val (n, sx, sy, sxy, sxx, syy) =
-      ("CAST(n AS DOUBLE)", "CAST(sx AS DOUBLE)", "CAST(sy AS DOUBLE)",
-        "CAST(sxy AS DOUBLE)", "CAST(sxx AS DOUBLE)", "CAST(syy AS DOUBLE)")
-    val varX = s"($sxx / $n - ($sx / $n) * ($sx / $n))"
-    val varY = s"($syy / $n - ($sy / $n) * ($sy / $n))"
-    val covar = s"($sxy / $n - ($sx / $n) * ($sy / $n))"
+    val m = Moments("", nonZero = false)
+    import m.{covar, varX, varY}
     // NULL on a zero-variance group (filter treats it as false — a
     // degenerate group flags no outliers); same rationale as residualSql
     s"""CASE WHEN $varX = 0 THEN NULL

@@ -8,7 +8,7 @@ oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB over the sfDir
 tables, and compares row counts, schemas (column names), and value hashes
 (columns sorted by name, rows sorted canonically).
 """
-import sys, json, glob, os
+import sys, json, glob, os, shutil, tempfile
 import duckdb
 import numpy as np
 import pandas as pd
@@ -33,7 +33,18 @@ def canon(df: pd.DataFrame) -> str:
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    # DuckDB spills to .tmp/ under the working directory by default; keep
+    # the spill in a directory this script made, and remove it on exit.
+    spill = tempfile.mkdtemp(prefix="check_oracle_")
+    try:
+        code = run(sf_dir, out_dir, spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+    sys.exit(code)
+
+def run(sf_dir, out_dir, spill):
     con = duckdb.connect()
+    con.execute(f"SET temp_directory = '{spill}'")
     for t in ("region nation customer supplier part orders lineitem events documents embeddings").split():
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
@@ -75,7 +86,8 @@ def main():
                 print("  spark cols:", sorted(spark_df.columns))
                 print("  duck  cols:", sorted(duck_df.columns))
     print(f"== {n_pass} pass / {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    con.close()
+    return 1 if n_fail else 0
 
 if __name__ == "__main__":
     main()
