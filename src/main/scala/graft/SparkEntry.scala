@@ -3754,7 +3754,9 @@ object SparkEntry {
          FROM agg, n ORDER BY n_days"""),
     QueryDef("q_rs_range", (s, dir) =>
       Analytics.rescaledRange(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      {
+      val rsVar = Stages.cmomSql("sxx", "sx", "sx", Stages.divisorSql("n_days", nonZero = false))
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
                            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          p AS (SELECT y,
@@ -3771,12 +3773,10 @@ object SparkEntry {
                         CAST(max(t) AS BIGINT) AS sx
                  FROM z)
          SELECT n_days, r_scaled,
-                sqrt(CAST(sxx AS DOUBLE) / CAST(n_days AS DOUBLE)
-             - (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE))) AS sigma,
-                (CAST(r_scaled AS DOUBLE) / CAST(n_days AS DOUBLE))
-             / nullif(sqrt(CAST(sxx AS DOUBLE) / CAST(n_days AS DOUBLE)
-             - (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE))), 0.0E0) AS rs_stat
-         FROM agg ORDER BY n_days"""),
+                sqrt($rsVar) AS sigma,
+                (CAST(r_scaled AS DOUBLE) / CAST(n_days AS DOUBLE)) / nullif(sqrt($rsVar), 0.0E0) AS rs_stat
+         FROM agg ORDER BY n_days"""
+      }),
     QueryDef("q_friedman", (s, dir) =>
       Analytics.friedmanPage(Tables.events(s, dir)).orderBy("n_blocks"),
       """WITH cells AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d, event_type,
@@ -3934,7 +3934,7 @@ object SparkEntry {
                            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          mo AS (SELECT CAST(count(*) AS BIGINT) AS n_days, CAST(sum(y) AS BIGINT) AS sx,
-                       CAST(sum(y * y) AS BIGINT) AS sxx
+                       CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS sxx
                 FROM d),
          dev AS (SELECT d, y, n_days, sx, sxx,
                         abs(CAST(y AS DOUBLE) - CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE)) AS dev
@@ -4882,7 +4882,9 @@ object SparkEntry {
          FROM e7, e1 ORDER BY n_eval"""),
     QueryDef("q_inventory", (s, dir) =>
       Relational.inventoryPlan(Tables.lineitem(s, dir)).orderBy("rank"),
-      """WITH pd AS (SELECT l_partkey, CAST(l_shipdate AS DATE) AS day,
+      {
+      val dVar = Stages.cmomSql("d_sq", "d_total", "d_total", Stages.divisorSql("n_days", nonZero = false))
+      s"""WITH pd AS (SELECT l_partkey, CAST(l_shipdate AS DATE) AS day,
                             CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS q
                      FROM lineitem GROUP BY 1, 2),
          st AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_days,
@@ -4892,12 +4894,13 @@ object SparkEntry {
                 FROM st)
          SELECT rank, l_partkey, n_days, d_total,
                 (CAST(d_total AS DOUBLE) / CAST(n_days AS DOUBLE)) AS mean_daily,
-                sqrt(CAST(d_sq AS DOUBLE) / CAST(n_days AS DOUBLE) - (CAST(d_total AS DOUBLE) / CAST(n_days AS DOUBLE)) * (CAST(d_total AS DOUBLE) / CAST(n_days AS DOUBLE))) AS sigma_daily,
+                sqrt($dVar) AS sigma_daily,
                 sqrt(2.0 * CAST(d_total AS DOUBLE) * 100.0 / 20.0) AS eoq,
-                1.6448536269514722 * sqrt(CAST(d_sq AS DOUBLE) / CAST(n_days AS DOUBLE) - (CAST(d_total AS DOUBLE) / CAST(n_days AS DOUBLE)) * (CAST(d_total AS DOUBLE) / CAST(n_days AS DOUBLE))) * 2.6457513110645907 AS safety_stock,
+                1.6448536269514722 * sqrt($dVar) * 2.6457513110645907 AS safety_stock,
                 (CAST(d_total AS DOUBLE) / CAST(n_days AS DOUBLE)) * 7.0
-                  + 1.6448536269514722 * sqrt(CAST(d_sq AS DOUBLE) / CAST(n_days AS DOUBLE) - (CAST(d_total AS DOUBLE) / CAST(n_days AS DOUBLE)) * (CAST(d_total AS DOUBLE) / CAST(n_days AS DOUBLE))) * 2.6457513110645907 AS reorder_point
-         FROM rk WHERE rank <= 20 ORDER BY rank"""),
+                  + 1.6448536269514722 * sqrt($dVar) * 2.6457513110645907 AS reorder_point
+         FROM rk WHERE rank <= 20 ORDER BY rank"""
+      }),
     QueryDef("q_shapley_attr", (s, dir) =>
       Analytics.shapleyAttribution(Tables.events(s, dir)).orderBy("n00"),
       {

@@ -2514,43 +2514,33 @@ object Analytics {
     * approximation). The rank-r order statistic resolves on the
     * per-type VALUE GRID (first value whose cumulative count reaches
     * r) — a per-type row window would sort corpus/|types| rows in one
-    * task — and the bracket VALUES are picked by two conditional
-    * aggregates, so the output is |types| rows.
+    * task — and the bracket VALUES are picked by conditional aggregates,
+    * so the output is |types| rows. The median is the mean of the lower
+    * and upper medians, which is `percentile(c, 0.5)` bit for bit: both
+    * halves are exact in a double.
     */
   def medianCI(events: DataFrame): DataFrame = {
-    val base = events.select(
-      col("event_type"), col("event_id"), expr(Stages.centsSql("value")).as("c"))
-    val ranks = base
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), expr("percentile(c, 0.5)").as("median_cents"))
-      .select(
-        col("event_type"), col("n"), col("median_cents"),
-        expr("""greatest(CAST(1 AS BIGINT),
+    val loRank = """greatest(CAST(1 AS BIGINT),
                 CAST(floor((CAST(n AS DOUBLE) -
-                  CAST(1.96 AS DOUBLE) * sqrt(CAST(n AS DOUBLE))) / 2.0) AS BIGINT))""")
-          .as("lo_rank"),
-        expr("""least(n,
+                  CAST(1.96 AS DOUBLE) * sqrt(CAST(n AS DOUBLE))) / 2.0) AS BIGINT))"""
+    val hiRank = """least(n,
                 CAST(ceil((CAST(n AS DOUBLE) + 2.0 +
-                  CAST(1.96 AS DOUBLE) * sqrt(CAST(n AS DOUBLE))) / 2.0) AS BIGINT))""")
-          .as("hi_rank"))
-    val dist = base
-      .groupBy(col("event_type"), col("c"))
-      .agg(count(lit(1)).as("cnt"))
-    val cum = dist.withColumn(
-      "cum",
-      sum(col("cnt")).over(
-        Window.partitionBy(col("event_type")).orderBy(col("c").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    cum
-      .join(broadcast(ranks), Seq("event_type"))
-      .groupBy(col("event_type"))
+                  CAST(1.96 AS DOUBLE) * sqrt(CAST(n AS DOUBLE))) / 2.0) AS BIGINT))"""
+    def pick(r: String) = Relational.rankPick(expr(r), col("c"))
+    Relational
+      .gridRunningWeight(
+        events
+          .groupBy(col("event_type"), expr(Stages.centsSql("value")).as("c"))
+          .agg(count(lit(1)).as("cnt")),
+        Seq("event_type"), "c", "cnt")
+      .groupBy(col("event_type"), col("n"))
       .agg(
-        max(col("n")).as("n"),
-        max(col("median_cents")).as("median_cents"),
-        max(col("lo_rank")).as("lo_rank"),
-        max(col("hi_rank")).as("hi_rank"),
-        min(when(col("cum") >= col("lo_rank"), col("c"))).as("lo_cents"),
-        min(when(col("cum") >= col("hi_rank"), col("c"))).as("hi_cents"))
+        ((pick(Stages.lowerMedianRankSql("n")) + pick(Stages.upperMedianRankSql("n"))).cast("double") / 2.0)
+          .as("median_cents"),
+        expr(loRank).as("lo_rank"),
+        expr(hiRank).as("hi_rank"),
+        pick(loRank).as("lo_cents"),
+        pick(hiRank).as("hi_cents"))
   }
 
   /** Sequence-motif census: how many users' chronologically-ordered
@@ -2739,25 +2729,20 @@ object Analytics {
       .select(expr(s"(c - mn) * $bins div (mx - mn + 1)").as("bin"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("cnt"))
-    val cum = binned.select(
-      col("bin"), col("cnt"),
-      sum(col("cnt")).over(
-        Window.partitionBy(lit(1)).orderBy(col("bin"))
-          .rowsBetween(Window.unboundedPreceding, 0)).as("cum"))
+    val cum = Relational.gridRunningWeight(binned, Nil, "bin", "cnt")
     val qs = Seq(("p50", "0.5", "ex50"), ("p90", "0.9", "ex90"), ("p99", "0.99", "ex99"))
     qs.map { case (lbl, q, exCol) =>
+      val need = s"CAST(ceil($q * CAST(n AS DOUBLE)) AS BIGINT)"
       cum
-        .crossJoin(broadcast(ext))
-        .withColumn("need", expr(s"CAST(ceil($q * CAST(n AS DOUBLE)) AS BIGINT)"))
-        .filter(col("cum") >= col("need"))
-        .orderBy(col("bin").asc)
-        .limit(1)
+        .groupBy(col("n"))
+        .agg(Relational.rankPick(expr(need), struct(col("bin"), col("cum"), col("cnt"))).as("b"))
+        .crossJoin(broadcast(ext.drop("n")))
         .select(
           lit(lbl).as("q"),
           col("n"),
           expr(s"""CAST(mn AS DOUBLE) +
-                   (CAST(bin AS DOUBLE) +
-                    CAST(need - (cum - cnt) AS DOUBLE) / CAST(cnt AS DOUBLE)) *
+                   (CAST(b.bin AS DOUBLE) +
+                    CAST($need - (b.cum - b.cnt) AS DOUBLE) / CAST(b.cnt AS DOUBLE)) *
                    (CAST(mx - mn + 1 AS DOUBLE) / ${bins}.0)""").as("est_cents"),
           col(exCol).as("exact_cents"))
         .withColumn("err_cents", expr("est_cents - exact_cents"))
@@ -2996,17 +2981,16 @@ object Analytics {
         .filter(col("split") =!= "train")
         .crossJoin(broadcast(stats))
         .withColumn("abs_resid", expr(s"CAST(round(abs(${Stages.residualSql})) AS BIGINT)")))
-    val nCal = holdout.filter(col("split") === "cal").agg(count(lit(1)).as("n_cal"))
     val calCounts = holdout
       .filter(col("split") === "cal")
       .groupBy(col("abs_resid"))
       .agg(count(lit(1)).as("cnt"))
-    val cum = Window.orderBy(col("abs_resid")).rowsBetween(Window.unboundedPreceding, 0)
-    val qhat = calCounts
-      .withColumn("cum", sum(col("cnt")).over(cum))
-      .crossJoin(broadcast(nCal))
-      .filter(col("cum") >= expr("(9 * (n_cal + 1) + 9) div 10"))
-      .agg(min(col("abs_resid")).as("qhat_dollars"))
+    val qhat = Relational
+      .gridRunningWeight(calCounts, Nil, "abs_resid", "cnt")
+      .agg(
+        // an empty calibration split has no grid row and counts 0
+        coalesce(max(col("n")), lit(0L)).as("n_cal"),
+        Relational.rankPick(expr("(9 * (n + 1) + 9) div 10"), col("abs_resid")).as("qhat_dollars"))
     val testAgg = holdout
       .filter(col("split") === "test")
       .crossJoin(broadcast(qhat))
@@ -3018,7 +3002,6 @@ object Analytics {
       expr(Stages.linregSql().toMap.apply("slope")).as("slope"),
       expr(Stages.linregSql().toMap.apply("intercept")).as("intercept"))
     fit
-      .crossJoin(broadcast(nCal))
       .crossJoin(broadcast(qhat))
       .crossJoin(broadcast(testAgg))
       .withColumn(
@@ -4255,17 +4238,12 @@ object Analytics {
       "cast(conv(substring(md5(cast(user_id as string)), 1, 8), 16, 10) as bigint) % 2"
     val vals = events.select(expr(arm).as("arm"), expr(Stages.centsSql("value")).as("v"))
     val counts = vals.groupBy(col("arm"), col("v")).agg(count(lit(1)).as("cnt"))
-    val cum = Window.partitionBy(col("arm")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val totals = vals.groupBy(col("arm")).agg(count(lit(1)).as("n"))
     val deciles = events.sparkSession.range(1, 10).select(col("id").as("decile"))
-    val qs = counts
-      .withColumn("cum", sum(col("cnt")).over(cum))
-      .join(broadcast(totals), Seq("arm"))
+    val qs = Relational
+      .gridRunningWeight(counts, Seq("arm"), "v", "cnt")
       .crossJoin(broadcast(deciles))
-      .filter(col("cum") >= expr("(decile * n + 9) div 10"))
       .groupBy(col("arm"), col("decile"))
-      .agg(min(col("v")).as("q"))
+      .agg(Relational.rankPick(expr("(decile * n + 9) div 10"), col("v")).as("q"))
     qs.filter(col("arm") === 0).select(col("decile"), col("q").as("q_a"))
       .join(
         qs.filter(col("arm") === 1).select(col("decile"), col("q").as("q_b")),
@@ -4346,14 +4324,9 @@ object Analytics {
     val base = lineitem.select(
       expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
       expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y"))
-    val counts = base.groupBy(col("x")).agg(count(lit(1)).as("cnt"))
-    val cum = Window.orderBy(col("x")).rowsBetween(Window.unboundedPreceding, 0)
-    val tot = base.agg(count(lit(1)).as("n_all"))
-    val split = counts
-      .withColumn("cum", sum(col("cnt")).over(cum))
-      .crossJoin(broadcast(tot))
-      .filter(col("cum") >= expr("(n_all + 1) div 2"))
-      .agg(min(col("x")).as("x_split"))
+    val split = Relational
+      .gridRunningWeight(base.groupBy(col("x")).agg(count(lit(1)).as("cnt")), Nil, "x", "cnt")
+      .agg(Relational.rankPick(expr(Stages.lowerMedianRankSql("n")), col("x")).as("x_split"))
     def sideAggs(sfx: String, cond: Column) = Seq(
       sum(when(cond, 1L).otherwise(0L)).as(s"n_$sfx"),
       sum(when(cond, col("x")).otherwise(lit(0L))).as(s"sx_$sfx"),
@@ -4432,8 +4405,8 @@ object Analytics {
     * sorted multiset, summed → 4× the pseudo-median), so both engines
     * agree bit-for-bit. The corpus collapses to the |days|-bounded daily
     * rollup before the O(days²) pair join — calendar-bounded at any
-    * corpus scale, so the single-partition rank over ~n²/2 rows is a
-    * constant-size epilogue, not a data-scale window.
+    * corpus scale, and the Walsh sums collapse again to their value
+    * grid before the one single-partition running-weight window.
     */
   def hodgesLehmann(events: DataFrame): DataFrame = {
     val daily = events
@@ -4441,17 +4414,17 @@ object Analytics {
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
     val a = daily.select(col("d").as("d1"), col("y").as("y1"))
     val b = daily.select(col("d").as("d2"), col("y").as("y2"))
-    val ranked = a
+    val walsh = a
       .join(b, col("d1") <= col("d2"))
-      .select((col("y1") + col("y2")).as("s"))
-      .withColumn("r", row_number().over(Window.partitionBy(lit(1)).orderBy(col("s").asc)))
-      .withColumn("m", count(lit(1)).over(Window.partitionBy(lit(1))))
+      .groupBy((col("y1") + col("y2")).as("s"))
+      .agg(count(lit(1)).as("c"))
     val nDays = daily.agg(count(lit(1)).cast("long").as("n_days"))
-    ranked
+    Relational
+      .gridRunningWeight(walsh, Nil, "s", "c")
       .agg(
-        max(col("m")).cast("long").as("m_pairs"),
-        expr("sum(CASE WHEN r = (m + 1) div 2 THEN s ELSE CAST(0 AS BIGINT) END)").as("v1"),
-        expr("sum(CASE WHEN r = (m + 2) div 2 THEN s ELSE CAST(0 AS BIGINT) END)").as("v2"))
+        max(col("n")).as("m_pairs"),
+        Relational.rankPick(expr(Stages.lowerMedianRankSql("n")), col("s")).as("v1"),
+        Relational.rankPick(expr(Stages.upperMedianRankSql("n")), col("s")).as("v2"))
       .crossJoin(nDays)
       .select(
         col("n_days"),
@@ -4665,8 +4638,7 @@ object Analytics {
 
   def gumbelMeanSql: String = s"(${Stages.meanSql("sm", Stages.divisorSql("n_blocks", nonZero = false))})"
   def gumbelSigmaSql: String =
-    s"""sqrt(CAST(smm AS DOUBLE) / CAST(n_blocks AS DOUBLE)
-        - $gumbelMeanSql * $gumbelMeanSql)"""
+    s"sqrt(${cmomSql("smm", "sm", "sm", Stages.divisorSql("n_blocks", nonZero = false))})"
 
   /** Siegel's repeated-median slope of the daily revenue series — the
     * 50%-breakdown robust trend (vs 29% for Theil–Sen): the median over
@@ -4690,25 +4662,20 @@ object Analytics {
     val slopes = a
       .join(b, col("i1") =!= col("i2"))
       .select(col("i1").as("i"), expr("CAST(y2 - y1 AS DOUBLE) / CAST(i2 - i1 AS DOUBLE)").as("s"))
-    val wI = Window.partitionBy(col("i"))
-    val inner = slopes
-      .withColumn("r", row_number().over(wI.orderBy(col("s").asc)))
-      .withColumn("c", count(lit(1)).over(wI))
-      .filter(expr("r = (c + 1) div 2"))
-      .select(col("i"), col("s").as("med"))
-    val w1 = Window.partitionBy(lit(1))
-    val outer = inner
-      .withColumn("r", row_number().over(w1.orderBy(col("med").asc)))
-      .withColumn("c", count(lit(1)).over(w1))
-      .filter(expr("r = (c + 1) div 2"))
-      .select(col("med").as("slope"))
+    // per-row ranks, not a value grid: grouping on a double folds −0.0
+    // into 0.0, and a slope over a negative index gap can be −0.0
+    def lowerMedianRow(df: DataFrame, part: Column, v: String): DataFrame = {
+      val w = Window.partitionBy(part)
+      df.withColumn("r", row_number().over(w.orderBy(col(v).asc)))
+        .withColumn("c", count(lit(1)).over(w))
+        .filter(expr(s"r = ${Stages.lowerMedianRankSql("c")}"))
+    }
+    val inner = lowerMedianRow(slopes, col("i"), "s").select(col("i"), col("s").as("med"))
+    val outer = lowerMedianRow(inner, lit(1), "med").select(col("med").as("slope"))
     val resid = idx
       .crossJoin(outer)
       .select(col("slope"), expr("CAST(y AS DOUBLE) - slope * CAST(i AS DOUBLE)").as("res"))
-    val interceptRow = resid
-      .withColumn("r", row_number().over(w1.orderBy(col("res").asc)))
-      .withColumn("c", count(lit(1)).over(w1))
-      .filter(expr("r = (c + 1) div 2"))
+    val interceptRow = lowerMedianRow(resid, lit(1), "res")
     val n = daily.agg(count(lit(1)).cast("long").as("n_days"))
     interceptRow
       .crossJoin(n)
@@ -4734,20 +4701,12 @@ object Analytics {
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("r"))
       .withColumn("a", lit(0L))
       .withColumn("b", lit(0L))
-    def lowerMed(c: Column, part: Column): Column = {
-      // lower median via sorted frame array — element (cnt+1) div 2.
-      // collect_list skips NULLs, so an all-null partition yields an
-      // EMPTY array and element_at(_, 0) throws under ANSI (r10
-      // degenerate probe) — a null median is the aligned answer.
-      val arr = sort_array(collect_list(c).over(Window.partitionBy(part)))
-      when(size(arr) === 0, lit(null))
-        .otherwise(element_at(arr, ((size(arr) + 1) / 2).cast("int")))
-    }
-    def rowSweep(df: DataFrame): DataFrame = df
-      .withColumn("m", lowerMed(col("r"), col("i")))
+    def lowerMed(df: DataFrame, part: String): DataFrame = df
+      .withColumn("arr", sort_array(collect_list(col("r")).over(Window.partitionBy(col(part)))))
+      .withColumn("m", expr(sortedLowerMedianSql("arr")))
+    def rowSweep(df: DataFrame): DataFrame = lowerMed(df, "i")
       .select(col("i"), col("j"), (col("r") - col("m")).as("r"), (col("a") + col("m")).as("a"), col("b"))
-    def colSweep(df: DataFrame): DataFrame = df
-      .withColumn("m", lowerMed(col("r"), col("j")))
+    def colSweep(df: DataFrame): DataFrame = lowerMed(df, "j")
       .select(col("i"), col("j"), (col("r") - col("m")).as("r"), col("a"), (col("b") + col("m")).as("b"))
     val polished = colSweep(rowSweep(colSweep(rowSweep(cells0))))
     val rowEff = polished.groupBy(col("i").as("key")).agg(max(col("a")).as("effect_cents"))
@@ -4762,6 +4721,14 @@ object Analytics {
         col("effect_cents"),
         expr("CAST(effect_cents AS DOUBLE) / 100.0").as("effect_dollars"))
   }
+
+  /** Lower median of the sorted array column `arr`. collect_list skips
+    * NULLs, so an all-null frame is EMPTY and element_at(_, 0) throws
+    * under ANSI (r10 degenerate probe) — a null median is the aligned
+    * degenerate answer.
+    */
+  private def sortedLowerMedianSql(arr: String): String =
+    s"CASE WHEN size($arr) > 0 THEN element_at($arr, CAST(${Stages.lowerMedianRankSql(s"size($arr)")} AS INT)) END"
 
   /** Hampel filter over the daily revenue series: 7-day centred rolling
     * LOWER median and rolling MAD (both exact integers — medians of
@@ -4779,14 +4746,9 @@ object Analytics {
     val w = Window.partitionBy(lit(1)).orderBy(col("d").asc).rowsBetween(-3, 3)
     daily
       .withColumn("arr", sort_array(collect_list(col("y")).over(w)))
-      // collect_list skips NULLs: an all-null frame is EMPTY and
-      // element_at(_, 0) throws under ANSI (r10 degenerate probe) —
-      // null median/MAD is the aligned degenerate answer
-      .withColumn("med7", expr(
-        "CASE WHEN size(arr) > 0 THEN element_at(arr, CAST((size(arr) + 1) div 2 AS INT)) END"))
+      .withColumn("med7", expr(sortedLowerMedianSql("arr")))
       .withColumn("devs", expr("sort_array(transform(arr, x -> abs(x - med7)))"))
-      .withColumn("mad7", expr(
-        "CASE WHEN size(devs) > 0 THEN element_at(devs, CAST((size(devs) + 1) div 2 AS INT)) END"))
+      .withColumn("mad7", expr(sortedLowerMedianSql("devs")))
       .select(
         col("d").as("day_epoch"),
         col("y").as("y_cents"),
@@ -5598,20 +5560,11 @@ object Analytics {
         sum(col("is_new")).over(userOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col("user_id"), col("session_id"))
       .agg((max(col("ts").cast("long")) - min(col("ts").cast("long"))).as("dur"))
-    val grid = durations.groupBy(col("dur")).agg(count(lit(1)).as("c"))
-    val below = Window
-      .partitionBy(lit(1))
-      .orderBy(col("dur"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = grid
-      .withColumn("cb", coalesce(sum(col("c")).over(below), lit(0L)))
-      .crossJoin(broadcast(grid.agg(sum(col("c")).as("n"), sum(col("dur") * col("c")).as("sd"))))
-    def pick(p: Int, alias: String): DataFrame =
-      cum
-        .filter(expr(s"cb < ($p * (n - 1)) div 100 + 1 AND ($p * (n - 1)) div 100 + 1 <= cb + c"))
-        .select(col("dur").as(alias), col("n"), col("sd"))
-    pick(50, "p50_seconds")
-      .crossJoin(pick(90, "p90_seconds").select(col("p90_seconds")))
+    def pick(p: Int) = Relational.rankPick(expr(Stages.type1RankSql(p.toString, "n")), col("dur"))
+    Relational
+      .gridRunningWeight(durations.groupBy(col("dur")).agg(count(lit(1)).as("c")), Nil, "dur", "c")
+      .groupBy(col("n"))
+      .agg(pick(50).as("p50_seconds"), pick(90).as("p90_seconds"), sum(col("dur") * col("c")).as("sd"))
       .select(
         col("n").as("n_sessions"),
         col("p50_seconds"),
@@ -5642,19 +5595,11 @@ object Analytics {
       .groupBy(col("r").cast("long").as("resample"), col("x"))
       .agg(sum(col("m")).as("w"))
       .filter(col("w") > 0)
-    val below = Window
-      .partitionBy(col("resample"))
-      .orderBy(col("x"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    grid
-      .withColumn("cb", coalesce(sum(col("w")).over(below), lit(0L)))
-      .withColumn("n", sum(col("w")).over(Window.partitionBy(col("resample"))))
-      .filter(expr("cb < (n + 1) div 2 AND (n + 1) div 2 <= cb + w"))
-      .select(
-        col("resample"),
-        col("n").as("n_eff"),
-        col("x").as("median_cents"),
-        expr("CAST(x AS DOUBLE) / 100.0").as("median_dollars"))
+    Relational
+      .gridRunningWeight(grid, Seq("resample"), "x", "w")
+      .groupBy(col("resample"), col("n").as("n_eff"))
+      .agg(Relational.rankPick(expr(Stages.lowerMedianRankSql("n")), col("x")).as("median_cents"))
+      .withColumn("median_dollars", expr("CAST(median_cents AS DOUBLE) / 100.0"))
   }
 
   /** Content-defined chunking (CDC) storage-dedup audit over the
@@ -6099,16 +6044,9 @@ object Analytics {
         sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("errors"),
         sum(when(col("event_type") === "purchase", expr(Stages.centsSql("value"))).otherwise(0L))
           .as("spend"))
-    val grid = base.groupBy(col("spend")).agg(count(lit(1)).as("c"))
-    val below = Window
-      .partitionBy(lit(1))
-      .orderBy(col("spend"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val med = grid
-      .withColumn("cb", coalesce(sum(col("c")).over(below), lit(0L)))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(lit(1))))
-      .filter(expr("cb < (n + 1) div 2 AND (n + 1) div 2 <= cb + c"))
-      .select(col("spend").as("med"))
+    val med = Relational
+      .gridRunningWeight(base.groupBy(col("spend")).agg(count(lit(1)).as("c")), Nil, "spend", "c")
+      .agg(Relational.rankPick(expr(Stages.lowerMedianRankSql("n")), col("spend")).as("med"))
     base
       .crossJoin(broadcast(med))
       .withColumn("label", when(col("spend") > col("med"), 1L).otherwise(0L))

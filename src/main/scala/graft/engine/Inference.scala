@@ -750,19 +750,12 @@ object Inference {
     */
   def trimmedMean(lineitem: DataFrame, trimPct: Int = 10): DataFrame = {
     // shared pinned cents histogram (see Relational.centsDistByFlag)
-    val grid = Relational.centsDistByFlag(lineitem).withColumnRenamed("cnt", "t")
-    val w = Window
-      .partitionBy(col("l_returnflag"))
-      .orderBy(col("x"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val n = grid.groupBy(col("l_returnflag")).agg(sum(col("t")).as("n"))
-    grid
-      .withColumn("cum", sum(col("t")).over(w))
-      .join(n, "l_returnflag")
+    Relational
+      .gridRunningWeight(Relational.centsDistByFlag(lineitem), Seq("l_returnflag"), "x", "cnt")
       .withColumn("lo", expr(s"n * $trimPct div 100"))
       .withColumn(
         "c_eff",
-        expr("greatest(least(cum, n - lo) - greatest(cum - t, lo), 0)"))
+        expr("greatest(least(cum, n - lo) - greatest(cum - cnt, lo), 0)"))
       .groupBy(col("l_returnflag"), col("n"), col("lo"))
       .agg(sum(expr("c_eff * x")).as("sx"), sum(col("c_eff")).as("n_kept"))
       .select(
@@ -940,8 +933,8 @@ object Inference {
     * types — the coarser, more outlier-robust sibling of
     * [[graft.engine.Analytics.mannWhitney]] (which shares its value→count
     * grid). The grand median is the exact lower median of the MERGED
-    * distribution, read off the bounded cent grid (min x with
-    * 2·cum(x) ≥ N — pure integer, no percentile buffer); the 2×2 table
+    * distribution, read off the bounded cent grid (rank ⌈N/2⌉ by
+    * [[Relational.rankPick]] — pure integer, no percentile buffer); the 2×2 table
     * (above / not-above × group) is four BIGINT sums, and the
     * Yates-corrected χ² is one fixed IEEE tree over them (shared verbatim
     * with the oracle via [[moodChi2Sql]]). One fact shuffle to the grid;
@@ -955,13 +948,9 @@ object Inference {
       .agg(
         sum(when(col("event_type") === typeA, 1L).otherwise(0L)).as("a"),
         sum(when(col("event_type") === typeB, 1L).otherwise(0L)).as("b"))
-    val cum = Window.partitionBy(lit(1)).orderBy(col("x"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val med = grid
-      .select(col("x"), sum(col("a") + col("b")).over(cum).as("c"))
-      .crossJoin(broadcast(grid.agg(sum(col("a") + col("b")).as("n"))))
-      .filter(lit(2L) * col("c") >= col("n"))
-      .agg(min(col("x")).as("median_cents"))
+    val med = Relational
+      .gridRunningWeight(grid.select(col("x"), (col("a") + col("b")).as("c")), Nil, "x", "c")
+      .agg(Relational.rankPick(expr(Stages.lowerMedianRankSql("n")), col("x")).as("median_cents"))
     grid
       .crossJoin(broadcast(med))
       .agg(
@@ -1345,18 +1334,13 @@ object Inference {
         .filter(col("event_type") === t)
         .groupBy(expr(Stages.centsSql("value")).as("x"))
         .agg(count(lit(1)).as("c"))
-      val below = Window
-        .partitionBy(lit(1))
-        .orderBy(col("x"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      grid
-        .withColumn("cb", coalesce(sum(col("c")).over(below), lit(0L)))
-        .crossJoin(broadcast(grid.agg(sum(col("c")).as("n"))))
+      Relational
+        .gridRunningWeight(grid, Nil, "x", "c")
         .crossJoin(
           events.sparkSession.range(1)
             .select(explode(expr("sequence(5, 95, 5)")).as("p")))
-        .filter(expr("cb < (p * (n - 1)) div 100 + 1 AND (p * (n - 1)) div 100 + 1 <= cb + c"))
-        .select(col("p").cast("long").as("p"), col("x").as(alias))
+        .groupBy(col("p").cast("long").as("p"))
+        .agg(Relational.rankPick(expr(Stages.type1RankSql("p", "n")), col("x")).as(alias))
     }
     quantiles(typeA, "qa_cents")
       .join(quantiles(typeB, "qb_cents"), Seq("p"))

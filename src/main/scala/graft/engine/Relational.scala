@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.engine.Caches.CacheOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,7 +32,7 @@ object Relational {
     * WindowExec over the full input). `sort` must be a total order for
     * the rank to be deterministic.
     */
-  def rankedTopK(df: DataFrame, k: Int, sort: org.apache.spark.sql.Column*): DataFrame =
+  def rankedTopK(df: DataFrame, k: Int, sort: Column*): DataFrame =
     df.orderBy(sort: _*)
       .limit(k)
       .withColumn(
@@ -206,16 +206,6 @@ object Relational {
         expr("any(value > 100)").as("any_large"),
         expr("count_if(value > 100)").as("n_large"))
 
-  /** Exact DISCRETE quantiles (type-1: smallest value whose CDF reaches
-    * q) per return flag, computed on the value grid: distinct cents with
-    * per-flag cumulative counts, then `min(x : 100·cum ≥ q·n)` — pure
-    * integer comparisons, so there is no interpolation-convention or FP
-    * ambiguity to disagree on across engines (the reason this exists
-    * beside the `percentile_cont`-based q_percentiles). The cumulative
-    * window runs per flag over the VALUE GRID — value-domain bounded,
-    * never corpus-bounded — and the quantile picks are one map-combined
-    * conditional-min aggregate.
-    */
   /** PINNED (l_returnflag, cents extendedprice) → count distribution —
     * the cents-grained sibling of [[madOutliers]]' floor-dollar
     * histogram: [[discQuantiles]] and [[Inference.trimmedMean]] both run
@@ -227,20 +217,21 @@ object Relational {
       _.groupBy(col("l_returnflag"), expr(Stages.centsSql("l_extendedprice")).as("x"))
         .agg(count(lit(1)).as("cnt")))
 
+  /** Exact DISCRETE quantiles (smallest value whose CDF reaches q) per
+    * return flag, computed on the value grid: the nearest rank
+    * ⌈q·n/100⌉ picked by [[rankPick]] — pure integer comparisons, so
+    * there is no interpolation-convention or FP ambiguity to disagree on
+    * across engines (the reason this exists beside the
+    * `percentile_cont`-based q_percentiles). The cumulative window runs
+    * per flag over the VALUE GRID — value-domain bounded, never
+    * corpus-bounded — and the quantile picks are one map-combined
+    * conditional-min aggregate.
+    */
   def discQuantiles(lineitem: DataFrame): DataFrame = {
-    val grid = centsDistByFlag(lineitem).withColumnRenamed("cnt", "c")
-    val w = Window
-      .partitionBy(col("l_returnflag"))
-      .orderBy(col("x"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = grid.withColumn("cum", sum(col("c")).over(w))
-    val n = grid.groupBy(col("l_returnflag")).agg(sum(col("c")).as("n_rows"))
     def pick(q: Int) =
-      (min(when(expr(s"100 * cum >= $q * n_rows"), col("x"))).cast("double") / 100.0)
-        .as(s"p$q")
-    cum
-      .join(n, "l_returnflag")
-      .groupBy(col("l_returnflag"), col("n_rows"))
+      (rankPick(expr(s"($q * n + 99) div 100"), col("x")).cast("double") / 100.0).as(s"p$q")
+    gridRunningWeight(centsDistByFlag(lineitem), Seq("l_returnflag"), "x", "cnt")
+      .groupBy(col("l_returnflag"), col("n").as("n_rows"))
       .agg(pick(25), pick(50), pick(75), pick(95))
   }
 
@@ -1101,7 +1092,7 @@ object Relational {
     * runs no job while it is built, and produces bit-identical ranks
     * because the sort key is a total order.
     */
-  def scalableGlobalRank(df: DataFrame, sortCols: org.apache.spark.sql.Column*): DataFrame = {
+  def scalableGlobalRank(df: DataFrame, sortCols: Column*): DataFrame = {
     val parts = math.max(df.sparkSession.sparkContext.defaultParallelism, 2)
     val ranged = df.repartitionByRange(parts, sortCols: _*).sortWithinPartitions(sortCols: _*)
     org.apache.spark.sql.graft.ColumnShim
@@ -1118,7 +1109,7 @@ object Relational {
     * sort is a total order and the values are exact integers; callers
     * should pass a total order so the ranks themselves are deterministic.
     */
-  def scalableCumSum(df: DataFrame, valueCol: String, sortCols: org.apache.spark.sql.Column*): DataFrame =
+  def scalableCumSum(df: DataFrame, valueCol: String, sortCols: Column*): DataFrame =
     blockedRunningSum(scalableGlobalRank(df, sortCols: _*), Nil, "rank", col(valueCol), "cum")
 
   /** Inclusive running sum of `value` per `groups`, in ascending order of
@@ -1143,7 +1134,7 @@ object Relational {
     * NULL yields NULL where the window would yield the offset.
     */
   private[graft] def blockedRunningSum(
-      df: DataFrame, groups: Seq[String], order: String, value: org.apache.spark.sql.Column,
+      df: DataFrame, groups: Seq[String], order: String, value: Column,
       out: String): DataFrame = {
     val block = 1L << 20
     val keys = groups :+ "_blk"
@@ -1171,6 +1162,38 @@ object Relational {
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select((df.columns.toSeq :+ out).map(c => col(s"`$c`")): _*)
   }
+
+  /** Exact order statistics over a value grid: rows of `value` in each
+    * `groups` group, each carrying its multiplicity `weight`.
+    * Adds `cum`, the inclusive running weight in ascending `value`
+    * order, and `n`, the group's total weight, in one window partitioned
+    * by the groups (by a constant when there are none). A row whose
+    * group key is NULL is in no group, as under the equi-join on the
+    * keys that a separate totals table needs. The window sorts the grid,
+    * which the value domain bounds, never the rows the grid was counted
+    * from. Pick ranks with [[rankPick]]; the rank rules live in
+    * [[Stages]].
+    */
+  private[graft] def gridRunningWeight(
+      grid: DataFrame, groups: Seq[String], value: String, weight: String): DataFrame = {
+    val w = Window
+      .partitionBy((if (groups.isEmpty) Seq(lit(1)) else groups.map(col)): _*)
+      .orderBy(col(value))
+    val keyed = if (groups.isEmpty) grid else grid.filter(groups.map(col(_).isNotNull).reduce(_ && _))
+    keyed.select(
+      col("*"),
+      sum(col(weight)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("cum"),
+      sum(col(weight)).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("n"))
+  }
+
+  /** Aggregate over [[gridRunningWeight]]'s rows: the rank-`r` value,
+    * the least `value` whose running weight reaches r (equal values sit
+    * together in value order, however they split over rows). `value`
+    * may be any column that rises with the grid's value (a struct led by
+    * it picks the whole row).
+    */
+  private[graft] def rankPick(r: Column, value: Column): Column =
+    min(when(col("cum") >= r, value))
 
   /** One-pass data-quality profile — the schema-health scan a pipeline
     * runs before training: row/null/distinct tallies and time bounds in
@@ -2247,7 +2270,7 @@ object Relational {
       .select(col("p_partkey"), col("p_brand"), expr(Stages.centsSql("p_retailprice")).as("pc"))
       .withColumn("r", row_number().over(w.orderBy(col("pc").asc, col("p_partkey").asc)))
       .withColumn("n", count(lit(1)).over(w))
-      .withColumn("med_r", expr("(n + 1) div 2"))
+      .withColumn("med_r", expr(Stages.lowerMedianRankSql("n")))
       .select(
         col("p_partkey").as("l_partkey"),
         col("p_brand"),

@@ -151,6 +151,24 @@ object Stages {
         s"((($xCol >> $i) & 1) << ${2 * i}) + ((($yCol >> $i) & 1) << ${2 * i + 1})")
       .mkString("(", " + ", ")")
 
+  // ---- order-statistic rank rules ------------------------------------------
+  //
+  // The 1-based rank of the picked value among a group's n sorted values,
+  // as integer SQL text over the count text `n`. Every exact order
+  // statistic reads its rank from here ([[Relational.rankPick]] picks it
+  // off a value grid).
+
+  /** Lower-median rank ⌈n/2⌉. */
+  def lowerMedianRankSql(n: String): String = s"($n + 1) div 2"
+
+  /** Upper-median rank ⌊n/2⌋ + 1; equal to the lower one for odd n. */
+  def upperMedianRankSql(n: String): String = s"$n div 2 + 1"
+
+  /** Type-1 quantile rank for the integer percent text `p`:
+    * (p·(n−1)) div 100 + 1.
+    */
+  def type1RankSql(p: String, n: String): String = s"($p * ($n - 1)) div 100 + 1"
+
   // ---- exact moment statistics -------------------------------------------
   //
   // Every mean, variance, covariance, correlation and line fit is a fixed

@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.engine.Caches.CacheOps
-import graft.engine.Views
+import graft.engine.{Relational, Stages, Views}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1931,27 +1931,19 @@ object TextAnalysis {
     * integer-condition CASE.
     */
   def robustScale(documents: DataFrame): DataFrame = {
-    // Quartiles off the per-source (n_chars → count) DISTRIBUTION: the
-    // rank-r order statistic is the first value whose cumulative count
-    // reaches r (runs are contiguous), so the cumulative window sorts
-    // the value grid — never per-source document rows, which would put
-    // corpus/|sources| rows in one task at scale.
-    val dist = documents
-      .groupBy(col("source"), col("n_chars"))
-      .agg(count(lit(1)).as("c"))
-    val cum = dist.withColumn(
-      "cum",
-      sum(col("c")).over(
-        Window.partitionBy(col("source")).orderBy(col("n_chars").asc)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val n = dist.groupBy(col("source")).agg(sum(col("c")).as("n"))
-    val stats = cum
-      .join(broadcast(n), Seq("source"))
+    // Quartiles off the per-source (n_chars → count) DISTRIBUTION, so the
+    // cumulative window sorts the value grid — never per-source document
+    // rows, which would put corpus/|sources| rows in one task at scale.
+    def pick(r: String) = Relational.rankPick(expr(r), col("n_chars"))
+    val stats = Relational
+      .gridRunningWeight(
+        documents.groupBy(col("source"), col("n_chars")).agg(count(lit(1)).as("c")),
+        Seq("source"), "n_chars", "c")
       .groupBy(col("source"))
       .agg(
-        min(when(expr("cum >= (n + 1) div 2"), col("n_chars"))).as("med"),
-        min(when(expr("cum >= (n + 3) div 4"), col("n_chars"))).as("q1"),
-        min(when(expr("cum >= (3 * n + 1) div 4"), col("n_chars"))).as("q3"))
+        pick(Stages.lowerMedianRankSql("n")).as("med"),
+        pick("(n + 3) div 4").as("q1"),
+        pick("(3 * n + 1) div 4").as("q3"))
     documents
       .select(col("doc_id"), col("source"), col("n_chars"))
       .join(stats, Seq("source"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -220,11 +221,26 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("discQuantiles windows over the value grid per flag, not the corpus") {
-    val p = plan(Relational.discQuantiles(Tables.lineitem(spark, sfDir)))
-    // grid aggregate (partial+final) sits below the cumulative window
-    val winAt = p.indexOf("Window")
-    assert(winAt >= 0 && p.indexOf("HashAggregate", winAt) > winAt,
-      s"expected the value-grid aggregate below the cumulative window:\n$p")
+    val queries = Seq("q_session_percentiles", "q_qq", "q_boot_median", "q_qte", "q_conformal",
+      "q_segmented", "q_hodges_lehmann").map(q => q -> SparkEntry.queries(q)(spark, sfDir))
+    val inputs = ("discQuantiles" -> Relational.discQuantiles(Tables.lineitem(spark, sfDir))) +: queries
+    val problems = inputs.flatMap { case (name, df) =>
+      val p = plan(df)
+      // the cumulative windows: the running weight is named `cum`
+      val windows = p.linesIterator.filter(l => l.contains("Window [") && l.contains(" AS cum#")).toSeq
+      // the optimizer drops a constant partition key, so the spec the
+      // builder asked for is read off the analyzed plan; an empty one
+      // (`Window.orderBy`) gathers the grid with no key at all
+      val unpartitioned = df.queryExecution.analyzed.collect {
+        case w: LogicalWindow if w.windowExpressions.exists(_.name == "cum") && w.partitionSpec.isEmpty => w
+      }
+      // grid aggregate (partial+final) sits below each cumulative window
+      (if (windows.isEmpty) Seq(s"$name: no cumulative window") else Nil) ++
+        windows.filter(w => p.indexOf("HashAggregate", p.indexOf(w)) < 0)
+          .map(w => s"$name: no value-grid aggregate below $w") ++
+        unpartitioned.map(w => s"$name: no partition spec in ${w.simpleString(200)}")
+    }
+    assert(problems.isEmpty, problems.mkString("\n"))
   }
 
   test("fullOuterActivity pre-aggregates both sides below the full-outer join") {
