@@ -2515,9 +2515,10 @@ object Analytics {
     * per-type VALUE GRID (first value whose cumulative count reaches
     * r) — a per-type row window would sort corpus/|types| rows in one
     * task — and the bracket VALUES are picked by conditional aggregates,
-    * so the output is |types| rows. The median is the mean of the lower
-    * and upper medians, which is `percentile(c, 0.5)` bit for bit: both
-    * halves are exact in a double.
+    * so the output is |types| rows. The brackets rank NULL values
+    * lowest, as the rank arithmetic counts every row; the median is the
+    * frequency-weighted `percentile` over the same grid, which skips a
+    * NULL value as the oracle's `quantile_cont` does.
     */
   def medianCI(events: DataFrame): DataFrame = {
     val loRank = """greatest(CAST(1 AS BIGINT),
@@ -2533,14 +2534,15 @@ object Analytics {
           .groupBy(col("event_type"), expr(Stages.centsSql("value")).as("c"))
           .agg(count(lit(1)).as("cnt")),
         Seq("event_type"), "c", "cnt")
-      .groupBy(col("event_type"), col("n"))
+      .groupBy(col("event_type"))
       .agg(
-        ((pick(Stages.lowerMedianRankSql("n")) + pick(Stages.upperMedianRankSql("n"))).cast("double") / 2.0)
-          .as("median_cents"),
-        expr(loRank).as("lo_rank"),
-        expr(hiRank).as("hi_rank"),
+        max(col("n")).as("n"),
+        expr("percentile(c, 0.5, cnt)").as("median_cents"),
         pick(loRank).as("lo_cents"),
         pick(hiRank).as("hi_cents"))
+      .select(
+        col("event_type"), col("n"), col("median_cents"),
+        expr(loRank).as("lo_rank"), expr(hiRank).as("hi_rank"), col("lo_cents"), col("hi_cents"))
   }
 
   /** Sequence-motif census: how many users' chronologically-ordered
@@ -2729,24 +2731,29 @@ object Analytics {
       .select(expr(s"(c - mn) * $bins div (mx - mn + 1)").as("bin"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("cnt"))
-    val cum = Relational.gridRunningWeight(binned, Nil, "bin", "cnt")
     val qs = Seq(("p50", "0.5", "ex50"), ("p90", "0.9", "ex90"), ("p99", "0.99", "ex99"))
-    qs.map { case (lbl, q, exCol) =>
-      val need = s"CAST(ceil($q * CAST(n AS DOUBLE)) AS BIGINT)"
-      cum
-        .groupBy(col("n"))
-        .agg(Relational.rankPick(expr(need), struct(col("bin"), col("cum"), col("cnt"))).as("b"))
-        .crossJoin(broadcast(ext.drop("n")))
-        .select(
-          lit(lbl).as("q"),
-          col("n"),
-          expr(s"""CAST(mn AS DOUBLE) +
-                   (CAST(b.bin AS DOUBLE) +
-                    CAST($need - (b.cum - b.cnt) AS DOUBLE) / CAST(b.cnt AS DOUBLE)) *
-                   (CAST(mx - mn + 1 AS DOUBLE) / ${bins}.0)""").as("est_cents"),
-          col(exCol).as("exact_cents"))
-        .withColumn("err_cents", expr("est_cents - exact_cents"))
-    }.reduce(_ unionAll _)
+    def need(q: String) = s"CAST(ceil($q * CAST(n AS DOUBLE)) AS BIGINT)"
+    // one pass over the grid picks all three bins; each becomes one row
+    val picks = qs.map { case (lbl, q, _) =>
+      Relational.rankPick(expr(need(q)), struct(col("bin"), col("cum"), col("cnt"))).as(lbl)
+    }
+    Relational
+      .gridRunningWeight(binned, Nil, "bin", "cnt")
+      .groupBy(col("n"))
+      .agg(picks.head, picks.tail: _*)
+      .crossJoin(broadcast(ext.drop("n")))
+      .select(col("n"), col("mn"), col("mx"), explode(array(qs.map { case (lbl, q, exCol) =>
+        struct(lit(lbl).as("q"), expr(need(q)).as("need"), col(lbl).as("b"), col(exCol).as("exact_cents"))
+      }: _*)).as("p"))
+      .select(
+        col("p.q").as("q"),
+        col("n"),
+        expr(s"""CAST(mn AS DOUBLE) +
+                 (CAST(p.b.bin AS DOUBLE) +
+                  CAST(p.need - (p.b.cum - p.b.cnt) AS DOUBLE) / CAST(p.b.cnt AS DOUBLE)) *
+                 (CAST(mx - mn + 1 AS DOUBLE) / ${bins}.0)""").as("est_cents"),
+        col("p.exact_cents").as("exact_cents"))
+      .withColumn("err_cents", expr("est_cents - exact_cents"))
   }
 
   /** Ensemble outlier vote per event type: the three standard detectors
@@ -5597,8 +5604,10 @@ object Analytics {
       .filter(col("w") > 0)
     Relational
       .gridRunningWeight(grid, Seq("resample"), "x", "w")
-      .groupBy(col("resample"), col("n").as("n_eff"))
-      .agg(Relational.rankPick(expr(Stages.lowerMedianRankSql("n")), col("x")).as("median_cents"))
+      .groupBy(col("resample"))
+      .agg(
+        max(col("n")).as("n_eff"),
+        Relational.rankPick(expr(Stages.lowerMedianRankSql("n")), col("x")).as("median_cents"))
       .withColumn("median_dollars", expr("CAST(median_cents AS DOUBLE) / 100.0"))
   }
 

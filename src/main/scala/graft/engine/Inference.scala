@@ -756,8 +756,8 @@ object Inference {
       .withColumn(
         "c_eff",
         expr("greatest(least(cum, n - lo) - greatest(cum - cnt, lo), 0)"))
-      .groupBy(col("l_returnflag"), col("n"), col("lo"))
-      .agg(sum(expr("c_eff * x")).as("sx"), sum(col("c_eff")).as("n_kept"))
+      .groupBy(col("l_returnflag"))
+      .agg(max(col("n")).as("n"), sum(expr("c_eff * x")).as("sx"), sum(col("c_eff")).as("n_kept"))
       .select(
         col("l_returnflag"), col("n"), col("n_kept"),
         expr("(CAST(sx AS DOUBLE) / CAST(n_kept AS DOUBLE)) / 100.0").as("trimmed_mean"))

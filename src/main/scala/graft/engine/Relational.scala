@@ -231,8 +231,8 @@ object Relational {
     def pick(q: Int) =
       (rankPick(expr(s"($q * n + 99) div 100"), col("x")).cast("double") / 100.0).as(s"p$q")
     gridRunningWeight(centsDistByFlag(lineitem), Seq("l_returnflag"), "x", "cnt")
-      .groupBy(col("l_returnflag"), col("n").as("n_rows"))
-      .agg(pick(25), pick(50), pick(75), pick(95))
+      .groupBy(col("l_returnflag"))
+      .agg(max(col("n")).as("n_rows"), pick(25), pick(50), pick(75), pick(95))
   }
 
   /** Math scalar battery over line items, restricted to operations with
@@ -1169,10 +1169,11 @@ object Relational {
     * order, and `n`, the group's total weight, in one window partitioned
     * by the groups (by a constant when there are none). A row whose
     * group key is NULL is in no group, as under the equi-join on the
-    * keys that a separate totals table needs. The window sorts the grid,
-    * which the value domain bounds, never the rows the grid was counted
-    * from. Pick ranks with [[rankPick]]; the rank rules live in
-    * [[Stages]].
+    * keys that a separate totals table needs. A NULL value sorts first
+    * and counts in `n`, as every row does in a count(*) total. The
+    * window sorts the grid, which the value domain bounds, never the
+    * rows the grid was counted from. Pick ranks with [[rankPick]]; the
+    * rank rules live in [[Stages]].
     */
   private[graft] def gridRunningWeight(
       grid: DataFrame, groups: Seq[String], value: String, weight: String): DataFrame = {
@@ -1188,9 +1189,10 @@ object Relational {
 
   /** Aggregate over [[gridRunningWeight]]'s rows: the rank-`r` value,
     * the least `value` whose running weight reaches r (equal values sit
-    * together in value order, however they split over rows). `value`
-    * may be any column that rises with the grid's value (a struct led by
-    * it picks the whole row).
+    * together in value order, however they split over rows). A NULL
+    * value is never picked: a rank among the NULLs picks the least
+    * non-NULL value. `value` may be any column that rises with the
+    * grid's value (a struct led by it picks the whole row).
     */
   private[graft] def rankPick(r: Column, value: Column): Column =
     min(when(col("cum") >= r, value))

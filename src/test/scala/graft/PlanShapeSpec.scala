@@ -2,6 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
+import org.apache.spark.sql.execution.{
+  ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +26,26 @@ class PlanShapeSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+
+  /** Every node of a physical plan, inner plans included: an adaptive
+    * plan's current plan, a cached relation's plan.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+    case _ => p +: p.children.flatMap(nodes)
+  }
+
+  /** The first operator under `p` that computes rows rather than moving,
+    * sorting, filtering or projecting them.
+    */
+  private def producer(p: SparkPlan): SparkPlan = p match {
+    case a: AdaptiveSparkPlanExec => producer(a.executedPlan)
+    case m: InMemoryTableScanExec => producer(m.relation.cachedPlan)
+    case _: SortExec | _: ShuffleExchangeExec | _: ProjectExec | _: FilterExec |
+        _: WholeStageCodegenExec | _: InputAdapter | _: ColumnarToRowExec => producer(p.children.head)
+    case _ => p
+  }
 
   test("regressionOutliers broadcasts the moment table back onto the facts") {
     val p = plan(Relational.regressionOutliers(Tables.lineitem(spark, sfDir)))
@@ -225,19 +252,20 @@ class PlanShapeSpec extends AnyFunSuite {
       "q_segmented", "q_hodges_lehmann").map(q => q -> SparkEntry.queries(q)(spark, sfDir))
     val inputs = ("discQuantiles" -> Relational.discQuantiles(Tables.lineitem(spark, sfDir))) +: queries
     val problems = inputs.flatMap { case (name, df) =>
-      val p = plan(df)
       // the cumulative windows: the running weight is named `cum`
-      val windows = p.linesIterator.filter(l => l.contains("Window [") && l.contains(" AS cum#")).toSeq
+      val windows = nodes(df.queryExecution.executedPlan).collect {
+        case w: WindowExec if w.windowExpression.exists(_.name == "cum") => w
+      }
       // the optimizer drops a constant partition key, so the spec the
       // builder asked for is read off the analyzed plan; an empty one
       // (`Window.orderBy`) gathers the grid with no key at all
       val unpartitioned = df.queryExecution.analyzed.collect {
         case w: LogicalWindow if w.windowExpressions.exists(_.name == "cum") && w.partitionSpec.isEmpty => w
       }
-      // grid aggregate (partial+final) sits below each cumulative window
+      // each cumulative window reads the grid aggregate's rows
       (if (windows.isEmpty) Seq(s"$name: no cumulative window") else Nil) ++
-        windows.filter(w => p.indexOf("HashAggregate", p.indexOf(w)) < 0)
-          .map(w => s"$name: no value-grid aggregate below $w") ++
+        windows.filterNot(w => producer(w.child).isInstanceOf[HashAggregateExec])
+          .map(w => s"$name: no value-grid aggregate below ${w.simpleString(200)}") ++
         unpartitioned.map(w => s"$name: no partition spec in ${w.simpleString(200)}")
     }
     assert(problems.isEmpty, problems.mkString("\n"))

@@ -87,7 +87,8 @@ class ScalablePrimitivesPropSpec extends AnyFunSuite {
   test("gridRunningWeight + rankPick == element r of the expanded, sorted values") {
     // grids of 1–4 groups, values from a narrow range so ties repeat over
     // rows, weights 1–5; group g0 is one row and group g1 one tied value,
-    // and rows with a NULL group key count only when nothing is grouped
+    // groups from g2 on hold NULL values, group gn holds nothing else, and
+    // rows with a NULL group key count only when nothing is grouped
     val rnd = new scala.util.Random(59)
     val ranks: Seq[(String, Int => Int)] =
       Seq(
@@ -95,28 +96,38 @@ class ScalablePrimitivesPropSpec extends AnyFunSuite {
         "n" -> ((n: Int) => n),
         Stages.lowerMedianRankSql("n") -> ((n: Int) => math.ceil(n / 2.0).toInt)) ++
         (5 to 95 by 5).map(p => Stages.type1RankSql(p.toString, "n") -> ((n: Int) => p * (n - 1) / 100 + 1))
-    def model(rows: Seq[(Long, Long)]): (Long, Seq[Long]) = {
-      val sorted = rows.flatMap { case (v, w) => Seq.fill(w.toInt)(v) }.sorted
-      (sorted.size.toLong, ranks.map { case (_, r) => sorted(r(sorted.size) - 1) })
+    // NULL values sort first and count in n; the pick is the least
+    // non-NULL value at a sorted position >= r
+    def model(rows: Seq[(Option[Long], Long)]): (Long, Seq[Option[Long]]) = {
+      val sorted = rows.flatMap { case (v, w) => Seq.fill(w.toInt)(v) }.sortBy(_.getOrElse(Long.MinValue))
+      (sorted.size.toLong, ranks.map { case (_, r) => sorted.drop(r(sorted.size) - 1).flatten.headOption })
     }
     val aggs = ranks.map { case (r, _) => Relational.rankPick(expr(r), col("v")) }
-    def picks(df: DataFrame, groups: Seq[String]): Map[String, (Long, Seq[Long])] =
+    def picks(df: DataFrame, groups: Seq[String]): Map[String, (Long, Seq[Option[Long]])] =
       Relational.gridRunningWeight(df, groups, "v", "w")
         .groupBy((groups :+ "n").map(col): _*)
         .agg(aggs.head, aggs.tail: _*)
         .collect()
         .map { row =>
           val key = if (groups.isEmpty) "" else row.getString(0)
-          key -> (row.getLong(groups.size), ranks.indices.map(i => row.getLong(groups.size + 1 + i)))
+          key -> (row.getLong(groups.size), ranks.indices.map { i =>
+            val at = groups.size + 1 + i
+            if (row.isNullAt(at)) None else Some(row.getLong(at))
+          })
         }
         .toMap
+    def value(): Option[Long] = Some(rnd.nextInt(21) - 10L)
     (1 to 8).foreach { round =>
       val nGroups = 1 + rnd.nextInt(4)
       val grid = (0 until nGroups).flatMap { g =>
         val rows = if (g == 0) 1 else 2 + rnd.nextInt(30)
-        val tied = rnd.nextInt(21) - 10L
-        Seq.fill(rows)((Option(s"g$g"), if (g == 1) tied else rnd.nextInt(21) - 10L, 1L + rnd.nextInt(5)))
-      } ++ Seq.fill(1 + rnd.nextInt(2))((Option.empty[String], rnd.nextInt(21) - 10L, 1L + rnd.nextInt(5)))
+        val tied = value()
+        Seq.fill(rows)((
+          Option(s"g$g"),
+          if (g == 1) tied else if (g >= 2 && rnd.nextInt(4) == 0) None else value(),
+          1L + rnd.nextInt(5)))
+      } ++ Seq.fill(1 + rnd.nextInt(2))((Option("gn"), Option.empty[Long], 1L + rnd.nextInt(5))) ++
+        Seq.fill(1 + rnd.nextInt(2))((Option.empty[String], value(), 1L + rnd.nextInt(5)))
       val df = grid.toDF("g", "v", "w")
       val expected = grid.groupBy(_._1).collect { case (Some(g), rows) => g -> model(rows.map(r => (r._2, r._3))) }
       assert(picks(df, Seq("g")) == expected, s"round $round, ${grid.size} rows")

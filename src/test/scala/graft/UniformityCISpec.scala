@@ -86,4 +86,21 @@ class UniformityCISpec extends AnyFunSuite {
       assert(r.getAs[Long]("lo_cents") <= r.getAs[Long]("hi_cents"))
     }
   }
+
+  test("medianCI's median skips NULL values, as percentile does") {
+    import spark.implicits._
+    // NULL values inside non-NULL types, up to a whole type of them
+    val rnd = new scala.util.Random(61)
+    val events = (Seq("a", "b", "c").flatMap { t =>
+      Seq.fill(1 + rnd.nextInt(20))(t -> (if (rnd.nextInt(3) == 0) None else Some((rnd.nextInt(11) - 5) * 0.5)))
+    } ++ Seq("d" -> None, "d" -> None)).toDF("event_type", "value")
+    val got = Analytics.medianCI(events).collect()
+      .map(r => r.getAs[String]("event_type") -> Option(r.getAs[java.lang.Double]("median_cents")))
+    val want = events
+      .groupBy(col("event_type"))
+      .agg(expr("percentile(CAST(round(value * 100) AS BIGINT), 0.5)").as("m"))
+      .collect()
+      .map(r => r.getString(0) -> Option(r.getAs[java.lang.Double]("m")))
+    assert(got.toMap == want.toMap)
+  }
 }
