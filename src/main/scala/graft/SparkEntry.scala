@@ -109,7 +109,12 @@ object SparkEntry {
          GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""),
     // ---- relational extensions (SURVEY.md §2.7) ----
     QueryDef("q_topk", (s, dir) =>
-      Relational.topKPerGroup(Tables.lineitem(s, dir), 5).orderBy("l_returnflag", "rank"),
+      Relational
+        .topKPerGroup(
+          Tables.lineitem(s, dir), 5, Seq(col("l_returnflag")),
+          col("l_extendedprice").desc, col("l_orderkey").asc, col("l_linenumber").asc)
+        .select("l_returnflag", "rank", "l_orderkey", "l_linenumber", "l_extendedprice")
+        .orderBy("l_returnflag", "rank"),
       """SELECT l_returnflag, rank, l_orderkey, l_linenumber, l_extendedprice FROM (
            SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
                   row_number() OVER (PARTITION BY l_returnflag

@@ -449,10 +449,7 @@ object Analytics {
       .filter(col("value").isNotNull)
       .groupBy(expr("CAST(ts AS LONG) div 86400").as("day_epoch"), col("user_id"))
       .agg(sum(expr(Stages.centsSql("value"))).as("cents"))
-    val w = Window.partitionBy(col("day_epoch")).orderBy(col("cents").desc, col("user_id").asc)
-    per
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Relational.topKPerGroup(per, k, Seq(col("day_epoch")), col("cents").desc, col("user_id").asc)
       .select(
         col("day_epoch"), col("rank"), col("user_id"),
         expr("cents / CAST(100 AS DOUBLE)").as("spend"))
@@ -1352,14 +1349,8 @@ object Analytics {
       .crossJoin(broadcast(anchor))
       .withColumn("rel", col("week") - col("w0"))
       .filter(col("rel") === 0L || col("rel") === 3L)
-    val ranked = anchored
-      .withColumn(
-        "rank",
-        row_number()
-          .over(Window.partitionBy(col("rel"))
-            .orderBy(col("week_cents").desc, col("l_partkey").asc))
-          .cast("long"))
-      .filter(col("rank") <= k)
+    val ranked = Relational.topKPerGroup(
+      anchored, k, Seq(col("rel")), col("week_cents").desc, col("l_partkey").asc)
     ranked.filter(col("rel") === 0L)
       .select(col("l_partkey"), col("rank").as("rank_a"),
         col("week_cents").as("cents_a"))
@@ -3415,13 +3406,12 @@ object Analytics {
         lag(col("event_type"), 1).over(userOrder).as("prev"),
         (dayofmonth(col("ts")) <= 15).as("is_train"))
       .filter(col("prev").isNotNull)
-    val rank = Window.partitionBy(col("prev")).orderBy(col("cnt").desc, col("curr").asc)
-    val pred = pairs
+    val trainCounts = pairs
       .filter(col("is_train"))
       .groupBy(col("prev"), col("curr"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("rn", row_number().over(rank))
-      .filter(col("rn") === 1)
+    val pred = Relational
+      .topKPerGroup(trainCounts, 1, Seq(col("prev")), col("cnt").desc, col("curr").asc)
       .select(col("prev"), col("curr").as("pred"))
     pairs
       .filter(!col("is_train"))
@@ -4779,22 +4769,22 @@ object Analytics {
     // twin: HUGEINT)
     val sums = Stages.momentSums(Map('x' -> col("y")), wide = true)("n_days", "sx", "sxx")
     val moments = daily.agg(sums.head, sums.tail: _*)
-    val dev = daily
+    // G is computed on every day, before the top-1: its projection does
+    // not merge with the ones under it, and a limit over a stack of
+    // projections plans as a global sort plus CollectLimit instead of a
+    // TakeOrderedAndProject
+    val scored = daily
       .crossJoin(moments)
       .withColumn(
         "dev",
         expr("abs(CAST(y AS DOUBLE) - CAST(sx AS DOUBLE) / CAST(n_days AS DOUBLE))"))
-    dev
-      .withColumn(
-        "rk",
-        row_number().over(Window.partitionBy(lit(1)).orderBy(col("dev").desc, col("d").asc)))
-      .filter(col("rk") === 1)
       .select(
         col("n_days"),
         col("d").as("day_epoch"),
         col("y").as("y_cents"),
         col("dev").as("abs_dev"),
         expr(grubbsGSql).as("grubbs_g"))
+    Relational.rankedTopK(scored, 1, col("abs_dev").desc, col("day_epoch").asc).drop("rank")
   }
 
   /** Grubbs' G over (dev, n_days, sx, sxx) — shared verbatim with the
@@ -5178,11 +5168,7 @@ object Analytics {
         "dot", // native codegen'd integer loop (HOF lambdas stay interpreted)
         graft.functions.VectorFunctions.dotMilli(col("aa"), col("ab")))
       .withColumn("d2", expr(d2))
-    pairs
-      .withColumn(
-        "rk",
-        row_number().over(Window.partitionBy(col("ia")).orderBy(col("d2").asc, col("ib").asc)))
-      .filter(col("rk") === 1)
+    Relational.topKPerGroup(pairs, 1, Seq(col("ia")), col("d2").asc, col("ib").asc)
       .select(
         col("ia").as("day_idx"),
         col("da").as("day_epoch"),
@@ -5885,14 +5871,12 @@ object Analytics {
       .withColumn("nxt", lead(col("event_type"), 1).over(ordered))
       .filter(col("nxt").isNotNull)
       .select(col("user_id"), col("event_type").as("src"), col("nxt"))
-    val model = pairs
+    val trainCounts = pairs
       .filter(col("user_id") % 2 === 0)
       .groupBy(col("src"), col("nxt"))
       .agg(count(lit(1)).as("n"))
-      .withColumn(
-        "rk",
-        row_number().over(Window.partitionBy(col("src")).orderBy(col("n").desc, col("nxt").asc)))
-      .filter(col("rk") === 1)
+    val model = Relational
+      .topKPerGroup(trainCounts, 1, Seq(col("src")), col("n").desc, col("nxt").asc)
       .select(col("src"), col("nxt").as("pred"))
     pairs
       .filter(col("user_id") % 2 === 1)
@@ -6265,11 +6249,7 @@ object Analytics {
     val daily = events
       .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
-    val anchor = daily
-      .withColumn(
-        "rk",
-        row_number().over(Window.partitionBy(lit(1)).orderBy(col("y").desc, col("d").asc)))
-      .filter(col("rk") === 1)
+    val anchor = Relational.rankedTopK(daily, 1, col("y").desc, col("d").asc)
       .select(col("d").as("peak_d"))
     val withOff = daily
       .crossJoin(broadcast(anchor))

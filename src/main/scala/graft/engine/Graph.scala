@@ -2,7 +2,6 @@ package graft.engine
 
 import graft.engine.Caches.CacheOps
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the part co-order graph (parts are linked when
@@ -313,9 +312,9 @@ object Graph {
   def itemRecommendations(lineitem: DataFrame, k: Int = 3): DataFrame = {
     require(k <= 5, s"itemRecommendations serves at most the pinned top 5 (got k = $k)")
     top5Recs(lineitem)
-      .filter(col("rk") <= k)
+      .filter(col("rank") <= k)
       .select(
-        col("src").as("part"), col("rk").cast("long").as("rank"),
+        col("src").as("part"), col("rank"),
         col("dst").as("rec_part"), col("w"))
   }
 
@@ -683,19 +682,15 @@ object Graph {
       // not the edge build, dominate — prebuilt-edges 1.64-1.67 s — so
       // the remaining ~1.7 s is the iterative |E|-join's inherent cost
       // and a vote-edge pin would shift almost nothing).
-      // (Round-5 re-measure: the rk=1 window KEEPS WindowGroupLimit
+      // (Round-5 re-measure: the rank-1 window KEEPS WindowGroupLimit
       // pushdown — one candidate per node per partition reaches the
       // shuffle — and beat both min_by(struct) (ObjectHashAggregate)
       // and a packed-long min; the vote join, not the winner selection,
       // dominates this query.)
-      val next = votes
+      val tally = votes
         .groupBy(col("v"), col("lbl"))
         .agg(count(lit(1)).as("n"))
-        .withColumn(
-          "rk",
-          row_number().over(
-            Window.partitionBy(col("v")).orderBy(col("n").desc, col("lbl").asc)))
-        .filter(col("rk") === 1)
+      val next = Relational.topKPerGroup(tally, 1, Seq(col("v")), col("n").desc, col("lbl").asc)
         .select(col("v"), col("lbl"))
       labels = if (round < nRounds) next.cacheT() else next
     }
@@ -787,12 +782,9 @@ object Graph {
           .unionAll(e.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
       val train = sym(bp.filter(col("par") === 0).drop("par"))
       val test = sym(bp.filter(col("par") === 1).drop("par"))
-      val recs = train
-        .withColumn(
-          "rk",
-          row_number().over(Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").asc)))
-        .filter(col("rk") <= 5)
-        .select(col("src"), col("dst"), col("rk"))
+      def top5(e: DataFrame): DataFrame =
+        Relational.topKPerGroup(e, 5, Seq(col("src")), col("w").desc, col("dst").asc)
+      val recs = top5(train).select(col("src"), col("dst"), col("rank"))
       val graded = recs
         .join(
           test.select(col("src"), col("dst"), col("w").as("rel")),
@@ -801,19 +793,15 @@ object Graph {
         .na.fill(0L, Seq("rel"))
         .groupBy(col("src"))
         .agg(
-          sum(when(col("rk") === 1, col("rel")).otherwise(0L)).as("d1"),
+          sum(when(col("rank") === 1, col("rel")).otherwise(0L)).as("d1"),
           (2 to 5).map(i =>
-            sum(when(col("rk") === i, col("rel")).otherwise(0L)).as(s"d$i")): _*)
-      val ideal = test
-        .withColumn(
-          "rk",
-          row_number().over(Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").asc)))
-        .filter(col("rk") <= 5)
+            sum(when(col("rank") === i, col("rel")).otherwise(0L)).as(s"d$i")): _*)
+      val ideal = top5(test)
         .groupBy(col("src"))
         .agg(
-          sum(when(col("rk") === 1, col("w")).otherwise(0L)).as("i1"),
+          sum(when(col("rank") === 1, col("w")).otherwise(0L)).as("i1"),
           (2 to 5).map(i =>
-            sum(when(col("rk") === i, col("w")).otherwise(0L)).as(s"i$i")): _*)
+            sum(when(col("rank") === i, col("w")).otherwise(0L)).as(s"i$i")): _*)
       // ideal-driven LEFT join: a part with test-half co-orders but no
       // train-half recs must score nDCG 0 — an inner join would drop it
       // and the mean would average only over parts the recommender
@@ -890,12 +878,9 @@ object Graph {
   private def top5Recs(lineitem: DataFrame): DataFrame =
     Views.pinned(lineitem, "coOrderTop5Recs") { li =>
       val e = coOrderEdges(li)
-      e.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
+      val sym = e.select(col("pa").as("src"), col("pb").as("dst"), col("w"))
         .unionAll(e.select(col("pb").as("src"), col("pa").as("dst"), col("w")))
-        .withColumn(
-          "rk",
-          row_number().over(Window.partitionBy(col("src")).orderBy(col("w").desc, col("dst").asc)))
-        .filter(col("rk") <= 5)
+      Relational.topKPerGroup(sym, 5, Seq(col("src")), col("w").desc, col("dst").asc)
     }
 
   def recCoverage(lineitem: DataFrame): DataFrame = {

@@ -15,12 +15,11 @@ import org.apache.spark.sql.functions._
   *    summation-order noise reaches the output;
   *  - set ops use the SQL-standard distinct semantics on exact types.
   *
-  * Scale notes: topKPerGroup is a single shuffle on the partition key with
-  * in-partition sort — at 100 TB you'd pre-filter with an approximate
-  * per-partition top-k (rank pushdown) before the shuffle; Spark's AQE +
-  * `WindowGroupLimit` (Spark ≥3.5) already performs this rank-limit
-  * pushdown for `row_number() <= k` predicates, which is why the filter is
-  * written in exactly that shape.
+  * Scale notes: [[topKPerGroup]] is a single shuffle on the group key with
+  * an in-partition sort. Spark's `WindowGroupLimit` (Spark ≥3.5) cuts each
+  * group to k rows per partition before that shuffle for a
+  * `row_number() <= k` filter, which is why the primitive is written in
+  * exactly that shape.
   */
 object Relational {
 
@@ -39,23 +38,25 @@ object Relational {
         "rank",
         row_number().over(Window.partitionBy(lit(1)).orderBy(sort: _*)).cast("long"))
 
-  /** Top-k rows per group by a sort column, deterministic via tie-breaker
-    * columns. The `row_number() <= k` shape lets Catalyst's
-    * WindowGroupLimit prune per partition before the shuffle.
+  /** Top-`k` rows per group: adds a long `rank` column, `row_number()`
+    * over (partition by `groups`, order by `sort`), and keeps the rows
+    * with `rank <= k`. That filter shape lets Catalyst's WindowGroupLimit
+    * cut each group to k rows per partition before the shuffle. `sort`
+    * must be a total order within a group (end it in a unique key), or
+    * which rows survive a tie depends on the partitioning.
     */
-  def topKPerGroup(df: DataFrame, k: Int): DataFrame = {
-    val w = Window
-      .partitionBy(col("l_returnflag"))
-      .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc, col("l_linenumber").asc)
-    df.withColumn("rank", row_number().over(w))
+  def topKPerGroup(df: DataFrame, k: Int, groups: Seq[Column], sort: Column*): DataFrame =
+    topKPerGroup(df, lit(k), groups, sort: _*)
+
+  /** [[topKPerGroup]] with a per-row limit: `k` is an expression over
+    * `df`'s columns (a per-group prefix length, say). Only a literal `k`
+    * gets the WindowGroupLimit cut.
+    */
+  def topKPerGroup(df: DataFrame, k: Column, groups: Seq[Column], sort: Column*): DataFrame =
+    df.withColumn(
+        "rank",
+        row_number().over(Window.partitionBy(groups: _*).orderBy(sort: _*)).cast("long"))
       .filter(col("rank") <= k)
-      .select(
-        col("l_returnflag"),
-        col("rank").cast("long").as("rank"),
-        col("l_orderkey"),
-        col("l_linenumber"),
-        col("l_extendedprice"))
-  }
 
   /** DISTINCT projection (dedup of the exact key set). */
   def distinctFlags(lineitem: DataFrame): DataFrame =
@@ -904,13 +905,11 @@ object Relational {
     */
   def bottomKSample(events: DataFrame, k: Int): DataFrame = {
     val h = expr("cast(conv(substring(md5(cast(user_id as string)), 1, 8), 16, 10) as bigint)")
-    val w = Window.partitionBy(col("event_type")).orderBy(col("h").asc, col("user_id").asc)
-    events
+    val hashed = events
       .select(col("event_type"), col("user_id"))
       .distinct()
       .withColumn("h", h)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topKPerGroup(hashed, k, Seq(col("event_type")), col("h").asc, col("user_id").asc)
       .select(col("event_type"), col("rank"), col("user_id"), col("h"))
   }
 
@@ -1025,12 +1024,7 @@ object Relational {
     val med = dist
       .groupBy(col("l_returnflag"))
       .agg(expr("percentile(q, 0.5, n)").as("median_qty"))
-    val mode = dist
-      .withColumn(
-        "rn",
-        row_number().over(
-          Window.partitionBy(col("l_returnflag")).orderBy(col("n").desc, col("q").asc)))
-      .filter(col("rn") === 1)
+    val mode = topKPerGroup(dist, 1, Seq(col("l_returnflag")), col("n").desc, col("q").asc)
       .select(col("l_returnflag"), col("q").as("mode_qty"), col("n").as("mode_n"))
     med.join(mode, Seq("l_returnflag"))
   }
@@ -1045,18 +1039,14 @@ object Relational {
     * quality/length" pass with zero rand() and zero extra shuffles.
     */
   def weightedSample(documents: DataFrame, k: Int): DataFrame = {
-    val w = Window
-      .partitionBy(col("source"))
-      .orderBy(col("priority").asc, col("doc_id").asc)
-    documents
+    val prioritized = documents
       .select(
         col("source"),
         col("doc_id"),
         col("n_chars"),
         expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)" +
           " / CAST(n_chars AS DOUBLE)").as("priority"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topKPerGroup(prioritized, k, Seq(col("source")), col("priority").asc, col("doc_id").asc)
       .select(col("source"), col("rank"), col("doc_id"), col("n_chars"), col("priority"))
   }
 
@@ -1069,16 +1059,11 @@ object Relational {
     * corpus size.
     */
   def quotaSample(documents: DataFrame, cap: Int): DataFrame = {
-    val w = Window
-      .partitionBy(col("source"))
-      .orderBy(col("h").asc, col("doc_id").asc)
-    documents
-      .select(
-        col("source"),
-        col("doc_id"),
-        md5(col("doc_id").cast("string")).as("h"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= cap)
+    val hashed = documents.select(
+      col("source"),
+      col("doc_id"),
+      md5(col("doc_id").cast("string")).as("h"))
+    topKPerGroup(hashed, cap, Seq(col("source")), col("h").asc, col("doc_id").asc)
       .select(col("source"), col("rank"), col("doc_id"))
   }
 
@@ -1683,9 +1668,11 @@ object Relational {
     * cluster: within each (user, type, day) cell the survivor is the
     * latest event (event_id tie-break) and the merged record carries the
     * cell's aggregates. ONE partitioned-window pass computes the rank
-    * AND the cell aggregates (count/max as window functions over the
-    * same partition), so the corpus shuffles once and no self-join back
-    * onto the cell is needed.
+    * AND the cell aggregates (count/max over the rank's own ordering with
+    * a whole-cell frame, so they share its window operator), so the
+    * corpus shuffles once and no self-join back onto the cell is needed.
+    * The whole-cell frame also keeps WindowGroupLimit off: the cell
+    * aggregates must see every row, not just the survivor.
     */
   def survivorship(events: DataFrame): DataFrame = {
     val base = events.select(
@@ -1694,13 +1681,14 @@ object Relational {
       col("event_id"),
       expr("CAST(ts AS LONG)").as("ts_sec"),
       expr(Stages.centsSql("value")).as("cents"))
-    val cell = Window.partitionBy(col("user_id"), col("event_type"), col("day"))
-    val w = cell.orderBy(col("ts_sec").desc, col("event_id").asc)
-    base
-      .withColumn("rn", row_number().over(w))
+    val cellKeys = Seq(col("user_id"), col("event_type"), col("day"))
+    val latest = Seq(col("ts_sec").desc, col("event_id").asc)
+    val cell = Window.partitionBy(cellKeys: _*).orderBy(latest: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val merged = base
       .withColumn("n_merged", count(lit(1)).over(cell))
       .withColumn("max_cents", max(col("cents")).over(cell))
-      .filter(col("rn") === 1)
+    topKPerGroup(merged, 1, cellKeys, latest: _*)
       .select(
         col("user_id"), col("event_type"), col("day"),
         col("event_id").as("survivor_id"),

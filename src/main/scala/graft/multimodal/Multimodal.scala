@@ -318,24 +318,20 @@ object Multimodal {
     * (the [[sliceNearDup]] bucket cap) at index-build time.
     */
   def screenSlicesAgainst(batch: DataFrame, corpus: DataFrame, minShared: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val corpusFp = sliceFp(corpus)
     val batchFp = payloadSlices(batch)
       .select(col("doc_id").as("new_doc"), col("slice_md5"))
       .distinct()
-    val best = batchFp
+    val matches = batchFp
       .join(
         corpusFp.select(col("slice_md5"), col("doc_id").as("best_match")),
         Seq("slice_md5"))
       .groupBy(col("new_doc"), col("best_match"))
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= minShared)
-      .withColumn(
-        "rk",
-        row_number().over(
-          Window.partitionBy(col("new_doc")).orderBy(col("shared").desc, col("best_match").asc)))
-      .filter(col("rk") === 1)
-      .drop("rk")
+    val best = graft.engine.Relational
+      .topKPerGroup(matches, 1, Seq(col("new_doc")), col("shared").desc, col("best_match").asc)
+      .drop("rank")
     batch
       .select(col("doc_id").as("new_doc"))
       .join(best, Seq("new_doc"), "left_outer")

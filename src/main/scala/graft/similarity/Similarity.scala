@@ -1,7 +1,7 @@
 package graft.similarity
 
 import graft.engine.Caches.CacheOps
-import graft.engine.Graph
+import graft.engine.{Graph, Relational}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -92,13 +92,8 @@ object Similarity {
         col("qid"),
         col("vec_id").as("nid"),
         round(overNorms(dot(col("qe"), col("emb_d")), col("qnorm"), col("norm")), 3).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"), col("cos_sim"))
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("cos_sim").desc, col("nid").asc)
+      .select(col("qid"), col("rank"), col("nid"), col("cos_sim"))
   }
 
   /** Filtered vector search: [[cosineTopK]]'s contract restricted to
@@ -124,13 +119,8 @@ object Similarity {
         col("vec_id").as("nid"),
         col("label").cast("long").as("label"),
         round(overNorms(dot(col("qe"), col("emb_d")), col("qnorm"), col("norm")), 3).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"), col("label"), col("cos_sim"))
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("cos_sim").desc, col("nid").asc)
+      .select(col("qid"), col("rank"), col("nid"), col("label"), col("cos_sim"))
   }
 
   /** Margin-based bitext mining (the CCMatrix/LASER parallel-corpus
@@ -165,21 +155,18 @@ object Similarity {
         col("src_id"), col("tgt_id"),
         (overNorms(dot(col("sv"), col("tv")), col("sn"), col("tn"))).as("cos"))
       .cacheT()
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src_id")).orderBy(col("cos").desc, col("tgt_id").asc)
-    val wb = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("tgt_id")).orderBy(col("cos").desc, col("src_id").asc)
-    val fwd = pairs.withColumn("rf", row_number().over(wf)).filter(col("rf") <= 2)
+    val fwd = Relational.topKPerGroup(pairs, 2, Seq(col("src_id")), col("cos").desc, col("tgt_id").asc)
       .groupBy(col("src_id"))
       .agg(
-        max(when(col("rf") === 1, col("tgt_id"))).as("tgt_id"),
-        max(when(col("rf") === 1, col("cos"))).as("cos"),
+        max(when(col("rank") === 1, col("tgt_id"))).as("tgt_id"),
+        max(when(col("rank") === 1, col("cos"))).as("cos"),
         // runner-up missing (single candidate in the cell) → cos2 = cos,
         // i.e. margin 0: no runner-up means NO margin evidence, and the
         // margin filter this models must not admit single-candidate
         // pairs as if they had the largest margin in the corpus
-        coalesce(max(when(col("rf") === 2, col("cos"))), max(when(col("rf") === 1, col("cos")))).as("cos2"))
-    val bwd = pairs.withColumn("rb", row_number().over(wb)).filter(col("rb") === 1)
+        coalesce(max(when(col("rank") === 2, col("cos"))), max(when(col("rank") === 1, col("cos"))))
+          .as("cos2"))
+    val bwd = Relational.topKPerGroup(pairs, 1, Seq(col("tgt_id")), col("cos").desc, col("src_id").asc)
       .select(col("tgt_id"), col("src_id").as("b_src"))
     fwd.join(bwd, Seq("tgt_id"))
       .filter(col("b_src") === col("src_id"))
@@ -264,13 +251,8 @@ object Similarity {
         col("qid"),
         col("vec_id").as("nid"),
         round(overNorms(dot(col("qe"), col("emb_d")), col("qnorm"), col("norm")), 3).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"), col("cos_sim"))
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("cos_sim").desc, col("nid").asc)
+      .select(col("qid"), col("rank"), col("nid"), col("cos_sim"))
   }
 
   /** Multi-probe LSH ANN: like [[lshBucketTopK]], but each query also
@@ -297,13 +279,8 @@ object Similarity {
         col("qid"),
         col("vec_id").as("nid"),
         round(overNorms(dot(col("qe"), col("emb_d")), col("qnorm"), col("norm")), 3).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"), col("cos_sim"))
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("cos_sim").desc, col("nid").asc)
+      .select(col("qid"), col("rank"), col("nid"), col("cos_sim"))
   }
 
   /** Deterministic IVF coarse centroids (same fixed LCG as [[planes]],
@@ -348,13 +325,8 @@ object Similarity {
         col("qid"),
         col("vec_id").as("nid"),
         round(overNorms(dot(col("qe"), col("emb_d")), col("qnorm"), col("norm")), 3).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"), col("cos_sim"))
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("cos_sim").desc, col("nid").asc)
+      .select(col("qid"), col("rank"), col("nid"), col("cos_sim"))
   }
 
   /** Deterministic PQ sub-codebooks (same fixed LCG family as [[planes]]
@@ -419,13 +391,8 @@ object Similarity {
     val pairs = codes
       .join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"), round(adc, 3).as("approx_dist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("approx_dist").asc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"), col("approx_dist"))
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("approx_dist").asc, col("nid").asc)
+      .select(col("qid"), col("rank"), col("nid"), col("approx_dist"))
   }
 
   /** IVF+PQ — the composed billion-scale ANN layout (FAISS's IVFPQ):
@@ -471,13 +438,8 @@ object Similarity {
     val pairs = encoded
       .join(broadcast(q), col("cell") === col("qcell") && col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"), round(adc, 3).as("approx_dist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("approx_dist").asc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"), col("approx_dist"))
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("approx_dist").asc, col("nid").asc)
+      .select(col("qid"), col("rank"), col("nid"), col("approx_dist"))
   }
 
   /** SQ8 codes: each dimension scalar-quantized to an 8-bit level against
@@ -514,13 +476,8 @@ object Similarity {
         col("qid"),
         col("vec_id").as("nid"),
         (col("cc") - lit(2.0) * dot(col("qd"), col("cd")) + col("qq")).cast("long").as("sq_dist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("sq_dist").asc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"), col("sq_dist"))
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("sq_dist").asc, col("nid").asc)
+      .select(col("qid"), col("rank"), col("nid"), col("sq_dist"))
   }
 
   /** Per-vector distance array to every coarse centroid, in the exact
@@ -568,13 +525,8 @@ object Similarity {
         col("qid"),
         col("vec_id").as("nid"),
         round(overNorms(dot(col("qe"), col("emb_d")), col("qnorm"), col("norm")), 3).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"), col("nid"), col("cos_sim"))
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("cos_sim").desc, col("nid").asc)
+      .select(col("qid"), col("rank"), col("nid"), col("cos_sim"))
   }
 
   /** Squared-distance (simplified) silhouette of the IVF coarse
@@ -640,13 +592,8 @@ object Similarity {
         col("vec_id").as("nid"),
         col("label").as("neg_label"),
         round(overNorms(dot(col("qe"), col("emb_d")), col("qnorm"), col("norm")), 3).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("cos_sim").desc, col("nid").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid"), col("rank").cast("long").as("rank"),
+    Relational.topKPerGroup(pairs, k, Seq(col("qid")), col("cos_sim").desc, col("nid").asc)
+      .select(col("qid"), col("rank"),
         col("nid"), col("neg_label"), col("cos_sim"))
   }
 
@@ -693,12 +640,7 @@ object Similarity {
         Seq("nid"))
       .groupBy(col("qid"), col("n_label"))
       .agg(count(lit(1)).as("votes"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("votes").desc, col("n_label").asc)
-    votes
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    Relational.topKPerGroup(votes, 1, Seq(col("qid")), col("votes").desc, col("n_label").asc)
       .join(
         broadcast(labels.select(col("vec_id").as("qid"), col("label").as("true_label"))),
         Seq("qid"))
@@ -776,17 +718,12 @@ object Similarity {
     val q = packed
       .filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("qid"), col("b0").as("q0"), col("b1").as("q1"))
-    packed
+    val scored = packed
       .join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(
         col("qid"), col("vec_id").as("nid"),
         expr("CAST(bit_count(b0 ^ q0) + bit_count(b1 ^ q1) AS BIGINT)").as("hamming"))
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("qid")).orderBy(col("hamming").asc, col("nid").asc)))
-      .filter(col("rk") <= shortlist)
+    Relational.topKPerGroup(scored, shortlist, Seq(col("qid")), col("hamming").asc, col("nid").asc)
       .select(col("qid"), col("nid"))
   }
 
@@ -813,18 +750,14 @@ object Similarity {
     val qv = corpus
       .filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("qid"), col("emb_d").as("qe"), col("norm").as("qnorm"))
-    val reranked = hammingTopK(embeddings, numQueries, shortlist)
+    val rescored = hammingTopK(embeddings, numQueries, shortlist)
       .join(corpus.select(col("vec_id").as("nid"), col("emb_d"), col("norm")), "nid")
       .join(broadcast(qv), "qid")
       .select(
         col("qid"), col("nid"),
         round(overNorms(dot(col("qe"), col("emb_d")), col("qnorm"), col("norm")), 3).as("cos_sim"))
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("qid")).orderBy(col("cos_sim").desc, col("nid").asc)))
-      .filter(col("rk") <= k)
+    val reranked = Relational
+      .topKPerGroup(rescored, k, Seq(col("qid")), col("cos_sim").desc, col("nid").asc)
       .select(col("qid"), col("nid"))
     recallAgainst(
       cosineTopK(embeddings, numQueries, k).select(col("qid"), col("nid")),
@@ -862,13 +795,8 @@ object Similarity {
         Seq(col("qid"), col("vec_id")) ++ allDims.map(d =>
           sqDist(expr(s"slice(m, 1, $d)"), expr(s"slice(qm, 1, $d)")).as(s"d$d")): _*)
       .cacheT() // one scoring pass feeds |dims|+1 differently-ordered windows
-    def topk(dcol: String) = scored
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("qid")).orderBy(col(dcol).asc, col("vec_id").asc)))
-      .filter(col("rk") <= k)
+    def topk(dcol: String) = Relational
+      .topKPerGroup(scored, k, Seq(col("qid")), col(dcol).asc, col("vec_id").asc)
       .select(col("qid"), col("vec_id"))
     val truth = topk(s"d$fullDim")
     // denominator = ACTUAL truth rows, not k·numQueries: with a corpus
@@ -922,14 +850,10 @@ object Similarity {
       col("label"), col("vec_id").as("va"), col("emb_d").as("ea"), col("norm").as("na"))
     val b = corpus.select(
       col("label"), col("vec_id").as("vb"), col("emb_d").as("eb"), col("norm").as("nb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("va"))
-      .orderBy(col("cos_sim").desc, col("vb").asc)
-    val top1 = a.join(b, Seq("label"))
+    val scored = a.join(b, Seq("label"))
       .filter(col("va") =!= col("vb"))
       .withColumn("cos_sim", round(overNorms(dot(col("ea"), col("eb")), col("na"), col("nb")), 3))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    val top1 = Relational.topKPerGroup(scored, 1, Seq(col("va")), col("cos_sim").desc, col("vb").asc)
       .select(col("label"), col("va"), col("vb"), col("cos_sim"))
     top1.as("x")
       .join(
@@ -1087,12 +1011,7 @@ object Similarity {
       .join(broadcast(centroids), Seq("label", "dim"))
       .groupBy(col("label"), col("vec_id"))
       .agg(sum((col("milli") - col("c")) * (col("milli") - col("c"))).as("dist2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("label"))
-      .orderBy(col("dist2").desc, col("vec_id").asc)
-    dist
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Relational.topKPerGroup(dist, k, Seq(col("label")), col("dist2").desc, col("vec_id").asc)
       .select(col("label"), col("rank"), col("vec_id"), col("dist2"))
   }
 
@@ -1158,19 +1077,12 @@ object Similarity {
     val seeds = corpus
       .filter(col("vec_id") < k)
       .select(col("vec_id").as("seed_id"), col("emb_d").as("se"), col("norm").as("snorm"))
-    val assigned = corpus
+    val scored = corpus
       .crossJoin(broadcast(seeds))
       .select(
         col("vec_id"), col("label"), col("seed_id"),
         round(overNorms(dot(col("se"), col("emb_d")), col("snorm"), col("norm")), 3).as("cos_sim"))
-      .withColumn(
-        "rn",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("vec_id"))
-            .orderBy(col("cos_sim").desc, col("seed_id").asc)))
-      .filter(col("rn") === 1)
-    assigned
+    Relational.topKPerGroup(scored, 1, Seq(col("vec_id")), col("cos_sim").desc, col("seed_id").asc)
       .groupBy(col("seed_id").as("cluster"), col("label"))
       .agg(
         count(lit(1)).as("n_vecs"),
@@ -1202,12 +1114,7 @@ object Similarity {
         "rrf",
         expr(s"""coalesce(1.0 / ($c + CAST(r_exact AS DOUBLE)), 0.0) +
                  coalesce(1.0 / ($c + CAST(r_ivf AS DOUBLE)), 0.0)"""))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid"))
-      .orderBy(col("rrf").desc, col("nid").asc)
-    fused
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topN)
+    Relational.topKPerGroup(fused, topN, Seq(col("qid")), col("rrf").desc, col("nid").asc)
       .select(col("qid"), col("rank"), col("nid"), col("rrf"))
   }
 
@@ -1547,13 +1454,7 @@ object Similarity {
       .agg(count(lit(1)).as("n"))
     val totals = counts.groupBy(col("cell"))
       .agg(sum(col("n")).as("n_vecs"), count(lit(1)).as("n_labels"))
-    val major = counts
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("cell")).orderBy(col("n").desc, col("label").asc)))
-      .filter(col("rk") === 1)
+    val major = Relational.topKPerGroup(counts, 1, Seq(col("cell")), col("n").desc, col("label").asc)
       .select(col("cell"), col("label").as("major_label"), col("n").as("n_major"))
     totals.join(major, Seq("cell")).select(
       col("cell"), col("n_vecs"), col("n_labels"), col("major_label"), col("n_major"),
@@ -1642,20 +1543,15 @@ object Similarity {
           .as("m"))
     val a = milli().select(col("vec_id").as("a"), col("m").as("ma"))
     val b = milli().select(col("vec_id").as("b"), col("m").as("mb"))
-    val knn = a
+    val pairs = a
       .join(b, col("a") =!= col("b"))
       .withColumn(
         "d2",
         sqDist(col("ma"), col("mb"))) // native codegen'd integer loop
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("a")).orderBy(col("d2").asc, col("b").asc)))
-      .filter(col("rk") <= k)
-      .select(col("a"), col("b"), col("d2"), col("rk"))
+    val knn = Relational.topKPerGroup(pairs, k, Seq(col("a")), col("d2").asc, col("b").asc)
+      .select(col("a"), col("b"), col("d2"), col("rank"))
       .cacheT()
-    val kdistOf = knn.filter(col("rk") === k).select(col("a").as("node"), col("d2").as("kdist"))
+    val kdistOf = knn.filter(col("rank") === k).select(col("a").as("node"), col("d2").as("kdist"))
     val reach = knn
       .join(kdistOf.select(col("node").as("b"), col("kdist")), Seq("b"))
       .select(col("a"), col("b"), greatest(col("d2"), col("kdist")).as("reach"))
@@ -1678,12 +1574,12 @@ object Similarity {
     val lof = knn
       .join(lrd.select(col("a").as("b"), col("lrd").as("lrd_b")), Seq("b"))
       .groupBy(col("a"))
-      .agg(sort_array(collect_list(struct(col("rk"), col("lrd_b").as("lb")))).as("arr"))
+      .agg(sort_array(collect_list(struct(col("rank"), col("lrd_b").as("lb")))).as("arr"))
       .join(lrd, Seq("a"))
       .select(
         col("a"),
         expr(s"$sumB / (CAST($k AS DOUBLE) * lrd)").as("lof"))
-    graft.engine.Relational
+    Relational
       .rankedTopK(lof, topN, col("lof").desc, col("a").asc)
       .select(col("rank"), col("a").as("vec_id"), col("lof"))
   }
@@ -1736,14 +1632,7 @@ object Similarity {
       .join(broadcast(cents), Seq("dim0"))
       .groupBy(col("vec_id"), col("label"), col("clabel"))
       .agg(sum((col("mv") - col("cv")) * (col("mv") - col("cv"))).as("d2"))
-    val assigned = dists
-      .withColumn(
-        "rk",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("vec_id")).orderBy(col("d2").asc, col("clabel").asc)))
-      .filter(col("rk") === 1)
-    assigned
+    Relational.topKPerGroup(dists, 1, Seq(col("vec_id")), col("d2").asc, col("clabel").asc)
       .groupBy(col("label").cast("long").as("label"))
       .agg(
         count(lit(1)).cast("long").as("n_vecs"),

@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.engine.Caches.CacheOps
-import graft.engine.Graph
+import graft.engine.{Graph, Relational}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -457,7 +457,7 @@ object Dedup {
           .filter(col("bsz") <= MaxCandidateBucket)
           .select(col("band"), col("band_sig"), col("doc_id"), col("sig")))
       .select(col("band"), col("band_sig"), col("doc_id").as("corpus_doc"), col("sig").as("sig_c"))
-    val best = batch.join(corpus, Seq("band", "band_sig"))
+    val candidates = batch.join(corpus, Seq("band", "band_sig"))
       .select(col("new_doc"), col("corpus_doc"), col("sig_n"), col("sig_c"))
       .distinct()
       .withColumn(
@@ -467,12 +467,8 @@ object Dedup {
         graft.functions.VectorFunctions.sigAgree(col("sig_n"), col("sig_c"))
           / size(col("sig_n")).cast("double"))
       .filter(col("est_jaccard") >= minEstJaccard)
-      .withColumn(
-        "rk",
-        row_number().over(
-          Window.partitionBy(col("new_doc"))
-            .orderBy(col("est_jaccard").desc, col("corpus_doc").asc)))
-      .filter(col("rk") === 1)
+    val best = Relational
+      .topKPerGroup(candidates, 1, Seq(col("new_doc")), col("est_jaccard").desc, col("corpus_doc").asc)
       .select(col("new_doc"), col("corpus_doc"), col("est_jaccard"))
     batchSigs.select(col("doc_id").as("new_doc"))
       .join(best, Seq("new_doc"), "left")
@@ -837,6 +833,18 @@ object Dedup {
     graft.engine.Views.pinned(documents, s"ngramJaccard$minJaccard")(
       buildNgramJaccard(_, minJaccard))
 
+  /** PPJoin's canonical gram order: rarest first (ascending document
+    * frequency), the gram itself as tie-break.
+    */
+  private val rarestFirst = Seq(col("gram_df").asc, col("gram").asc)
+
+  /** The whole-document frame over [[rarestFirst]]: a count over it
+    * shares the prefix rank's window operator.
+    */
+  private def wholeDoc(doc: Seq[Column]) =
+    Window.partitionBy(doc: _*).orderBy(rarestFirst: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+
   private def buildNgramJaccard(documents: DataFrame, minJaccard: Double): DataFrame = {
     // cached once for the verification join only (doc_id → gram array);
     // the candidate-generation postings are re-derived inline below
@@ -852,27 +860,26 @@ object Dedup {
     // (the pair-explosion source) fall out of the prefixes.
     //
     // Two window passes over the postings — df as a whole-partition count
-    // over gram, then rank within doc — instead of a groupBy(gram) +
-    // re-join + collect_list/sort/slice/re-explode round trip: one fewer
-    // shuffle of the postings and no per-doc array materialization, on
-    // the same (gram) and (doc) partitionings a cluster run would use.
-    import org.apache.spark.sql.expressions.Window
-    val wGram = Window.partitionBy(col("gram"))
-    val wDocRank = Window.partitionBy(col("source"), col("doc_id")).orderBy(col("gram_df"), col("gram"))
-    val wDoc = Window.partitionBy(col("source"), col("doc_id"))
+    // over gram, then the doc size and rank within doc — instead of a
+    // groupBy(gram) + re-join + collect_list/sort/slice/re-explode round
+    // trip: one fewer shuffle of the postings and no per-doc array
+    // materialization, on the same (gram) and (doc) partitionings a
+    // cluster run would use. The doc size is counted over the rank's own
+    // ordering with a whole-doc frame, so the two share one window.
+    val doc = Seq(col("source"), col("doc_id"))
     // postings are re-derived inline rather than exploded from the cached
     // array column: Generate over a constructing expression stays inside
     // whole-stage codegen, while explode of a materialized array attribute
     // runs ~6x slower (measured); re-shingling is cheaper than that tax
-    val prefixes = documents
+    val postings = documents
       .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(
         col("source"), col("doc_id"),
         explode(array_distinct(shinglesFromToks(col("toks"), 3))).as("gram"))
-      .withColumn("gram_df", count(lit(1)).over(wGram))
-      .withColumn("rn", row_number().over(wDocRank))
-      .withColumn("n", count(lit(1)).over(wDoc))
-      .filter(col("rn") <= col("n") - ceil(col("n") * minJaccard) + 1)
+      .withColumn("gram_df", count(lit(1)).over(Window.partitionBy(col("gram"))))
+      .withColumn("n", count(lit(1)).over(wholeDoc(doc)))
+    val prefixes = Relational
+      .topKPerGroup(postings, col("n") - ceil(col("n") * minJaccard) + 1, doc, rarestFirst: _*)
       .select(col("source"), col("doc_id"), col("gram"), col("n"))
 
     // PPJoin size filter: jaccard ≥ τ forces τ·|A| ≤ |B| ≤ |A|/τ, so
@@ -1054,20 +1061,16 @@ object Dedup {
       .select(col("doc_id"), col("sh").as("grams"))
       .cacheT()
 
-    import org.apache.spark.sql.expressions.Window
-    val wGram = Window.partitionBy(col("gram"))
-    val wDocRank = Window.partitionBy(col("doc_id")).orderBy(col("gram_df"), col("gram"))
-    val wDoc = Window.partitionBy(col("doc_id"))
+    val doc = Seq(col("doc_id"))
     val postings = documents
       .withColumn("toks", TextAnalysis.tokens(col("text")))
       .select(
         col("source"), col("doc_id"),
         explode(array_distinct(shinglesFromToks(col("toks"), 3))).as("gram"))
-      .withColumn("gram_df", count(lit(1)).over(wGram))
-      .withColumn("rn", row_number().over(wDocRank))
-      .withColumn("n", count(lit(1)).over(wDoc))
-    val aPrefix = postings
-      .filter(col("rn") <= col("n") - ceil(col("n") * minContainment) + 1)
+      .withColumn("gram_df", count(lit(1)).over(Window.partitionBy(col("gram"))))
+      .withColumn("n", count(lit(1)).over(wholeDoc(doc)))
+    val aPrefix = Relational
+      .topKPerGroup(postings, col("n") - ceil(col("n") * minContainment) + 1, doc, rarestFirst: _*)
       .select(col("source"), col("gram"), col("doc_id").as("doc_a"), col("n").as("n_a"))
     val bAll = postings.select(col("source"), col("gram"), col("doc_id").as("doc_b"))
 

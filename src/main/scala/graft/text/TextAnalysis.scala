@@ -471,17 +471,13 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
     val df = td.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("score").desc, col("token").asc)
-    td.join(df, "token")
+    val scored = td.join(df, "token")
       .crossJoin(broadcast(n))
       .withColumn(
         "score",
         col("tf").cast("double") * (col("n_docs") / col("df").cast("double")))
       .drop("n_docs")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Relational.topKPerGroup(scored, k, Seq(col("doc_id")), col("score").desc, col("token").asc)
       .select(col("doc_id"), col("rank"), col("token"), col("tf"), col("df"), col("score"))
   }
 
@@ -726,12 +722,7 @@ object TextAnalysis {
                  (CAST(tfreq AS DOUBLE) + CAST(1.2 AS DOUBLE) *
                   (1.0 - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * CAST(dl AS DOUBLE) /
                    (CAST(total_len AS DOUBLE) / CAST(n_docs AS DOUBLE)))))""").as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("tok"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topN)
+    Relational.topKPerGroup(scored, topN, Seq(col("tok")), col("score").desc, col("doc_id").asc)
       .select(col("tok").as("term"), col("rank"), col("doc_id"), col("score"))
   }
 
@@ -1488,12 +1479,7 @@ object TextAnalysis {
         "lift",
         expr("""CAST(cnt AS DOUBLE) * CAST(nn AS DOUBLE)
                 / (CAST(sn AS DOUBLE) * CAST(tc AS DOUBLE))"""))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("source"))
-      .orderBy(col("lift").desc, col("tok").asc)
-    lifted
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Relational.topKPerGroup(lifted, k, Seq(col("source")), col("lift").desc, col("tok").asc)
       .select(col("source"), col("rank"), col("tok"), col("cnt"), col("lift"))
   }
 

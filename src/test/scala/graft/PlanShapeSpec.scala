@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.RowNumber
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
 import org.apache.spark.sql.execution.{
   ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
@@ -94,22 +95,55 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("max_by"), p)
   }
 
+  /** Names the queries whose plan lacks `operator`, all at once. */
+  private def assertEveryPlanHas(operator: String, queries: (String, DataFrame)*): Unit = {
+    val missing = queries.collect { case (name, df) if !plan(df).contains(operator) => name }
+    assert(missing.isEmpty, s"no $operator in: ${missing.mkString(", ")}")
+  }
+
   test("global top-k queries use TakeOrderedAndProject, not a full-input window") {
-    Seq(
-      Analytics.transitionsTopK(Tables.events(spark, sfDir), 15),
-      TextAnalysis.termFrequency(Tables.documents(spark, sfDir), 20),
-      Relational.starRevenueTopK(
+    val events = Tables.events(spark, sfDir)
+    val queries = Seq(
+      "transitionsTopK" -> Analytics.transitionsTopK(events, 15),
+      "termFrequency" -> TextAnalysis.termFrequency(Tables.documents(spark, sfDir), 20),
+      "starRevenueTopK" -> Relational.starRevenueTopK(
         Tables.customer(spark, sfDir), Tables.orders(spark, sfDir),
-        Tables.lineitem(spark, sfDir), "BUILDING", 10)
-    ).foreach { df =>
-      val p = plan(df)
-      assert(p.contains("TakeOrderedAndProject"), p)
+        Tables.lineitem(spark, sfDir), "BUILDING", 10),
+      "grubbsOutlier" -> Analytics.grubbsOutlier(events),
+      "eventStudy" -> Analytics.eventStudy(events))
+    assertEveryPlanHas("TakeOrderedAndProject", queries: _*)
+    // a filter on a row_number is a hand-written top-k (Spark adds its
+    // own limit under such a window, so the plan holds a
+    // TakeOrderedAndProject either way)
+    def filtersRowNumber(f: FilterExec): Boolean = (f.child match {
+      case InputAdapter(c) => c
+      case c => c
+    }) match {
+      case w: WindowExec => w.windowExpression.exists(e =>
+        e.exists(_.isInstanceOf[RowNumber]) && f.condition.references.contains(e.toAttribute))
+      case _ => false
     }
+    val rankFilters = queries.collect {
+      case (name, df) if nodes(df.queryExecution.executedPlan).exists {
+        case f: FilterExec => filtersRowNumber(f)
+        case _ => false
+      } => name
+    }
+    assert(rankFilters.isEmpty, s"a row_number filter in: ${rankFilters.mkString(", ")}")
   }
 
   test("per-group top-k gets WindowGroupLimit rank pushdown") {
-    val p = plan(TextAnalysis.tfidfTopTerms(Tables.documents(spark, sfDir), 3))
-    assert(p.contains("WindowGroupLimit"), p)
+    val docs = Tables.documents(spark, sfDir)
+    val embeddings = Tables.embeddings(spark, sfDir)
+    assertEveryPlanHas("WindowGroupLimit",
+      "tfidfTopTerms" -> TextAnalysis.tfidfTopTerms(docs, 3),
+      "dailyTopSpenders" -> Analytics.dailyTopSpenders(Tables.events(spark, sfDir), 3),
+      "itemRecommendations" -> graft.engine.Graph.itemRecommendations(Tables.lineitem(spark, sfDir)),
+      "quotaSample" -> Relational.quotaSample(docs, 5),
+      "screenSlicesAgainst" -> graft.multimodal.Multimodal.sliceScreen(docs),
+      "knnClassify" -> graft.similarity.Similarity.knnClassify(embeddings, 10, 5),
+      "bitextMine" -> graft.similarity.Similarity.bitextMine(embeddings, docs),
+      "screenSigs" -> graft.text.Dedup.incrementalBestMatch(docs))
   }
 
   test("stratified sample is a scan-stage filter: no shuffle, no join") {

@@ -5,9 +5,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.concurrent.duration._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.graft.ListenerFence
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -133,6 +134,52 @@ class ScalablePrimitivesPropSpec extends AnyFunSuite {
       assert(picks(df, Seq("g")) == expected, s"round $round, ${grid.size} rows")
       assert(picks(df, Nil) == Map("" -> model(grid.map(r => (r._2, r._3)))), s"round $round, no groups")
     }
+  }
+
+  test("topKPerGroup == per group: sort, take k, rank 1..k") {
+    // 1–5 groups, g0 under a NULL key; group sizes 1–8 against k from 1
+    // to 6, so some groups are smaller than k; the first sort key comes
+    // from 0–3 so it ties, the unique id breaks the ties, and about one
+    // first key in five is NULL (Spark sorts NULL first ascending, last
+    // descending); round 1 is the empty input and rounds 1–3 take k = 1
+    val rnd = new scala.util.Random(61)
+    def sorted(rows: Seq[(Option[String], Option[Long], Long)], desc: Boolean) = rows.sortBy { case (_, a, id) =>
+      if (desc) (a.isEmpty, -a.getOrElse(0L), id) else (a.nonEmpty, a.getOrElse(0L), id)
+    }
+    var smallGroups = 0
+    (1 to 10).foreach { round =>
+      val nGroups = 1 + rnd.nextInt(5)
+      val grouped = if (round == 1) Nil else (0 until nGroups).map { g =>
+        Seq.fill(1 + rnd.nextInt(8))((
+          if (g == 0) None else Some(s"g$g"),
+          if (rnd.nextInt(5) == 0) None else Some(rnd.nextInt(4).toLong)))
+      }
+      val rows = grouped.flatten.zipWithIndex.map { case ((g, a), id) => (g, a, id.toLong) }
+      val k = if (round <= 3) 1 else 1 + rnd.nextInt(6)
+      smallGroups += grouped.count(_.size < k)
+      val df = rows.toDF("g", "a", "id")
+      for (desc <- Seq(false, true)) {
+        val first = if (desc) col("a").desc else col("a").asc
+        val expected = rows.groupBy(_._1).values.toSeq.flatMap { grp =>
+          sorted(grp, desc).take(k).zipWithIndex.map { case ((g, a, id), i) => (g, a, id, i + 1L) }
+        }
+        def run(sort: Column*): Seq[(Option[String], Option[Long], Long, Long)] = {
+          val got = Relational.topKPerGroup(df, k, Seq(col("g")), sort: _*)
+          assert(got.columns.toSeq == Seq("g", "a", "id", "rank"))
+          assert(got.schema("rank").dataType == LongType)
+          got.collect().toSeq.map(r =>
+            (Option(r.getString(0)), if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2), r.getLong(3)))
+        }
+        val at = s"round $round, k = $k, desc = $desc"
+        assert(run(first, col("id").asc).sortBy(_._3) == expected.sortBy(_._3), at)
+        // ties on `a` alone leave which tied row survives open, but not
+        // the ranks 1..k or the kept values of `a`
+        def ranksAndValues(out: Seq[(Option[String], Option[Long], Long, Long)]) =
+          out.groupBy(_._1).view.mapValues(g => (g.map(_._4).sorted, g.map(_._2.getOrElse(Long.MinValue)).sorted)).toMap
+        assert(ranksAndValues(run(first)) == ranksAndValues(expected), s"$at, ties open")
+      }
+    }
+    assert(smallGroups > 0, "no group was smaller than its k")
   }
 
   test("building the rank, the running sum and bigramPmi runs no Spark job") {

@@ -26,21 +26,12 @@ SNAP=$(mktemp -d)
 trap 'rm -rf "$SNAP"' EXIT
 cp -a "$CLASSES/." "$SNAP"
 
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-
 # 4g matches SBT_OPTS' -Xmx for `sbt runMain graft.Bench`, the heap the
 # committed boards in BASELINE.md were measured at.
 ERR="${OUT%.out}.err"
 if ! SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$CPUS" \
   SPARK_GRAFT_QUERIES="$QUERIES" \
-  java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-4g}" \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$SNAP:/opt/spark/jars/*" graft.Bench \
+  "$ROOT/tools/spark_main.sh" "$SNAP" "${SPARK_DRIVER_MEM:-4g}" graft.Bench \
     > "$OUT" 2> "$ERR"; then
   echo "bench_subset: Bench failed; last lines of $ERR:" >&2
   tail -n 5 "$ERR" >&2

@@ -43,7 +43,7 @@ Usage: python3 tools/degenerate_probe.py [sfDir] [workDir] [q1,q2,...] [v1,v2,..
   v1,...  optional comma-separated variant subset (same caveat)
 
 Requires a compiled target/scala-2.13/classes (run `sbt compile` first);
-Spark runs via java -cp against the Spark jars, same as tools/bench_subset.sh.
+Spark runs through tools/spark_main.sh, the launcher tools/bench_subset.sh uses.
 
 Exit 0 when every (variant, query) cell is OK/BOTH_FAIL or allowlisted
 AND no cell is SLOW (>= SLOW_CELL_S wall seconds on a tiny fixture — an
@@ -231,15 +231,7 @@ SLOW_CELL_S = 60.0
 def run_spark_verify(variant_dir: str, out_dir: str, only: str = ""):
     """Run graft.Verify over the variant; return ({query: error_first_line},
     {query: wall_seconds}) — queries with output parquet are successes."""
-    add_opens = []
-    for p in ("java.lang java.lang.invoke java.lang.reflect java.io java.net "
-              "java.nio java.util java.util.concurrent java.util.concurrent.atomic "
-              "sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar").split():
-        add_opens += ["--add-opens", f"java.base/{p}=ALL-UNNAMED"]
-    cmd = (["java"] + add_opens +
-           ["-Xmx4g", "-Dspark.ui.enabled=false",
-            "-Dspark.sql.session.timeZone=UTC",
-            "-cp", f"{REPO}/target/scala-2.13/classes:/opt/spark/jars/*",
+    cmd = ([f"{REPO}/tools/spark_main.sh", f"{REPO}/target/scala-2.13/classes", "4g",
             "graft.Verify", variant_dir, out_dir] +
            ([only] if only else []))
     env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))

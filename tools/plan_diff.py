@@ -8,7 +8,10 @@ the change):
 
     sbt -batch "runMain graft.Explain <sfDir>" > explain.txt 2>/dev/null
 
-Prints the name of every query whose physical plan differs. sbt's own
+Prints the name of every query whose physical plan differs, followed by
+`operators differ` when its sequence of operator names (the `(n) Name`
+lines of the formatted plan) differs, or `expressions only` when only
+the expressions inside the same operators do. sbt's own
 `[info]`/`[success]` lines are dropped, and so is what changes from run
 to run: expression ids, plan_id, object hashes (typed aggregators),
 lambda class names and round-trip temp paths. q_dedup_corpus,
@@ -27,6 +30,7 @@ CODEGEN_NOISE = {'q_dedup_corpus', 'q_dedup_prf', 'q_ngram_jaccard'}
 CODEGEN = [(r'\[codegen id : [0-9]+\]', ''), (r'^Arguments: [0-9]+$', 'Arguments:'),
            (r'WholeStageCodegen \([0-9]+\)', 'WholeStageCodegen')]
 HEADER = re.compile(r'^========== (\S+) ==========$')
+OPERATOR = re.compile(r'^\([0-9]+\) (.*?)(?: \[codegen id : [0-9]+\])?\s*$')
 
 
 def plans(path):
@@ -50,6 +54,10 @@ def plans(path):
     return out
 
 
+def operators(plan):
+    return [m.group(1) for m in map(OPERATOR.match, plan or []) if m]
+
+
 def main(argv):
     if len(argv) != 3 or not all(os.path.isfile(p) for p in argv[1:]):
         print(f"usage: {argv[0]} <parent.txt> <change.txt>", file=sys.stderr)
@@ -57,7 +65,8 @@ def main(argv):
     a, b = plans(argv[1]), plans(argv[2])
     differ = sorted(q for q in a.keys() | b.keys() if a.get(q) != b.get(q))
     for q in differ:
-        print(q)
+        same_ops = operators(a.get(q)) == operators(b.get(q))
+        print(q, 'expressions only' if same_ops else 'operators differ')
     print(f"plan_diff: {len(differ)} of {len(a.keys() | b.keys())} queries differ", file=sys.stderr)
     return 1 if differ else 0
 
