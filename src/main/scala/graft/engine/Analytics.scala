@@ -5808,18 +5808,12 @@ object Analytics {
         Window.partitionBy(col("user_id"))))
       .filter(col("pmin").isNull || col("ts") <= col("pmin"))
     val ordered = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
-    val pairs = rel
-      .withColumn("prev", lag(col("event_type"), 1).over(ordered))
-      .withColumn("rn_desc", row_number().over(
-        Window.partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)))
-      .select(
-        coalesce(col("prev"), lit("start")).as("src"),
-        col("event_type").as("dst"),
-        col("rn_desc"),
-        col("event_type"))
-    val fwd = pairs.select(col("src"), col("dst"))
-    val ends = pairs
-      .filter(col("rn_desc") === 1 && col("event_type") =!= "purchase")
+    val fwd = rel.select(
+      coalesce(lag(col("event_type"), 1).over(ordered), lit("start")).as("src"),
+      col("event_type").as("dst"))
+    val ends = Relational
+      .topKPerGroup(rel, 1, Seq(col("user_id")), col("ts").desc, col("event_id").desc)
+      .filter(col("event_type") =!= "purchase")
       .select(col("event_type").as("src"), lit("null").as("dst"))
     val trans = fwd.unionAll(ends)
       .groupBy(col("src"), col("dst"))
