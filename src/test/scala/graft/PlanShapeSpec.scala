@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.RowNumber
+import org.apache.spark.sql.catalyst.expressions.{Expression, RowNumber}
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LogicalWindow}
 import org.apache.spark.sql.execution.{
   ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
@@ -115,17 +115,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // a filter on a row_number is a hand-written top-k (Spark adds its
     // own limit under such a window, so the plan holds a
     // TakeOrderedAndProject either way)
-    def filtersRowNumber(f: FilterExec): Boolean = (f.child match {
-      case InputAdapter(c) => c
-      case c => c
-    }) match {
-      case w: WindowExec => w.windowExpression.exists(e =>
-        e.exists(_.isInstanceOf[RowNumber]) && f.condition.references.contains(e.toAttribute))
-      case _ => false
-    }
+    def readsRowNumber(condition: Expression, w: WindowExec): Boolean = w.windowExpression.exists(e =>
+      e.exists(_.isInstanceOf[RowNumber]) && condition.references.contains(e.toAttribute))
     val rankFilters = queries.collect {
       case (name, df) if nodes(df.queryExecution.executedPlan).exists {
-        case f: FilterExec => filtersRowNumber(f)
+        case FilterExec(condition, w: WindowExec) => readsRowNumber(condition, w)
+        case FilterExec(condition, InputAdapter(w: WindowExec)) => readsRowNumber(condition, w)
         case _ => false
       } => name
     }

@@ -143,9 +143,10 @@ class ScalablePrimitivesPropSpec extends AnyFunSuite {
     // first key in five is NULL (Spark sorts NULL first ascending, last
     // descending); round 1 is the empty input and rounds 1–3 take k = 1
     val rnd = new scala.util.Random(61)
-    def sorted(rows: Seq[(Option[String], Option[Long], Long)], desc: Boolean) = rows.sortBy { case (_, a, id) =>
-      if (desc) (a.isEmpty, -a.getOrElse(0L), id) else (a.nonEmpty, a.getOrElse(0L), id)
-    }
+    def sorted(rows: Seq[(Option[String], Option[Long], Long)], desc: Boolean) =
+      rows.sortBy { case (_, a, id) =>
+        if (desc) (a.isEmpty, -a.getOrElse(0L), id) else (a.nonEmpty, a.getOrElse(0L), id)
+      }
     var smallGroups = 0
     (1 to 10).foreach { round =>
       val nGroups = 1 + rnd.nextInt(5)
@@ -167,15 +168,19 @@ class ScalablePrimitivesPropSpec extends AnyFunSuite {
           val got = Relational.topKPerGroup(df, k, Seq(col("g")), sort: _*)
           assert(got.columns.toSeq == Seq("g", "a", "id", "rank"))
           assert(got.schema("rank").dataType == LongType)
-          got.collect().toSeq.map(r =>
-            (Option(r.getString(0)), if (r.isNullAt(1)) None else Some(r.getLong(1)), r.getLong(2), r.getLong(3)))
+          got.collect().toSeq.map { r =>
+            val a = if (r.isNullAt(1)) None else Some(r.getLong(1))
+            (Option(r.getString(0)), a, r.getLong(2), r.getLong(3))
+          }
         }
         val at = s"round $round, k = $k, desc = $desc"
         assert(run(first, col("id").asc).sortBy(_._3) == expected.sortBy(_._3), at)
         // ties on `a` alone leave which tied row survives open, but not
         // the ranks 1..k or the kept values of `a`
         def ranksAndValues(out: Seq[(Option[String], Option[Long], Long, Long)]) =
-          out.groupBy(_._1).view.mapValues(g => (g.map(_._4).sorted, g.map(_._2.getOrElse(Long.MinValue)).sorted)).toMap
+          out.groupBy(_._1).view
+            .mapValues(g => (g.map(_._4).sorted, g.map(_._2.getOrElse(Long.MinValue)).sorted))
+            .toMap
         assert(ranksAndValues(run(first)) == ranksAndValues(expected), s"$at, ties open")
       }
     }
