@@ -395,16 +395,16 @@ object SparkEntry {
          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     QueryDef("q_hash_sample", (s, dir) =>
       Relational.hashModSample(Tables.events(s, dir), 10).orderBy("event_id"),
-      """SELECT event_id, user_id, event_type, value FROM events
-         WHERE CAST(CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 10 = 0
+      s"""SELECT event_id, user_id, event_type, value FROM events
+         WHERE ${Stages.duckMd5BitsSql("CAST(event_id AS VARCHAR)", "1", 8)} % 10 = 0
          ORDER BY event_id"""),
     QueryDef("q_stratified_sample", (s, dir) =>
       Relational
         .stratifiedHashSample(
           Tables.events(s, dir), Map("error" -> 10, "purchase" -> 4), 1, 20)
         .orderBy("event_id"),
-      """SELECT event_id, user_id, event_type, value FROM events
-         WHERE CAST(CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 20
+      s"""SELECT event_id, user_id, event_type, value FROM events
+         WHERE ${Stages.duckMd5BitsSql("CAST(event_id AS VARCHAR)", "1", 8)} % 20
                < CASE WHEN event_type = 'error' THEN 10 WHEN event_type = 'purchase' THEN 4 ELSE 1 END
          ORDER BY event_id"""),
     QueryDef("q_latest_by_key", (s, dir) =>
@@ -496,8 +496,8 @@ object SparkEntry {
     }),
     QueryDef("q_data_split", (s, dir) =>
       Relational.dataSplitReport(Tables.events(s, dir)).orderBy("split", "event_type"),
-      """WITH b AS (SELECT event_type,
-                           CAST(CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 10 AS bucket
+      s"""WITH b AS (SELECT event_type,
+                           ${Stages.duckMd5BitsSql("CAST(event_id AS VARCHAR)", "1", 8)} % 10 AS bucket
                     FROM events)
          SELECT CASE WHEN bucket < 8 THEN 'train' WHEN bucket = 8 THEN 'valid' ELSE 'test' END AS split,
                 event_type, count(*) AS n
@@ -640,9 +640,9 @@ object SparkEntry {
     }),
     QueryDef("q_bottomk_sample", (s, dir) =>
       Relational.bottomKSample(Tables.events(s, dir), 10).orderBy("event_type", "rank"),
-      """WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
+      s"""WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
          h AS (SELECT event_type, user_id,
-                 CAST(CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) AS h
+                 ${Stages.duckMd5BitsSql("CAST(user_id AS VARCHAR)", "1", 8)} AS h
                FROM du),
          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY event_type ORDER BY h ASC, user_id ASC) AS BIGINT) AS rank
                FROM h)
@@ -737,9 +737,9 @@ object SparkEntry {
          FROM gaps GROUP BY cohort_day ORDER BY cohort_day"""),
     QueryDef("q_feature_hash", (s, dir) =>
       TextAnalysis.featureHash(Tables.documents(s, dir), 256).orderBy("doc_id", "bucket"),
-      """WITH t AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents)
+      s"""WITH t AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM documents)
          SELECT doc_id,
-                CAST(CAST(concat('0x', substring(md5(tok), 1, 8)) AS UBIGINT) AS BIGINT) % 256 AS bucket,
+                ${Stages.duckMd5BitsSql("tok", "1", 8)} % 256 AS bucket,
                 count(*) AS n
          FROM t GROUP BY 1, 2 ORDER BY doc_id, bucket"""),
     QueryDef("q_bigram_lm", (s, dir) =>
@@ -1151,8 +1151,8 @@ object SparkEntry {
          ORDER BY med.l_returnflag"""),
     QueryDef("q_weighted_sample", (s, dir) =>
       Relational.weightedSample(Tables.documents(s, dir), 10).orderBy("source", "rank"),
-      """WITH p AS (SELECT source, doc_id, n_chars,
-                CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT)
+      s"""WITH p AS (SELECT source, doc_id, n_chars,
+                ${Stages.duckMd5BitsSql("CAST(doc_id AS VARCHAR)", "1", 8)}
                   / CAST(n_chars AS DOUBLE) AS priority
               FROM documents),
          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY source
@@ -1571,7 +1571,7 @@ object SparkEntry {
       s"""WITH g AS (SELECT doc_id, $duckShingles AS grams FROM documents),
          $duckMinhashSigCtes,
          split AS (SELECT doc_id,
-                   CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 10 = 0 AS is_new
+                   ${Stages.duckMd5BitsSql("CAST(doc_id AS VARCHAR)", "1", 8)} % 10 = 0 AS is_new
                    FROM documents),
          bands AS (SELECT doc_id, sig, unnest(generate_series(0,7)) AS band FROM sig),
          keyed AS (SELECT doc_id, band, sig[band*4+1:band*4+4] AS bsig FROM bands),
@@ -1907,14 +1907,14 @@ object SparkEntry {
          FROM per"""),
     QueryDef("q_slice_screen", (s, dir) =>
       Multimodal.sliceScreen(Tables.documents(s, dir)),
-      """WITH s AS (SELECT doc_id,
+      s"""WITH s AS (SELECT doc_id,
                 unnest(generate_series(0, (length(text) - 1) // 128)) AS slice_id, text
               FROM documents WHERE length(text) > 0),
          sl AS (SELECT DISTINCT doc_id,
                 md5(lower(hex(encode(substring(text, CAST(slice_id * 128 + 1 AS INTEGER), 64))))) AS slice_md5
               FROM s),
          split AS (SELECT doc_id,
-                   CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 5 = 0 AS is_new
+                   ${Stages.duckMd5BitsSql("CAST(doc_id AS VARCHAR)", "1", 8)} % 5 = 0 AS is_new
                    FROM documents),
          hits AS (SELECT b.doc_id AS new_doc, c.doc_id AS best_match, count(*) AS shared
                   FROM sl b JOIN split sb ON b.doc_id = sb.doc_id AND sb.is_new
@@ -2524,18 +2524,18 @@ object SparkEntry {
          FROM w WHERE rn = 1 ORDER BY user_id, event_type, day"""),
     QueryDef("q_table_checksum", (s, dir) =>
       Relational.tableChecksum(Tables.lineitem(s, dir)).orderBy("n_rows"),
-      s"""WITH r AS (SELECT CAST(CAST(concat('0x', substring(md5(concat_ws('|',
-                       CAST(l_orderkey AS VARCHAR), CAST(l_linenumber AS VARCHAR),
-                       l_returnflag, l_linestatus,
-                       CAST(${Stages.centsSql("l_extendedprice")} AS VARCHAR))), 1, 4))
-                     AS UBIGINT) AS BIGINT) AS word
+      {
+      val row = "concat_ws('|', CAST(l_orderkey AS VARCHAR), CAST(l_linenumber AS VARCHAR), l_returnflag, " +
+        s"l_linestatus, CAST(${Stages.centsSql("l_extendedprice")} AS VARCHAR))"
+      s"""WITH r AS (SELECT ${Stages.duckMd5BitsSql(row, "1", 4)} AS word
                FROM lineitem)
          SELECT count(*) AS n_rows, CAST(sum(word) AS BIGINT) AS word_sum,
                 min(word) AS min_word, max(word) AS max_word
-         FROM r"""),
+         FROM r"""
+    }),
     QueryDef("q_partition_balance", (s, dir) =>
       Relational.partitionBalance(Tables.events(s, dir)).orderBy("bucket"),
-      """WITH c AS (SELECT CAST(CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 32 AS bucket, count(*) AS n
+      s"""WITH c AS (SELECT ${Stages.duckMd5BitsSql("CAST(user_id AS VARCHAR)", "1", 8)} % 32 AS bucket, count(*) AS n
                     FROM events GROUP BY 1),
          t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c)
          SELECT bucket, n, CAST(n AS DOUBLE) * 32 / CAST(total AS DOUBLE) AS balance
@@ -2976,11 +2976,11 @@ object SparkEntry {
          FROM rs CROSS JOIN cs ORDER BY n_users"""),
     QueryDef("q_ams_f2", (s, dir) =>
       TextAnalysis.amsF2(Tables.documents(s, dir)).orderBy("n_tokens"),
-      """WITH t AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents),
+      s"""WITH t AS (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM documents),
          cnt AS (SELECT tok, CAST(count(*) AS BIGINT) AS cnt FROM t GROUP BY 1),
          sg AS (SELECT cnt,
-                  CAST(CAST(concat('0x', substring(md5(tok), 1, 8)) AS UBIGINT) AS BIGINT) % 256 AS bucket,
-                  CAST(CAST(concat('0x', substring(md5(tok), 17, 1)) AS UBIGINT) AS BIGINT) % 2 * 2 - 1 AS sgn
+                  ${Stages.duckMd5BitsSql("tok", "1", 8)} % 256 AS bucket,
+                  ${Stages.duckMd5BitsSql("tok", "17", 1)} % 2 * 2 - 1 AS sgn
                 FROM cnt),
          sk AS (SELECT CAST(count(*) AS BIGINT) AS n_buckets, CAST(sum(s * s) AS BIGINT) AS f2_est
                 FROM (SELECT bucket, CAST(sum(sgn * cnt) AS BIGINT) AS s FROM sg GROUP BY 1)),
@@ -2991,11 +2991,11 @@ object SparkEntry {
          FROM ex CROSS JOIN sk ORDER BY n_tokens"""),
     QueryDef("q_cms", (s, dir) =>
       TextAnalysis.cmsAccuracy(Tables.documents(s, dir)).orderBy("rank"),
-      """WITH t AS (SELECT unnest(string_split_regex(trim(text), '\s+')) AS tok FROM documents),
+      s"""WITH t AS (SELECT unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM documents),
          cnt AS (SELECT tok, CAST(count(*) AS BIGINT) AS true_cnt FROM t GROUP BY 1),
          k AS (SELECT tok, true_cnt, unnest(generate_series(0, 3)) AS j FROM cnt),
          kb AS (SELECT tok, true_cnt, j,
-                  CAST(CAST(concat('0x', substring(md5(tok), j * 8 + 1, 8)) AS UBIGINT) AS BIGINT) % 512 AS bucket
+                  ${Stages.duckMd5BitsSql("tok", "j * 8 + 1", 8)} % 512 AS bucket
                 FROM k),
          c AS (SELECT j, bucket, CAST(sum(true_cnt) AS BIGINT) AS counter FROM kb GROUP BY 1, 2),
          e AS (SELECT kb.tok, max(kb.true_cnt) AS true_cnt, min(c.counter) AS cms_est
@@ -3119,8 +3119,7 @@ object SparkEntry {
     QueryDef("q_hll", (s, dir) =>
       Analytics.hllDistinct(Tables.events(s, dir)).orderBy("event_type"),
       s"""WITH h AS (SELECT event_type,
-                     CAST(CAST(concat('0x', substring(md5(concat(CAST(user_id AS VARCHAR), '-',
-                       CAST(CAST(ts AS DATE) AS VARCHAR))), 1, 8)) AS UBIGINT) AS BIGINT) AS h
+                     ${Stages.duckMd5BitsSql("concat(CAST(user_id AS VARCHAR), '-', CAST(CAST(ts AS DATE) AS VARCHAR))", "1", 8)} AS h
               FROM events),
          br AS (SELECT event_type, h >> 24 AS bucket, h & 16777215 AS rem FROM h),
          rr AS (SELECT event_type, bucket, $hllRhoLadder AS rho FROM br),
@@ -3212,7 +3211,7 @@ object SparkEntry {
          FROM agg ORDER BY n"""),
     QueryDef("q_hash_uniformity", (s, dir) =>
       Relational.hashUniformity(Tables.events(s, dir)).orderBy("n"),
-      """WITH c AS (SELECT CAST(CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 256 AS b,
+      s"""WITH c AS (SELECT ${Stages.duckMd5BitsSql("CAST(user_id AS VARCHAR)", "1", 8)} % 256 AS b,
                     CAST(count(*) AS BIGINT) AS o
              FROM events GROUP BY 1),
          grid AS (SELECT g.b, coalesce(c.o, 0) AS o
@@ -4783,11 +4782,7 @@ object SparkEntry {
     QueryDef("q_boot_median", (s, dir) =>
       Analytics.poissonBootstrapMedian(Tables.events(s, dir)).orderBy("resample"),
       {
-      val mult = graft.engine.Analytics.PoissonThresholds.zipWithIndex
-        .map { case (t, k) =>
-          s"WHEN CAST(CAST(concat('0x', substring(md5(concat(CAST(event_id AS VARCHAR), '_', CAST(r AS VARCHAR))), 1, 8)) AS UBIGINT) AS BIGINT) < $t THEN $k"
-        }
-        .mkString("CASE ", " ", s" ELSE ${graft.engine.Analytics.PoissonThresholds.length} END")
+      val mult = Analytics.poissonMultiplierSql(duckResampleHashSql)
       s"""WITH e AS (SELECT event_id, CAST(round(value * 100) AS BIGINT) AS x,
                             unnest(generate_series(0, 7)) AS r
                      FROM events),
@@ -5382,8 +5377,7 @@ object SparkEntry {
     QueryDef("q_rendezvous", (s, dir) =>
       Relational.rendezvousShards(Tables.documents(s, dir)).orderBy("shard8"),
       {
-      def h(n: Int): String =
-        s"CAST(CAST(concat('0x', substring(md5(concat(CAST(doc_id AS VARCHAR), '_', '$n')), 1, 15)) AS UBIGINT) AS BIGINT)"
+      def h(n: Int): String = Stages.duckMd5BitsSql(s"concat(CAST(doc_id AS VARCHAR), '_', '$n')", "1", 15)
       def argmax(n: Int): String =
         (0 until n)
           .map(i => s"struct_pack(h := ${h(i)}, s := CAST($i AS BIGINT))")
@@ -5399,9 +5393,8 @@ object SparkEntry {
       Relational.vnodeBalance(Tables.documents(s, dir)).orderBy("scheme"),
       {
       val ring = "1152921504606846976"
-      val docH = "CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS UBIGINT) AS BIGINT)"
-      def pointH(s: Int, v: Int): String =
-        s"CAST(CAST(concat('0x', substring(md5('p_${s}_$v'), 1, 15)) AS UBIGINT) AS BIGINT)"
+      val docH = Stages.duckMd5BitsSql("CAST(doc_id AS VARCHAR)", "1", 15)
+      def pointH(s: Int, v: Int): String = Stages.duckMd5BitsSql(s"'p_${s}_$v'", "1", 15)
       def owner(vnodes: Int): String =
         (for { sh <- 0 until 8; v <- 0 until vnodes } yield
           s"struct_pack(d := (((${pointH(sh, v)} - $docH) % $ring) + $ring) % $ring, s := CAST($sh AS BIGINT))")
@@ -5553,7 +5546,7 @@ object SparkEntry {
       s"""WITH g AS (SELECT doc_id, $duckShingles AS grams FROM documents),
          $duckMinhashSigCtes,
          sp AS (SELECT doc_id, sig,
-                  CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 5 = 0 AS is_batch
+                  ${Stages.duckMd5BitsSql("CAST(doc_id AS VARCHAR)", "1", 8)} % 5 = 0 AS is_batch
                 FROM sig),
          bands AS (SELECT doc_id, is_batch, sig, unnest(generate_series(0,7)) AS band FROM sp),
          keyed AS (SELECT doc_id, is_batch, band, sig[band*4+1:band*4+4] AS bsig FROM bands),
@@ -5620,8 +5613,8 @@ object SparkEntry {
       Analytics.conformalInterval(Tables.lineitem(s, dir)),
       {
       val linreg = Stages.linregSql().toMap
-      s"""WITH b AS (SELECT CASE WHEN CAST(CAST(concat('0x', substring(md5(concat(CAST(l_orderkey AS VARCHAR), '_', CAST(l_linenumber AS VARCHAR))), 1, 8)) AS UBIGINT) AS BIGINT) % 10 < 6 THEN 'train'
-                              WHEN CAST(CAST(concat('0x', substring(md5(concat(CAST(l_orderkey AS VARCHAR), '_', CAST(l_linenumber AS VARCHAR))), 1, 8)) AS UBIGINT) AS BIGINT) % 10 < 8 THEN 'cal'
+      s"""WITH b AS (SELECT CASE WHEN ${Stages.duckMd5BitsSql(duckLineitemRowKeySql, "1", 8)} % 10 < 6 THEN 'train'
+                              WHEN ${Stages.duckMd5BitsSql(duckLineitemRowKeySql, "1", 8)} % 10 < 8 THEN 'cal'
                               ELSE 'test' END AS split,
                             CAST(round(l_quantity) AS BIGINT) AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
@@ -5653,10 +5646,10 @@ object SparkEntry {
       duckSilhouetteSql(8)),
     QueryDef("q_post_strat", (s, dir) =>
       Relational.postStratified(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH s AS (SELECT event_type,
+      s"""WITH s AS (SELECT event_type,
                            CAST(count(*) AS BIGINT) AS n_pop,
-                           CAST(sum(CASE WHEN CAST(CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_sample,
-                           CAST(coalesce(sum(CASE WHEN CAST(CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 10 = 0 THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END), 0) AS BIGINT) AS s_cents
+                           CAST(sum(CASE WHEN ${Stages.duckMd5BitsSql("CAST(event_id AS VARCHAR)", "1", 8)} % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_sample,
+                           CAST(coalesce(sum(CASE WHEN ${Stages.duckMd5BitsSql("CAST(event_id AS VARCHAR)", "1", 8)} % 10 = 0 THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END), 0) AS BIGINT) AS s_cents
                     FROM events GROUP BY 1),
          t AS (SELECT sum(n_pop) AS n_total FROM s)
          SELECT event_type, n_pop, n_sample,
@@ -5764,11 +5757,7 @@ object SparkEntry {
     QueryDef("q_poisson_boot", (s, dir) =>
       Analytics.poissonBootstrap(Tables.events(s, dir)).orderBy("resample"),
       {
-      val mult = Analytics.PoissonThresholds.zipWithIndex
-        .map { case (t, k) =>
-          s"WHEN CAST(CAST(concat('0x', substring(md5(concat(CAST(event_id AS VARCHAR), '_', CAST(r AS VARCHAR))), 1, 8)) AS UBIGINT) AS BIGINT) < $t THEN $k"
-        }
-        .mkString("CASE ", " ", s" ELSE ${Analytics.PoissonThresholds.length} END")
+      val mult = Analytics.poissonMultiplierSql(duckResampleHashSql)
       s"""WITH e AS (SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents,
                             unnest(generate_series(0, 19)) AS r
                      FROM events),
@@ -5983,10 +5972,10 @@ object SparkEntry {
          FROM ev GROUP BY 1 ORDER BY event_type"""),
     QueryDef("q_join_card", (s, dir) =>
       Relational.joinCardinalityEstimate(Tables.orders(s, dir), Tables.lineitem(s, dir)),
-      """WITH oc AS (SELECT o_orderkey AS k, CAST(count(*) AS BIGINT) AS na FROM orders GROUP BY 1),
+      s"""WITH oc AS (SELECT o_orderkey AS k, CAST(count(*) AS BIGINT) AS na FROM orders GROUP BY 1),
          lc AS (SELECT l_orderkey AS k, CAST(count(*) AS BIGINT) AS nb FROM lineitem GROUP BY 1),
          j AS (SELECT k, na * nb AS pairs,
-                      CAST(CAST(concat('0x', substring(md5(CAST(k AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 10 AS b
+                      ${Stages.duckMd5BitsSql("CAST(k AS VARCHAR)", "1", 8)} % 10 AS b
                FROM oc JOIN lc USING (k))
          SELECT CAST(count(*) AS BIGINT) AS n_keys,
                 CAST(sum(pairs) AS BIGINT) AS actual_pairs,
@@ -6091,7 +6080,7 @@ object SparkEntry {
       Analytics.crossValidatedLinreg(Tables.lineitem(s, dir)).orderBy("fold"),
       {
       val linreg = Stages.linregSql().toMap
-      s"""WITH b AS (SELECT CAST(CAST(concat('0x', substring(md5(concat(CAST(l_orderkey AS VARCHAR), '_', CAST(l_linenumber AS VARCHAR))), 1, 8)) AS UBIGINT) AS BIGINT) % 5 AS fold,
+      s"""WITH b AS (SELECT ${Stages.duckMd5BitsSql(duckLineitemRowKeySql, "1", 8)} % 5 AS fold,
                             CAST(round(l_quantity) AS BIGINT) AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
                      FROM lineitem),
@@ -6139,11 +6128,11 @@ object SparkEntry {
          FROM m ORDER BY event_type"""),
     QueryDef("q_ab_power", (s, dir) =>
       Analytics.abPowerAnalysis(Tables.events(s, dir)),
-      """WITH u AS (SELECT user_id,
+      s"""WITH u AS (SELECT user_id,
                            CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS converted
                     FROM events GROUP BY 1),
          a AS (SELECT converted,
-                      CAST(CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 2 AS arm
+                      $duckUserArmSql AS arm
                FROM u),
          m AS (SELECT CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                       CAST(sum(CASE WHEN arm = 0 THEN converted ELSE 0 END) AS BIGINT) AS c1,
@@ -6386,7 +6375,7 @@ object SparkEntry {
          FROM m"""),
     QueryDef("q_qte", (s, dir) =>
       Analytics.quantileTreatmentEffects(Tables.events(s, dir)).orderBy("decile"),
-      """WITH v AS (SELECT CAST(CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 2 AS arm,
+      s"""WITH v AS (SELECT $duckUserArmSql AS arm,
                            CAST(round(value * 100) AS BIGINT) AS v
                     FROM events),
          c AS (SELECT arm, v, CAST(count(*) AS BIGINT) AS cnt FROM v GROUP BY 1, 2),
@@ -6602,7 +6591,7 @@ object SparkEntry {
     QueryDef("q_sample_error", (s, dir) =>
       Relational.sampleAccuracy(Tables.events(s, dir)).orderBy("event_type"),
       s"""WITH b AS (SELECT event_type, ${Stages.centsSql("value")} AS cents,
-                      CAST(CAST(concat('0x', substring(md5(CAST(event_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 10 AS h
+                      ${Stages.duckMd5BitsSql("CAST(event_id AS VARCHAR)", "1", 8)} % 10 AS h
                FROM events)
          SELECT event_type, count(*) AS n,
                 quantile_cont(cents, 0.5) AS p50_full,
@@ -7063,9 +7052,9 @@ object SparkEntry {
          FROM o FULL JOIN e ON o.key = e.key ORDER BY key"""),
     QueryDef("q_kmv", (s, dir) =>
       TextAnalysis.kmvIntersect(Tables.documents(s, dir)),
-      """WITH tk AS (SELECT DISTINCT source, unnest(string_split_regex(trim(text), '\s+')) AS tok
+      s"""WITH tk AS (SELECT DISTINCT source, unnest(string_split_regex(trim(text), '\\s+')) AS tok
                      FROM documents WHERE source IN ('src0', 'src1')),
-         hs AS (SELECT CAST(CAST(concat('0x', substring(md5(tok), 1, 8)) AS UBIGINT) AS BIGINT) AS h,
+         hs AS (SELECT ${Stages.duckMd5BitsSql("tok", "1", 8)} AS h,
                        CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
                        CAST(sum(CASE WHEN source = 'src1' THEN 1 ELSE 0 END) AS BIGINT) AS cb
                 FROM tk GROUP BY 1),
@@ -7143,7 +7132,7 @@ object SparkEntry {
       s"""WITH span AS (SELECT min(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS t0,
                                max(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS t1
                         FROM events),
-         b AS (SELECT CAST(CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 2 AS arm,
+         b AS (SELECT $duckUserArmSql AS arm,
                       epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 * 2 >= t0 + t1 AS late,
                       CAST(round(value * 100) AS BIGINT) AS cents
                FROM events CROSS JOIN span),
@@ -7329,7 +7318,7 @@ object SparkEntry {
                             CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS converted
                      FROM events GROUP BY 1),
          a AS (SELECT converted,
-                      CAST(CAST(concat('0x', substring(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 2 AS arm
+                      $duckUserArmSql AS arm
                FROM pu),
          m AS (SELECT CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                       CAST(sum(CASE WHEN arm = 0 THEN converted ELSE 0 END) AS BIGINT) AS c1,
@@ -7846,7 +7835,7 @@ object SparkEntry {
          s AS (SELECT doc_id,
                       CASE WHEN b < 8 THEN 'train' WHEN b = 8 THEN 'valid' ELSE 'test' END AS split
                FROM (SELECT doc_id,
-                            CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) AS BIGINT) % 10 AS b
+                            ${Stages.duckMd5BitsSql("CAST(doc_id AS VARCHAR)", "1", 8)} % 10 AS b
                      FROM documents)),
          cells AS (
            SELECT least(sa.split, sb.split) AS split_a,
@@ -8071,9 +8060,9 @@ object SparkEntry {
     }),
     QueryDef("q_dsir_weights", (s, dir) =>
       TextAnalysis.dsirWeights(Tables.documents(s, dir)).orderBy("lang"),
-      """WITH tok AS (SELECT doc_id, lang, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok FROM documents),
+      s"""WITH tok AS (SELECT doc_id, lang, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok FROM documents),
          bk AS (SELECT doc_id, lang,
-                       CAST(CAST(concat('0x', substring(md5(tok), 1, 8)) AS UBIGINT) AS BIGINT) % 256 AS b
+                       ${Stages.duckMd5BitsSql("tok", "1", 8)} % 256 AS b
                 FROM tok),
          counts AS (SELECT b, CAST(count(*) AS BIGINT) AS n_all,
                            CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS n_tgt
@@ -8241,6 +8230,14 @@ object SparkEntry {
     */
   private val bucketCap: Int = graft.text.Dedup.MaxCandidateBucket
 
+  /** Oracle twins of the engine's shared hash inputs (the user A/B arm,
+    * the lineitem row key, the Poisson bootstraps' resample hash). */
+  private val duckUserArmSql = s"${Stages.duckMd5BitsSql("CAST(user_id AS VARCHAR)", "1", 8)} % 2"
+  private val duckLineitemRowKeySql =
+    "concat(CAST(l_orderkey AS VARCHAR), '_', CAST(l_linenumber AS VARCHAR))"
+  private val duckResampleHashSql =
+    Stages.duckMd5BitsSql("concat(CAST(event_id AS VARCHAR), '_', CAST(r AS VARCHAR))", "1", 8)
+
   /** DuckDB MinHash-LSH near-dup pair pipeline (the q_dedup_minhash
     * chain, shared with q_dedup_agreement): emits (doc_a, doc_b,
     * est_jaccard) for banded candidates at est ≥ 0.5.
@@ -8254,9 +8251,9 @@ object SparkEntry {
     * realized at oracle scale).
     */
   private val duckMinhashSigCtes: String =
-    """h AS (SELECT doc_id,
-                 list_transform(grams, s -> CAST(CAST(concat('0x', substring(md5(s),1,8)) AS UBIGINT) AS BIGINT) % 2147483647) AS h1,
-                 list_transform(grams, s -> CAST(CAST(concat('0x', substring(md5(s),9,8)) AS UBIGINT) AS BIGINT) % 2147483647) AS h2
+    s"""h AS (SELECT doc_id,
+                 list_transform(grams, s -> ${Stages.duckMd5BitsSql("s", "1", 8)} % 2147483647) AS h1,
+                 list_transform(grams, s -> ${Stages.duckMd5BitsSql("s", "9", 8)} % 2147483647) AS h2
                FROM g),
          sig AS (SELECT doc_id,
                  list_transform(generate_series(0,31), j ->

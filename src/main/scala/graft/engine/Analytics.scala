@@ -2371,7 +2371,7 @@ object Analytics {
     val regs = events
       .select(
         col("event_type"),
-        expr(s"CAST(conv(substring(md5($key), 1, 8), 16, 10) AS BIGINT)").as("h"))
+        expr(Stages.md5BitsSql(key, "1", 8)).as("h"))
       .select(col("event_type"), expr("h >> 24").as("bucket"), expr("h & 16777215").as("rem"))
       .select(col("event_type"), col("bucket"), expr(rhoLadder).as("rho"))
       .groupBy(col("event_type"), col("bucket"))
@@ -2933,6 +2933,9 @@ object Analytics {
       .select(col("dur_day"), col("n_risk"), col("d_churn"), col("c_censored"), col("hazard"))
   }
 
+  /** The lineitem row key the conformal and cross-validation splits hash. */
+  private val lineitemRowKeySql = "concat(cast(l_orderkey as string), '_', cast(l_linenumber as string))"
+
   /** Split-conformal regression interval, self-calibrated end to end:
     * a 60/20/20 md5-hash split of lineitem (train / calibration / test),
     * an OLS price-vs-quantity fit from exact integer sufficient
@@ -2947,9 +2950,7 @@ object Analytics {
     * split, fit, quantile, and coverage are bit-identical on any engine.
     */
   def conformalInterval(lineitem: DataFrame): DataFrame = {
-    val bucket =
-      "cast(conv(substring(md5(concat(cast(l_orderkey as string), '_', " +
-        "cast(l_linenumber as string))), 1, 8), 16, 10) as bigint) % 10"
+    val bucket = s"${Stages.md5BitsSql(lineitemRowKeySql, "1", 8)} % 10"
     // PINNED: the split projection (an md5 per row) feeds FOUR branches
     // (train stats; cal count, cal residual histogram, test coverage) with
     // different filters, so exchange reuse cannot deduplicate it — and the
@@ -3174,6 +3175,18 @@ object Analytics {
     cdf.map(c => math.floor(c * 4294967296.0).toLong)
   }
 
+  /** The Poisson(1) multiplicity of a row whose 32-bit hash is the SQL text
+    * `h` (engine and oracle pass their own dialect's): the first k with `h`
+    * under [[PoissonThresholds]](k), else 5. */
+  def poissonMultiplierSql(h: String): String =
+    PoissonThresholds.zipWithIndex
+      .map { case (t, k) => s"WHEN $h < $t THEN $k" }
+      .mkString("CASE ", " ", s" ELSE ${PoissonThresholds.length} END")
+
+  /** Both Poisson bootstraps' hash of a row's (event_id, resample r). */
+  private val resampleHashSql =
+    Stages.md5BitsSql("concat(cast(event_id as string), '_', cast(r as string))", "1", 8)
+
   /** Distributed (Poisson) bootstrap of the mean event value: resample
     * `b` draws each row with multiplicity m ~ Poisson(1), decided by a
     * deterministic md5 hash of (event_id, resample) against the
@@ -3185,11 +3198,7 @@ object Analytics {
     * bootstrap standard error of the mean.
     */
   def poissonBootstrap(events: DataFrame, numResamples: Int = 20): DataFrame = {
-    val h =
-      "CAST(conv(substring(md5(concat(cast(event_id as string), '_', cast(r as string))), 1, 8), 16, 10) AS BIGINT)"
-    val mult = PoissonThresholds.zipWithIndex
-      .map { case (t, k) => s"WHEN $h < $t THEN $k" }
-      .mkString("CASE ", " ", s" ELSE ${PoissonThresholds.length} END")
+    val mult = poissonMultiplierSql(resampleHashSql)
     events
       .select(col("event_id"), expr(Stages.centsSql("value")).as("cents"))
       .withColumn("r", explode(expr(s"sequence(0, ${numResamples - 1})")))
@@ -3524,9 +3533,7 @@ object Analytics {
     * test sizes, coefficients, test MSE.
     */
   def crossValidatedLinreg(lineitem: DataFrame): DataFrame = {
-    val bucket =
-      "cast(conv(substring(md5(concat(cast(l_orderkey as string), '_', " +
-        "cast(l_linenumber as string))), 1, 8), 16, 10) as bigint) % 5"
+    val bucket = s"${Stages.md5BitsSql(lineitemRowKeySql, "1", 8)} % 5"
     // cache: the fold projection (an md5 per row) feeds both the moment
     // aggregation and the residual probe — uncached the corpus is hashed
     // twice
@@ -3596,6 +3603,9 @@ object Analytics {
         expr("CAST(s2 AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))").as("collision_prob"),
         expr("(CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / CAST(s2 AS DOUBLE)").as("eff_branching"))
 
+  /** A user's A/B arm, 0 or 1: the parity of the user's md5 hash. */
+  val userArmSql: String = s"${Stages.md5BitsSql("cast(user_id as string)", "1", 8)} % 2"
+
   /** Power analysis from the observed A/B rates: the per-arm sample
     * size that would detect the purchase-rate difference between the
     * two md5-hash arms at α = 0.05 / power = 0.80 —
@@ -3607,14 +3617,12 @@ object Analytics {
     * z-score.
     */
   def abPowerAnalysis(events: DataFrame): DataFrame = {
-    val arm =
-      "cast(conv(substring(md5(cast(user_id as string)), 1, 8), 16, 10) as bigint) % 2"
     val p1 = "(CAST(c1 AS DOUBLE) / nullif(CAST(n1 AS DOUBLE), 0.0E0))"
     val p2 = "(CAST(c2 AS DOUBLE) / nullif(CAST(n2 AS DOUBLE), 0.0E0))"
     events
       .groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("converted"))
-      .select(col("converted"), expr(arm).as("arm"))
+      .select(col("converted"), expr(userArmSql).as("arm"))
       .agg(
         sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n1"),
         sum(when(col("arm") === 0, col("converted")).otherwise(lit(0L))).as("c1"),
@@ -4231,9 +4239,7 @@ object Analytics {
     * the shift a subtraction.
     */
   def quantileTreatmentEffects(events: DataFrame): DataFrame = {
-    val arm =
-      "cast(conv(substring(md5(cast(user_id as string)), 1, 8), 16, 10) as bigint) % 2"
-    val vals = events.select(expr(arm).as("arm"), expr(Stages.centsSql("value")).as("v"))
+    val vals = events.select(expr(userArmSql).as("arm"), expr(Stages.centsSql("value")).as("v"))
     val counts = vals.groupBy(col("arm"), col("v")).agg(count(lit(1)).as("cnt"))
     val deciles = events.sparkSession.range(1, 10).select(col("id").as("decile"))
     val qs = Relational
@@ -5576,11 +5582,7 @@ object Analytics {
     * give for skewed values.
     */
   def poissonBootstrapMedian(events: DataFrame, numResamples: Int = 8): DataFrame = {
-    val h =
-      "CAST(conv(substring(md5(concat(cast(event_id as string), '_', cast(r as string))), 1, 8), 16, 10) AS BIGINT)"
-    val mult = PoissonThresholds.zipWithIndex
-      .map { case (t, k) => s"WHEN $h < $t THEN $k" }
-      .mkString("CASE ", " ", s" ELSE ${PoissonThresholds.length} END")
+    val mult = poissonMultiplierSql(resampleHashSql)
     val grid = events
       .select(col("event_id"), expr(Stages.centsSql("value")).as("x"))
       .withColumn("r", explode(expr(s"sequence(0, ${numResamples - 1})")))

@@ -481,7 +481,7 @@ object Inference {
     */
   def diffInDiff(events: DataFrame): DataFrame = {
     val cents = Stages.centsSql("value")
-    val arm = "cast(conv(substring(md5(cast(user_id as string)), 1, 8), 16, 10) as bigint) % 2"
+    val arm = Analytics.userArmSql
     val span = events.agg(
       min(expr("CAST(ts AS LONG)")).as("t0"), max(expr("CAST(ts AS LONG)")).as("t1"))
     def cell(a: Int, late: Boolean, sfx: String) = {
@@ -708,11 +708,10 @@ object Inference {
     * the library. One per-user aggregate, one 1-row pass.
     */
   def bayesAB(events: DataFrame): DataFrame = {
-    val arm = "cast(conv(substring(md5(cast(user_id as string)), 1, 8), 16, 10) as bigint) % 2"
     events
       .groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("converted"))
-      .select(col("converted"), expr(arm).as("arm"))
+      .select(col("converted"), expr(Analytics.userArmSql).as("arm"))
       .agg(
         sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n1"),
         sum(when(col("arm") === 0, col("converted")).otherwise(lit(0L))).as("c1"),

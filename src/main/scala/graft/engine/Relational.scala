@@ -555,8 +555,7 @@ object Relational {
     */
   def hashModSample(events: DataFrame, mod: Int): DataFrame =
     events
-      .filter(expr(
-        s"cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10) as bigint) % $mod = 0"))
+      .filter(expr(s"${Stages.md5BitsSql("cast(event_id as string)", "1", 8)} % $mod = 0"))
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
 
   /** Deterministic 80/10/10 train/validation/test assignment with a
@@ -568,8 +567,7 @@ object Relational {
     * 3·|classes|-sized.
     */
   def dataSplitReport(events: DataFrame): DataFrame = {
-    val bucket =
-      "cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10) as bigint) % 10"
+    val bucket = s"${Stages.md5BitsSql("cast(event_id as string)", "1", 8)} % 10"
     events
       .withColumn(
         "split",
@@ -593,8 +591,7 @@ object Relational {
     * to choose.
     */
   def postStratified(events: DataFrame): DataFrame = {
-    val bucket =
-      "cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10) as bigint) % 10"
+    val bucket = s"${Stages.md5BitsSql("cast(event_id as string)", "1", 8)} % 10"
     val strata = events
       .groupBy(col("event_type"))
       .agg(
@@ -721,8 +718,7 @@ object Relational {
       strata: Map[String, Int],
       defaultNum: Int,
       denom: Int): DataFrame = {
-    val hash =
-      expr(s"cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10) as bigint) % $denom")
+    val hash = expr(s"${Stages.md5BitsSql("cast(event_id as string)", "1", 8)} % $denom")
     // Column-built CASE chain (no string interpolation of stratum names —
     // a quote in a key must stay a value, never become SQL)
     val threshold = strata.toSeq.sortBy(_._1)
@@ -904,7 +900,7 @@ object Relational {
     * candidates per group to the shuffle.
     */
   def bottomKSample(events: DataFrame, k: Int): DataFrame = {
-    val h = expr("cast(conv(substring(md5(cast(user_id as string)), 1, 8), 16, 10) as bigint)")
+    val h = expr(Stages.md5BitsSql("cast(user_id as string)", "1", 8))
     val hashed = events
       .select(col("event_type"), col("user_id"))
       .distinct()
@@ -1044,8 +1040,8 @@ object Relational {
         col("source"),
         col("doc_id"),
         col("n_chars"),
-        expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT)" +
-          " / CAST(n_chars AS DOUBLE)").as("priority"))
+        expr(s"${Stages.md5BitsSql("CAST(doc_id AS STRING)", "1", 8)} / CAST(n_chars AS DOUBLE)")
+          .as("priority"))
     topKPerGroup(prioritized, k, Seq(col("source")), col("priority").asc, col("doc_id").asc)
       .select(col("source"), col("rank"), col("doc_id"), col("n_chars"), col("priority"))
   }
@@ -1491,7 +1487,7 @@ object Relational {
       // spelling was a no-op mod 10 (2654435761 ≡ 1 mod 10), i.e. a
       // systematic last-decimal-digit sample, not a hash sample, so the
       // accuracy this query measures was not the hash-sampling cost
-      expr("cast(conv(substring(md5(cast(event_id as string)), 1, 8), 16, 10) as bigint) % 10").as("h"))
+      expr(s"${Stages.md5BitsSql("cast(event_id as string)", "1", 8)} % 10").as("h"))
     base
       .groupBy(col("event_type"))
       .agg(
@@ -1704,12 +1700,11 @@ object Relational {
     */
   def tableChecksum(lineitem: DataFrame): DataFrame =
     lineitem
-      .select(expr(
-        s"""CAST(conv(substring(md5(concat_ws('|',
+      .select(expr(Stages.md5BitsSql(
+        s"""concat_ws('|',
              CAST(l_orderkey AS STRING), CAST(l_linenumber AS STRING),
              l_returnflag, l_linestatus,
-             CAST(${Stages.centsSql("l_extendedprice")} AS STRING))), 1, 4), 16, 10)
-           AS BIGINT)""").as("word"))
+             CAST(${Stages.centsSql("l_extendedprice")} AS STRING))""", "1", 4)).as("word"))
       .agg(
         count(lit(1)).as("n_rows"),
         sum(col("word")).as("word_sum"),
@@ -1727,8 +1722,7 @@ object Relational {
   def partitionBalance(events: DataFrame, buckets: Int = 32): DataFrame = {
     val counts = events
       .groupBy(
-        expr(s"cast(conv(substring(md5(cast(user_id as string)), 1, 8), 16, 10) as bigint) % $buckets")
-          .as("bucket"))
+        expr(s"${Stages.md5BitsSql("cast(user_id as string)", "1", 8)} % $buckets").as("bucket"))
       .agg(count(lit(1)).as("n"))
     counts
       .crossJoin(broadcast(counts.agg(sum(col("n")).as("total"))))
@@ -1969,9 +1963,7 @@ object Relational {
     */
   def hashUniformity(events: DataFrame): DataFrame = {
     val counts = events
-      .select(expr(
-        "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 256")
-        .as("b"))
+      .select(expr(s"${Stages.md5BitsSql("CAST(user_id AS STRING)", "1", 8)} % 256").as("b"))
       .groupBy(col("b"))
       .agg(count(lit(1)).as("o"))
     val grid = events.sparkSession
@@ -2071,8 +2063,7 @@ object Relational {
     * product down), and their ratio. Integer counts; one division.
     */
   def joinCardinalityEstimate(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    val bucket =
-      "cast(conv(substring(md5(cast(k as string)), 1, 8), 16, 10) as bigint) % 10"
+    val bucket = s"${Stages.md5BitsSql("cast(k as string)", "1", 8)} % 10"
     val oc = orders.groupBy(col("o_orderkey").as("k")).agg(count(lit(1)).as("na"))
     val lc = lineitem.groupBy(col("l_orderkey").as("k")).agg(count(lit(1)).as("nb"))
     val joined = oc.join(lc, Seq("k"))
@@ -2451,8 +2442,7 @@ object Relational {
     * shuffle beyond the count.
     */
   def rendezvousShards(documents: DataFrame): DataFrame = {
-    def h(n: Int): String =
-      s"CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), '_', '$n')), 1, 15), 16, 10) AS BIGINT)"
+    def h(n: Int): String = Stages.md5BitsSql(s"concat(CAST(doc_id AS STRING), '_', '$n')", "1", 15)
     def argmax(n: Int): String =
       (0 until n)
         .map(i => s"named_struct('h', ${h(i)}, 's', CAST($i AS BIGINT))")
@@ -2486,9 +2476,8 @@ object Relational {
     */
   def vnodeBalance(documents: DataFrame): DataFrame = {
     val ring = "1152921504606846976" // 2^60
-    def docH = s"CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15), 16, 10) AS BIGINT)"
-    def pointH(s: Int, v: Int): String =
-      s"CAST(conv(substring(md5('p_${s}_$v'), 1, 15), 16, 10) AS BIGINT)"
+    def docH = Stages.md5BitsSql("CAST(doc_id AS STRING)", "1", 15)
+    def pointH(s: Int, v: Int): String = Stages.md5BitsSql(s"'p_${s}_$v'", "1", 15)
     def owner(vnodes: Int): String =
       (for { sh <- 0 until 8; v <- 0 until vnodes } yield
         s"named_struct('d', pmod(${pointH(sh, v)} - $docH, $ring), 's', CAST($sh AS BIGINT))")

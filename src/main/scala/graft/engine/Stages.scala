@@ -151,6 +151,21 @@ object Stages {
         s"((($xCol >> $i) & 1) << ${2 * i}) + ((($yCol >> $i) & 1) << ${2 * i + 1})")
       .mkString("(", " + ", ")")
 
+  /** The `digits` hex digits of md5(`key`) from the 1-based position `from`,
+    * as a non-negative BIGINT: the one Spark spelling of the row hash. `key`
+    * is SQL text cast to a string; `from` is text, so a slice can start at a
+    * column (`j * 8 + 1`). A NULL key gives NULL. */
+  def md5BitsSql(key: String, from: String, digits: Int): String = {
+    require(1 <= digits && digits <= 15, s"md5 slice of $digits hex digits is not a BIGINT")
+    s"CAST(conv(substring(md5($key), $from, $digits), 16, 10) AS BIGINT)"
+  }
+
+  /** [[md5BitsSql]] in DuckDB's dialect, for the oracles. */
+  def duckMd5BitsSql(key: String, from: String, digits: Int): String = {
+    require(1 <= digits && digits <= 15, s"md5 slice of $digits hex digits is not a BIGINT")
+    s"CAST(CAST(concat('0x', substring(md5($key), $from, $digits)) AS UBIGINT) AS BIGINT)"
+  }
+
   // ---- order-statistic rank rules ------------------------------------------
   //
   // The 1-based rank of the picked value among a group's n sorted values,

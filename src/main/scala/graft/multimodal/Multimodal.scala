@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.engine.Stages
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -349,8 +350,7 @@ object Multimodal {
     * [[graft.text.Dedup.incrementalBestMatch]]'s split rule.
     */
   def sliceScreen(documents: DataFrame, minShared: Int = 2): DataFrame = {
-    val isBatch =
-      "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 5 = 0"
+    val isBatch = s"${Stages.md5BitsSql("CAST(doc_id AS STRING)", "1", 8)} % 5 = 0"
     val media = mediaTable(documents)
     screenSlicesAgainst(media.filter(expr(isBatch)), media.filter(!expr(isBatch)), minShared)
   }

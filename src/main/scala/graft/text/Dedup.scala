@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.engine.Caches.CacheOps
-import graft.engine.{Graph, Relational}
+import graft.engine.{Graph, Relational, Stages}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -350,8 +350,7 @@ object Dedup {
       numBands: Int = 8,
       rowsPerBand: Int = 4,
       minEstJaccard: Double = 0.5): DataFrame = {
-    val bucket =
-      "cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) % 10"
+    val bucket = s"${Stages.md5BitsSql("cast(doc_id as string)", "1", 8)} % 10"
     val s = documents.select(
       col("doc_id"),
       expr(s"CASE WHEN $bucket < 8 THEN 'train' WHEN $bucket = 8 THEN 'valid' ELSE 'test' END")
@@ -384,8 +383,7 @@ object Dedup {
       numBands: Int = 8,
       rowsPerBand: Int = 4,
       minEstJaccard: Double = 0.5): DataFrame = {
-    val bucket =
-      "cast(conv(substring(md5(cast(doc_id as string)), 1, 8), 16, 10) as bigint) % 10"
+    val bucket = s"${Stages.md5BitsSql("cast(doc_id as string)", "1", 8)} % 10"
     val sigs = minhashSignatures(documents, numBands * rowsPerBand)
       .withColumn("is_new", expr(s"$bucket = 0"))
     screenSigs(
@@ -1153,7 +1151,7 @@ object Dedup {
       minhashSignatures(documents, numBands * rowsPerBand), numBands, rowsPerBand)
       .withColumn(
         "is_batch",
-        expr("CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) AS BIGINT) % 5 = 0"))
+        expr(s"${Stages.md5BitsSql("CAST(doc_id AS STRING)", "1", 8)} % 5 = 0"))
     val hist = withBands.filter(!col("is_batch")).select(col("band"), col("band_sig"))
     val batchBands = withBands.filter(col("is_batch"))
     val dup = batchBands

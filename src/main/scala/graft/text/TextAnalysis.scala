@@ -928,8 +928,7 @@ object TextAnalysis {
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .select(
         col("doc_id"),
-        expr(s"cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint) % $buckets")
-          .as("bucket"))
+        expr(s"${Stages.md5BitsSql("tok", "1", 8)} % $buckets").as("bucket"))
       .groupBy(col("doc_id"), col("bucket"))
       .agg(count(lit(1)).as("n"))
 
@@ -978,7 +977,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"), explode(tokens(lower(col("text")))).as("tok"))
       .select(
         col("doc_id"), col("lang"),
-        expr(s"cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint) % $buckets").as("b"))
+        expr(s"${Stages.md5BitsSql("tok", "1", 8)} % $buckets").as("b"))
     val counts = bucketed
       .groupBy(col("b"))
       .agg(
@@ -1428,7 +1427,7 @@ object TextAnalysis {
       srcA: String = "src0",
       srcB: String = "src1",
       k: Int = 64): DataFrame = {
-    val hSql = "CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT)"
+    val hSql = Stages.md5BitsSql("tok", "1", 8)
     val hs = documents
       .filter(col("source").isin(srcA, srcB))
       .select(col("source"), explode(tokens(col("text"))).as("tok"))
@@ -1625,7 +1624,7 @@ object TextAnalysis {
       .select(col("tok"), col("true_cnt"), explode(expr("sequence(0, 3)")).as("j"))
       .withColumn(
         "bucket",
-        expr(s"CAST(conv(substring(md5(tok), j * 8 + 1, 8), 16, 10) AS BIGINT) % $width"))
+        expr(s"${Stages.md5BitsSql("tok", "j * 8 + 1", 8)} % $width"))
     val counters = keyed
       .groupBy(col("j"), col("bucket"))
       .agg(sum(col("true_cnt")).as("counter"))
@@ -1682,8 +1681,8 @@ object TextAnalysis {
       .agg(count(lit(1)).as("cnt"))
     val signed = counts.select(
       col("cnt"),
-      expr(s"CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT) % $buckets").as("bucket"),
-      expr("CAST(conv(substring(md5(tok), 17, 1), 16, 10) AS BIGINT) % 2 * 2 - 1").as("sgn"))
+      expr(s"${Stages.md5BitsSql("tok", "1", 8)} % $buckets").as("bucket"),
+      expr(s"${Stages.md5BitsSql("tok", "17", 1)} % 2 * 2 - 1").as("sgn"))
     val sketch = signed
       .groupBy(col("bucket"))
       .agg(sum(col("sgn") * col("cnt")).as("s"))
