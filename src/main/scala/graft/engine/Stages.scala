@@ -160,10 +160,10 @@ object Stages {
     s"CAST(conv(substring(md5($key), $from, $digits), 16, 10) AS BIGINT)"
   }
 
-  /** [[md5BitsSql]] in DuckDB's dialect, for the oracles. */
+  /** [[md5BitsSql]] for the DuckDB oracles; `||`, unlike `concat`, keeps a NULL key NULL. */
   def duckMd5BitsSql(key: String, from: String, digits: Int): String = {
     require(1 <= digits && digits <= 15, s"md5 slice of $digits hex digits is not a BIGINT")
-    s"CAST(CAST(concat('0x', substring(md5($key), $from, $digits)) AS UBIGINT) AS BIGINT)"
+    s"CAST(CAST('0x' || substring(md5($key), $from, $digits) AS UBIGINT) AS BIGINT)"
   }
 
   // ---- order-statistic rank rules ------------------------------------------

@@ -68,7 +68,8 @@ VARIANTS = ("empty", "single", "dups", "nullcol", "extreme")
 # ANSI DIVIDE_BY_ZERO on 58 statistics, typed-aggregate NPEs on null
 # vectors, element_at(0)/slice(-1) on empty series, NULL_MAP_KEY, a
 # Long.MinValue sentinel leaking as a price — were all fixed lock-step
-# with nullif/CASE guards shared between engine and oracle). The 78
+# with nullif/CASE guards shared between engine and oracle; the 18
+# DUCK0X cells went when the oracle hash became NULL-safe). The 60
 # cells below are ACCEPTED divergences: every one arises from a variant
 # that VIOLATES a documented fixture contract (unique keys, non-null
 # key/ts/payload/embedding columns) or from the empty-corpus
@@ -92,17 +93,11 @@ _R10_CLASSES = {
     "DUPKEY": [
         "dups/q_cov_matrix", "dups/q_dedup_clusters", "dups/q_frame_features",
         "dups/q_payload_entropy", "dups/q_pca2", "dups/q_simhash_chunk_stats"],
-    # DuckDB concat() SKIPS NULLs (Spark's yields NULL): with null key
-    # columns the oracle's md5('0x…') bucket texts either throw a
-    # UINT64 conversion error or collapse to one constant bucket. The
-    # engine's NULL-propagating hash is the sane production behavior.
-    "DUCK0X": [
-        "nullcol/q_ab_power", "nullcol/q_bayes_ab", "nullcol/q_bottomk_sample",
-        "nullcol/q_data_split", "nullcol/q_dedup_incremental", "nullcol/q_did",
-        "nullcol/q_hash_sample", "nullcol/q_hash_uniformity", "nullcol/q_incr_dedup",
-        "nullcol/q_partition_balance", "nullcol/q_post_strat", "nullcol/q_qte",
-        "nullcol/q_sample_error", "nullcol/q_slice_screen", "nullcol/q_split_leakage",
-        "nullcol/q_stratified_sample", "nullcol/q_vnodes", "nullcol/q_weighted_sample"],
+    # (No DUCK0X class: the oracles' md5 hash, Stages.duckMd5BitsSql,
+    # joins its '0x' with `||`, so a NULL key hashes to NULL as in Spark
+    # instead of casting a bare '0x'. Its 18 nullcol cells agree. A key
+    # that DuckDB's own concat() builds past a NULL part still differs;
+    # those cells are NULLKEY below.)
     # DuckDB's list_inner_product refuses NULL vectors loudly; the
     # engine skips them (the SQL aggregate convention, also what the
     # r10-fixed GramAggregator does). Null embeddings violate the
