@@ -33,11 +33,11 @@ object TextAnalysis {
     * array operations (r10 isolated A/B on q_bigram_pmi at sf0.1/32,
     * same session, flat q_tfidf control: 1.27 → 0.98 s, −23%).
     * Identical pairs in identical order, so every consumer's counts are
-    * bit-identical; struct fields are positional (`bg.0` = w1,
-    * `bg.1` = w2). Callers pre-filter `size(t) >= 2`, as before.
+    * bit-identical; the struct fields are `w1` and `w2`. Callers
+    * pre-filter `size(t) >= 2`, as before.
     */
   def adjacentPairs(t: Column): Column =
-    arrays_zip(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1))
+    arrays_zip(slice(t, lit(1), size(t) - 1).as("w1"), slice(t, lit(2), size(t) - 1).as("w2"))
 
   /** Language-specific stopword lists for the language-ID heuristic.
     * Deliberately small and overlapping-aware: ties resolve to 'und'.
@@ -215,7 +215,7 @@ object TextAnalysis {
     val bigrams = toksDf
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"), explode(adjacentPairs(col("t"))).as("bg"))
-      .select(col("doc_id"), col("bg.0").as("w1"), col("bg.1").as("w2"))
+      .select(col("doc_id"), col("bg.w1"), col("bg.w2"))
       .distinct()
     val first = bigrams.groupBy(col("w1"), col("w2")).agg(min(col("doc_id")).as("first_doc"))
     bigrams
@@ -420,7 +420,7 @@ object TextAnalysis {
     val bigrams = toksDf
       .filter(size(col("t")) >= 2)
       .select(explode(adjacentPairs(col("t"))).as("bg"))
-      .select(col("bg.0").as("w1"), col("bg.1").as("w2"))
+      .select(col("bg.w1"), col("bg.w2"))
     val unigrams = toksDf.select(explode(col("t")).as("w"))
     // One tokenizing pass per n-gram order; the corpus totals come from
     // the vocabulary-sized count tables (cached — they feed both the
@@ -946,7 +946,7 @@ object TextAnalysis {
     val bigrams = toksDf
       .filter(size(col("t")) >= 2)
       .select(explode(adjacentPairs(col("t"))).as("bg"))
-      .select(col("bg.0").as("w1"), col("bg.1").as("w2"))
+      .select(col("bg.w1"), col("bg.w2"))
     val biCounts = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_ab"))
     val prefix = biCounts.groupBy(col("w1")).agg(sum(col("n_ab")).as("n_a"))
     graft.engine.Relational.rankedTopK(
@@ -1028,7 +1028,7 @@ object TextAnalysis {
       .filter(size(col("t")) >= 2)
     val bigrams = toksDf
       .select(col("doc_id"), explode(adjacentPairs(col("t"))).as("bg"))
-      .select(col("doc_id"), col("bg.0").as("w1"), col("bg.1").as("w2"))
+      .select(col("doc_id"), col("bg.w1"), col("bg.w2"))
     val biCounts = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_ab"))
     val prefix = biCounts.groupBy(col("w1")).agg(sum(col("n_ab")).as("n_a"))
     val vocab = documents
@@ -1724,7 +1724,7 @@ object TextAnalysis {
       .select(tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .select(explode(adjacentPairs(col("t"))).as("bg"))
-      .select(concat_ws(" ", col("bg.0"), col("bg.1")).as("token"))
+      .select(concat_ws(" ", col("bg.w1"), col("bg.w2")).as("token"))
     // ONE stream pass: the vocabulary-bounded exact count table feeds the
     // candidate grid, the guarantee checks and the stream length
     val exact = toks.groupBy("token").agg(count(lit(1)).as("f")).cacheT()
