@@ -3,6 +3,7 @@ package graft.streaming
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.graft.ListenerFence
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -28,7 +29,10 @@ import graft.engine.{RefPipelines, Stages}
   *    start. Map-side partial aggregation runs before the exchange, so
   *    the one reducer sees at most (map tasks × open windows × 25
   *    boroughs) rows per batch, whatever the input rate; more partitions
-  *    would only add state-store commits to every trigger.
+  *    would only add state-store commits to every trigger;
+  *  - checkpoints (offset and commit logs, source logs, state files) are
+  *    written through Spark's `FileSystemBasedCheckpointFileManager`
+  *    ([[checkpointFileManager]]).
   *
   * Detector analogs on the events stream: the duration detector becomes a
   * value-range violation (F1), the fee detector a discrepancy between
@@ -60,6 +64,22 @@ final class StreamRunner(
     * there, so a checkpoint written at another count keeps that count.
     */
   private val windowedStatePartitions = 1
+
+  /** The checkpoint file manager of every query `startAll` starts.
+    * Spark's default, `FileContextBasedCheckpointFileManager`, renames each
+    * checkpoint file through `AbstractFileSystem.renameInternal`, which
+    * resolves symlinks on both paths of the file and of its `.crc`: without
+    * the native Hadoop library, each resolution forks a `readlink`, about
+    * eight processes per rename. The FileSystem-based manager renames with
+    * `FileSystem.rename`, `File.renameTo` on a local disk, which forks
+    * nothing. It is no weaker than the default:
+    *  - on a local disk, FileContext's no-overwrite rename is itself
+    *    check-then-rename (`renameInternal`'s "non-atomic" default), as this
+    *    manager's is, and the rename(2) under both is atomic;
+    *  - on HDFS, `FileSystem.rename` refuses an existing destination, so a
+    *    second writer of the same log entry fails as it does by default.
+    */
+  private val checkpointFileManager = classOf[FileSystemBasedCheckpointFileManager].getName
 
   /** foreachBatch writer shared by all queries (K2). The reference
     * computes each detector batch twice (count + write, no cache —
@@ -156,12 +176,20 @@ final class StreamRunner(
     finally previous.fold(conf.unset(key))(conf.set(key, _))
   }
 
-  /** Start all six queries (the reference's fan-out, `:348-353`). */
-  def startAll(events: DataFrame): Seq[StreamingQuery] = Seq(
-    sinkTo("events_full")(RefPipelines.fullTable(events)),
-    sinkTo("abnormal_value", alertOnRows = true)(abnormalValue(events)),
-    sinkTo("abnormal_discrepancy", alertOnRows = true)(abnormalDiscrepancy(events))) ++
-    startWindowed(events)
+  /** Start all six queries (the reference's fan-out, `:348-353`), each
+    * checkpointing through [[checkpointFileManager]]. The setting is left
+    * on `events`' session: each file source builds its own log on its
+    * query thread after `start()` returns, from that session, so restoring
+    * the previous value would race with it.
+    */
+  def startAll(events: DataFrame): Seq[StreamingQuery] = {
+    events.sparkSession.conf.set("spark.sql.streaming.checkpointFileManagerClass", checkpointFileManager)
+    Seq(
+      sinkTo("events_full")(RefPipelines.fullTable(events)),
+      sinkTo("abnormal_value", alertOnRows = true)(abnormalValue(events)),
+      sinkTo("abnormal_discrepancy", alertOnRows = true)(abnormalDiscrepancy(events))) ++
+      startWindowed(events)
+  }
 
   /** Block until termination (reference `:355-360`). */
   def awaitAll(queries: Seq[StreamingQuery]): Unit = queries.foreach(_.awaitTermination())

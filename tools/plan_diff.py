@@ -14,7 +14,9 @@ lines of the formatted plan) differs, or `expressions only` when only
 the expressions inside the same operators do. sbt's own
 `[info]`/`[success]` lines are dropped, and so is what changes from run
 to run: expression ids, plan_id, object hashes (typed aggregators),
-lambda class names and round-trip temp paths. q_dedup_corpus,
+lambda class names, round-trip temp paths and the `sizeInBytes` of
+`BroadcastQueryStage` statistics (a broadcast's size follows the driver
+heap, so two heaps read as a plan difference). q_dedup_corpus,
 q_dedup_prf and q_ngram_jaccard number their codegen stages differently
 between two runs of the same tree, so their codegen stage numbers are
 dropped too. Exits 0 when no plan differs, 1 when some do (or a query is
@@ -29,6 +31,7 @@ IDS = [(r'#[0-9]+L?', ''), (r'plan_id=[0-9]+', ''), (r'@[0-9a-f]{5,}', ''),
 CODEGEN_NOISE = {'q_dedup_corpus', 'q_dedup_prf', 'q_ngram_jaccard'}
 CODEGEN = [(r'\[codegen id : [0-9]+\]', ''), (r'^Arguments: [0-9]+$', 'Arguments:'),
            (r'WholeStageCodegen \([0-9]+\)', 'WholeStageCodegen')]
+BROADCAST_SIZE = re.compile(r'(BroadcastQueryStage .*Statistics\(sizeInBytes=)[^,)]*')
 HEADER = re.compile(r'^========== (\S+) ==========$')
 OPERATOR = re.compile(r'^\([0-9]+\) (.*?)(?: \[codegen id : [0-9]+\])?\s*$')
 
@@ -50,6 +53,7 @@ def plans(path):
             subs = IDS + (CODEGEN if name in CODEGEN_NOISE else [])
             for pat, rep in subs:
                 line = re.sub(pat, rep, line)
+            line = BROADCAST_SIZE.sub(r'\1', line)
             out[name].append(line)
     return out
 
