@@ -178,21 +178,21 @@ object SparkEntry {
          ORDER BY event_a, event_b"""),
     QueryDef("q_percentiles", (s, dir) =>
       Relational.percentiles(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
-      """SELECT l_returnflag,
-                quantile_cont(CAST(round((l_extendedprice) * 100) AS BIGINT), 0.5) / CAST(100 AS DOUBLE) AS p50_price,
-                quantile_cont(CAST(round((l_extendedprice) * 100) AS BIGINT), 0.95) / CAST(100 AS DOUBLE) AS p95_price
+      s"""SELECT l_returnflag,
+                quantile_cont(${Stages.centsSql("l_extendedprice")}, 0.5) / CAST(100 AS DOUBLE) AS p50_price,
+                quantile_cont(${Stages.centsSql("l_extendedprice")}, 0.95) / CAST(100 AS DOUBLE) AS p95_price
          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     QueryDef("q_running_window", (s, dir) =>
       Analytics.runningWindow(Tables.events(s, dir)).orderBy("user_id", "event_id"),
-      """SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS event_time,
-                sum(CAST(round((value) * 100) AS BIGINT))
+      s"""SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS event_time,
+                sum(${Stages.centsSql("value")})
                   OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) / 100.0 AS running_total,
-                sum(CAST(round((value) * 100) AS BIGINT))
+                sum(${Stages.centsSql("value")})
                   OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) / 100.0 AS moving_sum3
          FROM events ORDER BY user_id, event_id"""),
     QueryDef("q_sessionize_batch", (s, dir) =>
       Analytics.sessionizeBatch(Tables.events(s, dir), 30).orderBy("user_id", "session_id"),
-      """WITH flagged AS (
+      s"""WITH flagged AS (
            SELECT user_id, event_id, ts, value,
                   CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
                          OR (epoch_us(ts) // 1000000
@@ -207,11 +207,11 @@ object SparkEntry {
                 strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
                 strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end,
                 count(*) AS n_events,
-                sum(CAST(round((value) * 100) AS BIGINT)) / CAST(100 AS DOUBLE) AS total_value
+                sum(${Stages.centsSql("value")}) / CAST(100 AS DOUBLE) AS total_value
          FROM sessions GROUP BY user_id, session_id ORDER BY user_id, session_id"""),
     QueryDef("q_window_funcs", (s, dir) =>
       Analytics.windowFuncs(Tables.events(s, dir)).orderBy("user_id", "event_id"),
-      """SELECT user_id, event_id, value,
+      s"""SELECT user_id, event_id, value,
                 lag(value, 1) OVER t AS prev_value,
                 lead(value, 1) OVER t AS next_value,
                 first_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -225,12 +225,12 @@ object SparkEntry {
                   ROWS UNBOUNDED PRECEDING) AS third_value
          FROM events
          WINDOW t AS (PARTITION BY user_id ORDER BY ts, event_id),
-                v AS (PARTITION BY user_id ORDER BY CAST(round((value) * 100) AS BIGINT) DESC, event_id)
+                v AS (PARTITION BY user_id ORDER BY ${Stages.centsSql("value")} DESC, event_id)
          ORDER BY user_id, event_id"""),
     QueryDef("q_session_native", (s, dir) =>
       Analytics.sessionWindowStats(Tables.events(s, dir), 30)
         .orderBy("user_id", "session_start"),
-      """WITH flagged AS (
+      s"""WITH flagged AS (
            SELECT user_id, ts, value,
                   CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
                          OR (epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))) >= 1800 * 1000000
@@ -245,13 +245,13 @@ object SparkEntry {
                 CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start,
                 CAST(floor(epoch(max(ts))) AS BIGINT) + 1800 AS session_end,
                 count(*) AS n_events,
-                sum(CAST(round((value) * 100) AS BIGINT)) / CAST(100 AS DOUBLE) AS total_value
+                sum(${Stages.centsSql("value")}) / CAST(100 AS DOUBLE) AS total_value
          FROM sessions GROUP BY user_id, sid ORDER BY user_id, session_start"""),
     QueryDef("q_rollup", (s, dir) =>
       Analytics.rollupStats(Tables.lineitem(s, dir))
         .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first),
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-                sum(CAST(round((l_quantity) * 100) AS BIGINT)) / CAST(100 AS DOUBLE) AS sum_qty
+      s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
+                sum(${Stages.centsSql("l_quantity")}) / CAST(100 AS DOUBLE) AS sum_qty
          FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
          ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
     QueryDef("q_pivot", (s, dir) =>
@@ -270,8 +270,8 @@ object SparkEntry {
     QueryDef("q_cube", (s, dir) =>
       Analytics.cubeStats(Tables.lineitem(s, dir))
         .orderBy(col("l_returnflag").asc_nulls_first, col("l_linestatus").asc_nulls_first),
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-                sum(CAST(round((l_extendedprice) * 100) AS BIGINT)) / CAST(100 AS DOUBLE) AS sum_price
+      s"""SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
+                sum(${Stages.centsSql("l_extendedprice")}) / CAST(100 AS DOUBLE) AS sum_price
          FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
          ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
     QueryDef("q_window_sliding", (s, dir) =>
@@ -279,9 +279,9 @@ object SparkEntry {
       // w0 = s - floormod(s, 1800) FLOORS to the window grid exactly —
       // Spark's window() floor-aligns pre-1970 timestamps where the old
       // truncating // shifted them a full window (extreme sweep, r10).
-      """WITH s AS (
+      s"""WITH s AS (
            SELECT CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-                  CAST(round((value) * 100) AS BIGINT) AS cents
+                  ${Stages.centsSql("value")} AS cents
            FROM events),
          w AS (
            SELECT unnest([sec - ((sec % 1800) + 1800) % 1800 - 1800,
@@ -323,8 +323,8 @@ object SparkEntry {
           expr("sum(price_cents) / CAST(100 AS DOUBLE)").as("sum_price"))
         .orderBy("o_orderpriority")
     },
-      """SELECT o_orderpriority, count(*) AS n_rows,
-                sum(CAST(round((l_extendedprice) * 100) AS BIGINT)) / CAST(100 AS DOUBLE) AS sum_price
+      s"""SELECT o_orderpriority, count(*) AS n_rows,
+                sum(${Stages.centsSql("l_extendedprice")}) / CAST(100 AS DOUBLE) AS sum_price
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
     QueryDef("q_datetime_funcs", (s, dir) =>
@@ -360,17 +360,16 @@ object SparkEntry {
          FROM documents ORDER BY doc_id"""),
     QueryDef("q_histogram", (s, dir) =>
       Relational.valueHistogram(Tables.events(s, dir), 2500).orderBy("bucket"),
-      """SELECT CAST(round((value) * 100) AS BIGINT) // 2500 AS bucket, count(*) AS n
+      s"""SELECT ${Stages.centsSql("value")} // 2500 AS bucket, count(*) AS n
          FROM events GROUP BY bucket ORDER BY bucket"""),
     QueryDef("q_star_revenue", (s, dir) =>
       Relational
         .starRevenueTopK(Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir),
           "BUILDING", 10)
         .orderBy("rank"),
-      """WITH rev AS (
+      s"""WITH rev AS (
            SELECT o_orderkey, o_orderpriority,
-                  sum(CAST(round((l_extendedprice) * 100) AS BIGINT)
-                      * (100 - CAST(round(l_discount * 100) AS BIGINT))) / CAST(10000 AS DOUBLE) AS revenue
+                  sum(${Stages.lineitemRevUnitsSql}) / CAST(10000 AS DOUBLE) AS revenue
            FROM lineitem
            JOIN orders ON l_orderkey = o_orderkey
            JOIN customer ON o_custkey = c_custkey
@@ -389,8 +388,8 @@ object SparkEntry {
          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     QueryDef("q_approx_percentile", (s, dir) =>
       Relational.approxPercentileCheck(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
-      """SELECT l_returnflag,
-                quantile_cont(CAST(round((l_extendedprice) * 100) AS BIGINT), 0.5) / CAST(100 AS DOUBLE) AS p50_exact,
+      s"""SELECT l_returnflag,
+                quantile_cont(${Stages.centsSql("l_extendedprice")}, 0.5) / CAST(100 AS DOUBLE) AS p50_exact,
                 TRUE AS sketch_within_rank_tol
          FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     QueryDef("q_hash_sample", (s, dir) =>
@@ -438,7 +437,7 @@ object SparkEntry {
                    sum(x * x) AS sxx, sum(y * y) AS syy
             FROM (SELECT l_returnflag,
                          ${Stages.centsSql("l_extendedprice")} // 100 AS x,
-                         CAST(round(l_quantity) AS BIGINT) AS y
+                         ${Stages.lineitemQtySql} AS y
                   FROM lineitem)
             GROUP BY l_returnflag)
           SELECT l_returnflag, n,
@@ -456,7 +455,7 @@ object SparkEntry {
                    sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
                    sum(x * x) AS sxx, sum(y * y) AS syy
             FROM (SELECT l_returnflag,
-                         CAST(round(l_quantity) AS BIGINT) AS x,
+                         ${Stages.lineitemQtySql} AS x,
                          ${Stages.centsSql("l_extendedprice")} // 100 AS y
                   FROM lineitem)
             GROUP BY l_returnflag)
@@ -469,7 +468,7 @@ object SparkEntry {
         .orderBy("l_orderkey", "l_linenumber"),
       {
       s"""WITH b AS (SELECT l_orderkey, l_linenumber, l_returnflag,
-                            CAST(round(l_quantity) AS BIGINT) AS x,
+                            ${Stages.lineitemQtySql} AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
                      FROM lineitem),
          m AS (SELECT l_returnflag, count(*) AS n,
@@ -486,7 +485,7 @@ object SparkEntry {
       Relational.zorderLayout(Tables.lineitem(s, dir)).orderBy("zrange"),
       {
       val morton = Stages.mortonSql("x", "y", 8)
-      s"""WITH b AS (SELECT CAST(round(l_quantity) AS BIGINT) AS x,
+      s"""WITH b AS (SELECT ${Stages.lineitemQtySql} AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 // 512 AS y
                      FROM lineitem),
          z AS (SELECT x, y, $morton AS zkey FROM b)
@@ -505,7 +504,7 @@ object SparkEntry {
     QueryDef("q_weighted_median", (s, dir) =>
       Relational.weightedMedian(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
       s"""WITH b AS (SELECT l_returnflag, l_orderkey, l_linenumber,
-                            greatest(CAST(round(l_quantity) AS BIGINT), 0) AS wt,
+                            greatest(${Stages.lineitemQtySql}, 0) AS wt,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
                      FROM lineitem),
          c AS (SELECT l_returnflag, y,
@@ -816,13 +815,13 @@ object SparkEntry {
     QueryDef("q_histogram2d", (s, dir) =>
       Relational.histogram2d(Tables.lineitem(s, dir)).orderBy("price_bin", "qty_bin"),
       s"""SELECT ${Stages.centsSql("l_extendedprice")} // 10000 AS price_bin,
-                 CAST(round(l_quantity) AS BIGINT) // 10 AS qty_bin,
+                 ${Stages.lineitemQtySql} // 10 AS qty_bin,
                  count(*) AS n
           FROM lineitem GROUP BY 1, 2 ORDER BY price_bin, qty_bin"""),
     QueryDef("q_skyline", (s, dir) =>
       Relational.skyline(Tables.lineitem(s, dir)).orderBy("price_dollars"),
       s"""WITH perx AS (SELECT ${Stages.centsSql("l_extendedprice")} // 100 AS price_dollars,
-                               max(CAST(round(l_quantity) AS BIGINT)) AS max_qty
+                               max(${Stages.lineitemQtySql}) AS max_qty
                         FROM lineitem GROUP BY 1),
          f AS (SELECT price_dollars, max_qty,
                       max(max_qty) OVER (ORDER BY price_dollars DESC
@@ -882,7 +881,7 @@ object SparkEntry {
         .orderBy("r_name"),
       s"""SELECT r_name,
                  count(DISTINCT o_orderkey) AS n_orders,
-                 sum(${Stages.centsSql("l_extendedprice")} * (100 - ${Stages.centsSql("l_discount")}))
+                 sum(${Stages.lineitemRevUnitsSql})
                    / CAST(10000 AS DOUBLE) AS revenue
           FROM lineitem
           JOIN orders ON l_orderkey = o_orderkey
@@ -918,8 +917,8 @@ object SparkEntry {
          SELECT degree, count(*) AS n_parts FROM d GROUP BY degree ORDER BY degree"""),
     QueryDef("q_twap", (s, dir) =>
       Analytics.timeWeightedAvg(Tables.events(s, dir)).orderBy("user_id"),
-      """WITH b AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec,
-                           CAST(round((value) * 100) AS BIGINT) AS cents, event_id
+      s"""WITH b AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec,
+                           ${Stages.centsSql("value")} AS cents, event_id
                     FROM events),
          d AS (SELECT user_id, cents,
                       lead(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) - sec AS dt
@@ -950,8 +949,8 @@ object SparkEntry {
          FROM b ORDER BY user_id, event_id"""),
     QueryDef("q_ratio_report", (s, dir) =>
       Analytics.ratioToReport(Tables.events(s, dir)).orderBy("user_id", "event_id"),
-      """WITH b AS (SELECT user_id, event_id,
-                           CAST(round((value) * 100) AS BIGINT) AS cents
+      s"""WITH b AS (SELECT user_id, event_id,
+                           ${Stages.centsSql("value")} AS cents
                     FROM events),
          w AS (SELECT user_id, event_id, cents,
                       CAST(sum(cents) OVER (PARTITION BY user_id) AS BIGINT) AS user_total
@@ -982,8 +981,8 @@ object SparkEntry {
          GROUP BY day ORDER BY day"""),
     QueryDef("q_gini", (s, dir) =>
       Analytics.giniSpend(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH pu AS (SELECT event_type, user_id,
-                            CAST(sum(CAST(round((value) * 100) AS BIGINT)) AS BIGINT) AS x
+      s"""WITH pu AS (SELECT event_type, user_id,
+                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x
                      FROM events GROUP BY event_type, user_id),
          r AS (SELECT event_type, x,
                       CAST(row_number() OVER (PARTITION BY event_type ORDER BY x, user_id) AS BIGINT) AS i
@@ -1137,14 +1136,14 @@ object SparkEntry {
       duckPageRankSql(5, 1000000000L)),
     QueryDef("q_median_mode", (s, dir) =>
       Relational.medianMode(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
-      """WITH d AS (SELECT l_returnflag, CAST(round(l_quantity) AS BIGINT) AS q, count(*) AS n
+      s"""WITH d AS (SELECT l_returnflag, ${Stages.lineitemQtySql} AS q, count(*) AS n
                     FROM lineitem GROUP BY 1, 2),
          mode AS (SELECT l_returnflag, q AS mode_qty, n AS mode_n
                   FROM (SELECT *, row_number() OVER (PARTITION BY l_returnflag
                           ORDER BY n DESC, q ASC) AS rn FROM d)
                   WHERE rn = 1),
          med AS (SELECT l_returnflag,
-                        quantile_cont(CAST(round(l_quantity) AS BIGINT), 0.5) AS median_qty
+                        quantile_cont(${Stages.lineitemQtySql}, 0.5) AS median_qty
                  FROM lineitem GROUP BY 1)
          SELECT med.l_returnflag, median_qty, mode_qty, mode_n
          FROM med JOIN mode ON med.l_returnflag = mode.l_returnflag
@@ -2505,11 +2504,11 @@ object SparkEntry {
     QueryDef("q_survivorship", (s, dir) =>
       Relational.survivorship(Tables.events(s, dir))
         .orderBy("user_id", "event_type", "day"),
-      """WITH b AS (SELECT user_id, event_type,
+      s"""WITH b AS (SELECT user_id, event_type,
                            epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day,
                            event_id,
                            epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec,
-                           CAST(round(value * 100) AS BIGINT) AS cents
+                           ${Stages.centsSql("value")} AS cents
                     FROM events),
          w AS (SELECT user_id, event_type, day, event_id,
                       row_number() OVER cell_o AS rn,
@@ -2914,7 +2913,7 @@ object SparkEntry {
          FROM j"""),
     QueryDef("q_mannwhitney", (s, dir) =>
       Analytics.mannWhitney(Tables.events(s, dir), "purchase", "click").orderBy("na"),
-      """WITH g AS (SELECT CAST(round(value * 100) AS BIGINT) AS x,
+      s"""WITH g AS (SELECT ${Stages.centsSql("value")} AS x,
                     CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS a,
                     CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS b
              FROM events WHERE event_type IN ('purchase', 'click') GROUP BY 1),
@@ -2942,7 +2941,7 @@ object SparkEntry {
          FROM u ORDER BY na"""),
     QueryDef("q_mood_median", (s, dir) =>
       Inference.moodMedian(Tables.events(s, dir), "purchase", "click").orderBy("median_cents"),
-      s"""WITH g AS (SELECT CAST(round(value * 100) AS BIGINT) AS x,
+      s"""WITH g AS (SELECT ${Stages.centsSql("value")} AS x,
                     CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS a,
                     CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS b
              FROM events WHERE event_type IN ('purchase', 'click') GROUP BY 1),
@@ -2963,7 +2962,7 @@ object SparkEntry {
     QueryDef("q_cochran_q", (s, dir) =>
       Inference.cochranQ(Tables.events(s, dir)).orderBy("n_users"),
       s"""WITH pres AS (SELECT user_id, event_type,
-                        CASE WHEN max(CAST(round(value * 100) AS BIGINT)) >= 10000
+                        CASE WHEN max(${Stages.centsSql("value")}) >= 10000
                              THEN 1 ELSE 0 END AS v
                         FROM events WHERE event_type IN ('view', 'click', 'purchase')
                         GROUP BY 1, 2),
@@ -3041,8 +3040,8 @@ object SparkEntry {
          FROM z GROUP BY 1 ORDER BY layout"""),
     QueryDef("q_mann_kendall", (s, dir) =>
       Analytics.mannKendall(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS d,
-                        CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
+                        CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x
                  FROM events GROUP BY 1),
          s AS (SELECT CAST(coalesce(sum(CAST(sign(j.x - i.x) AS BIGINT)), 0) AS BIGINT) AS s_stat
                FROM daily i JOIN daily j ON i.d < j.d),
@@ -3058,8 +3057,8 @@ object SparkEntry {
          FROM s CROSS JOIN tt ORDER BY n_days"""),
     QueryDef("q_merge_stats", (s, dir) =>
       Analytics.mergeStats(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH base AS (SELECT event_type, event_id % 2 AS h,
-                       CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH base AS (SELECT event_type, event_id % 2 AS h,
+                       ${Stages.centsSql("value")} AS c FROM events),
          p AS (SELECT event_type, h, CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(c) AS BIGINT) AS s, CAST(sum(c * c) AS BIGINT) AS ss
                FROM base GROUP BY 1, 2),
@@ -3079,8 +3078,8 @@ object SparkEntry {
          FROM m JOIN d USING (event_type) ORDER BY event_type"""),
     QueryDef("q_kendall_tau", (s, dir) =>
       Analytics.kendallTau(Tables.events(s, dir)).orderBy("n0"),
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS d,
-                        CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x,
+      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
+                        CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x,
                         CAST(count(DISTINCT user_id) AS BIGINT) AS y
                  FROM events GROUP BY 1),
          agg AS (SELECT CAST(count(*) AS BIGINT) AS n0,
@@ -3095,8 +3094,8 @@ object SparkEntry {
          FROM agg ORDER BY n0"""),
     QueryDef("q_runs_test", (s, dir) =>
       Analytics.runsTest(Tables.events(s, dir)).orderBy("n1"),
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS d,
-                        CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
+                        CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x
                  FROM events GROUP BY 1),
          md AS (SELECT quantile_cont(x, 0.5) AS med FROM daily),
          sgn AS (SELECT d, CASE WHEN x > med THEN 1 ELSE 0 END AS s
@@ -3141,8 +3140,8 @@ object SparkEntry {
          FROM est ORDER BY event_type"""),
     QueryDef("q_changepoint", (s, dir) =>
       Analytics.changepoint(Tables.events(s, dir)).orderBy("split_day"),
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS d,
-                        CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
+                        CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x
                  FROM events GROUP BY 1),
          pre AS (SELECT d,
                         CAST(sum(x) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sl,
@@ -3163,8 +3162,8 @@ object SparkEntry {
          ORDER BY cost ASC, split_day ASC LIMIT 1"""),
     QueryDef("q_theil_sen", (s, dir) =>
       Analytics.theilSen(Tables.events(s, dir)).orderBy("n_pairs"),
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS d,
-                        CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
+                        CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x
                  FROM events GROUP BY 1),
          dd AS (SELECT epoch_us(CAST(d AS TIMESTAMP)) // 1000000 // 86400 AS dn, x FROM daily),
          sl AS (SELECT CAST(round(CAST((j.x - i.x) * 1000 AS DOUBLE) /
@@ -3175,7 +3174,7 @@ object SparkEntry {
          FROM sl ORDER BY n_pairs"""),
     QueryDef("q_k_anonymity", (s, dir) =>
       Relational.kAnonymity(Tables.events(s, dir)).orderBy("n_groups"),
-      """WITH qi AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) // 2000 AS band,
+      s"""WITH qi AS (SELECT event_type, ${Stages.centsSql("value")} // 2000 AS band,
                      CAST(ts AS DATE) AS day
               FROM events),
          g AS (SELECT event_type, band, day, CAST(count(*) AS BIGINT) AS gsz
@@ -3191,8 +3190,8 @@ object SparkEntry {
          FROM agg ORDER BY n_groups"""),
     QueryDef("q_spearman", (s, dir) =>
       Analytics.spearman(Tables.events(s, dir)).orderBy("n"),
-      """WITH daily AS (SELECT CAST(ts AS DATE) AS d,
-                        CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x,
+      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
+                        CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x,
                         CAST(count(DISTINCT user_id) AS BIGINT) AS y
                  FROM events GROUP BY 1),
          rk AS (SELECT CAST(2 * rank() OVER (ORDER BY x) +
@@ -3234,8 +3233,8 @@ object SparkEntry {
          FROM agg ORDER BY n"""),
     QueryDef("q_median_ci", (s, dir) =>
       Analytics.medianCI(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH base AS (SELECT event_type, event_id,
-                       CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH base AS (SELECT event_type, event_id,
+                       ${Stages.centsSql("value")} AS c FROM events),
          rks AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
                         quantile_cont(c, 0.5) AS median_cents
                  FROM base GROUP BY 1),
@@ -3459,7 +3458,7 @@ object SparkEntry {
          FROM agg ORDER BY na"""),
     QueryDef("q_hist_quantile", (s, dir) =>
       Analytics.histQuantile(Tables.events(s, dir)).orderBy("q"),
-      """WITH base AS (SELECT CAST(round(value * 100) AS BIGINT) AS c FROM events),
+      s"""WITH base AS (SELECT ${Stages.centsSql("value")} AS c FROM events),
          ext AS (SELECT min(c) AS mn, max(c) AS mx, CAST(count(*) AS BIGINT) AS n,
                         quantile_cont(c, 0.5) AS ex50, quantile_cont(c, 0.9) AS ex90,
                         quantile_cont(c, 0.99) AS ex99
@@ -3574,7 +3573,7 @@ object SparkEntry {
          FROM r GROUP BY 1 ORDER BY reason"""),
     QueryDef("q_stump", (s, dir) =>
       Analytics.decisionStump(Tables.events(s, dir)).orderBy("split_dollars"),
-      """WITH grid AS (SELECT CAST(round(value * 100) AS BIGINT) // 100 AS x,
+      s"""WITH grid AS (SELECT ${Stages.centsSql("value")} // 100 AS x,
                        CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS c_click,
                        CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS c_error,
                        CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS c_purchase,
@@ -3608,9 +3607,9 @@ object SparkEntry {
          ORDER BY gini_cost ASC, split_dollars ASC LIMIT 1"""),
     QueryDef("q_cronbach", (s, dir) =>
       Analytics.cronbachAlpha(Tables.events(s, dir)).orderBy("n"),
-      """WITH items AS (SELECT user_id, CAST(count(*) AS BIGINT) AS x1,
+      s"""WITH items AS (SELECT user_id, CAST(count(*) AS BIGINT) AS x1,
                         CAST(count(DISTINCT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) AS BIGINT) AS x2,
-                        CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) // 100 AS x3
+                        CAST(sum(${Stages.centsSql("value")}) AS BIGINT) // 100 AS x3
                  FROM events GROUP BY 1),
          it AS (SELECT x1, x2, x3, x1 + x2 + x3 AS xt FROM items),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -3726,8 +3725,8 @@ object SparkEntry {
          SELECT rank, a, b, cn, ra_micro FROM r WHERE rank <= 10 ORDER BY rank"""),
     QueryDef("q_holt", (s, dir) =>
       Analytics.holtLinear(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH RECURSIVE daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH RECURSIVE daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                         FROM events GROUP BY 1),
          days AS (SELECT y, row_number() OVER (ORDER BY d) AS i FROM daily),
          rec AS (
@@ -3743,8 +3742,8 @@ object SparkEntry {
          FROM rec WHERE i = (SELECT max(i) FROM days) ORDER BY n_days"""),
     QueryDef("q_hodges_lehmann", (s, dir) =>
       Analytics.hodgesLehmann(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          w AS (SELECT a.y + b.y AS s FROM d a JOIN d b ON a.d <= b.d),
          r AS (SELECT s, row_number() OVER (ORDER BY s) AS r, count(*) OVER () AS m FROM w),
@@ -3761,7 +3760,7 @@ object SparkEntry {
       {
       val rsVar = Stages.cmomSql("sxx", "sx", "sx", Stages.divisorSql("n_days", nonZero = false))
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          p AS (SELECT y,
                       CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS k,
@@ -3783,8 +3782,8 @@ object SparkEntry {
       }),
     QueryDef("q_friedman", (s, dir) =>
       Analytics.friedmanPage(Tables.events(s, dir)).orderBy("n_blocks"),
-      """WITH cells AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d, event_type,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH cells AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d, event_type,
+                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                         FROM events GROUP BY 1, 2),
          k AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS k_treatments FROM cells),
          complete AS (SELECT c.d, c.event_type, c.y,
@@ -3809,8 +3808,8 @@ object SparkEntry {
          FROM idx, k ORDER BY n_blocks"""),
     QueryDef("q_isotonic", (s, dir) =>
       Analytics.isotonicDaily(Tables.events(s, dir)).orderBy("day_idx"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          idx AS (SELECT d, y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i,
                         CAST(sum(y) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS p
@@ -3831,7 +3830,7 @@ object SparkEntry {
       val slope = graft.engine.Analytics.demingSlopeSql
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
                             CAST(count(*) AS BIGINT) AS x,
-                            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                      FROM events GROUP BY 1),
           m AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
                        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
@@ -3850,7 +3849,7 @@ object SparkEntry {
       val mean = graft.engine.Analytics.gumbelMeanSql
       val sigma = graft.engine.Analytics.gumbelSigmaSql
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(max(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS m
+                            CAST(max(${Stages.centsSql("value")}) AS BIGINT) AS m
                      FROM events GROUP BY 1),
           a AS (SELECT CAST(count(*) AS BIGINT) AS n_blocks,
                        CAST(sum(m) AS BIGINT) AS sm, CAST(sum(m * m) AS BIGINT) AS smm
@@ -3866,8 +3865,8 @@ object SparkEntry {
     }),
     QueryDef("q_siegel", (s, dir) =>
       Analytics.siegelSlope(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          idx AS (SELECT y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i FROM d),
          slopes AS (SELECT a.i AS i, CAST(b.y - a.y AS DOUBLE) / CAST(b.i - a.i AS DOUBLE) AS s
@@ -3888,9 +3887,9 @@ object SparkEntry {
          SELECT n_days, slope, res AS intercept FROM ic, n ORDER BY n_days"""),
     QueryDef("q_median_polish", (s, dir) =>
       Analytics.medianPolish(Tables.events(s, dir)).orderBy("component", "key"),
-      """WITH cells AS (SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) % 7 AS i,
+      s"""WITH cells AS (SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) % 7 AS i,
                                (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) // 7 AS j,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS r,
+                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS r,
                                CAST(0 AS BIGINT) AS a, CAST(0 AS BIGINT) AS b
                         FROM events GROUP BY 1, 2),
          s1 AS (SELECT i, j, r - m AS r, a + m AS a, b FROM (
@@ -3917,8 +3916,8 @@ object SparkEntry {
          ORDER BY component, key"""),
     QueryDef("q_hampel", (s, dir) =>
       Analytics.hampelFilter(Tables.events(s, dir)).orderBy("day_epoch"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          h AS (SELECT d, y,
                       list_sort(list(y) OVER (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)) AS arr
@@ -3935,7 +3934,7 @@ object SparkEntry {
     QueryDef("q_grubbs", (s, dir) =>
       Analytics.grubbsOutlier(Tables.events(s, dir)).orderBy("n_days"),
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          mo AS (SELECT CAST(count(*) AS BIGINT) AS n_days, CAST(sum(y) AS BIGINT) AS sx,
                        CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS sxx
@@ -3955,7 +3954,7 @@ object SparkEntry {
       val cyy = Stages.cmomSql("syy", "sy", "sy")
       val gamma = s"($cxy / nullif($cxx, 0.0E0))"
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                      FROM events GROUP BY 1),
           p AS (SELECT a.y AS l, b.y - a.y AS dy FROM d a JOIN d b ON b.d = a.d + 1),
           m AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(l) AS BIGINT) AS sx,
@@ -3982,7 +3981,7 @@ object SparkEntry {
       val rssU = s"($cyy - $b1 * $cly - $b2 * $cxy)"
       val rssR = s"($cyy - $cly * $cly / nullif($cll, 0.0E0))"
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
+                            CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
           t AS (SELECT a.y AS l, a.x AS xl, b.y AS cur FROM d a JOIN d b ON b.d = a.d + 1),
@@ -4013,7 +4012,7 @@ object SparkEntry {
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x,
                             CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS m,
-                            CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y
+                            CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y
                      FROM events GROUP BY 1),
           mo AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
                         CAST(sum(m) AS BIGINT) AS sm, CAST(sum(y) AS BIGINT) AS sy,
@@ -4050,8 +4049,8 @@ object SparkEntry {
          FROM l2 GROUP BY 1 ORDER BY community"""),
     QueryDef("q_lis", (s, dir) =>
       Analytics.monotoneSubseq(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH RECURSIVE d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                              CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH RECURSIVE d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                              CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                        FROM events GROUP BY 1),
          days AS (SELECT y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i FROM d),
          rec AS (
@@ -4108,7 +4107,7 @@ object SparkEntry {
       val sumSq23 = (0 until k)
         .map(i => s"CAST(n$i AS DOUBLE) * CAST(n$i AS DOUBLE) * (2.0 * CAST(n$i AS DOUBLE) + 3.0)")
         .mkString(" + ")
-      s"""WITH g AS (SELECT CAST(round(value * 100) AS BIGINT) AS x,
+      s"""WITH g AS (SELECT ${Stages.centsSql("value")} AS x,
                   $cs
            FROM events WHERE event_type IN (${types.map(t => s"'$t'").mkString(", ")})
            GROUP BY 1),
@@ -4123,7 +4122,7 @@ object SparkEntry {
     }),
     QueryDef("q_cliffs_delta", (s, dir) =>
       Inference.cliffsDelta(Tables.events(s, dir), "purchase", "click").orderBy("na"),
-      """WITH g AS (SELECT CAST(round(value * 100) AS BIGINT) AS x,
+      s"""WITH g AS (SELECT ${Stages.centsSql("value")} AS x,
                            CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS a,
                            CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS b
                     FROM events WHERE event_type IN ('purchase', 'click') GROUP BY 1),
@@ -4143,8 +4142,8 @@ object SparkEntry {
          FROM m ORDER BY na"""),
     QueryDef("q_seasonal_mk", (s, dir) =>
       Analytics.seasonalMannKendall(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x
                     FROM events GROUP BY 1),
          dg AS (SELECT d, x, d % 7 AS g FROM d),
          s AS (SELECT coalesce(CAST(sum(CAST(sign(j.x - i.x) AS BIGINT)) AS BIGINT), CAST(0 AS BIGINT)) AS s_stat
@@ -4174,7 +4173,7 @@ object SparkEntry {
       val terms = graft.engine.Inference.abSplitTermsSql("HUGEINT")
         .map(_.replace(" div ", " // ")).mkString(",\n                       ")
       val reassemble = graft.engine.Inference.abReassembleSql.mkString(",\n                      ")
-      s"""WITH g AS (SELECT CAST(round(value * 100) AS BIGINT) AS x,
+      s"""WITH g AS (SELECT ${Stages.centsSql("value")} AS x,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS a,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS b
                      FROM events WHERE event_type IN ('purchase', 'click') GROUP BY 1),
@@ -4206,8 +4205,8 @@ object SparkEntry {
     }),
     QueryDef("q_ordinal_assoc", (s, dir) =>
       Inference.ordinalAssociation(Tables.lineitem(s, dir)).orderBy("n_rows"),
-      """WITH cells AS (SELECT CAST(round(l_quantity) AS BIGINT) AS q,
-                               CAST(round(l_extendedprice * 100) AS BIGINT) // 100000 AS p,
+      s"""WITH cells AS (SELECT ${Stages.lineitemQtySql} AS q,
+                               ${Stages.centsSql("l_extendedprice")} // 100000 AS p,
                                CAST(count(*) AS BIGINT) AS n
                         FROM lineitem GROUP BY 1, 2),
          pc AS (SELECT CAST(sum(CASE WHEN c2.q > c1.q AND c2.p > c1.p THEN c1.n * c2.n ELSE 0 END) AS BIGINT) AS conc,
@@ -4243,7 +4242,7 @@ object SparkEntry {
       val b2 = s"(($cuu * $cvw - $cuv * $cuw) / nullif($det, 0.0E0))"
       val r2 = s"(($b1 * $cuw + $b2 * $cvw) / nullif($cww, 0.0E0))"
       s"""WITH d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                             CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                       FROM events GROUP BY 1),
           d AS (SELECT y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i FROM d0),
           f AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(i) AS BIGINT) AS sx,
@@ -4302,8 +4301,8 @@ object SparkEntry {
          FROM b GROUP BY 1 ORDER BY bucket"""),
     QueryDef("q_turning_points", (s, dir) =>
       Analytics.turningPoints(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          w AS (SELECT y, lag(y, 1) OVER (ORDER BY d) AS pv, lead(y, 1) OVER (ORDER BY d) AS nx FROM d),
          a AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
@@ -4327,7 +4326,7 @@ object SparkEntry {
         .mkString(",\n                      ")
       val css = Stages.centredSumSql("syy", "sy", "sy")
       s"""WITH d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                             CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                       FROM events GROUP BY 1),
           m AS (SELECT $ss,
                        CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS sy,
@@ -4347,7 +4346,7 @@ object SparkEntry {
       val sdb = s"sqrt(CAST(ssb AS DOUBLE) / 5.0 - $mb * $mb)"
       val d2 = s"(10.0 * (1.0 - ((CAST(dot AS DOUBLE) / 5.0 - $ma * $mb) / ($sda * $sdb))))"
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                      FROM events GROUP BY 1),
           p AS (SELECT d, y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i,
                        list_sort(list(struct_pack(d := d, y := y)) OVER (ORDER BY d ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING)) AS arr0,
@@ -4378,7 +4377,7 @@ object SparkEntry {
         s"(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) - $bTxt * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))"
       val gamma = s"($cxy / nullif($cxx, 0.0E0))"
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
+                            CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
           f AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
@@ -4412,7 +4411,7 @@ object SparkEntry {
       val dy = s"(CAST(y AS DOUBLE) - $my)"
       val d2 = s"(($cyy * $dx * $dx - 2.0 * $cxy * $dx * $dy + $cxx * $dy * $dy) / nullif($det, 0.0E0))"
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
+                            CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
           m AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
@@ -4428,9 +4427,9 @@ object SparkEntry {
     }),
     QueryDef("q_dtw", (s, dir) =>
       Analytics.dtwWeekly(Tables.events(s, dir)).orderBy("n_buckets"),
-      """WITH RECURSIVE prof AS (SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) % 7 AS r,
-                            CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS pa,
-                            CAST(sum(CASE WHEN event_type = 'click' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS pb
+      s"""WITH RECURSIVE prof AS (SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) % 7 AS r,
+                            CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS pa,
+                            CAST(sum(CASE WHEN event_type = 'click' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS pb
                      FROM events GROUP BY 1),
          t AS (SELECT CAST(sum(pa) AS BIGINT) AS ta, CAST(sum(pb) AS BIGINT) AS tb FROM prof),
          sc AS (SELECT r, (pa * 1000) // ta AS a, (pb * 1000) // tb AS b FROM prof, t),
@@ -4477,7 +4476,7 @@ object SparkEntry {
               ELSE sqrt($dA)
             END)"""
       s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
+                            CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
           t AS (SELECT a.y AS ly, a.x AS lx, b.y AS cy, b.x AS cx FROM d a JOIN d b ON b.d = a.d + 1),
@@ -4508,8 +4507,8 @@ object SparkEntry {
          FROM a ORDER BY n1"""),
     QueryDef("q_pinball", (s, dir) =>
       Analytics.pinballLoss(Tables.events(s, dir)).orderBy("n_eval"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          j AS (SELECT a.y AS f, b.y AS y FROM d a JOIN d b ON b.d = a.d + 7),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n_eval,
@@ -4523,8 +4522,8 @@ object SparkEntry {
         Tables.lineitem(s, dir), Tables.orders(s, dir), Tables.customer(s, dir),
         Tables.supplier(s, dir), Tables.nation(s, dir), "NATION_18", "NATION_19")
         .orderBy("supp_nation", "cust_nation", "l_year"),
-      """WITH ru AS (SELECT l_suppkey, l_orderkey, year(l_shipdate) AS l_year,
-                            CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS r
+      s"""WITH ru AS (SELECT l_suppkey, l_orderkey, year(l_shipdate) AS l_year,
+                            ${Stages.lineitemRevUnitsSql} AS r
                      FROM lineitem),
          s AS (SELECT s_suppkey, n_name AS supp_nation FROM supplier
                JOIN nation ON s_nationkey = n_nationkey WHERE n_name IN ('NATION_18', 'NATION_19')),
@@ -4545,13 +4544,13 @@ object SparkEntry {
         Tables.supplier(s, dir), Tables.nation(s, dir), Tables.region(s, dir),
         "ASIA", "NATION_3")
         .orderBy("o_year"),
-      """WITH mn AS (SELECT n_nationkey FROM nation JOIN region ON n_regionkey = r_regionkey
+      s"""WITH mn AS (SELECT n_nationkey FROM nation JOIN region ON n_regionkey = r_regionkey
                      WHERE r_name = 'ASIA'),
          c AS (SELECT c_custkey FROM customer JOIN mn ON c_nationkey = n_nationkey),
          s AS (SELECT s_suppkey, n_name AS supp_nation FROM supplier
                JOIN nation ON s_nationkey = n_nationkey),
          j AS (SELECT year(o_orderdate) AS o_year, supp_nation,
-                      CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS r
+                      ${Stages.lineitemRevUnitsSql} AS r
                FROM lineitem
                JOIN s ON l_suppkey = s_suppkey
                JOIN orders ON l_orderkey = o_orderkey
@@ -4565,8 +4564,8 @@ object SparkEntry {
     QueryDef("q_promo_share", (s, dir) =>
       Relational.promoShare(Tables.lineitem(s, dir), Tables.part(s, dir))
         .orderBy("ship_month"),
-      """WITH j AS (SELECT year(l_shipdate) * 100 + month(l_shipdate) AS ship_month, p_type,
-                           CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS r
+      s"""WITH j AS (SELECT year(l_shipdate) * 100 + month(l_shipdate) AS ship_month, p_type,
+                           ${Stages.lineitemRevUnitsSql} AS r
                     FROM lineitem JOIN part ON l_partkey = p_partkey)
          SELECT CAST(ship_month AS BIGINT) AS ship_month,
                 CAST(sum(CASE WHEN p_type = 'PROMO' THEN r ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS promo_units,
@@ -4577,8 +4576,8 @@ object SparkEntry {
     QueryDef("q_bracket_revenue", (s, dir) =>
       Relational.bracketRevenue(Tables.lineitem(s, dir), Tables.part(s, dir))
         .orderBy("n_rows"),
-      """WITH j AS (SELECT l_quantity, p_brand, p_size,
-                           CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT)) AS r
+      s"""WITH j AS (SELECT l_quantity, p_brand, p_size,
+                           ${Stages.lineitemRevUnitsSql} AS r
                     FROM lineitem JOIN part ON l_partkey = p_partkey)
          SELECT CAST(count(*) AS BIGINT) AS n_rows,
                 CAST(sum(r) AS BIGINT) AS rev_units,
@@ -4669,14 +4668,14 @@ object SparkEntry {
     QueryDef("q_arc_elasticity", (s, dir) =>
       Relational.arcElasticity(Tables.lineitem(s, dir), Tables.part(s, dir))
         .orderBy("p_brand"),
-      """WITH sp AS (SELECT p_partkey, p_brand, CAST(round(p_retailprice * 100) AS BIGINT) AS pc,
-                            row_number() OVER (PARTITION BY p_brand ORDER BY CAST(round(p_retailprice * 100) AS BIGINT) ASC, p_partkey ASC) AS r,
+      s"""WITH sp AS (SELECT p_partkey, p_brand, ${Stages.centsSql("p_retailprice")} AS pc,
+                            row_number() OVER (PARTITION BY p_brand ORDER BY ${Stages.centsSql("p_retailprice")} ASC, p_partkey ASC) AS r,
                             count(*) OVER (PARTITION BY p_brand) AS n
                      FROM part),
          split AS (SELECT p_partkey, p_brand, pc, r <= (n + 1) // 2 AS cheap FROM sp),
          agg AS (SELECT p_brand,
-                        CAST(sum(CASE WHEN cheap THEN CAST(round(l_quantity) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS q1,
-                        CAST(sum(CASE WHEN NOT cheap THEN CAST(round(l_quantity) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS q2,
+                        CAST(sum(CASE WHEN cheap THEN ${Stages.lineitemQtySql} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS q1,
+                        CAST(sum(CASE WHEN NOT cheap THEN ${Stages.lineitemQtySql} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS q2,
                         CAST(sum(CASE WHEN cheap THEN pc ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS ps1,
                         CAST(sum(CASE WHEN cheap THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                         CAST(sum(CASE WHEN NOT cheap THEN pc ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS ps2,
@@ -4717,7 +4716,7 @@ object SparkEntry {
          FROM st, tot ORDER BY n_candidates"""),
     QueryDef("q_qq", (s, dir) =>
       Inference.qqTable(Tables.events(s, dir), "purchase", "click").orderBy("p"),
-      """WITH ga AS (SELECT CAST(round(value * 100) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS c
+      s"""WITH ga AS (SELECT ${Stages.centsSql("value")} AS x, CAST(count(*) AS BIGINT) AS c
                      FROM events WHERE event_type = 'purchase' GROUP BY 1),
          ca AS (SELECT x, c, coalesce(CAST(sum(c) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), CAST(0 AS BIGINT)) AS cb,
                        CAST(sum(c) OVER () AS BIGINT) AS n
@@ -4725,7 +4724,7 @@ object SparkEntry {
          pa AS (SELECT p, x AS qa_cents
                 FROM ca, unnest(generate_series(5, 95, 5)) AS t(p)
                 WHERE cb < (p * (n - 1)) // 100 + 1 AND (p * (n - 1)) // 100 + 1 <= cb + c),
-         gb AS (SELECT CAST(round(value * 100) AS BIGINT) AS x, CAST(count(*) AS BIGINT) AS c
+         gb AS (SELECT ${Stages.centsSql("value")} AS x, CAST(count(*) AS BIGINT) AS c
                 FROM events WHERE event_type = 'click' GROUP BY 1),
          cbl AS (SELECT x, c, coalesce(CAST(sum(c) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), CAST(0 AS BIGINT)) AS cb,
                         CAST(sum(c) OVER () AS BIGINT) AS n
@@ -4783,7 +4782,7 @@ object SparkEntry {
       Analytics.poissonBootstrapMedian(Tables.events(s, dir)).orderBy("resample"),
       {
       val mult = Analytics.poissonMultiplierSql(duckResampleHashSql)
-      s"""WITH e AS (SELECT event_id, CAST(round(value * 100) AS BIGINT) AS x,
+      s"""WITH e AS (SELECT event_id, ${Stages.centsSql("value")} AS x,
                             unnest(generate_series(0, 7)) AS r
                      FROM events),
           d AS (SELECT CAST(r AS BIGINT) AS resample, $mult AS m, x FROM e),
@@ -4842,7 +4841,7 @@ object SparkEntry {
       val l2 =
         "(2 * (dd.y * 4 - rec.s[CAST(dd.d % 7 + 1 AS INT)]) + 2 * (rec.l + rec.b)) // 4"
       s"""WITH RECURSIVE daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                         FROM events GROUP BY 1),
          days AS (SELECT d, y, row_number() OVER (ORDER BY d) AS i FROM daily),
          rec AS (
@@ -4867,8 +4866,8 @@ object SparkEntry {
     }),
     QueryDef("q_mase", (s, dir) =>
       Analytics.maseWape(Tables.events(s, dir)).orderBy("n_eval"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          e7 AS (SELECT CAST(count(*) AS BIGINT) AS n7, CAST(sum(abs(b.y - a.y)) AS BIGINT) AS sae7,
                        CAST(sum(b.y - a.y) AS BIGINT) AS se7, CAST(sum(b.y) AS BIGINT) AS sy7
@@ -4885,7 +4884,7 @@ object SparkEntry {
       {
       val dVar = Stages.cmomSql("d_sq", "d_total", "d_total", Stages.divisorSql("n_days", nonZero = false))
       s"""WITH pd AS (SELECT l_partkey, CAST(l_shipdate AS DATE) AS day,
-                            CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS q
+                            CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS q
                      FROM lineitem GROUP BY 1, 2),
          st AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_days,
                        CAST(sum(q) AS BIGINT) AS d_total, CAST(sum(q * q) AS BIGINT) AS d_sq
@@ -5041,8 +5040,8 @@ object SparkEntry {
          FROM asg GROUP BY 1 ORDER BY 1"""),
     QueryDef("q_classical_decomp", (s, dir) =>
       Analytics.classicalDecomposition(Tables.events(s, dir)).orderBy("day_epoch"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          t AS (SELECT d, y,
                       CAST(sum(y) OVER (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS t7,
@@ -5060,9 +5059,9 @@ object SparkEntry {
       Analytics.simpsonParadox(
         Tables.orders(s, dir), Tables.customer(s, dir), Tables.nation(s, dir))
         .orderBy("n_strata"),
-      """WITH base AS (SELECT n_name,
+      s"""WITH base AS (SELECT n_name,
                              CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0 END AS is_a,
-                             CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+                             ${Stages.centsSql("o_totalprice")} AS cents
                       FROM orders
                       JOIN customer ON o_custkey = c_custkey
                       JOIN nation ON c_nationkey = n_nationkey
@@ -5082,14 +5081,14 @@ object SparkEntry {
          FROM ss, ov ORDER BY n_strata"""),
     QueryDef("q_abc_xyz", (s, dir) =>
       Relational.abcXyzMatrix(Tables.lineitem(s, dir)).orderBy("abc", "xyz"),
-      """WITH monthly AS (SELECT l_partkey, year(l_shipdate) * 100 + month(l_shipdate) AS m,
-                                 CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS q
+      s"""WITH monthly AS (SELECT l_partkey, year(l_shipdate) * 100 + month(l_shipdate) AS m,
+                                 CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS q
                           FROM lineitem GROUP BY 1, 2),
          pp AS (SELECT l_partkey, CAST(count(*) AS BIGINT) AS nm, CAST(sum(q) AS BIGINT) AS sq,
                        CAST(sum(q * q) AS BIGINT) AS sqq
                 FROM monthly GROUP BY 1),
          rev AS (SELECT l_partkey,
-                        CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS r
+                        CAST(sum(${Stages.lineitemRevUnitsSql}) AS BIGINT) AS r
                  FROM lineitem GROUP BY 1),
          tot AS (SELECT CAST(sum(r) AS BIGINT) AS tot FROM rev),
          rk AS (SELECT l_partkey, r,
@@ -5116,7 +5115,7 @@ object SparkEntry {
       val cxy = Stages.cmomSql("say", "sa", "sy")
       val cyy = Stages.cmomSql("syy", "sy", "sy")
       s"""WITH RECURSIVE d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
+                            CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
           days AS (SELECT x, y, row_number() OVER (ORDER BY d) AS i FROM d0),
@@ -5161,8 +5160,8 @@ object SparkEntry {
          FROM ec, dc, cat ORDER BY n_nodes"""),
     QueryDef("q_knee", (s, dir) =>
       Relational.kneePoint(Tables.lineitem(s, dir)).orderBy("n_parts"),
-      """WITH rev AS (SELECT l_partkey,
-                            CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS r
+      s"""WITH rev AS (SELECT l_partkey,
+                            CAST(sum(${Stages.lineitemRevUnitsSql}) AS BIGINT) AS r
                      FROM lineitem GROUP BY 1),
          t AS (SELECT CAST(sum(r) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS n FROM rev),
          rk AS (SELECT l_partkey, r,
@@ -5180,11 +5179,11 @@ object SparkEntry {
          FROM top ORDER BY n_parts"""),
     QueryDef("q_feature_auc", (s, dir) =>
       Analytics.featureAuc(Tables.events(s, dir)).orderBy("feature"),
-      """WITH b AS (SELECT user_id,
+      s"""WITH b AS (SELECT user_id,
                            CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS clicks,
                            CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS views,
                            CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS errors,
-                           CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS spend
+                           CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS spend
                     FROM events GROUP BY 1),
          g0 AS (SELECT spend, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY 1),
          md AS (SELECT spend AS med FROM (
@@ -5211,11 +5210,11 @@ object SparkEntry {
          FROM c GROUP BY 1 ORDER BY 1"""),
     QueryDef("q_roc_points", (s, dir) =>
       Analytics.rocPoints(Tables.events(s, dir)).orderBy("threshold"),
-      """WITH b AS (SELECT user_id,
+      s"""WITH b AS (SELECT user_id,
                            CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS clicks,
                            CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS views,
                            CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS errors,
-                           CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS spend
+                           CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS spend
                     FROM events GROUP BY 1),
          g0 AS (SELECT spend, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY 1),
          md AS (SELECT spend AS med FROM (
@@ -5259,8 +5258,8 @@ object SparkEntry {
          FROM rec WHERE i = (SELECT max(i) FROM days) ORDER BY n_days"""),
     QueryDef("q_forecast_recon", (s, dir) =>
       Analytics.forecastReconciliation(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH t AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d, event_type,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH t AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d, event_type,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1, 2),
          mx AS (SELECT CAST(max(d) AS BIGINT) AS dmax FROM t),
          w7 AS (SELECT t.event_type, t.d - 7 AS src_d FROM t, mx WHERE t.d > mx.dmax - 7 AND t.d <= mx.dmax),
@@ -5279,9 +5278,9 @@ object SparkEntry {
          ORDER BY bu.event_type"""),
     QueryDef("q_bandit_replay", (s, dir) =>
       Analytics.banditReplay(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH RECURSIVE d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS rp,
-                           CAST(sum(CASE WHEN event_type = 'click' THEN CAST(round(value * 100) AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS rc
+      s"""WITH RECURSIVE d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS rp,
+                           CAST(sum(CASE WHEN event_type = 'click' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS rc
                     FROM events GROUP BY 1),
          days AS (SELECT rp, rc, row_number() OVER (ORDER BY d) AS i FROM d0),
          rec AS (
@@ -5308,8 +5307,8 @@ object SparkEntry {
          ORDER BY n_days"""),
     QueryDef("q_event_study", (s, dir) =>
       Analytics.eventStudy(Tables.events(s, dir)).orderBy("offset_days"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1),
          pk AS (SELECT d AS peak_d FROM d ORDER BY y DESC, d ASC LIMIT 1),
          o AS (SELECT d.d, d.y, d.d - pk.peak_d AS off FROM d, pk),
@@ -5433,11 +5432,10 @@ object SparkEntry {
          FROM isl ORDER BY user_id, island_start"""),
     QueryDef("q_sql_q1", (s, dir) =>
       Relational.sqlQ1(s, Tables.lineitem(s, dir)).orderBy("l_returnflag", "l_linestatus"),
-      """SELECT l_returnflag, l_linestatus,
-                CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-                CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_cents,
-                CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                         * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS sum_disc_units,
+      s"""SELECT l_returnflag, l_linestatus,
+                CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS sum_qty,
+                CAST(sum(${Stages.centsSql("l_extendedprice")}) AS BIGINT) AS sum_base_cents,
+                CAST(sum(${Stages.lineitemRevUnitsSql}) AS BIGINT) AS sum_disc_units,
                 CAST(count(*) AS BIGINT) AS count_order
          FROM lineitem
          GROUP BY l_returnflag, l_linestatus
@@ -5447,10 +5445,9 @@ object SparkEntry {
         s, Tables.lineitem(s, dir), Tables.orders(s, dir),
         Tables.customer(s, dir), Tables.nation(s, dir))
         .orderBy("o_year", "year_rank"),
-      """WITH rev AS (
+      s"""WITH rev AS (
            SELECT n_name, year(o_orderdate) AS o_year,
-                  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS rev_units
+                  CAST(sum(${Stages.lineitemRevUnitsSql}) AS BIGINT) AS rev_units
            FROM lineitem
            JOIN orders ON l_orderkey = o_orderkey
            JOIN customer ON o_custkey = c_custkey
@@ -5498,9 +5495,9 @@ object SparkEntry {
       Inference.oaxacaDecomposition(
         Tables.customer(s, dir), Tables.orders(s, dir), Tables.nation(s, dir))
         .orderBy("n_name"),
-      """WITH base AS (SELECT c_mktsegment AS seg, n_name,
+      s"""WITH base AS (SELECT c_mktsegment AS seg, n_name,
                               CAST(count(*) AS BIGINT) AS cnt,
-                              CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS s
+                              CAST(sum(${Stages.centsSql("o_totalprice")}) AS BIGINT) AS s
                        FROM orders
                        JOIN customer ON o_custkey = c_custkey
                        JOIN nation ON c_nationkey = n_nationkey
@@ -5561,10 +5558,9 @@ object SparkEntry {
         Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir),
         Tables.supplier(s, dir), Tables.nation(s, dir), Tables.region(s, dir),
         "ASIA", "1996-01-01", "1997-01-01").orderBy("n_name"),
-      """SELECT n_name,
+      s"""SELECT n_name,
                 CAST(count(*) AS BIGINT) AS n_items,
-                sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-                    (100 - CAST(round(l_discount * 100) AS BIGINT))) / CAST(10000 AS DOUBLE) AS revenue
+                sum(${Stages.lineitemRevUnitsSql}) / CAST(10000 AS DOUBLE) AS revenue
          FROM lineitem
          JOIN orders ON l_orderkey = o_orderkey
           AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
@@ -5616,7 +5612,7 @@ object SparkEntry {
       s"""WITH b AS (SELECT CASE WHEN ${Stages.duckMd5BitsSql(duckLineitemRowKeySql, "1", 8)} % 10 < 6 THEN 'train'
                               WHEN ${Stages.duckMd5BitsSql(duckLineitemRowKeySql, "1", 8)} % 10 < 8 THEN 'cal'
                               ELSE 'test' END AS split,
-                            CAST(round(l_quantity) AS BIGINT) AS x,
+                            ${Stages.lineitemQtySql} AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
                      FROM lineitem),
          m AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
@@ -5649,7 +5645,7 @@ object SparkEntry {
       s"""WITH s AS (SELECT event_type,
                            CAST(count(*) AS BIGINT) AS n_pop,
                            CAST(sum(CASE WHEN ${Stages.duckMd5BitsSql("CAST(event_id AS VARCHAR)", "1", 8)} % 10 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_sample,
-                           CAST(coalesce(sum(CASE WHEN ${Stages.duckMd5BitsSql("CAST(event_id AS VARCHAR)", "1", 8)} % 10 = 0 THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END), 0) AS BIGINT) AS s_cents
+                           CAST(coalesce(sum(CASE WHEN ${Stages.duckMd5BitsSql("CAST(event_id AS VARCHAR)", "1", 8)} % 10 = 0 THEN ${Stages.centsSql("value")} ELSE 0 END), 0) AS BIGINT) AS s_cents
                     FROM events GROUP BY 1),
          t AS (SELECT sum(n_pop) AS n_total FROM s)
          SELECT event_type, n_pop, n_sample,
@@ -5707,13 +5703,13 @@ object SparkEntry {
          FROM p GROUP BY label ORDER BY label"""),
     QueryDef("q_apdex", (s, dir) =>
       Analytics.apdex(Tables.events(s, dir)).orderBy("event_type"),
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                CAST(sum(CASE WHEN CAST(round(value * 100) AS BIGINT) <= 5000 THEN 1 ELSE 0 END) AS BIGINT) AS n_satisfied,
-                CAST(sum(CASE WHEN CAST(round(value * 100) AS BIGINT) > 5000
-                               AND CAST(round(value * 100) AS BIGINT) <= 20000 THEN 1 ELSE 0 END) AS BIGINT) AS n_tolerating,
-                CAST(2 * sum(CASE WHEN CAST(round(value * 100) AS BIGINT) <= 5000 THEN 1 ELSE 0 END)
-                     + sum(CASE WHEN CAST(round(value * 100) AS BIGINT) > 5000
-                                 AND CAST(round(value * 100) AS BIGINT) <= 20000 THEN 1 ELSE 0 END) AS DOUBLE)
+      s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+                CAST(sum(CASE WHEN ${Stages.centsSql("value")} <= 5000 THEN 1 ELSE 0 END) AS BIGINT) AS n_satisfied,
+                CAST(sum(CASE WHEN ${Stages.centsSql("value")} > 5000
+                               AND ${Stages.centsSql("value")} <= 20000 THEN 1 ELSE 0 END) AS BIGINT) AS n_tolerating,
+                CAST(2 * sum(CASE WHEN ${Stages.centsSql("value")} <= 5000 THEN 1 ELSE 0 END)
+                     + sum(CASE WHEN ${Stages.centsSql("value")} > 5000
+                                 AND ${Stages.centsSql("value")} <= 20000 THEN 1 ELSE 0 END) AS DOUBLE)
                 / CAST(2 * count(*) AS DOUBLE) AS apdex
          FROM events GROUP BY event_type ORDER BY event_type"""),
     QueryDef("q_anova", (s, dir) =>
@@ -5724,7 +5720,7 @@ object SparkEntry {
         s"CAST(sum(CASE WHEN event_type = '$t' THEN 1 ELSE 0 END) AS BIGINT) AS n_$i, " +
           s"CAST(sum(CASE WHEN event_type = '$t' THEN cents ELSE 0 END) AS BIGINT) AS s_$i"
       }.mkString(",\n                  ")
-      s"""WITH base AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events
+      s"""WITH base AS (SELECT event_type, ${Stages.centsSql("value")} AS cents FROM events
                         WHERE event_type IN (${types.map(t => s"'$t'").mkString(", ")})),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(cents) AS s, sum(cents * cents) AS q,
                   $perType
@@ -5739,7 +5735,7 @@ object SparkEntry {
     }),
     QueryDef("q_welch", (s, dir) =>
       Analytics.welchTTest(Tables.events(s, dir)),
-      s"""WITH base AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH base AS (SELECT event_type, ${Stages.centsSql("value")} AS cents FROM events),
          m AS (SELECT
                  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                  CAST(sum(CASE WHEN event_type = 'purchase' THEN cents ELSE 0 END) AS BIGINT) AS s1,
@@ -5758,7 +5754,7 @@ object SparkEntry {
       Analytics.poissonBootstrap(Tables.events(s, dir)).orderBy("resample"),
       {
       val mult = Analytics.poissonMultiplierSql(duckResampleHashSql)
-      s"""WITH e AS (SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents,
+      s"""WITH e AS (SELECT event_id, ${Stages.centsSql("value")} AS cents,
                             unnest(generate_series(0, 19)) AS r
                      FROM events),
          d AS (SELECT CAST(r AS BIGINT) AS resample, $mult AS m, cents FROM e),
@@ -5796,7 +5792,7 @@ object SparkEntry {
       Analytics.pairedShift(Tables.events(s, dir)),
       s"""WITH h AS (SELECT user_id, day(CAST(ts AS TIMESTAMP)) <= 15 AS first_half,
                            CAST(count(*) AS BIGINT) AS n,
-                           sum(CAST(round(value * 100) AS BIGINT)) AS s
+                           sum(${Stages.centsSql("value")}) AS s
                     FROM events GROUP BY 1, 2),
          d AS (SELECT CAST(round(CAST(b.s AS DOUBLE) / CAST(b.n AS DOUBLE) -
                                  CAST(a.s AS DOUBLE) / CAST(a.n AS DOUBLE)) AS BIGINT) AS d
@@ -5810,7 +5806,7 @@ object SparkEntry {
          FROM m"""),
     QueryDef("q_ess", (s, dir) =>
       Analytics.effectiveSampleSize(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
-      """WITH b AS (SELECT l_returnflag, CAST(round(l_quantity) AS BIGINT) AS w FROM lineitem),
+      s"""WITH b AS (SELECT l_returnflag, ${Stages.lineitemQtySql} AS w FROM lineitem),
          m AS (SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(w) AS BIGINT) AS sum_w, CAST(sum(w * w) AS BIGINT) AS sum_w2
                FROM b GROUP BY 1)
@@ -5857,9 +5853,9 @@ object SparkEntry {
     }),
     QueryDef("q_nn_match", (s, dir) =>
       Analytics.nnMatchAtt(Tables.events(s, dir)),
-      """WITH u AS (SELECT user_id,
-                           CAST(coalesce(sum(CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END), 0) AS BIGINT) AS x,
-                           CAST(coalesce(sum(CASE WHEN day(CAST(ts AS TIMESTAMP)) > 15 THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END), 0) AS BIGINT) AS y,
+      s"""WITH u AS (SELECT user_id,
+                           CAST(coalesce(sum(CASE WHEN day(CAST(ts AS TIMESTAMP)) <= 15 THEN ${Stages.centsSql("value")} ELSE 0 END), 0) AS BIGINT) AS x,
+                           CAST(coalesce(sum(CASE WHEN day(CAST(ts AS TIMESTAMP)) > 15 THEN ${Stages.centsSql("value")} ELSE 0 END), 0) AS BIGINT) AS y,
                            CAST(CASE WHEN 100 * sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                                           >= 25 * count(*) THEN 1 ELSE 0 END AS BIGINT) AS treated
                     FROM events GROUP BY 1),
@@ -6014,7 +6010,7 @@ object SparkEntry {
           Analytics.pairwiseCorrSql("y", "z"))
       s"""WITH b AS (SELECT CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS x,
                             (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 + 3) % 7 + 1 AS z,
-                            CAST(round(value * 100) AS BIGINT) AS y
+                            ${Stages.centsSql("value")} AS y
                      FROM events),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(x) AS BIGINT) AS s_x, CAST(sum(y) AS BIGINT) AS s_y, CAST(sum(z) AS BIGINT) AS s_z,
@@ -6029,9 +6025,9 @@ object SparkEntry {
     }),
     QueryDef("q_icc", (s, dir) =>
       Analytics.intraclassCorrelation(Tables.events(s, dir)),
-      """WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS ng,
-                            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sg,
-                            CAST(sum(CAST(round(value * 100) AS BIGINT) * CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS qg
+      s"""WITH pu AS (SELECT user_id, CAST(count(*) AS BIGINT) AS ng,
+                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS sg,
+                            CAST(sum(${Stages.centsSql("value")} * ${Stages.centsSql("value")}) AS BIGINT) AS qg
                      FROM events GROUP BY 1),
          m AS (SELECT CAST(count(*) AS BIGINT) AS k, CAST(sum(ng) AS BIGINT) AS n,
                       CAST(sum(ng * ng) AS BIGINT) AS n2,
@@ -6081,7 +6077,7 @@ object SparkEntry {
       {
       val linreg = Stages.linregSql().toMap
       s"""WITH b AS (SELECT ${Stages.duckMd5BitsSql(duckLineitemRowKeySql, "1", 8)} % 5 AS fold,
-                            CAST(round(l_quantity) AS BIGINT) AS x,
+                            ${Stages.lineitemQtySql} AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
                      FROM lineitem),
          pf AS (SELECT fold, CAST(count(*) AS BIGINT) AS fn,
@@ -6230,7 +6226,7 @@ object SparkEntry {
     QueryDef("q_durbin_watson", (s, dir) =>
       Analytics.durbinWatson(Tables.events(s, dir)),
       s"""WITH hourly AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS h,
-                                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+                                 CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS cents
                           FROM events GROUP BY 1),
          i AS (SELECT min(h) AS h0 FROM hourly),
          s AS (SELECT h - h0 AS x, cents AS y FROM hourly, i),
@@ -6259,7 +6255,7 @@ object SparkEntry {
       val cooks =
         s"((${Stages.residualSql} * ${Stages.residualSql}) / (2.0 * $s2) * $h / ((1.0 - $h) * (1.0 - $h)))"
       s"""WITH b AS (SELECT l_orderkey, l_linenumber,
-                            CAST(round(l_quantity) AS BIGINT) AS x,
+                            ${Stages.lineitemQtySql} AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
                      FROM lineitem),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -6276,8 +6272,8 @@ object SparkEntry {
     }),
     QueryDef("q_acf", (s, dir) =>
       Analytics.acfLadder(Tables.events(s, dir)).orderBy("lag"),
-      """WITH daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                         FROM events GROUP BY 1),
          tot AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s FROM daily),
          dm AS (SELECT d, n * y - s AS e FROM daily, tot),
@@ -6334,7 +6330,7 @@ object SparkEntry {
       val my = s"(${Stages.meanSql("swy", sw)})"
       val cxx = Stages.cmomSql("swxx", "swx", "swx", sw)
       val cxy = Stages.cmomSql("swxy", "swx", "swy", sw)
-      s"""WITH b AS (SELECT CAST(round(l_quantity) AS BIGINT) AS x,
+      s"""WITH b AS (SELECT ${Stages.lineitemQtySql} AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
                      FROM lineitem),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sw,
@@ -6349,13 +6345,13 @@ object SparkEntry {
     }),
     QueryDef("q_price_index", (s, dir) =>
       Relational.priceIndex(Tables.orders(s, dir), Tables.lineitem(s, dir)),
-      """WITH y0 AS (SELECT l_partkey, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS c0,
-                            CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS q0
+      s"""WITH y0 AS (SELECT l_partkey, CAST(sum(${Stages.centsSql("l_extendedprice")}) AS BIGINT) AS c0,
+                            CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS q0
                      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
                      WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
                      GROUP BY 1),
-         y1 AS (SELECT l_partkey, CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS c1,
-                       CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS q1
+         y1 AS (SELECT l_partkey, CAST(sum(${Stages.centsSql("l_extendedprice")}) AS BIGINT) AS c1,
+                       CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS q1
                 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
                 WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
                 GROUP BY 1),
@@ -6376,7 +6372,7 @@ object SparkEntry {
     QueryDef("q_qte", (s, dir) =>
       Analytics.quantileTreatmentEffects(Tables.events(s, dir)).orderBy("decile"),
       s"""WITH v AS (SELECT $duckUserArmSql AS arm,
-                           CAST(round(value * 100) AS BIGINT) AS v
+                           ${Stages.centsSql("value")} AS v
                     FROM events),
          c AS (SELECT arm, v, CAST(count(*) AS BIGINT) AS cnt FROM v GROUP BY 1, 2),
          cc AS (SELECT arm, v, sum(cnt) OVER (PARTITION BY arm ORDER BY v
@@ -6396,8 +6392,8 @@ object SparkEntry {
          ORDER BY decile"""),
     QueryDef("q_backtest", (s, dir) =>
       Analytics.seasonalNaiveBacktest(Tables.events(s, dir)),
-      """WITH hourly AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS h,
-                                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH hourly AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS h,
+                                CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                          FROM events GROUP BY 1),
          j AS (SELECT t.y AS y, f.y AS f FROM hourly t JOIN hourly f ON t.h = f.h + 168),
          e AS (SELECT CAST(round(1000000.0 * abs(CAST(y - f AS DOUBLE)) / CAST(y AS DOUBLE)) AS BIGINT) AS ape_micro,
@@ -6410,8 +6406,8 @@ object SparkEntry {
          FROM e"""),
     QueryDef("q_theil_u", (s, dir) =>
       Analytics.theilU(Tables.events(s, dir)),
-      """WITH hourly AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS h,
-                                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH hourly AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS h,
+                                CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                          FROM events GROUP BY 1),
          j AS (SELECT t.y AS y, fs.y AS fs, fp.y AS fp
                FROM hourly t JOIN hourly fs ON t.h = fs.h + 168
@@ -6434,7 +6430,7 @@ object SparkEntry {
             CAST(sum(CASE WHEN $cond THEN x * y ELSE 0 END) AS BIGINT) AS sxy_$sfx,
             CAST(sum(CASE WHEN $cond THEN x * x ELSE 0 END) AS BIGINT) AS sxx_$sfx,
             CAST(sum(CASE WHEN $cond THEN y * y ELSE 0 END) AS BIGINT) AS syy_$sfx"""
-      s"""WITH b AS (SELECT CAST(round(l_quantity) AS BIGINT) AS x,
+      s"""WITH b AS (SELECT ${Stages.lineitemQtySql} AS x,
                             ${Stages.centsSql("l_extendedprice")} // 100 AS y
                      FROM lineitem),
          c AS (SELECT x, CAST(count(*) AS BIGINT) AS cnt FROM b GROUP BY 1),
@@ -6453,13 +6449,13 @@ object SparkEntry {
     }),
     QueryDef("q_ccf", (s, dir) =>
       Analytics.crossCorrelationLadder(Tables.events(s, dir)).orderBy("lag"),
-      """WITH pa AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      s"""WITH pa AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                      FROM events WHERE event_type = 'purchase' GROUP BY 1),
          ta AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s FROM pa),
          ea AS (SELECT d, n * y - s AS e FROM pa, ta),
          pb AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                       CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                 FROM events WHERE event_type = 'click' GROUP BY 1),
          tb AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s FROM pb),
          eb AS (SELECT d, n * y - s AS e FROM pb, tb),
@@ -6732,7 +6728,7 @@ object SparkEntry {
          ORDER BY event_id"""),
     QueryDef("q_levene", (s, dir) =>
       Inference.brownForsythe(Tables.events(s, dir)),
-      s"""WITH base AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH base AS (SELECT event_type, ${Stages.centsSql("value")} AS cents FROM events),
          med AS (SELECT event_type, CAST(round(2 * quantile_cont(cents, 0.5)) AS BIGINT) AS med2
                  FROM base GROUP BY 1),
          dev AS (SELECT base.event_type, abs(2 * cents - med2) AS d
@@ -6748,7 +6744,7 @@ object SparkEntry {
          SELECT k, nn AS n, ${Inference.fStatSql} AS f_stat FROM t"""),
     QueryDef("q_kruskal", (s, dir) =>
       Inference.kruskalWallis(Tables.events(s, dir)),
-      s"""WITH base AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS x FROM events),
+      s"""WITH base AS (SELECT event_type, ${Stages.centsSql("value")} AS x FROM events),
          gx AS (SELECT x, event_type, CAST(count(*) AS BIGINT) AS cnt FROM base GROUP BY 1, 2),
          tx0 AS (SELECT x, CAST(sum(cnt) AS BIGINT) AS t FROM gx GROUP BY 1),
          tx AS (SELECT x, t,
@@ -6768,7 +6764,7 @@ object SparkEntry {
          SELECT k, nn AS n, ${Inference.kwHSql} AS h_stat FROM agg, ties"""),
     QueryDef("q_tukey", (s, dir) =>
       Inference.tukeyContrasts(Tables.events(s, dir)).orderBy("type_a", "type_b"),
-      s"""WITH base AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH base AS (SELECT event_type, ${Stages.centsSql("value")} AS cents FROM events),
          g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS s,
                       CAST(sum(cents * cents) AS BIGINT) AS q
                FROM base GROUP BY 1),
@@ -6784,7 +6780,7 @@ object SparkEntry {
          ORDER BY type_a, type_b"""),
     QueryDef("q_effect_size", (s, dir) =>
       Inference.cohensD(Tables.events(s, dir)),
-      s"""WITH base AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH base AS (SELECT event_type, ${Stages.centsSql("value")} AS cents FROM events),
          m AS (SELECT
                  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                  CAST(sum(CASE WHEN event_type = 'purchase' THEN cents ELSE 0 END) AS BIGINT) AS s1,
@@ -6798,8 +6794,8 @@ object SparkEntry {
          FROM m"""),
     QueryDef("q_odds_ratio", (s, dir) =>
       Inference.oddsRatio(Tables.events(s, dir)),
-      """WITH base AS (SELECT ((CAST(ts AS DATE) - DATE '1970-01-05') % 7) >= 5 AS wk,
-                              CAST(round(value * 100) AS BIGINT) > 10000 AS hi
+      s"""WITH base AS (SELECT ((CAST(ts AS DATE) - DATE '1970-01-05') % 7) >= 5 AS wk,
+                              ${Stages.centsSql("value")} > 10000 AS hi
                        FROM events),
          m AS (SELECT CAST(sum(CASE WHEN wk AND hi THEN 1 ELSE 0 END) AS BIGINT) AS a,
                       CAST(sum(CASE WHEN wk AND NOT hi THEN 1 ELSE 0 END) AS BIGINT) AS b,
@@ -6816,7 +6812,7 @@ object SparkEntry {
     QueryDef("q_binom_test", (s, dir) =>
       Inference.binomialTest(Tables.events(s, dir)).orderBy("event_type"),
       s"""WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                            CAST(sum(CASE WHEN CAST(round(value * 100) AS BIGINT) > 10000
+                            CAST(sum(CASE WHEN ${Stages.centsSql("value")} > 10000
                                           THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1)
          SELECT event_type, n, x, CAST(x AS DOUBLE) / CAST(n AS DOUBLE) AS p_hat,
@@ -6841,7 +6837,7 @@ object SparkEntry {
       Inference.rollingCorr(Tables.lineitem(s, dir)).orderBy("l_returnflag", "day_epoch"),
       s"""WITH daily AS (SELECT l_returnflag, CAST(l_shipdate AS DATE) AS d,
                                CAST(count(*) AS BIGINT) AS x,
-                               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS y
+                               CAST(sum(${Stages.centsSql("l_extendedprice")}) AS BIGINT) AS y
                         FROM lineitem GROUP BY 1, 2),
          w AS (SELECT l_returnflag, d,
                       CAST(count(*) OVER win AS BIGINT) AS wn,
@@ -6858,17 +6854,17 @@ object SparkEntry {
          FROM w ORDER BY l_returnflag, d"""),
     QueryDef("q_math_funcs", (s, dir) =>
       Relational.mathFuncs(Tables.lineitem(s, dir)).orderBy("l_orderkey", "l_linenumber"),
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
+      s"""SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
                 abs(l_quantity - 25.0) AS q_abs,
                 CAST(sign(l_quantity - 25.0) AS BIGINT) AS q_sign,
-                CAST(round(l_extendedprice * 100) AS BIGINT) // 100000 AS p_floor_k,
-                (CAST(round(l_extendedprice * 100) AS BIGINT) + 99999) // 100000 AS p_ceil_k,
+                ${Stages.centsSql("l_extendedprice")} // 100000 AS p_floor_k,
+                (${Stages.centsSql("l_extendedprice")} + 99999) // 100000 AS p_ceil_k,
                 l_orderkey % 7 AS k_mod7,
                 l_quantity * l_quantity AS q_sq,
                 CASE WHEN l_quantity < 0 THEN NULL ELSE sqrt(l_quantity) END AS q_sqrt,
                 greatest(l_quantity, 25.0) AS q_hi,
                 least(l_quantity, 25.0) AS q_lo,
-                CAST(length(bin(CAST(round(l_extendedprice * 100) AS BIGINT))) AS BIGINT) AS p_bits
+                CAST(length(bin(${Stages.centsSql("l_extendedprice")})) AS BIGINT) AS p_bits
          FROM lineitem ORDER BY l_orderkey, l_linenumber"""),
     QueryDef("q_bit_funcs", (s, dir) =>
       Relational.bitFuncs(Tables.lineitem(s, dir)).orderBy("l_returnflag", "l_linestatus"),
@@ -6949,7 +6945,7 @@ object SparkEntry {
     }),
     QueryDef("q_quantile_disc", (s, dir) =>
       Relational.discQuantiles(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
-      """WITH g AS (SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS x,
+      s"""WITH g AS (SELECT l_returnflag, ${Stages.centsSql("l_extendedprice")} AS x,
                            CAST(count(*) AS BIGINT) AS c
                     FROM lineitem GROUP BY 1, 2),
          w AS (SELECT l_returnflag, x, c,
@@ -6990,7 +6986,7 @@ object SparkEntry {
     QueryDef("q_two_prop", (s, dir) =>
       Inference.twoProportionTest(Tables.events(s, dir)),
       s"""WITH base AS (SELECT ((CAST(ts AS DATE) - DATE '1970-01-05') % 7) >= 5 AS wk,
-                               CAST(round(value * 100) AS BIGINT) > 10000 AS hi
+                               ${Stages.centsSql("value")} > 10000 AS hi
                         FROM events),
          m AS (SELECT CAST(sum(CASE WHEN NOT wk THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                       CAST(sum(CASE WHEN NOT wk AND hi THEN 1 ELSE 0 END) AS BIGINT) AS x1,
@@ -7015,7 +7011,7 @@ object SparkEntry {
          SELECT a, b, c, d, ${TextAnalysis.mcnemarSql} AS stat FROM m"""),
     QueryDef("q_hellinger", (s, dir) =>
       Inference.hellingerDistance(Tables.events(s, dir)),
-      s"""WITH g AS (SELECT CAST(round(value * 100) AS BIGINT) // 1000 AS bucket,
+      s"""WITH g AS (SELECT ${Stages.centsSql("value")} // 1000 AS bucket,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS a,
                             CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS b
                      FROM events WHERE event_type IN ('purchase', 'view') GROUP BY 1),
@@ -7038,8 +7034,8 @@ object SparkEntry {
          FROM t GROUP BY 1 HAVING count(*) >= 2 ORDER BY prefix_md5"""),
     QueryDef("q_full_outer", (s, dir) =>
       Joins.fullOuterActivity(Tables.orders(s, dir), Tables.events(s, dir)).orderBy("key"),
-      """WITH o AS (SELECT o_custkey AS key, CAST(count(*) AS BIGINT) AS n_orders,
-                           CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS order_cents
+      s"""WITH o AS (SELECT o_custkey AS key, CAST(count(*) AS BIGINT) AS n_orders,
+                           CAST(sum(${Stages.centsSql("o_totalprice")}) AS BIGINT) AS order_cents
                     FROM orders GROUP BY 1),
          e AS (SELECT user_id AS key, CAST(count(*) AS BIGINT) AS n_events FROM events GROUP BY 1)
          SELECT coalesce(o.key, e.key) AS key,
@@ -7100,7 +7096,7 @@ object SparkEntry {
     QueryDef("q_delta_method", (s, dir) =>
       Inference.deltaMethodRatio(Tables.events(s, dir)),
       s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x,
+                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x,
                                CAST(count(*) AS BIGINT) AS y
                         FROM events GROUP BY 1),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
@@ -7113,7 +7109,7 @@ object SparkEntry {
          FROM m"""),
     QueryDef("q_tost", (s, dir) =>
       Inference.tost(Tables.events(s, dir)),
-      s"""WITH base AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH base AS (SELECT event_type, ${Stages.centsSql("value")} AS cents FROM events),
          m AS (SELECT
                  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n1,
                  CAST(sum(CASE WHEN event_type = 'purchase' THEN cents ELSE 0 END) AS BIGINT) AS s1,
@@ -7134,7 +7130,7 @@ object SparkEntry {
                         FROM events),
          b AS (SELECT $duckUserArmSql AS arm,
                       epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 * 2 >= t0 + t1 AS late,
-                      CAST(round(value * 100) AS BIGINT) AS cents
+                      ${Stages.centsSql("value")} AS cents
                FROM events CROSS JOIN span),
          m AS (SELECT
                  CAST(sum(CASE WHEN arm = 0 AND NOT late THEN 1 ELSE 0 END) AS BIGINT) AS n00,
@@ -7157,7 +7153,7 @@ object SparkEntry {
     QueryDef("q_wald_iv", (s, dir) =>
       Inference.waldIV(Tables.events(s, dir)),
       s"""WITH b AS (SELECT ((CAST(ts AS DATE) - DATE '1970-01-05') % 7) >= 5 AS wk,
-                            CASE WHEN CAST(round(value * 100) AS BIGINT) > 10000 THEN 1 ELSE 0 END AS x,
+                            CASE WHEN ${Stages.centsSql("value")} > 10000 THEN 1 ELSE 0 END AS x,
                             coalesce(CAST(nullif(CASE WHEN json_valid(props)
                                                       THEN json_extract_string(props, '$$.k') END, '') AS BIGINT), 0) AS y
                      FROM events),
@@ -7175,7 +7171,7 @@ object SparkEntry {
          FROM m"""),
     QueryDef("q_top2_agg", (s, dir) =>
       Relational.topTwoAgg(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
-      """WITH b AS (SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS c
+      s"""WITH b AS (SELECT l_returnflag, ${Stages.centsSql("l_extendedprice")} AS c
                     FROM lineitem),
          m1 AS (SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n_rows, max(c) AS m1
                 FROM b GROUP BY 1)
@@ -7185,9 +7181,9 @@ object SparkEntry {
          FROM b JOIN m1 USING (l_returnflag) GROUP BY 1 ORDER BY 1"""),
     QueryDef("q_argminmax", (s, dir) =>
       Relational.argMinMax(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH b AS (SELECT event_type, event_id,
-                           CAST(round(value * 100) AS BIGINT) AS c,
-                           CAST(round(value * 100) AS BIGINT) * 100000000 + event_id AS key
+      s"""WITH b AS (SELECT event_type, event_id,
+                           ${Stages.centsSql("value")} AS c,
+                           ${Stages.centsSql("value")} * 100000000 + event_id AS key
                     FROM events)
          SELECT event_type, CAST(count(*) AS BIGINT) AS n,
                 arg_max(event_id, key) AS max_event_id,
@@ -7206,7 +7202,7 @@ object SparkEntry {
       Inference.neymanAllocation(Tables.events(s, dir)).orderBy("event_type"),
       {
       val sd = s"sqrt(${Stages.sampleCmomSql("q", "s", "s")})"
-      s"""WITH b AS (SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+      s"""WITH b AS (SELECT event_type, ${Stages.centsSql("value")} AS cents FROM events),
          g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS s,
                       CAST(sum(cents * cents) AS BIGINT) AS q
                FROM b GROUP BY 1),
@@ -7244,7 +7240,7 @@ object SparkEntry {
     QueryDef("q_dow_strength", (s, dir) =>
       Inference.dowSeasonalityStrength(Tables.events(s, dir)),
       s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS rev
+                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS rev
                         FROM events GROUP BY 1),
          dw AS (SELECT ((((d - DATE '1970-01-05') % 7) + 7) % 7) AS dow, rev FROM daily),
          g AS (SELECT dow, CAST(count(*) AS BIGINT) AS n, CAST(sum(rev) AS BIGINT) AS s,
@@ -7275,8 +7271,8 @@ object SparkEntry {
          FROM agg"""),
     QueryDef("q_lift", (s, dir) =>
       Analytics.liftDeciles(Tables.events(s, dir)).orderBy("decile"),
-      """WITH r AS (SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-                           row_number() OVER (ORDER BY CAST(round(value * 100) AS BIGINT) DESC,
+      s"""WITH r AS (SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
+                           row_number() OVER (ORDER BY ${Stages.centsSql("value")} DESC,
                                               event_id ASC) AS rn
                     FROM events),
          n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM events),
@@ -7332,7 +7328,7 @@ object SparkEntry {
          FROM m"""),
     QueryDef("q_trimmed_mean", (s, dir) =>
       Inference.trimmedMean(Tables.lineitem(s, dir)).orderBy("l_returnflag"),
-      """WITH g AS (SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS x,
+      s"""WITH g AS (SELECT l_returnflag, ${Stages.centsSql("l_extendedprice")} AS x,
                            CAST(count(*) AS BIGINT) AS t
                     FROM lineitem GROUP BY 1, 2),
          w AS (SELECT *, CAST(sum(t) OVER (PARTITION BY l_returnflag ORDER BY x
@@ -7347,8 +7343,8 @@ object SparkEntry {
          FROM c GROUP BY 1 ORDER BY 1"""),
     QueryDef("q_avg_precision", (s, dir) =>
       Inference.averagePrecision(Tables.events(s, dir)),
-      """WITH r AS (SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-                           CAST(row_number() OVER (ORDER BY CAST(round(value * 100) AS BIGINT) DESC,
+      s"""WITH r AS (SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
+                           CAST(row_number() OVER (ORDER BY ${Stages.centsSql("value")} DESC,
                                                    event_id ASC) AS BIGINT) AS rn
                     FROM events),
          c AS (SELECT y, rn, CAST(sum(y) OVER (ORDER BY rn
@@ -7363,7 +7359,7 @@ object SparkEntry {
       {
       val sd = s"sqrt(${Stages.sampleCmomSql("q", "s", "s")})"
       val mu = s"(${Stages.meanSql("s", Stages.divisorSql(nonZero = false))})"
-      s"""WITH b AS (SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
+      s"""WITH b AS (SELECT l_returnflag, ${Stages.centsSql("l_extendedprice")} AS cents
                      FROM lineitem),
          g AS (SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS s,
                       CAST(sum(cents * cents) AS BIGINT) AS q
@@ -7377,8 +7373,8 @@ object SparkEntry {
     }),
     QueryDef("q_abc", (s, dir) =>
       Inference.abcClassification(Tables.lineitem(s, dir)).orderBy("rank"),
-      """WITH rev AS (SELECT l_partkey,
-                             CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS rev
+      s"""WITH rev AS (SELECT l_partkey,
+                             CAST(sum(${Stages.centsSql("l_extendedprice")}) AS BIGINT) AS rev
                       FROM lineitem GROUP BY 1),
          t AS (SELECT CAST(sum(rev) AS BIGINT) AS tot FROM rev),
          r AS (SELECT l_partkey, rev,
@@ -7395,11 +7391,11 @@ object SparkEntry {
     QueryDef("q_rbo", (s, dir) =>
       Inference.rankBiasedOverlap(Tables.lineitem(s, dir)),
       s"""WITH ga AS (SELECT l_partkey,
-                             CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS v
+                             CAST(sum(${Stages.centsSql("l_extendedprice")}) AS BIGINT) AS v
                       FROM lineitem GROUP BY 1),
          ta AS (SELECT l_partkey, CAST(row_number() OVER (ORDER BY v DESC, l_partkey) AS BIGINT) AS ra
                 FROM ga ORDER BY v DESC, l_partkey LIMIT 10),
-         gb AS (SELECT l_partkey, CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS v
+         gb AS (SELECT l_partkey, CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS v
                 FROM lineitem GROUP BY 1),
          tb AS (SELECT l_partkey, CAST(row_number() OVER (ORDER BY v DESC, l_partkey) AS BIGINT) AS rb
                 FROM gb ORDER BY v DESC, l_partkey LIMIT 10),
@@ -7421,24 +7417,23 @@ object SparkEntry {
          GROUP BY 1 ORDER BY o_orderpriority"""),
     QueryDef("q_tpch_q6", (s, dir) =>
       TpcH.forecastRevenueChange(Tables.lineitem(s, dir), "1996-01-01", "1997-01-01"),
-      """SELECT CAST(count(*) AS BIGINT) AS n_lines,
-                sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-                    CAST(round(l_discount * 100) AS BIGINT)) / CAST(10000 AS DOUBLE) AS revenue
+      s"""SELECT CAST(count(*) AS BIGINT) AS n_lines,
+                sum(${Stages.centsSql("l_extendedprice")} *
+                    ${Stages.centsSql("l_discount")}) / CAST(10000 AS DOUBLE) AS revenue
          FROM lineitem
          WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-           AND CAST(round(l_discount * 100) AS BIGINT) BETWEEN 5 AND 7
-           AND CAST(round(l_quantity) AS BIGINT) < 24"""),
+           AND ${Stages.centsSql("l_discount")} BETWEEN 5 AND 7
+           AND ${Stages.lineitemQtySql} < 24"""),
     QueryDef("q_tpch_q9", (s, dir) =>
       TpcH.productTypeProfit(
         Tables.lineitem(s, dir), Tables.orders(s, dir), Tables.part(s, dir),
         Tables.supplier(s, dir), Tables.nation(s, dir), "red")
         .orderBy("nation", "o_year"),
-      """SELECT n_name AS nation, year(o_orderdate) AS o_year,
+      s"""SELECT n_name AS nation, year(o_orderdate) AS o_year,
                 CAST(count(*) AS BIGINT) AS n_lines,
-                sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-                      (100 - CAST(round(l_discount * 100) AS BIGINT))
-                    - CAST(round(p_retailprice * 100) AS BIGINT) * 60 *
-                      CAST(round(l_quantity) AS BIGINT)) / CAST(10000 AS DOUBLE) AS profit
+                sum(${Stages.lineitemRevUnitsSql}
+                    - ${Stages.centsSql("p_retailprice")} * 60 *
+                      ${Stages.lineitemQtySql}) / CAST(10000 AS DOUBLE) AS profit
          FROM lineitem
          JOIN part ON l_partkey = p_partkey AND p_name LIKE '%red%'
          JOIN supplier ON l_suppkey = s_suppkey
@@ -7450,10 +7445,9 @@ object SparkEntry {
         Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir),
         Tables.nation(s, dir), "1996-01-01", "1996-04-01")
         .orderBy("rank"),
-      """WITH per AS (
+      s"""WITH per AS (
            SELECT o_custkey,
-                  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-                       (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS rev_units
+                  CAST(sum(${Stages.lineitemRevUnitsSql}) AS BIGINT) AS rev_units
            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
            WHERE l_returnflag = 'R'
              AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
@@ -7490,10 +7484,9 @@ object SparkEntry {
       TpcH.topSupplier(
         Tables.supplier(s, dir), Tables.lineitem(s, dir), "1996-01-01", "1996-04-01")
         .orderBy("s_suppkey"),
-      """WITH rev AS (
+      s"""WITH rev AS (
            SELECT l_suppkey,
-                  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
-                       (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS rev_units
+                  CAST(sum(${Stages.lineitemRevUnitsSql}) AS BIGINT) AS rev_units
            FROM lineitem
            WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
            GROUP BY 1)
@@ -7512,9 +7505,9 @@ object SparkEntry {
          GROUP BY 1, 2, 3 ORDER BY p_brand, p_type, p_size"""),
     QueryDef("q_tpch_q17", (s, dir) =>
       TpcH.smallQuantityRevenue(Tables.lineitem(s, dir), Tables.part(s, dir)),
-      """WITH branded AS (
-           SELECT l_partkey, CAST(round(l_quantity) AS BIGINT) AS q,
-                  CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
+      s"""WITH branded AS (
+           SELECT l_partkey, ${Stages.lineitemQtySql} AS q,
+                  ${Stages.centsSql("l_extendedprice")} AS cents
            FROM lineitem JOIN part ON l_partkey = p_partkey
            WHERE p_brand = 'Brand#23'),
          per AS (SELECT l_partkey AS ap_partkey, CAST(count(*) AS BIGINT) AS n,
@@ -7528,16 +7521,16 @@ object SparkEntry {
       TpcH.largeVolumeCustomers(
         Tables.customer(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir))
         .orderBy("rank"),
-      """WITH big AS (
-           SELECT l_orderkey, CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS total_qty
-           FROM lineitem GROUP BY 1 HAVING sum(CAST(round(l_quantity) AS BIGINT)) > 250),
+      s"""WITH big AS (
+           SELECT l_orderkey, CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS total_qty
+           FROM lineitem GROUP BY 1 HAVING sum(${Stages.lineitemQtySql}) > 250),
          r AS (SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty,
                       row_number() OVER (ORDER BY total_qty DESC, o_orderkey ASC) AS rk
                FROM big JOIN orders ON l_orderkey = o_orderkey
                         JOIN customer ON o_custkey = c_custkey)
          SELECT CAST(rk AS BIGINT) AS rank, c_custkey, c_name, o_orderkey,
                 strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-                CAST(round(o_totalprice * 100) AS BIGINT) AS total_price_cents,
+                ${Stages.centsSql("o_totalprice")} AS total_price_cents,
                 total_qty
          FROM r WHERE rk <= 10 ORDER BY rank"""),
     QueryDef("q_tpch_q21", (s, dir) =>
@@ -7563,16 +7556,16 @@ object SparkEntry {
       TpcH.globalSalesOpportunity(
         Tables.customer(s, dir), Tables.orders(s, dir), Tables.nation(s, dir))
         .orderBy("nation"),
-      """WITH a AS (
-           SELECT CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS s_cents,
+      s"""WITH a AS (
+           SELECT CAST(sum(${Stages.centsSql("c_acctbal")}) AS BIGINT) AS s_cents,
                   CAST(count(*) AS BIGINT) AS n_pos
            FROM customer WHERE c_acctbal > 0)
          SELECT n_name AS nation, CAST(count(*) AS BIGINT) AS numcust,
-                CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS totacctbal_cents
+                CAST(sum(${Stages.centsSql("c_acctbal")}) AS BIGINT) AS totacctbal_cents
          FROM customer
          JOIN nation ON c_nationkey = n_nationkey
          CROSS JOIN a
-         WHERE CAST(round(c_acctbal * 100) AS BIGINT) * n_pos > s_cents
+         WHERE ${Stages.centsSql("c_acctbal")} * n_pos > s_cents
            AND NOT EXISTS (SELECT 1 FROM orders
                            WHERE o_custkey = c_custkey
                              AND o_orderdate >= TIMESTAMP '1999-01-01')
@@ -7582,9 +7575,9 @@ object SparkEntry {
         Tables.part(s, dir), Tables.supplier(s, dir), Tables.nation(s, dir),
         Tables.region(s, dir), Tables.lineitem(s, dir))
         .orderBy("rank"),
-      """WITH ps AS (SELECT l_suppkey AS ps_suppkey, l_partkey AS ps_partkey,
-                CAST(min(CAST(round(l_extendedprice * 100) AS BIGINT)
-                    // greatest(CAST(round(l_quantity) AS BIGINT), 1)) AS BIGINT) AS ps_cost_cents
+      s"""WITH ps AS (SELECT l_suppkey AS ps_suppkey, l_partkey AS ps_partkey,
+                CAST(min(${Stages.centsSql("l_extendedprice")}
+                    // greatest(${Stages.lineitemQtySql}, 1)) AS BIGINT) AS ps_cost_cents
               FROM lineitem GROUP BY 1, 2),
          sr AS (SELECT s_suppkey, s_name, s_acctbal, n_name
                 FROM supplier JOIN nation ON s_nationkey = n_nationkey
@@ -7605,10 +7598,10 @@ object SparkEntry {
       TpcH.importantStock(
         Tables.lineitem(s, dir), Tables.supplier(s, dir), Tables.nation(s, dir))
         .orderBy("ps_partkey"),
-      """WITH ps AS (SELECT l_suppkey AS sk, l_partkey AS pk,
-                CAST(min(CAST(round(l_extendedprice * 100) AS BIGINT)
-                    // greatest(CAST(round(l_quantity) AS BIGINT), 1)) AS BIGINT) AS c,
-                CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS q
+      s"""WITH ps AS (SELECT l_suppkey AS sk, l_partkey AS pk,
+                CAST(min(${Stages.centsSql("l_extendedprice")}
+                    // greatest(${Stages.lineitemQtySql}, 1)) AS BIGINT) AS c,
+                CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS q
               FROM lineitem GROUP BY 1, 2),
          v AS (SELECT pk AS ps_partkey, CAST(sum(c * q) AS BIGINT) AS value_units
                FROM ps JOIN supplier ON sk = s_suppkey
@@ -7626,11 +7619,11 @@ object SparkEntry {
         Tables.lineitem(s, dir), Tables.part(s, dir), Tables.supplier(s, dir),
         Tables.nation(s, dir))
         .orderBy("s_suppkey"),
-      """WITH ps AS (SELECT l_suppkey AS sk, l_partkey AS pk,
-                CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS q
+      s"""WITH ps AS (SELECT l_suppkey AS sk, l_partkey AS pk,
+                CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS q
               FROM lineitem GROUP BY 1, 2),
          y AS (SELECT l_suppkey AS sk, l_partkey AS pk,
-                CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS yq
+                CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS yq
                FROM lineitem
                WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
                GROUP BY 1, 2),
@@ -8149,7 +8142,7 @@ object SparkEntry {
       .map(k => s"CAST(coalesce(sum(CASE WHEN lag = $k THEN num END), 0) AS DECIMAL(38,0)) AS num$k")
       .mkString(", ")
     s"""daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+                         CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                   FROM events GROUP BY 1),
         tot AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s FROM daily),
         dm AS (SELECT d, n, n * y - s AS e FROM daily, tot),

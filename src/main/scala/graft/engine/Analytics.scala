@@ -2964,7 +2964,7 @@ object Analytics {
       _.select(
         expr(s"CASE WHEN $bucket < 6 THEN 'train' WHEN $bucket < 8 THEN 'cal' ELSE 'test' END")
           .as("split"),
-        expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
+        expr(Stages.lineitemQtySql).as("x"),
         expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y")))
     val sums = Stages.bivariateSums(col("x"), col("y"))
     val stats = base
@@ -3264,7 +3264,7 @@ object Analytics {
     */
   def effectiveSampleSize(lineitem: DataFrame): DataFrame =
     lineitem
-      .select(col("l_returnflag"), expr("CAST(round(l_quantity) AS BIGINT)").as("w"))
+      .select(col("l_returnflag"), expr(Stages.lineitemQtySql).as("w"))
       .groupBy(col("l_returnflag"))
       .agg(
         count(lit(1)).as("n"),
@@ -3539,7 +3539,7 @@ object Analytics {
     // twice
     val base = lineitem.select(
       expr(bucket).as("fold"),
-      expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
+      expr(Stages.lineitemQtySql).as("x"),
       expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y"))
       .cacheT()
     val perFold = base
@@ -3758,7 +3758,7 @@ object Analytics {
   def cooksDistanceTopK(lineitem: DataFrame, k: Int = 20): DataFrame = {
     val base = lineitem.select(
       col("l_orderkey"), col("l_linenumber"),
-      expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
+      expr(Stages.lineitemQtySql).as("x"),
       expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y"))
     val sums = Stages.bivariateSums(col("x"), col("y"))
     val stats = base.agg(sums.head, sums.tail: _*)
@@ -4213,7 +4213,7 @@ object Analytics {
     val cxy = cmomSql("swxy", "swx", "swy", sw)
     lineitem
       .select(
-        expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
+        expr(Stages.lineitemQtySql).as("x"),
         expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y"))
       .withColumn("w", col("x"))
       .agg(
@@ -4325,7 +4325,7 @@ object Analytics {
     */
   def segmentedRegression(lineitem: DataFrame): DataFrame = {
     val base = lineitem.select(
-      expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
+      expr(Stages.lineitemQtySql).as("x"),
       expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y"))
     val split = Relational
       .gridRunningWeight(base.groupBy(col("x")).agg(count(lit(1)).as("cnt")), Nil, "x", "cnt")

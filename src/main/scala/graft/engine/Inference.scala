@@ -857,7 +857,7 @@ object Inference {
         k, col("v").desc, col("l_partkey").asc)
         .select(col("l_partkey"), col("rank").as(rname))
     val a = topBy(sum(expr(Stages.centsSql("l_extendedprice"))), "ra")
-    val b = topBy(sum(expr("CAST(round(l_quantity) AS BIGINT)")), "rb")
+    val b = topBy(sum(expr(Stages.lineitemQtySql)), "rb")
     a.join(b, "l_partkey")
       .agg(
         count(lit(1)).as("n_matched"),
@@ -1285,7 +1285,7 @@ object Inference {
   def ordinalAssociation(lineitem: DataFrame): DataFrame = {
     val cells = lineitem
       .groupBy(
-        expr("CAST(round(l_quantity) AS BIGINT)").as("q"),
+        expr(Stages.lineitemQtySql).as("q"),
         expr(s"${Stages.centsSql("l_extendedprice")} div 100000").as("p"))
       .agg(count(lit(1)).as("n"))
     val c1 = cells.select(col("q").as("q1"), col("p").as("p1"), col("n").as("n1"))

@@ -81,7 +81,7 @@ object RefPipelines {
     * cent midpoint and `round(,2)` splits across engines.
     */
   val lineChargeCentsSql: String =
-    "CAST(round(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100) AS BIGINT)"
+    Stages.centsSql("l_extendedprice * (1 - l_discount) * (1 + l_tax)")
 
   /** Query 3 analog — abnormal-fee detector (`spark_streaming.py:196-239`).
     * Recompute the order total from its parts (P7 component sum) and flag

@@ -317,7 +317,7 @@ object Relational {
   def zorderLayout(lineitem: DataFrame): DataFrame =
     lineitem
       .select(
-        expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
+        expr(Stages.lineitemQtySql).as("x"),
         expr(s"${Stages.centsSql("l_extendedprice")} div 100 div 512").as("y"))
       .withColumn("zkey", expr(Stages.mortonSql("x", "y", 8)))
       .groupBy(expr("zkey div 256").as("zrange"))
@@ -338,7 +338,7 @@ object Relational {
   def regressionOutliers(lineitem: DataFrame, mult: String = "1.6"): DataFrame = {
     val base = lineitem.select(
       col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
-      expr("CAST(round(l_quantity) AS BIGINT)").as("x"),
+      expr(Stages.lineitemQtySql).as("x"),
       expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y"))
     val sums = Stages.bivariateSums(col("x"), col("y"))
     val moments = base
@@ -663,7 +663,7 @@ object Relational {
     val dist = Views.pinned(lineitem, "qtyWeightDistByFlag")(
       _.select(
         col("l_returnflag"),
-        expr("greatest(CAST(round(l_quantity) AS BIGINT), 0)").as("wt"),
+        expr(s"greatest(${Stages.lineitemQtySql}, 0)").as("wt"),
         expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("y"))
         .groupBy(col("l_returnflag"), col("y"))
         .agg(sum(col("wt")).as("wt")))
@@ -765,7 +765,7 @@ object Relational {
     val sums = Stages.bivariateSums(col("x"), col("y"))
     lineitem
       .withColumn("x", expr(s"${Stages.centsSql("l_extendedprice")} div 100"))
-      .withColumn("y", expr("CAST(round(l_quantity) AS BIGINT)"))
+      .withColumn("y", expr(Stages.lineitemQtySql))
       .groupBy(col("l_returnflag"))
       .agg(sums.head, sums.tail: _*)
       .select(
@@ -785,7 +785,7 @@ object Relational {
   def linearRegression(lineitem: DataFrame): DataFrame = {
     val sums = Stages.bivariateSums(col("x"), col("y"))
     lineitem
-      .withColumn("x", expr("CAST(round(l_quantity) AS BIGINT)"))
+      .withColumn("x", expr(Stages.lineitemQtySql))
       .withColumn("y", expr(s"${Stages.centsSql("l_extendedprice")} div 100"))
       .groupBy(col("l_returnflag"))
       .agg(sums.head, sums.tail: _*)
@@ -1014,7 +1014,7 @@ object Relational {
     */
   def medianMode(lineitem: DataFrame): DataFrame = {
     val dist = lineitem
-      .select(col("l_returnflag"), expr("CAST(round(l_quantity) AS BIGINT)").as("q"))
+      .select(col("l_returnflag"), expr(Stages.lineitemQtySql).as("q"))
       .groupBy(col("l_returnflag"), col("q"))
       .agg(count(lit(1)).as("n"))
     val med = dist
@@ -1202,7 +1202,7 @@ object Relational {
     lineitem
       .select(
         expr(s"${Stages.centsSql("l_extendedprice")} div 10000").as("price_bin"),
-        expr("CAST(round(l_quantity) AS BIGINT) div 10").as("qty_bin"))
+        expr(s"${Stages.lineitemQtySql} div 10").as("qty_bin"))
       .groupBy(col("price_bin"), col("qty_bin"))
       .agg(count(lit(1)).as("n"))
 
@@ -1219,7 +1219,7 @@ object Relational {
     val perX = lineitem
       .select(
         expr(s"${Stages.centsSql("l_extendedprice")} div 100").as("price_dollars"),
-        expr("CAST(round(l_quantity) AS BIGINT)").as("qty"))
+        expr(Stages.lineitemQtySql).as("qty"))
       .groupBy(col("price_dollars"))
       .agg(max(col("qty")).as("max_qty"))
     val w = Window
@@ -1341,10 +1341,7 @@ object Relational {
       nation: DataFrame,
       region: DataFrame): DataFrame =
     lineitem
-      .withColumn(
-        "rev_units",
-        expr(
-          s"${Stages.centsSql("l_extendedprice")} * (100 - ${Stages.centsSql("l_discount")})"))
+      .withColumn("rev_units", expr(Stages.lineitemRevUnitsSql))
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .join(customer, col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
@@ -2101,7 +2098,7 @@ object Relational {
         .groupBy(col("l_partkey"))
         .agg(
           sum(expr(Stages.centsSql("l_extendedprice"))).as("c"),
-          sum(expr("CAST(round(l_quantity) AS BIGINT)")).as("q"))
+          sum(expr(Stages.lineitemQtySql)).as("q"))
     val a = yearAgg(year0).select(col("l_partkey"), col("c").as("c0"), col("q").as("q0"))
     val b = yearAgg(year1).select(col("l_partkey"), col("c").as("c1"), col("q").as("q1"))
     a.join(b, Seq("l_partkey"))
@@ -2261,9 +2258,9 @@ object Relational {
       .join(broadcast(split), Seq("l_partkey"))
       .groupBy(col("p_brand"))
       .agg(
-        expr("sum(CASE WHEN cheap THEN CAST(round(l_quantity) AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
+        expr(s"sum(CASE WHEN cheap THEN ${Stages.lineitemQtySql} ELSE CAST(0 AS BIGINT) END)")
           .as("q1"),
-        expr("sum(CASE WHEN NOT cheap THEN CAST(round(l_quantity) AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
+        expr(s"sum(CASE WHEN NOT cheap THEN ${Stages.lineitemQtySql} ELSE CAST(0 AS BIGINT) END)")
           .as("q2"),
         expr("sum(CASE WHEN cheap THEN pc ELSE CAST(0 AS BIGINT) END)").as("ps1"),
         expr("sum(CASE WHEN cheap THEN 1 ELSE 0 END)").as("n1"),
@@ -2301,7 +2298,7 @@ object Relational {
   def inventoryPlan(lineitem: DataFrame, k: Int = 20): DataFrame = {
     val perDay = lineitem
       .groupBy(col("l_partkey"), expr("CAST(l_shipdate AS DATE)").as("day"))
-      .agg(expr("sum(CAST(round(l_quantity) AS BIGINT))").as("q"))
+      .agg(expr(s"sum(${Stages.lineitemQtySql})").as("q"))
     val stats = perDay
       .groupBy(col("l_partkey"))
       .agg(
@@ -2351,7 +2348,7 @@ object Relational {
       .groupBy(
         col("l_partkey"),
         (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).as("m"))
-      .agg(expr("sum(CAST(round(l_quantity) AS BIGINT))").as("q"))
+      .agg(expr(s"sum(${Stages.lineitemQtySql})").as("q"))
     val perPart = monthly
       .groupBy(col("l_partkey"))
       .agg(
@@ -2513,11 +2510,10 @@ object Relational {
   def sqlQ1(spark: org.apache.spark.sql.SparkSession, lineitem: DataFrame): DataFrame = {
     lineitem.createOrReplaceTempView("graft_sql_lineitem")
     spark.sql(
-      """SELECT l_returnflag, l_linestatus,
-                CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-                CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_cents,
-                CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                         * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS sum_disc_units,
+      s"""SELECT l_returnflag, l_linestatus,
+                CAST(sum(${Stages.lineitemQtySql}) AS BIGINT) AS sum_qty,
+                CAST(sum(${Stages.centsSql("l_extendedprice")}) AS BIGINT) AS sum_base_cents,
+                CAST(sum(${Stages.lineitemRevUnitsSql}) AS BIGINT) AS sum_disc_units,
                 CAST(count(*) AS BIGINT) AS count_order
          FROM graft_sql_lineitem
          GROUP BY l_returnflag, l_linestatus""")
@@ -2540,10 +2536,9 @@ object Relational {
     customer.createOrReplaceTempView("graft_sql_c")
     nation.createOrReplaceTempView("graft_sql_n")
     spark.sql(
-      """WITH rev AS (
+      s"""WITH rev AS (
            SELECT n_name, year(o_orderdate) AS o_year,
-                  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
-                           * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT) AS rev_units
+                  CAST(sum(${Stages.lineitemRevUnitsSql}) AS BIGINT) AS rev_units
            FROM graft_sql_l
            JOIN graft_sql_o ON l_orderkey = o_orderkey
            JOIN graft_sql_c ON o_custkey = c_custkey

@@ -54,20 +54,25 @@ object Stages {
   // cluster-scale follow-up.
 
   /** SQL fragment: value column → integer cents (values have 2 decimals, so
-    * this is exact).
+    * this is exact). This object is the one place that spells the
+    * fixed-point formats the cross-engine exactness contract rides on:
+    * cents (this function), lineitem revenue units
+    * ([[lineitemRevUnitsSql]]) and whole lineitem quantities
+    * ([[lineitemQtySql]]). Every Spark builder and every DuckDB oracle
+    * calls them; `Md5HashSourceSpec` fails on a hand-written copy
+    * anywhere else.
     */
   def centsSql(valueExpr: String): String =
     s"CAST(round(($valueExpr) * 100) AS BIGINT)"
 
   /** SQL fragment: lineitem revenue in hundredth-cent units —
-    * cents(l_extendedprice) · (100 − discount%), exact BIGINT. The ONE
-    * spelling of the money expression the cross-engine exactness
-    * contract rides on (previously copied verbatim in four places:
-    * Relational×3 and TpcH — a precision follow-up applied to one copy
-    * would have silently missed the others).
+    * cents(l_extendedprice) · (100 − discount%), exact BIGINT.
     */
   val lineitemRevUnitsSql: String =
-    s"${centsSql("l_extendedprice")} * (100 - CAST(round(l_discount * 100) AS BIGINT))"
+    s"${centsSql("l_extendedprice")} * (100 - ${centsSql("l_discount")})"
+
+  /** SQL fragment: lineitem quantity as a whole number (BIGINT). */
+  val lineitemQtySql: String = "CAST(round(l_quantity) AS BIGINT)"
 
   /** SQL fragment: average of integer-cents expr, rounded HALF_UP
     * (half away from zero, BigDecimal.RoundingMode.HALF_UP) to a whole

@@ -27,11 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object TpcH {
 
-  /** Hundredth-cent revenue units: cents(extprice) · (100 − disc%). */
-  private val revMicros = Stages.lineitemRevUnitsSql
-
-  private val qtyInt = "CAST(round(l_quantity) AS BIGINT)"
-
   private def epochDay(c: String) = s"(CAST($c AS LONG) div 86400)"
 
   /** The fixture's stand-in for `partsupp`: supplier–part offerings
@@ -49,9 +44,9 @@ object TpcH {
     Views.pinned(lineitem, "supplyEvidence")(li =>
       li.groupBy(col("l_suppkey").as("ps_suppkey"), col("l_partkey").as("ps_partkey"))
         .agg(
-          min(expr(s"${Stages.centsSql("l_extendedprice")} div greatest($qtyInt, 1)"))
+          min(expr(s"${Stages.centsSql("l_extendedprice")} div greatest(${Stages.lineitemQtySql}, 1)"))
             .as("ps_cost_cents"),
-          expr(s"sum($qtyInt)").as("ps_qty")))
+          expr(s"sum(${Stages.lineitemQtySql})").as("ps_qty")))
 
   /** Pinned (order, supplier) ship-lag evidence: the MAX ship-vs-order
     * lag in whole days per (orderkey, suppkey), joined once per corpus
@@ -179,7 +174,7 @@ object TpcH {
         col("l_shipdate") >= lit(yearStart).cast("timestamp") &&
           col("l_shipdate") < lit(yearEndExcl).cast("timestamp"))
       .groupBy(col("l_suppkey").as("y_suppkey"), col("l_partkey").as("y_partkey"))
-      .agg(expr(s"sum($qtyInt)").as("y_qty"))
+      .agg(expr(s"sum(${Stages.lineitemQtySql})").as("y_qty"))
     val concentrated = yearQty
       .join(promoParts, col("y_partkey") === col("p_partkey"), "left_semi")
       .join(
@@ -238,11 +233,11 @@ object TpcH {
       .filter(
         col("l_shipdate") >= lit(yearStart).cast("timestamp") &&
           col("l_shipdate") < lit(yearEndExcl).cast("timestamp") &&
-          expr(s"CAST(round(l_discount * 100) AS BIGINT) BETWEEN $discLo AND $discHi") &&
-          expr(s"$qtyInt < $qtyUnder"))
+          expr(s"${Stages.centsSql("l_discount")} BETWEEN $discLo AND $discHi") &&
+          expr(s"${Stages.lineitemQtySql} < $qtyUnder"))
       .agg(
         count(lit(1)).cast("long").as("n_lines"),
-        expr(s"sum(${Stages.centsSql("l_extendedprice")} * CAST(round(l_discount * 100) AS BIGINT))" +
+        expr(s"sum(${Stages.centsSql("l_extendedprice")} * ${Stages.centsSql("l_discount")})" +
           " / CAST(10000 AS DOUBLE)").as("revenue"))
 
   /** Q9-shaped product-type profit: per supplier nation × order year,
@@ -273,7 +268,8 @@ object TpcH {
       .groupBy(col("n_name").as("nation"), col("o_year"))
       .agg(
         count(lit(1)).cast("long").as("n_lines"),
-        expr(s"sum($revMicros - ${Stages.centsSql("p_retailprice")} * 60 * $qtyInt)" +
+        expr(s"sum(${Stages.lineitemRevUnitsSql}" +
+          s" - ${Stages.centsSql("p_retailprice")} * 60 * ${Stages.lineitemQtySql})" +
           " / CAST(10000 AS DOUBLE)").as("profit"))
 
   /** Q10 returned-item reporting: revenue lost to 'R'-flagged lines for
@@ -298,7 +294,7 @@ object TpcH {
           .select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
-      .agg(expr(s"sum($revMicros)").as("rev_units"))
+      .agg(expr(s"sum(${Stages.lineitemRevUnitsSql})").as("rev_units"))
     val named = perCust
       .join(broadcast(customer.select(col("c_custkey"), col("c_name"), col("c_acctbal"),
         col("c_nationkey"))), col("o_custkey") === col("c_custkey"))
@@ -376,7 +372,7 @@ object TpcH {
         col("l_shipdate") >= lit(qStart).cast("timestamp") &&
           col("l_shipdate") < lit(qEndExcl).cast("timestamp"))
       .groupBy(col("l_suppkey"))
-      .agg(expr(s"sum($revMicros)").as("rev_units"))
+      .agg(expr(s"sum(${Stages.lineitemRevUnitsSql})").as("rev_units"))
     val mx = rev.agg(max(col("rev_units")).as("max_units"))
     rev
       .crossJoin(broadcast(mx))
@@ -426,7 +422,7 @@ object TpcH {
       part.filter(col("p_brand") === brand).select(col("p_partkey")))
     val branded = lineitem
       .join(brandParts, col("l_partkey") === col("p_partkey"))
-      .select(col("l_partkey"), expr(qtyInt).as("q"),
+      .select(col("l_partkey"), expr(Stages.lineitemQtySql).as("q"),
         expr(Stages.centsSql("l_extendedprice")).as("cents"))
     val perPart = branded
       .groupBy(col("l_partkey"))
@@ -453,7 +449,7 @@ object TpcH {
       k: Int = 10): DataFrame = {
     val big = lineitem
       .groupBy(col("l_orderkey"))
-      .agg(expr(s"sum($qtyInt)").as("total_qty"))
+      .agg(expr(s"sum(${Stages.lineitemQtySql})").as("total_qty"))
       .filter(col("total_qty") > qtyOver)
     val named = big
       .join(orders.select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
@@ -465,7 +461,7 @@ object TpcH {
       .select(
         col("rank"), col("c_custkey"), col("c_name"), col("o_orderkey"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
-        expr(s"${Stages.centsSql("o_totalprice")}").as("total_price_cents"),
+        expr(Stages.centsSql("o_totalprice")).as("total_price_cents"),
         col("total_qty"))
   }
 
