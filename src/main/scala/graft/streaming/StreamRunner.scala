@@ -81,6 +81,15 @@ final class StreamRunner(
     */
   private val checkpointFileManager = classOf[FileSystemBasedCheckpointFileManager].getName
 
+  /** The value range [[abnormalValue]] accepts; a value outside it alerts. */
+  private val valueLo = 1.0
+  private val valueHi = 120.0
+
+  /** How far the payload's claimed amount may stray from `value` before
+    * [[abnormalDiscrepancy]] flags the event.
+    */
+  private val discrepancyThreshold = 100.0
+
   /** foreachBatch writer shared by all queries (K2). The reference
     * computes each detector batch twice (count + write, no cache —
     * SURVEY.md §3.2). Here the detector's row count rides inside the
@@ -120,12 +129,12 @@ final class StreamRunner(
       .start()
   }
 
-  /** Detector 1 analog: value outside [lo, hi] (reference
+  /** Detector 1 analog: value outside [`valueLo`, `valueHi`] (reference
     * `spark_streaming.py:155-193`).
     */
-  def abnormalValue(events: DataFrame, lo: Double = 1.0, hi: Double = 120.0): DataFrame =
+  def abnormalValue(events: DataFrame): DataFrame =
     events
-      .filter(Stages.rangeViolation(col("value"), lo, hi))
+      .filter(Stages.rangeViolation(col("value"), valueLo, valueHi))
       .select(
         col("event_id"),
         col("user_id"),
@@ -133,9 +142,10 @@ final class StreamRunner(
         round(col("value"), 2).as("value"))
 
   /** Detector 2 analog: payload-claimed amount vs actual value
-    * discrepancy-or-null (reference `spark_streaming.py:196-239`).
+    * discrepancy-or-null, more than [[discrepancyThreshold]] apart
+    * (reference `spark_streaming.py:196-239`).
     */
-  def abnormalDiscrepancy(events: DataFrame, threshold: Double = 100.0): DataFrame =
+  def abnormalDiscrepancy(events: DataFrame): DataFrame =
     events
       .withColumn(
         "caculated_value",
@@ -145,7 +155,7 @@ final class StreamRunner(
         // default would throw on the first dirty record and crash-loop
         // the detector from its checkpoint
         get_json_object(col("props"), "$.k").try_cast(org.apache.spark.sql.types.DoubleType))
-      .filter(Stages.discrepancyOrNull(col("value"), col("caculated_value"), threshold))
+      .filter(Stages.discrepancyOrNull(col("value"), col("caculated_value"), discrepancyThreshold))
       .select(
         col("event_id"),
         col("user_id"),
