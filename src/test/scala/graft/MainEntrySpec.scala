@@ -40,4 +40,10 @@ class MainEntrySpec extends AnyFunSuite {
       s"main objects: ${found.map { case (o, p) => s"$o ($p)" }.sorted.mkString(", ")}")
     assert(found.size == expected.size, s"a main object is declared twice: $found")
   }
+
+  test("Explain rejects an unknown query name through SparkEntry.select") {
+    val e = intercept[IllegalArgumentException](
+      Explain.main(Array("no-such-fixture", "q_no_such_query")))
+    assert(e.getMessage == "unknown queries: q_no_such_query")
+  }
 }
