@@ -81,13 +81,11 @@ final class StreamRunner(
     */
   private val checkpointFileManager = classOf[FileSystemBasedCheckpointFileManager].getName
 
-  /** The value range [[abnormalValue]] accepts; a value outside it alerts. */
+  /** [[abnormalValue]] flags a value outside [valueLo, valueHi]. */
   private val valueLo = 1.0
   private val valueHi = 120.0
 
-  /** How far the payload's claimed amount may stray from `value` before
-    * [[abnormalDiscrepancy]] flags the event.
-    */
+  /** [[abnormalDiscrepancy]] flags a claimed amount further than this from `value`. */
   private val discrepancyThreshold = 100.0
 
   /** foreachBatch writer shared by all queries (K2). The reference
@@ -142,8 +140,7 @@ final class StreamRunner(
         round(col("value"), 2).as("value"))
 
   /** Detector 2 analog: payload-claimed amount vs actual value
-    * discrepancy-or-null, more than [[discrepancyThreshold]] apart
-    * (reference `spark_streaming.py:196-239`).
+    * discrepancy-or-null (reference `spark_streaming.py:196-239`).
     */
   def abnormalDiscrepancy(events: DataFrame): DataFrame =
     events
