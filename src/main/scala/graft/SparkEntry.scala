@@ -63,10 +63,10 @@ object SparkEntry {
       s"""SELECT l_orderkey, l_linenumber,
          strftime(o_orderdate, '%Y-%m-%d') AS order_date,
          strftime(l_shipdate, '%Y-%m-%d') AS ship_date,
-         ${engine.Stages.halfUpCentiSql("epoch(l_shipdate) - epoch(o_orderdate)", 86400L)} AS lead_days
+         ${Stages.halfUpCentiSql(duckLeadSecs, 86400L)} AS lead_days
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         WHERE (epoch(l_shipdate) - epoch(o_orderdate)) / 86400 < 1
-            OR (epoch(l_shipdate) - epoch(o_orderdate)) / 86400 > 2000
+         WHERE ($duckLeadSecs) / 86400 < 1
+            OR ($duckLeadSecs) / 86400 > 2000
          ORDER BY l_orderkey, l_linenumber"""),
     QueryDef("q_abnormal_fee", (s, dir) =>
       RefPipelines
@@ -85,15 +85,13 @@ object SparkEntry {
          ORDER BY o_orderkey"""),
     QueryDef("q_hourly_avg_revenue", (s, dir) =>
       RefPipelines.hourlyAvgRevenue(Tables.events(s, dir)).orderBy("date", "hour"),
-      s"""SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d') AS date,
-                strftime(date_trunc('hour', ts), '%H:%M:%S') AS hour,
+      s"""SELECT $duckWindowHour,
                 $avgRevenueAggs
          FROM events WHERE value IS NOT NULL
          GROUP BY date_trunc('hour', ts) ORDER BY 1, 2"""),
     QueryDef("q_hourly_trip_count", (s, dir) =>
       RefPipelines.hourlyTripCount(Tables.events(s, dir)).orderBy("date", "hour"),
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d') AS date,
-                strftime(date_trunc('hour', ts), '%H:%M:%S') AS hour,
+      s"""SELECT $duckWindowHour,
                 count(*) AS total_trips,
                 count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase_trips,
                 count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup_trips
@@ -102,8 +100,7 @@ object SparkEntry {
       RefPipelines
         .hourlyCountByLookup(Tables.events(s, dir), Tables.nation(s, dir))
         .orderBy("date", "hour", "borough"),
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d') AS date,
-                strftime(date_trunc('hour', ts), '%H:%M:%S') AS hour,
+      s"""SELECT $duckWindowHour,
                 n_name AS borough, count(user_id) AS trip_count
          FROM events LEFT JOIN nation ON (user_id % 25) = n_nationkey
          GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""),
@@ -171,8 +168,8 @@ object SparkEntry {
          ORDER BY event_id"""),
     QueryDef("q_range_join", (s, dir) =>
       Joins.followUpsWithin(Tables.events(s, dir), 3600).orderBy("event_a", "event_b"),
-      """SELECT a.user_id, a.event_id AS event_a, b.event_id AS event_b,
-                (epoch_us(b.ts) // 1000000 - epoch_us(a.ts) // 1000000) AS gap_seconds
+      s"""SELECT a.user_id, a.event_id AS event_a, b.event_id AS event_b,
+                (${Stages.duckEpochBucketSql("b.ts", 1)} - ${Stages.duckEpochBucketSql("a.ts", 1)}) AS gap_seconds
          FROM events a JOIN events b
            ON a.user_id = b.user_id AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 1 HOUR
          ORDER BY event_a, event_b"""),
@@ -195,8 +192,8 @@ object SparkEntry {
       s"""WITH flagged AS (
            SELECT user_id, event_id, ts, value,
                   CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                         OR (epoch_us(ts) // 1000000
-                             - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) // 1000000) > 1800
+                         OR (${Stages.duckEpochBucketSql("ts", 1)}
+                             - ${Stages.duckEpochBucketSql("lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)", 1)}) > 1800
                        THEN 1 ELSE 0 END AS is_new
            FROM events),
          sessions AS (
@@ -233,7 +230,7 @@ object SparkEntry {
       s"""WITH flagged AS (
            SELECT user_id, ts, value,
                   CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                         OR (epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))) >= 1800 * 1000000
+                         OR date_diff('microsecond', lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id), ts) >= 1800 * 1000000
                        THEN 1 ELSE 0 END AS is_new,
                   event_id
            FROM events),
@@ -242,8 +239,8 @@ object SparkEntry {
                   sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS sid
            FROM flagged)
          SELECT user_id,
-                CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start,
-                CAST(floor(epoch(max(ts))) AS BIGINT) + 1800 AS session_end,
+                ${Stages.duckEpochBucketSql("min(ts)", 1)} AS session_start,
+                ${Stages.duckEpochBucketSql("max(ts)", 1)} + 1800 AS session_end,
                 count(*) AS n_events,
                 sum(${Stages.centsSql("value")}) / CAST(100 AS DOUBLE) AS total_value
          FROM sessions GROUP BY user_id, sid ORDER BY user_id, session_start"""),
@@ -280,7 +277,7 @@ object SparkEntry {
       // Spark's window() floor-aligns pre-1970 timestamps where the old
       // truncating // shifted them a full window (extreme sweep, r10).
       s"""WITH s AS (
-           SELECT CAST(floor(epoch(ts)) AS BIGINT) AS sec,
+           SELECT ${Stages.duckEpochBucketSql("ts", 1)} AS sec,
                   ${Stages.centsSql("value")} AS cents
            FROM events),
          w AS (
@@ -551,8 +548,8 @@ object SparkEntry {
          ORDER BY event_id"""),
     QueryDef("q_streaks", (s, dir) =>
       Analytics.activityStreaks(Tables.events(s, dir)).orderBy("user_id"),
-      """WITH days AS (SELECT DISTINCT user_id,
-                              epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day
+      s"""WITH days AS (SELECT DISTINCT user_id,
+                              ${Stages.duckEpochBucketSql("ts", 86400)} AS day
                        FROM events),
          isl AS (SELECT user_id, day,
                         day - row_number() OVER (PARTITION BY user_id ORDER BY day) AS island
@@ -565,7 +562,7 @@ object SparkEntry {
       Analytics.rfmSegments(Tables.events(s, dir)).orderBy("user_id"),
       s"""WITH pu AS (
             SELECT user_id,
-                   max(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) AS recency_day,
+                   max(${Stages.duckEpochBucketSql("ts", 86400)}) AS recency_day,
                    count(*) AS frequency,
                    CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS monetary_cents
             FROM events WHERE event_type = 'purchase' GROUP BY user_id)
@@ -598,7 +595,7 @@ object SparkEntry {
          ORDER BY n DESC, user_id ASC LIMIT 10"""),
     QueryDef("q_funnel", (s, dir) =>
       Analytics.funnel(Tables.events(s, dir), "signup", "purchase", 168).orderBy("user_id"),
-      """WITH a AS (SELECT user_id, min(ts) AS ts_a FROM events WHERE event_type = 'signup' GROUP BY user_id),
+      s"""WITH a AS (SELECT user_id, min(ts) AS ts_a FROM events WHERE event_type = 'signup' GROUP BY user_id),
          j AS (SELECT a.user_id, a.ts_a, b.ts AS ts_b
                FROM a LEFT JOIN events b
                  ON b.user_id = a.user_id AND b.event_type = 'purchase' AND b.ts >= a.ts_a),
@@ -607,7 +604,7 @@ object SparkEntry {
                 strftime(CAST(ts_a AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS first_a,
                 strftime(CAST(ts_conv AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS first_b_after,
                 (ts_conv IS NOT NULL AND
-                 epoch_us(CAST(ts_conv AS TIMESTAMP)) // 1000000 - epoch_us(CAST(ts_a AS TIMESTAMP)) // 1000000 <= 604800)
+                 ${Stages.duckEpochBucketSql("ts_conv", 1)} - ${Stages.duckEpochBucketSql("ts_a", 1)} <= 604800)
                   AS converted
          FROM g ORDER BY user_id"""),
     QueryDef("q_funnel3", (s, dir) =>
@@ -673,7 +670,7 @@ object SparkEntry {
          SELECT rank, prev_type, curr_type, n FROM ranked WHERE rank <= 15 ORDER BY rank"""),
     QueryDef("q_gap_fill", (s, dir) =>
       Analytics.gapFilledHourly(Tables.events(s, dir)).orderBy("hour_epoch"),
-      """WITH c AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour_epoch, count(*) AS n_raw
+      s"""WITH c AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour_epoch, count(*) AS n_raw
                     FROM events GROUP BY 1),
          r AS (SELECT min(hour_epoch) AS h0, max(hour_epoch) AS h1 FROM c),
          hours AS (SELECT unnest(generate_series(h0, h1)) AS hour_epoch FROM r)
@@ -683,7 +680,7 @@ object SparkEntry {
          ORDER BY hours.hour_epoch"""),
     QueryDef("q_retention", (s, dir) =>
       Analytics.retentionCohorts(Tables.events(s, dir)).orderBy("cohort_day", "week_offset"),
-      """WITH d AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS act_day FROM events),
+      s"""WITH d AS (SELECT user_id, ${Stages.duckEpochBucketSql("ts", 86400)} AS act_day FROM events),
          firsts AS (SELECT user_id, min(act_day) AS cohort_day FROM d GROUP BY user_id),
          j AS (SELECT d.user_id, firsts.cohort_day, (d.act_day - firsts.cohort_day) // 7 AS week_offset
                FROM d JOIN firsts ON d.user_id = firsts.user_id)
@@ -702,7 +699,7 @@ object SparkEntry {
     QueryDef("q_daily_topk", (s, dir) =>
       Analytics.dailyTopSpenders(Tables.events(s, dir), 3).orderBy("day_epoch", "rank"),
       s"""WITH per AS (
-           SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day_epoch, user_id,
+           SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS day_epoch, user_id,
                   CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS cents
            FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
          r AS (SELECT *, CAST(row_number() OVER (PARTITION BY day_epoch
@@ -722,14 +719,14 @@ object SparkEntry {
          SELECT t1, t2, t3, n, rank FROM r WHERE rank <= 15 ORDER BY rank"""),
     QueryDef("q_time_to_convert", (s, dir) =>
       Analytics.timeToConvert(Tables.events(s, dir)).orderBy("cohort_day"),
-      """WITH a AS (SELECT user_id, min(ts) AS ts_a FROM events WHERE event_type = 'signup' GROUP BY user_id),
+      s"""WITH a AS (SELECT user_id, min(ts) AS ts_a FROM events WHERE event_type = 'signup' GROUP BY user_id),
          j AS (SELECT a.user_id, a.ts_a, b.ts AS ts_b
                FROM a LEFT JOIN events b
                  ON b.user_id = a.user_id AND b.event_type = 'purchase' AND b.ts >= a.ts_a),
          g AS (SELECT user_id, ts_a, min(ts_b) AS ts_conv FROM j GROUP BY user_id, ts_a),
-         gaps AS (SELECT epoch_us(CAST(ts_a AS TIMESTAMP)) // 1000000 // 86400 AS cohort_day,
-                         epoch_us(CAST(ts_conv AS TIMESTAMP)) // 1000000 // 3600
-                           - epoch_us(CAST(ts_a AS TIMESTAMP)) // 1000000 // 3600 AS gap_hours
+         gaps AS (SELECT ${Stages.duckEpochBucketSql("ts_a", 86400)} AS cohort_day,
+                         ${Stages.duckEpochBucketSql("ts_conv", 3600)}
+                           - ${Stages.duckEpochBucketSql("ts_a", 3600)} AS gap_hours
                   FROM g)
          SELECT cohort_day, count(*) AS n_users, count(gap_hours) AS n_converted,
                 quantile_cont(gap_hours, 0.5) AS median_hours
@@ -771,7 +768,7 @@ object SparkEntry {
         .filter { case (name, _) => Seq("mean_x", "mean_y", "corr_xy").contains(name) }
         .map { case (name, sql) => s"$sql AS $name" }
         .mkString(",\n                 ")
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day, count(*) AS cnt
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS day, count(*) AS cnt
                     FROM events GROUP BY 1),
          p AS (SELECT a.cnt AS x, b.cnt AS y FROM d a JOIN d b ON b.day = a.day + 1),
          m AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
@@ -808,8 +805,8 @@ object SparkEntry {
                  count(value) AS n_value_nonnull,
                  count(DISTINCT user_id) AS n_users,
                  count(DISTINCT event_type) AS n_types,
-                 CAST(floor(epoch(CAST(min(ts) AS TIMESTAMP))) AS BIGINT) AS min_ts_epoch,
-                 CAST(floor(epoch(CAST(max(ts) AS TIMESTAMP))) AS BIGINT) AS max_ts_epoch,
+                 ${Stages.duckEpochBucketSql("min(ts)", 1)} AS min_ts_epoch,
+                 ${Stages.duckEpochBucketSql("max(ts)", 1)} AS max_ts_epoch,
                  CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS total_cents
           FROM events ORDER BY n_rows"""),
     QueryDef("q_histogram2d", (s, dir) =>
@@ -838,7 +835,7 @@ object SparkEntry {
          FROM events GROUP BY 1, 2 ORDER BY event_type, word_id"""),
     QueryDef("q_sliding_distinct", (s, dir) =>
       Analytics.slidingDistinctUsers(Tables.events(s, dir), 3).orderBy("win_end_hour"),
-      """WITH hu AS (SELECT DISTINCT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour_epoch, user_id
+      s"""WITH hu AS (SELECT DISTINCT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour_epoch, user_id
                      FROM events),
          wu AS (SELECT DISTINCT unnest(generate_series(hour_epoch, hour_epoch + 2)) AS win_end_hour, user_id
                 FROM hu),
@@ -891,7 +888,7 @@ object SparkEntry {
           GROUP BY r_name ORDER BY r_name"""),
     QueryDef("q_daily_delta", (s, dir) =>
       Analytics.dailyDelta(Tables.events(s, dir)).orderBy("day_epoch"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day_epoch,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS day_epoch,
                            count(*) AS n
                     FROM events GROUP BY 1)
          SELECT day_epoch, n,
@@ -917,7 +914,7 @@ object SparkEntry {
          SELECT degree, count(*) AS n_parts FROM d GROUP BY degree ORDER BY degree"""),
     QueryDef("q_twap", (s, dir) =>
       Analytics.timeWeightedAvg(Tables.events(s, dir)).orderBy("user_id"),
-      s"""WITH b AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS sec,
+      s"""WITH b AS (SELECT user_id, ${Stages.duckEpochBucketSql("ts", 1)} AS sec,
                            ${Stages.centsSql("value")} AS cents, event_id
                     FROM events),
          d AS (SELECT user_id, cents,
@@ -930,7 +927,7 @@ object SparkEntry {
          FROM d WHERE dt IS NOT NULL GROUP BY user_id ORDER BY user_id"""),
     QueryDef("q_cusum", (s, dir) =>
       Analytics.cusumChangepoint(Tables.events(s, dir)).orderBy("day"),
-      """WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day, count(*) AS n
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS day, count(*) AS n
                     FROM events GROUP BY 1),
          s AS (SELECT day, n,
                       CAST(sum(n * (SELECT count(*) FROM d) - (SELECT sum(n) FROM d))
@@ -960,18 +957,18 @@ object SparkEntry {
          FROM w ORDER BY user_id, event_id"""),
     QueryDef("q_journey", (s, dir) =>
       Analytics.journeyMatrix(Tables.events(s, dir)).orderBy("first_type", "last_type"),
-      """WITH j AS (SELECT user_id,
-                           arg_min(event_type, concat(lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 + 100000000000 AS VARCHAR), 12, '0'),
+      s"""WITH j AS (SELECT user_id,
+                           arg_min(event_type, concat(lpad(CAST(${Stages.duckEpochBucketSql("ts", 1)} + 100000000000 AS VARCHAR), 12, '0'),
                                                       lpad(CAST(event_id + 100000000000 AS VARCHAR), 12, '0'))) AS first_type,
-                           arg_max(event_type, concat(lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 + 100000000000 AS VARCHAR), 12, '0'),
+                           arg_max(event_type, concat(lpad(CAST(${Stages.duckEpochBucketSql("ts", 1)} + 100000000000 AS VARCHAR), 12, '0'),
                                                       lpad(CAST(event_id + 100000000000 AS VARCHAR), 12, '0'))) AS last_type
                     FROM events GROUP BY user_id)
          SELECT first_type, last_type, count(*) AS n_users
          FROM j GROUP BY 1, 2 ORDER BY first_type, last_type"""),
     QueryDef("q_new_returning", (s, dir) =>
       Analytics.newVsReturning(Tables.events(s, dir)).orderBy("day"),
-      """WITH a AS (SELECT DISTINCT user_id,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day
+      s"""WITH a AS (SELECT DISTINCT user_id,
+                           ${Stages.duckEpochBucketSql("ts", 86400)} AS day
                     FROM events),
          f AS (SELECT user_id, min(day) AS first_day FROM a GROUP BY user_id)
          SELECT day,
@@ -997,7 +994,7 @@ object SparkEntry {
          FROM s ORDER BY event_type"""),
     QueryDef("q_fano", (s, dir) =>
       Analytics.fanoBurstiness(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH h AS (SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hr,
+      s"""WITH h AS (SELECT event_type, ${Stages.duckEpochBucketSql("ts", 3600)} AS hr,
                            count(*) AS x
                     FROM events GROUP BY 1, 2),
          s AS (SELECT event_type, count(*) AS n_hours, CAST(sum(x) AS BIGINT) AS n_events,
@@ -1053,11 +1050,11 @@ object SparkEntry {
          FROM r ORDER BY relation"""),
     QueryDef("q_ohlc", (s, dir) =>
       Analytics.ohlcBars(Tables.events(s, dir)).orderBy("hour_epoch"),
-      """WITH b AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour_epoch,
+      s"""WITH b AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour_epoch,
                            value,
-                           row_number() OVER (PARTITION BY epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600
+                           row_number() OVER (PARTITION BY ${Stages.duckEpochBucketSql("ts", 3600)}
                                               ORDER BY ts, event_id) AS rna,
-                           row_number() OVER (PARTITION BY epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600
+                           row_number() OVER (PARTITION BY ${Stages.duckEpochBucketSql("ts", 3600)}
                                               ORDER BY ts DESC, event_id DESC) AS rnd
                     FROM events)
          SELECT hour_epoch, max(CASE WHEN rna = 1 THEN value END) AS open, max(value) AS high,
@@ -1395,7 +1392,7 @@ object SparkEntry {
       s"""SELECT user_id, event_id, epoch_s,
                 sum(cents) OVER w / CAST(100 AS DOUBLE) AS rolling_sum,
                 count(*) OVER w AS n_in_range
-         FROM (SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS epoch_s,
+         FROM (SELECT user_id, event_id, ${Stages.duckEpochBucketSql("ts", 1)} AS epoch_s,
                       ${Stages.centsSql("value")} AS cents FROM events)
          WINDOW w AS (PARTITION BY user_id ORDER BY epoch_s
                       RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
@@ -1932,12 +1929,12 @@ object SparkEntry {
     // ---- data-quality audits & distribution reports ----
     QueryDef("q_rule_violations", (s, dir) =>
       Relational.ruleViolations(Tables.events(s, dir)).orderBy("rule"),
-      """WITH a AS (SELECT count(*) AS n_rows,
+      raw"""WITH a AS (SELECT count(*) AS n_rows,
                 CAST(sum(CASE WHEN event_id % 7 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS r_null,
                 CAST(sum(CASE WHEN value < 0.05 OR value > 400.0 THEN 1 ELSE 0 END) AS BIGINT) AS r_range,
                 CAST(sum(CASE WHEN event_type NOT IN ('click','view','purchase','signup') THEN 1 ELSE 0 END) AS BIGINT) AS r_type,
-                CAST(sum(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 < 1704153600 THEN 1 ELSE 0 END) AS BIGINT) AS r_stale,
-                CAST(sum(CASE WHEN NOT regexp_matches(props, '^\{"k": [0-9]+\}$') THEN 1 ELSE 0 END) AS BIGINT) AS r_props
+                CAST(sum(CASE WHEN ${Stages.duckEpochBucketSql("ts", 1)} < 1704153600 THEN 1 ELSE 0 END) AS BIGINT) AS r_stale,
+                CAST(sum(CASE WHEN NOT regexp_matches(props, '^\{"k": [0-9]+\}$$') THEN 1 ELSE 0 END) AS BIGINT) AS r_props
          FROM events)
          SELECT rule, n_violations, n_rows,
                 CAST(n_violations AS DOUBLE) / CAST(n_rows AS DOUBLE) AS violation_rate
@@ -1949,8 +1946,8 @@ object SparkEntry {
          ORDER BY rule"""),
     QueryDef("q_late_events", (s, dir) =>
       Analytics.latenessAudit(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH ev AS (SELECT event_type,
-                            CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)
+      s"""WITH ev AS (SELECT event_type,
+                            ${Stages.duckEpochBucketSql("ts", 1)}
                               - CASE WHEN event_id % 13 = 0 THEN 21600
                                      WHEN event_id % 97 = 0 THEN 86400
                                      ELSE 0 END AS ts_sec,
@@ -2042,7 +2039,7 @@ object SparkEntry {
         .filter { case (name, _) => name == "corr_xy" }
         .map { case (name, sql) => s"$sql AS $name" }
         .mkString
-      s"""WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                       CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS cents,
                       count(*) AS cnt
                FROM events GROUP BY 1),
@@ -2085,7 +2082,7 @@ object SparkEntry {
          FROM a WHERE rn = 1 GROUP BY 1, 2 ORDER BY cluster, label"""),
     QueryDef("q_bollinger", (s, dir) =>
       Analytics.bollingerBands(Tables.events(s, dir)).orderBy("hour"),
-      s"""WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                       CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS cents
                FROM events GROUP BY 1),
          w AS (SELECT hour, cents,
@@ -2112,7 +2109,7 @@ object SparkEntry {
          FROM w ORDER BY hour"""),
     QueryDef("q_ewma", (s, dir) =>
       Analytics.ewmaSeries(Tables.events(s, dir)).orderBy("hour"),
-      """WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                       count(*) AS cnt
                FROM events GROUP BY 1),
          l AS (SELECT hour, cnt,
@@ -2136,8 +2133,8 @@ object SparkEntry {
          FROM l ORDER BY hour"""),
     QueryDef("q_event_dedup", (s, dir) =>
       Relational.eventDedup(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH c AS (SELECT user_id, event_type,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH c AS (SELECT user_id, event_type,
+                           ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                            count(*) AS n_in_cell
                     FROM events GROUP BY 1, 2, 3)
          SELECT event_type, CAST(sum(n_in_cell) AS BIGINT) AS n_raw,
@@ -2146,7 +2143,7 @@ object SparkEntry {
          FROM c GROUP BY event_type ORDER BY event_type"""),
     QueryDef("q_seasonal_anomaly", (s, dir) =>
       Analytics.seasonalAnomaly(Tables.events(s, dir)).orderBy("hour_epoch"),
-      """WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour_epoch,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour_epoch,
                       count(*) AS cnt
                FROM events GROUP BY 1),
          d AS (SELECT hour_epoch, cnt,
@@ -2189,7 +2186,7 @@ object SparkEntry {
          FROM w"""),
     QueryDef("q_sax", (s, dir) =>
       Analytics.saxSymbols(Tables.events(s, dir)).orderBy("hour"),
-      """WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                       count(*) AS cnt
                FROM events GROUP BY 1),
          st AS (SELECT count(*) AS n, CAST(sum(cnt) AS BIGINT) AS s,
@@ -2207,7 +2204,7 @@ object SparkEntry {
          FROM z ORDER BY hour"""),
     QueryDef("q_gap_interp", (s, dir) =>
       Analytics.gapInterpolate(Tables.events(s, dir)).orderBy("hour"),
-      """WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                       count(*) AS cnt
                FROM events GROUP BY 1),
          sp AS (SELECT unnest(generate_series(min(hour), max(hour))) AS hour FROM h),
@@ -2285,7 +2282,7 @@ object SparkEntry {
          FROM u ORDER BY doc_id"""),
     QueryDef("q_rolling_median", (s, dir) =>
       Analytics.rollingMedian(Tables.events(s, dir)).orderBy("hour"),
-      """WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                       count(*) AS cnt
                FROM events GROUP BY 1)
          SELECT hour, cnt,
@@ -2302,8 +2299,8 @@ object SparkEntry {
          FROM c GROUP BY 1 ORDER BY bin"""),
     QueryDef("q_velocity", (s, dir) =>
       Analytics.velocityScreen(Tables.events(s, dir)).orderBy("user_id"),
-      """WITH e AS (SELECT user_id,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec
+      s"""WITH e AS (SELECT user_id,
+                           ${Stages.duckEpochBucketSql("ts", 1)} AS ts_sec
                     FROM events),
          w AS (SELECT user_id,
                       count(*) OVER (PARTITION BY user_id ORDER BY ts_sec
@@ -2315,7 +2312,7 @@ object SparkEntry {
     QueryDef("q_segment_shift", (s, dir) =>
       Analytics.segmentShift(Tables.events(s, dir)).orderBy("q_from", "q_to"),
       s"""WITH wk AS (SELECT user_id,
-                      epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 604800 AS week,
+                      ${Stages.duckEpochBucketSql("ts", 604800)} AS week,
                       CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS cents
                FROM events GROUP BY 1, 2),
          a AS (SELECT min(week) AS w0 FROM wk),
@@ -2331,8 +2328,8 @@ object SparkEntry {
          GROUP BY 1, 2 ORDER BY q_from, q_to"""),
     QueryDef("q_interarrival", (s, dir) =>
       Analytics.interArrival(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH e AS (SELECT user_id, event_type, event_id,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec
+      s"""WITH e AS (SELECT user_id, event_type, event_id,
+                           ${Stages.duckEpochBucketSql("ts", 1)} AS ts_sec
                     FROM events),
          g AS (SELECT event_type,
                       ts_sec - lag(ts_sec, 1) OVER (PARTITION BY user_id, event_type
@@ -2374,15 +2371,15 @@ object SparkEntry {
       Relational.userFeatures(Tables.events(s, dir)).orderBy("user_id"),
       s"""SELECT user_id, count(*) AS n_events,
                 CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-                CAST(count(DISTINCT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400)
+                CAST(count(DISTINCT ${Stages.duckEpochBucketSql("ts", 86400)})
                   AS BIGINT) AS active_days,
-                min(CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)) AS first_seen,
-                max(CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)) AS last_seen,
+                min(${Stages.duckEpochBucketSql("ts", 1)}) AS first_seen,
+                max(${Stages.duckEpochBucketSql("ts", 1)}) AS last_seen,
                 CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS spend_cents,
                 CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT)
                   AS n_purchases,
-                (max(CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT))
-                 - min(CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT))) // 86400 AS tenure_days,
+                (max(${Stages.duckEpochBucketSql("ts", 1)})
+                 - min(${Stages.duckEpochBucketSql("ts", 1)})) // 86400 AS tenure_days,
                 CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS DOUBLE)
                   / CAST(count(*) AS DOUBLE) AS purchase_ratio
          FROM events GROUP BY user_id ORDER BY user_id"""),
@@ -2463,8 +2460,8 @@ object SparkEntry {
          FROM c CROSS JOIN t GROUP BY 1 ORDER BY final_cat"""),
     QueryDef("q_target_encoding", (s, dir) =>
       Relational.targetEncoding(Tables.events(s, dir)).orderBy("category"),
-      """WITH s AS (SELECT concat(event_type, '_',
-                      CAST((epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600) % 4 AS VARCHAR))
+      s"""WITH s AS (SELECT concat(event_type, '_',
+                      CAST(${Stages.duckEpochBucketSql("ts", 3600)} % 4 AS VARCHAR))
                       AS category,
                            CASE WHEN value > 100.0 THEN 1 ELSE 0 END AS pos
                     FROM events),
@@ -2505,9 +2502,9 @@ object SparkEntry {
       Relational.survivorship(Tables.events(s, dir))
         .orderBy("user_id", "event_type", "day"),
       s"""WITH b AS (SELECT user_id, event_type,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day,
+                           ${Stages.duckEpochBucketSql("ts", 86400)} AS day,
                            event_id,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec,
+                           ${Stages.duckEpochBucketSql("ts", 1)} AS ts_sec,
                            ${Stages.centsSql("value")} AS cents
                     FROM events),
          w AS (SELECT user_id, event_type, day, event_id,
@@ -2585,7 +2582,7 @@ object SparkEntry {
          ORDER BY source, lang"""),
     QueryDef("q_ltv_curve", (s, dir) =>
       Analytics.ltvCurve(Tables.events(s, dir)).orderBy("cohort_week", "week_offset"),
-      s"""WITH b AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day,
+      s"""WITH b AS (SELECT user_id, ${Stages.duckEpochBucketSql("ts", 86400)} AS day,
                       ${Stages.centsSql("value")} AS cents
                FROM events),
          f AS (SELECT user_id, min(day) AS day0 FROM b GROUP BY 1),
@@ -2603,7 +2600,7 @@ object SparkEntry {
          ORDER BY cohort_week, week_offset"""),
     QueryDef("q_ewma_anomaly", (s, dir) =>
       Analytics.ewmaAnomaly(Tables.events(s, dir)).orderBy("hour"),
-      """WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                       count(*) AS cnt
                FROM events GROUP BY 1),
          l AS (SELECT hour, cnt,
@@ -2642,8 +2639,8 @@ object SparkEntry {
          FROM m GROUP BY 1, 2 ORDER BY label, dim"""),
     QueryDef("q_stickiness", (s, dir) =>
       Analytics.stickiness(Tables.events(s, dir)).orderBy("day"),
-      """WITH a AS (SELECT DISTINCT user_id,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day
+      s"""WITH a AS (SELECT DISTINCT user_id,
+                           ${Stages.duckEpochBucketSql("ts", 86400)} AS day
                     FROM events),
          d AS (SELECT day, count(*) AS dau FROM a GROUP BY 1),
          w AS (SELECT d.day, count(DISTINCT a.user_id) AS wau
@@ -2654,7 +2651,7 @@ object SparkEntry {
          FROM d JOIN w USING (day) ORDER BY day"""),
     QueryDef("q_psi_chi2", (s, dir) =>
       Analytics.driftBins(Tables.events(s, dir)).orderBy("bin"),
-      s"""WITH b AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day,
+      s"""WITH b AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS day,
                       least(${Stages.centsSql("value")} // 5000, 9) AS bin
                FROM events),
          sp AS (SELECT min(day) + 15 AS split_day FROM b),
@@ -2675,7 +2672,7 @@ object SparkEntry {
     QueryDef("q_attribution", (s, dir) =>
       Analytics.linearAttribution(Tables.events(s, dir)).orderBy("touch_type"),
       s"""WITH b AS (SELECT user_id, event_id, event_type,
-                      epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec,
+                      ${Stages.duckEpochBucketSql("ts", 1)} AS ts_sec,
                       ${Stages.centsSql("value")} AS cents
                FROM events),
          p AS (SELECT user_id, event_id AS purchase_id, ts_sec AS p_ts, cents AS p_cents
@@ -2692,9 +2689,9 @@ object SparkEntry {
     QueryDef("q_ship_latency", (s, dir) =>
       Relational.shipLatency(Tables.lineitem(s, dir), Tables.orders(s, dir))
         .orderBy("o_orderpriority"),
-      """WITH j AS (SELECT o.o_orderpriority,
-                      (epoch_us(CAST(l.l_shipdate AS TIMESTAMP)) // 1000000
-                       - epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) // 1000000) // 86400 AS days
+      s"""WITH j AS (SELECT o.o_orderpriority,
+                      (${Stages.duckEpochBucketSql("l.l_shipdate", 1)}
+                       - ${Stages.duckEpochBucketSql("o.o_orderdate", 1)}) // 86400 AS days
                FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey)
          SELECT o_orderpriority, count(*) AS n_lines,
                 quantile_cont(days, 0.5) AS p50_days,
@@ -2704,7 +2701,7 @@ object SparkEntry {
          FROM j GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
     QueryDef("q_rolling_sums", (s, dir) =>
       Analytics.rollingSums(Tables.events(s, dir)).orderBy("day"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS day,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS day,
                       CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS cents
                FROM events GROUP BY 1)
          SELECT day, cents,
@@ -2744,8 +2741,8 @@ object SparkEntry {
          FROM sa CROSS JOIN sb CROSS JOIN eq CROSS JOIN ns"""),
     QueryDef("q_freshness", (s, dir) =>
       Analytics.freshness(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH t AS (SELECT event_type, count(*) AS n_events,
-                           max(CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)) AS max_ts
+      s"""WITH t AS (SELECT event_type, count(*) AS n_events,
+                           max(${Stages.duckEpochBucketSql("ts", 1)}) AS max_ts
                     FROM events GROUP BY 1),
          g AS (SELECT max(max_ts) AS global_max FROM t)
          SELECT event_type, n_events, max_ts, global_max - max_ts AS lag_sec
@@ -2753,7 +2750,7 @@ object SparkEntry {
     QueryDef("q_lag_features", (s, dir) =>
       Analytics.lagFeatures(Tables.events(s, dir)).orderBy("event_id"),
       s"""WITH e AS (SELECT user_id, event_id,
-                      epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec,
+                      ${Stages.duckEpochBucketSql("ts", 1)} AS ts_sec,
                       ${Stages.centsSql("value")} AS cents
                FROM events)
          SELECT event_id, user_id, cents,
@@ -2829,9 +2826,9 @@ object SparkEntry {
          FROM documents"""),
     QueryDef("q_interval_union", (s, dir) =>
       Analytics.intervalUnion(Tables.events(s, dir)).orderBy("user_id"),
-      """WITH iv AS (SELECT user_id, event_id,
-                      epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 - 900 AS start_sec,
-                      epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 + 900 AS end_sec
+      s"""WITH iv AS (SELECT user_id, event_id,
+                      ${Stages.duckEpochBucketSql("ts", 1)} - 900 AS start_sec,
+                      ${Stages.duckEpochBucketSql("ts", 1)} + 900 AS end_sec
                FROM events),
          m AS (SELECT user_id, event_id, start_sec, end_sec,
                       max(end_sec) OVER (PARTITION BY user_id
@@ -2877,7 +2874,7 @@ object SparkEntry {
          ORDER BY label, rank"""),
     QueryDef("q_lifecycle", (s, dir) =>
       Relational.lifecycleStages(Tables.events(s, dir)).orderBy("stage"),
-      """WITH b AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec
+      s"""WITH b AS (SELECT user_id, ${Stages.duckEpochBucketSql("ts", 1)} AS ts_sec
                     FROM events),
          a AS (SELECT max(ts_sec) AS now_sec FROM b),
          pu AS (SELECT user_id, count(*) AS freq,
@@ -3151,7 +3148,7 @@ object SparkEntry {
          tot AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s,
                         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS q
                  FROM daily),
-         cand AS (SELECT epoch_us(CAST(d AS TIMESTAMP)) // 1000000 // 86400 AS split_day,
+         cand AS (SELECT ${Stages.duckEpochBucketSql("d", 86400)} AS split_day,
                          nl AS n_left, n - nl AS n_right,
                          (CAST(ql AS DOUBLE) -
                           CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE) / CAST(nl AS DOUBLE)) +
@@ -3165,7 +3162,7 @@ object SparkEntry {
       s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
                         CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x
                  FROM events GROUP BY 1),
-         dd AS (SELECT epoch_us(CAST(d AS TIMESTAMP)) // 1000000 // 86400 AS dn, x FROM daily),
+         dd AS (SELECT ${Stages.duckEpochBucketSql("d", 86400)} AS dn, x FROM daily),
          sl AS (SELECT CAST(round(CAST((j.x - i.x) * 1000 AS DOUBLE) /
                                   CAST(j.dn - i.dn AS DOUBLE)) AS BIGINT) AS slope_milli
                 FROM dd i JOIN dd j ON i.dn < j.dn)
@@ -3302,8 +3299,8 @@ object SparkEntry {
          FROM p GROUP BY 1 ORDER BY bin"""),
     QueryDef("q_motif", (s, dir) =>
       Analytics.motifCensus(Tables.events(s, dir)).orderBy("motif"),
-      """WITH keyed AS (SELECT user_id,
-                        concat(lpad(CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 + 100000000000 AS VARCHAR), 12, '0'),
+      s"""WITH keyed AS (SELECT user_id,
+                        concat(lpad(CAST(${Stages.duckEpochBucketSql("ts", 1)} + 100000000000 AS VARCHAR), 12, '0'),
                                lpad(CAST(event_id + 100000000000 AS VARCHAR), 12, '0'),
                                substring(event_type, 1, 1)) AS k
                  FROM events),
@@ -3327,7 +3324,7 @@ object SparkEntry {
          FROM hits CROSS JOIN tot ORDER BY motif"""),
     QueryDef("q_compaction_plan", (s, dir) =>
       Relational.compactionPlan(Tables.events(s, dir)).orderBy("bucket"),
-      """WITH files AS (SELECT epoch_us(CAST(CAST(ts AS DATE) AS TIMESTAMP)) // 1000000 // 86400 AS day,
+      s"""WITH files AS (SELECT ${Stages.duckEpochBucketSql("CAST(ts AS DATE)", 86400)} AS day,
                         event_type, CAST(count(*) AS BIGINT) AS rows
                  FROM events GROUP BY 1, 2),
          packed AS (SELECT day, event_type, rows,
@@ -3362,7 +3359,7 @@ object SparkEntry {
       val d2 = Stages.det3Sql("a", "r1", "c", "b", "r2", "f", "c", "r3", "i")
       val d3 = Stages.det3Sql("a", "b", "r1", "b", "e", "r2", "c", "f", "r3")
       s"""WITH base AS (SELECT CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS x1,
-                        (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 + 3) % 7 + 1 AS x2,
+                        (${Stages.duckEpochBucketSql("ts", 86400)} + 3) % 7 + 1 AS x2,
                         ${Stages.centsSql("value")} AS y
                  FROM events),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -3412,7 +3409,7 @@ object SparkEntry {
          SELECT vtype AS event_type, v AS stationary_milli FROM v2 ORDER BY event_type"""),
     QueryDef("q_watermark_reco", (s, dir) =>
       Analytics.watermarkReco(Tables.events(s, dir)).orderBy("n_events"),
-      """WITH ev AS (SELECT CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)
+      s"""WITH ev AS (SELECT ${Stages.duckEpochBucketSql("ts", 1)}
                        - CASE WHEN event_id % 13 = 0 THEN 21600
                               WHEN event_id % 97 = 0 THEN 86400
                               ELSE 0 END AS ts_sec,
@@ -3608,7 +3605,7 @@ object SparkEntry {
     QueryDef("q_cronbach", (s, dir) =>
       Analytics.cronbachAlpha(Tables.events(s, dir)).orderBy("n"),
       s"""WITH items AS (SELECT user_id, CAST(count(*) AS BIGINT) AS x1,
-                        CAST(count(DISTINCT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) AS BIGINT) AS x2,
+                        CAST(count(DISTINCT ${Stages.duckEpochBucketSql("ts", 86400)}) AS BIGINT) AS x2,
                         CAST(sum(${Stages.centsSql("value")}) AS BIGINT) // 100 AS x3
                  FROM events GROUP BY 1),
          it AS (SELECT x1, x2, x3, x1 + x2 + x3 AS xt FROM items),
@@ -3725,9 +3722,7 @@ object SparkEntry {
          SELECT rank, a, b, cn, ra_micro FROM r WHERE rank <= 10 ORDER BY rank"""),
     QueryDef("q_holt", (s, dir) =>
       Analytics.holtLinear(Tables.events(s, dir)).orderBy("n_days"),
-      s"""WITH RECURSIVE daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                        FROM events GROUP BY 1),
+      s"""WITH RECURSIVE daily AS $duckDailyCents,
          days AS (SELECT y, row_number() OVER (ORDER BY d) AS i FROM daily),
          rec AS (
            SELECT i, y * 4 AS l, CAST(0 AS BIGINT) AS b FROM days WHERE i = 1
@@ -3742,9 +3737,7 @@ object SparkEntry {
          FROM rec WHERE i = (SELECT max(i) FROM days) ORDER BY n_days"""),
     QueryDef("q_hodges_lehmann", (s, dir) =>
       Analytics.hodgesLehmann(Tables.events(s, dir)).orderBy("n_days"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          w AS (SELECT a.y + b.y AS s FROM d a JOIN d b ON a.d <= b.d),
          r AS (SELECT s, row_number() OVER (ORDER BY s) AS r, count(*) OVER () AS m FROM w),
          agg AS (SELECT CAST(max(m) AS BIGINT) AS m_pairs,
@@ -3759,9 +3752,7 @@ object SparkEntry {
       Analytics.rescaledRange(Tables.events(s, dir)).orderBy("n_days"),
       {
       val rsVar = Stages.cmomSql("sxx", "sx", "sx", Stages.divisorSql("n_days", nonZero = false))
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          p AS (SELECT y,
                       CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS k,
                       CAST(sum(y) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pf,
@@ -3782,7 +3773,7 @@ object SparkEntry {
       }),
     QueryDef("q_friedman", (s, dir) =>
       Analytics.friedmanPage(Tables.events(s, dir)).orderBy("n_blocks"),
-      s"""WITH cells AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d, event_type,
+      s"""WITH cells AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d, event_type,
                                CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                         FROM events GROUP BY 1, 2),
          k AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS k_treatments FROM cells),
@@ -3808,9 +3799,7 @@ object SparkEntry {
          FROM idx, k ORDER BY n_blocks"""),
     QueryDef("q_isotonic", (s, dir) =>
       Analytics.isotonicDaily(Tables.events(s, dir)).orderBy("day_idx"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          idx AS (SELECT d, y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i,
                         CAST(sum(y) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS p
                  FROM d),
@@ -3828,7 +3817,7 @@ object SparkEntry {
       Analytics.demingDaily(Tables.events(s, dir)).orderBy("n_days"),
       {
       val slope = graft.engine.Analytics.demingSlopeSql
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                             CAST(count(*) AS BIGINT) AS x,
                             CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                      FROM events GROUP BY 1),
@@ -3848,7 +3837,7 @@ object SparkEntry {
       {
       val mean = graft.engine.Analytics.gumbelMeanSql
       val sigma = graft.engine.Analytics.gumbelSigmaSql
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                             CAST(max(${Stages.centsSql("value")}) AS BIGINT) AS m
                      FROM events GROUP BY 1),
           a AS (SELECT CAST(count(*) AS BIGINT) AS n_blocks,
@@ -3865,9 +3854,7 @@ object SparkEntry {
     }),
     QueryDef("q_siegel", (s, dir) =>
       Analytics.siegelSlope(Tables.events(s, dir)).orderBy("n_days"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          idx AS (SELECT y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i FROM d),
          slopes AS (SELECT a.i AS i, CAST(b.y - a.y AS DOUBLE) / CAST(b.i - a.i AS DOUBLE) AS s
                     FROM idx a JOIN idx b ON a.i <> b.i),
@@ -3887,8 +3874,8 @@ object SparkEntry {
          SELECT n_days, slope, res AS intercept FROM ic, n ORDER BY n_days"""),
     QueryDef("q_median_polish", (s, dir) =>
       Analytics.medianPolish(Tables.events(s, dir)).orderBy("component", "key"),
-      s"""WITH cells AS (SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) % 7 AS i,
-                               (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) // 7 AS j,
+      s"""WITH cells AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} % 7 AS i,
+                               ${Stages.duckEpochBucketSql("ts", 86400)} // 7 AS j,
                                CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS r,
                                CAST(0 AS BIGINT) AS a, CAST(0 AS BIGINT) AS b
                         FROM events GROUP BY 1, 2),
@@ -3916,9 +3903,7 @@ object SparkEntry {
          ORDER BY component, key"""),
     QueryDef("q_hampel", (s, dir) =>
       Analytics.hampelFilter(Tables.events(s, dir)).orderBy("day_epoch"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          h AS (SELECT d, y,
                       list_sort(list(y) OVER (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)) AS arr
                FROM d),
@@ -3933,9 +3918,7 @@ object SparkEntry {
          FROM f ORDER BY day_epoch"""),
     QueryDef("q_grubbs", (s, dir) =>
       Analytics.grubbsOutlier(Tables.events(s, dir)).orderBy("n_days"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          mo AS (SELECT CAST(count(*) AS BIGINT) AS n_days, CAST(sum(y) AS BIGINT) AS sx,
                        CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS sxx
                 FROM d),
@@ -3953,9 +3936,7 @@ object SparkEntry {
       val cxy = Stages.cmomSql("sxy", "sx", "sy")
       val cyy = Stages.cmomSql("syy", "sy", "sy")
       val gamma = s"($cxy / nullif($cxx, 0.0E0))"
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                     FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
           p AS (SELECT a.y AS l, b.y - a.y AS dy FROM d a JOIN d b ON b.d = a.d + 1),
           m AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(l) AS BIGINT) AS sx,
                        CAST(sum(dy) AS BIGINT) AS sy, CAST(sum(l * l) AS BIGINT) AS sxx,
@@ -3980,7 +3961,7 @@ object SparkEntry {
       val b2 = s"(($cll * $cxy - $clx * $cly) / nullif($det, 0.0E0))"
       val rssU = s"($cyy - $b1 * $cly - $b2 * $cxy)"
       val rssR = s"($cyy - $cly * $cly / nullif($cll, 0.0E0))"
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
@@ -4009,7 +3990,7 @@ object SparkEntry {
       val det = s"($cxx * $cmm - $cxm * $cxm)"
       val direct = s"(($cxy * $cmm - $cmy * $cxm) / nullif($det, 0.0E0))"
       val bPath = s"(($cxx * $cmy - $cxm * $cxy) / nullif($det, 0.0E0))"
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x,
                             CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS m,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y
@@ -4049,9 +4030,7 @@ object SparkEntry {
          FROM l2 GROUP BY 1 ORDER BY community"""),
     QueryDef("q_lis", (s, dir) =>
       Analytics.monotoneSubseq(Tables.events(s, dir)).orderBy("n_days"),
-      s"""WITH RECURSIVE d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                              CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                       FROM events GROUP BY 1),
+      s"""WITH RECURSIVE d AS $duckDailyCents,
          days AS (SELECT y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i FROM d),
          rec AS (
            SELECT i, [struct_pack(y := y, li := CAST(1 AS BIGINT), ld := CAST(1 AS BIGINT))] AS st
@@ -4142,7 +4121,7 @@ object SparkEntry {
          FROM m ORDER BY na"""),
     QueryDef("q_seasonal_mk", (s, dir) =>
       Analytics.seasonalMannKendall(Tables.events(s, dir)).orderBy("n_days"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS x
                     FROM events GROUP BY 1),
          dg AS (SELECT d, x, d % 7 AS g FROM d),
@@ -4241,9 +4220,7 @@ object SparkEntry {
       val b1 = s"(($cuw * $cvv - $cvw * $cuv) / nullif($det, 0.0E0))"
       val b2 = s"(($cuu * $cvw - $cuv * $cuw) / nullif($det, 0.0E0))"
       val r2 = s"(($b1 * $cuw + $b2 * $cvw) / nullif($cww, 0.0E0))"
-      s"""WITH d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                             CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                      FROM events GROUP BY 1),
+      s"""WITH d0 AS $duckDailyCents,
           d AS (SELECT y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i FROM d0),
           f AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(i) AS BIGINT) AS sx,
                        CAST(sum(y) AS BIGINT) AS sy, CAST(sum(i * i) AS BIGINT) AS sxx,
@@ -4301,9 +4278,7 @@ object SparkEntry {
          FROM b GROUP BY 1 ORDER BY bucket"""),
     QueryDef("q_turning_points", (s, dir) =>
       Analytics.turningPoints(Tables.events(s, dir)).orderBy("n_days"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          w AS (SELECT y, lag(y, 1) OVER (ORDER BY d) AS pv, lead(y, 1) OVER (ORDER BY d) AS nx FROM d),
          a AS (SELECT CAST(count(*) AS BIGINT) AS n_days,
                       CAST(sum(CASE WHEN pv IS NOT NULL AND nx IS NOT NULL
@@ -4325,9 +4300,7 @@ object SparkEntry {
           s"CAST(sum(CASE WHEN d % 7 = $r THEN y ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS s$r")
         .mkString(",\n                      ")
       val css = Stages.centredSumSql("syy", "sy", "sy")
-      s"""WITH d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                             CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                      FROM events GROUP BY 1),
+      s"""WITH d0 AS $duckDailyCents,
           m AS (SELECT $ss,
                        CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS sy,
                        CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
@@ -4345,9 +4318,7 @@ object SparkEntry {
       val sda = s"sqrt(CAST(ssa AS DOUBLE) / 5.0 - $ma * $ma)"
       val sdb = s"sqrt(CAST(ssb AS DOUBLE) / 5.0 - $mb * $mb)"
       val d2 = s"(10.0 * (1.0 - ((CAST(dot AS DOUBLE) / 5.0 - $ma * $mb) / ($sda * $sdb))))"
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                     FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
           p AS (SELECT d, y, CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS i,
                        list_sort(list(struct_pack(d := d, y := y)) OVER (ORDER BY d ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING)) AS arr0,
                        CAST(count(*) OVER (ORDER BY d ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING) AS BIGINT) AS cnt,
@@ -4376,7 +4347,7 @@ object SparkEntry {
       val aTxt =
         s"(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) - $bTxt * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))"
       val gamma = s"($cxy / nullif($cxx, 0.0E0))"
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
@@ -4410,7 +4381,7 @@ object SparkEntry {
       val dx = s"(CAST(x AS DOUBLE) - $mx)"
       val dy = s"(CAST(y AS DOUBLE) - $my)"
       val d2 = s"(($cyy * $dx * $dx - 2.0 * $cxy * $dx * $dy + $cxx * $dy * $dy) / nullif($det, 0.0E0))"
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
@@ -4427,7 +4398,7 @@ object SparkEntry {
     }),
     QueryDef("q_dtw", (s, dir) =>
       Analytics.dtwWeekly(Tables.events(s, dir)).orderBy("n_buckets"),
-      s"""WITH RECURSIVE prof AS (SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400) % 7 AS r,
+      s"""WITH RECURSIVE prof AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} % 7 AS r,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS pa,
                             CAST(sum(CASE WHEN event_type = 'click' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS pb
                      FROM events GROUP BY 1),
@@ -4475,7 +4446,7 @@ object SparkEntry {
               THEN greatest(abs(($tr + sqrt($disc)) / 2.0), abs(($tr - sqrt($disc)) / 2.0))
               ELSE sqrt($dA)
             END)"""
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH d AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
@@ -4494,7 +4465,7 @@ object SparkEntry {
     }),
     QueryDef("q_tv_distance", (s, dir) =>
       Analytics.tvDistance(Tables.events(s, dir)).orderBy("n1"),
-      """WITH h AS (SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600) % 24 AS h,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} % 24 AS h,
                            CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS c1,
                            CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS c2
                     FROM events WHERE event_type IN ('purchase', 'click') GROUP BY 1),
@@ -4507,9 +4478,7 @@ object SparkEntry {
          FROM a ORDER BY n1"""),
     QueryDef("q_pinball", (s, dir) =>
       Analytics.pinballLoss(Tables.events(s, dir)).orderBy("n_eval"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          j AS (SELECT a.y AS f, b.y AS y FROM d a JOIN d b ON b.d = a.d + 7),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n_eval,
                       CAST(sum(CASE WHEN y >= f THEN 9 * (y - f) ELSE f - y END) AS BIGINT) AS loss10_total
@@ -4736,7 +4705,7 @@ object SparkEntry {
          FROM pa JOIN pb ON pa.p = pb.p ORDER BY p"""),
     QueryDef("q_map_funcs", (s, dir) =>
       Analytics.mapFuncs(Tables.events(s, dir)).orderBy("event_type", "h"),
-      """WITH h AS (SELECT event_type, (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600) % 24 AS h,
+      s"""WITH h AS (SELECT event_type, ${Stages.duckEpochBucketSql("ts", 3600)} % 24 AS h,
                            CAST(count(*) AS BIGINT) AS c
                     FROM events GROUP BY 1, 2),
          kept AS (SELECT event_type, h, 2 * c AS doubled_count FROM h
@@ -4755,7 +4724,7 @@ object SparkEntry {
          FROM orders GROUP BY 1, 2 ORDER BY 1, 2"""),
     QueryDef("q_session_percentiles", (s, dir) =>
       Analytics.sessionPercentiles(Tables.events(s, dir)).orderBy("n_sessions"),
-      """WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS t FROM events),
+      s"""WITH e AS (SELECT user_id, ${Stages.duckEpochBucketSql("ts", 1)} AS t FROM events),
          s AS (SELECT user_id, t,
                       CASE WHEN lag(t) OVER (PARTITION BY user_id ORDER BY t) IS NULL
                              OR t - lag(t) OVER (PARTITION BY user_id ORDER BY t) > 1800
@@ -4840,9 +4809,7 @@ object SparkEntry {
       {
       val l2 =
         "(2 * (dd.y * 4 - rec.s[CAST(dd.d % 7 + 1 AS INT)]) + 2 * (rec.l + rec.b)) // 4"
-      s"""WITH RECURSIVE daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                        FROM events GROUP BY 1),
+      s"""WITH RECURSIVE daily AS $duckDailyCents,
          days AS (SELECT d, y, row_number() OVER (ORDER BY d) AS i FROM daily),
          rec AS (
            SELECT i, d, y * 4 AS l, CAST(0 AS BIGINT) AS b,
@@ -4866,9 +4833,7 @@ object SparkEntry {
     }),
     QueryDef("q_mase", (s, dir) =>
       Analytics.maseWape(Tables.events(s, dir)).orderBy("n_eval"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          e7 AS (SELECT CAST(count(*) AS BIGINT) AS n7, CAST(sum(abs(b.y - a.y)) AS BIGINT) AS sae7,
                        CAST(sum(b.y - a.y) AS BIGINT) AS se7, CAST(sum(b.y) AS BIGINT) AS sy7
                 FROM d a JOIN d b ON b.d = a.d + 7),
@@ -5040,9 +5005,7 @@ object SparkEntry {
          FROM asg GROUP BY 1 ORDER BY 1"""),
     QueryDef("q_classical_decomp", (s, dir) =>
       Analytics.classicalDecomposition(Tables.events(s, dir)).orderBy("day_epoch"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          t AS (SELECT d, y,
                       CAST(sum(y) OVER (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS t7,
                       CAST(count(*) OVER (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS cnt
@@ -5114,7 +5077,7 @@ object SparkEntry {
       val cxx = Stages.cmomSql("saa", "sa", "sa")
       val cxy = Stages.cmomSql("say", "sa", "sy")
       val cyy = Stages.cmomSql("syy", "sy", "sy")
-      s"""WITH RECURSIVE d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH RECURSIVE d0 AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                             CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS y,
                             CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x
                      FROM events GROUP BY 1),
@@ -5235,7 +5198,7 @@ object SparkEntry {
          FROM x GROUP BY 1 ORDER BY 1"""),
     QueryDef("q_perceptron", (s, dir) =>
       Analytics.perceptronWeekend(Tables.events(s, dir)).orderBy("n_days"),
-      """WITH RECURSIVE d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH RECURSIVE d0 AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                            CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS x1,
                            CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS x2
                     FROM events GROUP BY 1),
@@ -5258,7 +5221,7 @@ object SparkEntry {
          FROM rec WHERE i = (SELECT max(i) FROM days) ORDER BY n_days"""),
     QueryDef("q_forecast_recon", (s, dir) =>
       Analytics.forecastReconciliation(Tables.events(s, dir)).orderBy("event_type"),
-      s"""WITH t AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d, event_type,
+      s"""WITH t AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d, event_type,
                            CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                     FROM events GROUP BY 1, 2),
          mx AS (SELECT CAST(max(d) AS BIGINT) AS dmax FROM t),
@@ -5278,7 +5241,7 @@ object SparkEntry {
          ORDER BY bu.event_type"""),
     QueryDef("q_bandit_replay", (s, dir) =>
       Analytics.banditReplay(Tables.events(s, dir)).orderBy("n_days"),
-      s"""WITH RECURSIVE d0 AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH RECURSIVE d0 AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                            CAST(sum(CASE WHEN event_type = 'purchase' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS rp,
                            CAST(sum(CASE WHEN event_type = 'click' THEN ${Stages.centsSql("value")} ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS rc
                     FROM events GROUP BY 1),
@@ -5307,9 +5270,7 @@ object SparkEntry {
          ORDER BY n_days"""),
     QueryDef("q_event_study", (s, dir) =>
       Analytics.eventStudy(Tables.events(s, dir)).orderBy("offset_days"),
-      s"""WITH d AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                           CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                    FROM events GROUP BY 1),
+      s"""WITH d AS $duckDailyCents,
          pk AS (SELECT d AS peak_d FROM d ORDER BY y DESC, d ASC LIMIT 1),
          o AS (SELECT d.d, d.y, d.d - pk.peak_d AS off FROM d, pk),
          base AS (SELECT CAST(sum(y) AS BIGINT) AS base_sum, CAST(count(*) AS BIGINT) AS base_n
@@ -5414,7 +5375,7 @@ object SparkEntry {
     }),
     QueryDef("q_islands", (s, dir) =>
       Analytics.activityIslands(Tables.events(s, dir)).orderBy("user_id", "island_start"),
-      """WITH ud AS (SELECT DISTINCT user_id, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d
+      s"""WITH ud AS (SELECT DISTINCT user_id, ${Stages.duckEpochBucketSql("ts", 86400)} AS d
                      FROM events),
          top5 AS (SELECT user_id FROM (
                     SELECT user_id, count(*) AS n_events,
@@ -5585,11 +5546,11 @@ object SparkEntry {
          WHERE x.rn = 1 AND x.va < x.vb ORDER BY va"""),
     QueryDef("q_life_table", (s, dir) =>
       Analytics.lifeTable(Tables.events(s, dir)).orderBy("dur_day"),
-      """WITH pu AS (SELECT user_id,
-                            min(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS first_s,
-                            max(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS last_s
+      s"""WITH pu AS (SELECT user_id,
+                            min(${Stages.duckEpochBucketSql("ts", 1)}) AS first_s,
+                            max(${Stages.duckEpochBucketSql("ts", 1)}) AS last_s
                      FROM events GROUP BY 1),
-         mx AS (SELECT max(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS max_s FROM events),
+         mx AS (SELECT max(${Stages.duckEpochBucketSql("ts", 1)}) AS max_s FROM events),
          u AS (SELECT (last_s - first_s) // 86400 AS dur_day,
                       last_s >= max_s - 86400 AS censored
                FROM pu, mx),
@@ -6009,7 +5970,7 @@ object SparkEntry {
         (Analytics.pairwiseCorrSql("x", "y"), Analytics.pairwiseCorrSql("x", "z"),
           Analytics.pairwiseCorrSql("y", "z"))
       s"""WITH b AS (SELECT CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS x,
-                            (epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 + 3) % 7 + 1 AS z,
+                            (${Stages.duckEpochBucketSql("ts", 86400)} + 3) % 7 + 1 AS z,
                             ${Stages.centsSql("value")} AS y
                      FROM events),
          m AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -6181,13 +6142,13 @@ object SparkEntry {
          FROM ng, np, nh"""),
     QueryDef("q_logrank", (s, dir) =>
       Analytics.logRankTest(Tables.events(s, dir)),
-      """WITH pu AS (SELECT user_id,
-                            min(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS first_s,
-                            max(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS last_s,
+      s"""WITH pu AS (SELECT user_id,
+                            min(${Stages.duckEpochBucketSql("ts", 1)}) AS first_s,
+                            max(${Stages.duckEpochBucketSql("ts", 1)}) AS last_s,
                             CAST(CASE WHEN 100 * sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                                            >= 25 * count(*) THEN 1 ELSE 0 END AS BIGINT) AS grp_a
                      FROM events GROUP BY 1),
-         mx AS (SELECT max(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS max_s FROM events),
+         mx AS (SELECT max(${Stages.duckEpochBucketSql("ts", 1)}) AS max_s FROM events),
          u AS (SELECT (last_s - first_s) // 86400 AS dur_day,
                       last_s >= max_s - 86400 AS censored, grp_a
                FROM pu, mx),
@@ -6225,7 +6186,7 @@ object SparkEntry {
          FROM agg, tot"""),
     QueryDef("q_durbin_watson", (s, dir) =>
       Analytics.durbinWatson(Tables.events(s, dir)),
-      s"""WITH hourly AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS h,
+      s"""WITH hourly AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS h,
                                  CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS cents
                           FROM events GROUP BY 1),
          i AS (SELECT min(h) AS h0 FROM hourly),
@@ -6272,9 +6233,7 @@ object SparkEntry {
     }),
     QueryDef("q_acf", (s, dir) =>
       Analytics.acfLadder(Tables.events(s, dir)).orderBy("lag"),
-      s"""WITH daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                               CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                        FROM events GROUP BY 1),
+      s"""WITH daily AS $duckDailyCents,
          tot AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s FROM daily),
          dm AS (SELECT d, n * y - s AS e FROM daily, tot),
          den AS (SELECT CAST(sum(CAST(e AS HUGEINT) * e) AS HUGEINT) AS see FROM dm),
@@ -6392,7 +6351,7 @@ object SparkEntry {
          ORDER BY decile"""),
     QueryDef("q_backtest", (s, dir) =>
       Analytics.seasonalNaiveBacktest(Tables.events(s, dir)),
-      s"""WITH hourly AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS h,
+      s"""WITH hourly AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS h,
                                 CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                          FROM events GROUP BY 1),
          j AS (SELECT t.y AS y, f.y AS f FROM hourly t JOIN hourly f ON t.h = f.h + 168),
@@ -6406,7 +6365,7 @@ object SparkEntry {
          FROM e"""),
     QueryDef("q_theil_u", (s, dir) =>
       Analytics.theilU(Tables.events(s, dir)),
-      s"""WITH hourly AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS h,
+      s"""WITH hourly AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS h,
                                 CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                          FROM events GROUP BY 1),
          j AS (SELECT t.y AS y, fs.y AS fs, fp.y AS fp
@@ -6449,12 +6408,12 @@ object SparkEntry {
     }),
     QueryDef("q_ccf", (s, dir) =>
       Analytics.crossCorrelationLadder(Tables.events(s, dir)).orderBy("lag"),
-      s"""WITH pa AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+      s"""WITH pa AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                             CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                      FROM events WHERE event_type = 'purchase' GROUP BY 1),
          ta AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s FROM pa),
          ea AS (SELECT d, n * y - s AS e FROM pa, ta),
-         pb AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
+         pb AS (SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d,
                        CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
                 FROM events WHERE event_type = 'click' GROUP BY 1),
          tb AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s FROM pb),
@@ -6471,8 +6430,8 @@ object SparkEntry {
          FROM p, saa, sbb ORDER BY lag"""),
     QueryDef("q_concurrency", (s, dir) =>
       Analytics.peakConcurrency(Tables.events(s, dir)).orderBy("day"),
-      """WITH e AS (SELECT event_id,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec
+      s"""WITH e AS (SELECT event_id,
+                           ${Stages.duckEpochBucketSql("ts", 1)} AS ts_sec
                     FROM events),
          pts AS (SELECT event_id, ts_sec // 86400 AS day, ts_sec - 900 AS t,
                         CAST(1 AS BIGINT) AS delta
@@ -6491,7 +6450,7 @@ object SparkEntry {
          FROM r GROUP BY day ORDER BY day"""),
     QueryDef("q_peaks", (s, dir) =>
       Analytics.localPeaks(Tables.events(s, dir)).orderBy("hour"),
-      """WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                       count(*) AS cnt
                FROM events GROUP BY 1),
          l AS (SELECT hour, cnt,
@@ -6536,8 +6495,8 @@ object SparkEntry {
          GROUP BY event_type ORDER BY event_type"""),
     QueryDef("q_growth_accounting", (s, dir) =>
       Analytics.growthAccounting(Tables.events(s, dir)).orderBy("week"),
-      """WITH a AS (SELECT DISTINCT user_id,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 604800 AS week
+      s"""WITH a AS (SELECT DISTINCT user_id,
+                           ${Stages.duckEpochBucketSql("ts", 604800)} AS week
                     FROM events),
          f AS (SELECT user_id, min(week) AS first_week FROM a GROUP BY 1),
          cur AS (SELECT user_id, week, 1 AS is_curr FROM a),
@@ -6566,7 +6525,7 @@ object SparkEntry {
         .map { case (name, sql) => s"$sql AS $name" }
         .mkString(",\n                ")
       s"""WITH b AS (SELECT user_id,
-                      epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 604800 AS week,
+                      ${Stages.duckEpochBucketSql("ts", 604800)} AS week,
                       ${Stages.centsSql("value")} AS cents
                FROM events),
          a AS (SELECT min(week) AS w0 FROM b),
@@ -6599,7 +6558,7 @@ object SparkEntry {
     QueryDef("q_recency_score", (s, dir) =>
       Relational.recencyScore(Tables.events(s, dir)).orderBy("user_id"),
       s"""WITH b AS (SELECT user_id,
-                      epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec,
+                      ${Stages.duckEpochBucketSql("ts", 1)} AS ts_sec,
                       ${Stages.centsSql("value")} AS cents
                FROM events),
          a AS (SELECT max(ts_sec) AS now_sec FROM b),
@@ -6616,7 +6575,7 @@ object SparkEntry {
          FROM w GROUP BY user_id ORDER BY user_id"""),
     QueryDef("q_error_rate", (s, dir) =>
       Analytics.errorRateMonitor(Tables.events(s, dir)).orderBy("hour"),
-      """WITH h AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 3600 AS hour,
+      s"""WITH h AS (SELECT ${Stages.duckEpochBucketSql("ts", 3600)} AS hour,
                       count(*) AS n,
                       CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT)
                         AS n_err
@@ -6633,7 +6592,7 @@ object SparkEntry {
          FROM w ORDER BY hour"""),
     QueryDef("q_trending", (s, dir) =>
       Analytics.trendingParts(Tables.lineitem(s, dir)).orderBy("l_partkey"),
-      s"""WITH wk AS (SELECT epoch_us(CAST(l_shipdate AS TIMESTAMP)) // 1000000 // 604800 AS week,
+      s"""WITH wk AS (SELECT ${Stages.duckEpochBucketSql("l_shipdate", 604800)} AS week,
                       l_partkey, CAST(sum(${Stages.centsSql("l_extendedprice")}) AS BIGINT) AS week_cents
                FROM lineitem GROUP BY 1, 2),
          a AS (SELECT min(week) AS w0 FROM wk),
@@ -6654,7 +6613,7 @@ object SparkEntry {
     QueryDef("q_revenue_bridge", (s, dir) =>
       Analytics.revenueBridge(Tables.events(s, dir)).orderBy("event_type"),
       s"""WITH b AS (SELECT event_type,
-                      epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 604800 AS week,
+                      ${Stages.duckEpochBucketSql("ts", 604800)} AS week,
                       ${Stages.centsSql("value")} AS cents
                FROM events),
          a AS (SELECT min(week) AS w0 FROM b),
@@ -6677,8 +6636,8 @@ object SparkEntry {
          FROM g ORDER BY event_type"""),
     QueryDef("q_time_in_state", (s, dir) =>
       Analytics.timeInState(Tables.events(s, dir)).orderBy("event_type"),
-      """WITH e AS (SELECT user_id, event_id, event_type,
-                           epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS ts_sec
+      s"""WITH e AS (SELECT user_id, event_id, event_type,
+                           ${Stages.duckEpochBucketSql("ts", 1)} AS ts_sec
                     FROM events),
          d AS (SELECT event_type,
                       lead(ts_sec, 1) OVER (PARTITION BY user_id
@@ -7125,11 +7084,11 @@ object SparkEntry {
          FROM m"""),
     QueryDef("q_did", (s, dir) =>
       Inference.diffInDiff(Tables.events(s, dir)),
-      s"""WITH span AS (SELECT min(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS t0,
-                               max(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS t1
+      s"""WITH span AS (SELECT min(${Stages.duckEpochBucketSql("ts", 1)}) AS t0,
+                               max(${Stages.duckEpochBucketSql("ts", 1)}) AS t1
                         FROM events),
          b AS (SELECT $duckUserArmSql AS arm,
-                      epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 * 2 >= t0 + t1 AS late,
+                      ${Stages.duckEpochBucketSql("ts", 1)} * 2 >= t0 + t1 AS late,
                       ${Stages.centsSql("value")} AS cents
                FROM events CROSS JOIN span),
          m AS (SELECT
@@ -7255,13 +7214,13 @@ object SparkEntry {
          FROM t"""),
     QueryDef("q_capture_recapture", (s, dir) =>
       Inference.captureRecapture(Tables.events(s, dir)),
-      s"""WITH span AS (SELECT min(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS t0,
-                               max(epoch_us(CAST(ts AS TIMESTAMP)) // 1000000) AS t1
+      s"""WITH span AS (SELECT min(${Stages.duckEpochBucketSql("ts", 1)}) AS t0,
+                               max(${Stages.duckEpochBucketSql("ts", 1)}) AS t1
                         FROM events),
          pu AS (SELECT user_id,
-                       CAST(max(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 * 2 < t0 + t1
+                       CAST(max(CASE WHEN ${Stages.duckEpochBucketSql("ts", 1)} * 2 < t0 + t1
                                      THEN 1 ELSE 0 END) AS BIGINT) AS in_a,
-                       CAST(max(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 * 2 >= t0 + t1
+                       CAST(max(CASE WHEN ${Stages.duckEpochBucketSql("ts", 1)} * 2 >= t0 + t1
                                      THEN 1 ELSE 0 END) AS BIGINT) AS in_b
                 FROM events CROSS JOIN span GROUP BY 1),
          agg AS (SELECT CAST(sum(in_a) AS BIGINT) AS na, CAST(sum(in_b) AS BIGINT) AS nb,
@@ -7293,7 +7252,7 @@ object SparkEntry {
       Analytics.burstiness(Tables.events(s, dir)).orderBy("event_type"),
       {
       val sd = Analytics.burstSdSql
-      s"""WITH b AS (SELECT event_type, epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 AS t, event_id
+      s"""WITH b AS (SELECT event_type, ${Stages.duckEpochBucketSql("ts", 1)} AS t, event_id
                      FROM events),
          g AS (SELECT event_type,
                       t - lag(t) OVER (PARTITION BY event_type ORDER BY t, event_id) AS gap
@@ -7408,12 +7367,12 @@ object SparkEntry {
       TpcH.orderPriorityCheck(
         Tables.orders(s, dir), Tables.lineitem(s, dir), "1996-01-01", "1996-04-01")
         .orderBy("o_orderpriority"),
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
+      s"""SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
          FROM orders
          WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
            AND EXISTS (SELECT 1 FROM lineitem
                        WHERE l_orderkey = o_orderkey
-                         AND epoch_us(l_shipdate) // 86400000000 > epoch_us(o_orderdate) // 86400000000 + 30)
+                         AND ${Stages.duckEpochBucketSql("l_shipdate", 86400)} > ${Stages.duckEpochBucketSql("o_orderdate", 86400)} + 30)
          GROUP BY 1 ORDER BY o_orderpriority"""),
     QueryDef("q_tpch_q6", (s, dir) =>
       TpcH.forecastRevenueChange(Tables.lineitem(s, dir), "1996-01-01", "1997-01-01"),
@@ -7463,12 +7422,12 @@ object SparkEntry {
       TpcH.shippingPriorityAudit(
         Tables.orders(s, dir), Tables.lineitem(s, dir), "1996-01-01", "1997-01-01")
         .orderBy("o_orderstatus"),
-      """SELECT o_orderstatus,
+      s"""SELECT o_orderstatus,
                 CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
                 CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-           AND epoch_us(l_shipdate) // 86400000000 > epoch_us(o_orderdate) // 86400000000 + 60
+           AND ${Stages.duckEpochBucketSql("l_shipdate", 86400)} > ${Stages.duckEpochBucketSql("o_orderdate", 86400)} + 60
          GROUP BY 1 ORDER BY o_orderstatus"""),
     QueryDef("q_tpch_q13", (s, dir) =>
       TpcH.customerDistribution(Tables.customer(s, dir), Tables.orders(s, dir))
@@ -7538,9 +7497,9 @@ object SparkEntry {
         Tables.supplier(s, dir), Tables.orders(s, dir), Tables.lineitem(s, dir),
         Tables.nation(s, dir))
         .orderBy("rank"),
-      """WITH l AS (
+      s"""WITH l AS (
            SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk,
-                  epoch_us(l_shipdate) // 86400000000 > epoch_us(o_orderdate) // 86400000000 + 90 AS late
+                  ${Stages.duckEpochBucketSql("l_shipdate", 86400)} > ${Stages.duckEpochBucketSql("o_orderdate", 86400)} + 90 AS late
            FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
          w AS (SELECT a.sk, CAST(count(DISTINCT a.ok) AS BIGINT) AS numwait
                FROM l a
@@ -8120,6 +8079,22 @@ object SparkEntry {
     queries.keys.iterator.filter(n => wanted.forall(_(n))).map(byName).toSeq
   }
 
+  /** Seconds from order date to ship date: q_abnormal_duration's
+    * `lead_sec`, in the oracle's dialect. */
+  private val duckLeadSecs =
+    s"${Stages.duckEpochBucketSql("l_shipdate", 1)} - ${Stages.duckEpochBucketSql("o_orderdate", 1)}"
+
+  /** The daily cents series `(d, y)` as a CTE body: the day number and the
+    * day's summed value cents, the oracle twin of `Analytics.dailyCents`. */
+  private val duckDailyCents =
+    s"""(SELECT ${Stages.duckEpochBucketSql("ts", 86400)} AS d, CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
+        FROM events GROUP BY 1)"""
+
+  /** The hour bucket as the (`date`, `hour`) strings of the three hourly
+    * reference pipelines, the oracle twin of `RefPipelines.windowHour`. */
+  private val duckWindowHour =
+    "strftime(date_trunc('hour', ts), '%Y-%m-%d') AS date, strftime(date_trunc('hour', ts), '%H:%M:%S') AS hour"
+
   // Shared SQL fragments (identical text on both engines — see Stages).
   private val avgRevenueAggs =
     s"""${Stages.halfUpAvgDollarsSql(RefPipelines.valueCents)} AS avg_revenue,
@@ -8141,9 +8116,7 @@ object SparkEntry {
     val wide = (1 to maxLag)
       .map(k => s"CAST(coalesce(sum(CASE WHEN lag = $k THEN num END), 0) AS DECIMAL(38,0)) AS num$k")
       .mkString(", ")
-    s"""daily AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 1000000 // 86400 AS d,
-                         CAST(sum(${Stages.centsSql("value")}) AS BIGINT) AS y
-                  FROM events GROUP BY 1),
+    s"""daily AS $duckDailyCents,
         tot AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS s FROM daily),
         dm AS (SELECT d, n, n * y - s AS e FROM daily, tot),
         den AS (SELECT CAST(max(n) AS BIGINT) AS n, CAST(sum(CAST(e AS HUGEINT) * e) AS DECIMAL(38,0)) AS see FROM dm),

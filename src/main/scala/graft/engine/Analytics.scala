@@ -20,6 +20,17 @@ object Analytics {
     .partitionBy(col("user_id"))
     .orderBy(col("ts").asc, col("event_id").asc)
 
+  /** 1 where a user's event opens a session: their first event, or one
+    * more than `gapSeconds` after their previous event in [[userOrder]];
+    * 0 otherwise. The previous time is SQL text, so its seconds come from
+    * `Stages.epochBucketSql`.
+    */
+  private def newSessionFlag(gapSeconds: Long): Column = {
+    val prevTs = "lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id)"
+    val gap = expr(Stages.epochBucketSql("ts", 1)) - expr(Stages.epochBucketSql(prevTs, 1))
+    when(expr(s"$prevTs IS NULL") || gap > gapSeconds, 1L).otherwise(0L)
+  }
+
   /** Running total and 3-row moving sum of `value` per user over event
     * time. One shuffle on user_id; frames accumulate in-partition.
     */
@@ -68,7 +79,7 @@ object Analytics {
     * hours-sized by construction.
     */
   def gapFilledHourly(events: DataFrame): DataFrame = {
-    val hourEpoch = expr("cast(ts as long) div 3600")
+    val hourEpoch = expr(Stages.epochBucketSql("ts", 3600))
     val counts = events
       .groupBy(hourEpoch.as("hour_epoch"))
       .agg(count(lit(1)).as("n_raw"))
@@ -90,7 +101,7 @@ object Analytics {
     * meet per-user firsts); the output is |cohorts|×|offsets|-sized.
     */
   def retentionCohorts(events: DataFrame): DataFrame = {
-    val day = expr("cast(ts as long) div 86400")
+    val day = expr(Stages.epochBucketSql("ts", 86400))
     val firsts = events
       .groupBy(col("user_id"))
       .agg(min(day).as("cohort_day"))
@@ -151,7 +162,7 @@ object Analytics {
         date_format(col("ts_a"), "yyyy-MM-dd HH:mm:ss").as("first_a"),
         date_format(col("ts_conv"), "yyyy-MM-dd HH:mm:ss").as("first_b_after"),
         (col("ts_conv").isNotNull &&
-          col("ts_conv").cast("long") - col("ts_a").cast("long") <= windowHours * 3600L)
+          expr(Stages.epochBucketSql("ts_conv", 1)) - expr(Stages.epochBucketSql("ts_a", 1)) <= windowHours * 3600L)
           .as("converted"))
   }
 
@@ -198,13 +209,8 @@ object Analytics {
     * shuffle total).
     */
   def sessionizeBatch(events: DataFrame, gapMinutes: Int): DataFrame = {
-    val gapSeconds = gapMinutes * 60L
-    val prevTs = lag(col("ts"), 1).over(userOrder)
-    val isNew = when(
-      prevTs.isNull || (col("ts").cast("long") - prevTs.cast("long")) > gapSeconds,
-      1L).otherwise(0L)
     events
-      .withColumn("is_new", isNew)
+      .withColumn("is_new", newSessionFlag(gapMinutes * 60L))
       .withColumn(
         "session_id",
         sum(col("is_new")).over(userOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -279,8 +285,8 @@ object Analytics {
         expr("sum(cents) / CAST(100 AS DOUBLE)").as("total_value"))
       .select(
         col("user_id"),
-        col("w.start").cast("long").as("session_start"),
-        col("w.end").cast("long").as("session_end"),
+        expr(Stages.epochBucketSql("w.start", 1)).as("session_start"),
+        expr(Stages.epochBucketSql("w.end", 1)).as("session_end"),
         col("n_events"),
         col("total_value"))
 
@@ -310,7 +316,7 @@ object Analytics {
       .agg(
         count(lit(1)).as("n_events"),
         expr("sum(cents) / CAST(100 AS DOUBLE)").as("sum_value"))
-      .select(col("w.start").cast("long").as("ws"), col("n_events"), col("sum_value"))
+      .select(expr(Stages.epochBucketSql("w.start", 1)).as("ws"), col("n_events"), col("sum_value"))
 
   /** Pivot event_type → one exact-average column per category (the
     * relational spelling of the reference's conditional aggregates A2/A4,
@@ -353,7 +359,7 @@ object Analytics {
       .orderBy(col("epoch_s"))
       .rangeBetween(-rangeSeconds, Window.currentRow)
     events
-      .withColumn("epoch_s", col("ts").cast("long"))
+      .withColumn("epoch_s", expr(Stages.epochBucketSql("ts", 1)))
       .withColumn("cents", expr(Stages.centsSql("value")))
       .select(
         col("user_id"),
@@ -447,7 +453,7 @@ object Analytics {
   def dailyTopSpenders(events: DataFrame, k: Int): DataFrame = {
     val per = events
       .filter(col("value").isNotNull)
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("day_epoch"), col("user_id"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("day_epoch"), col("user_id"))
       .agg(sum(expr(Stages.centsSql("value"))).as("cents"))
     Relational.topKPerGroup(per, k, Seq(col("day_epoch")), col("cents").desc, col("user_id").asc)
       .select(
@@ -494,8 +500,8 @@ object Analytics {
       .agg(min(col("ts_b")).as("ts_conv"))
     conv
       .select(
-        expr("CAST(ts_a AS LONG) div 86400").as("cohort_day"),
-        expr("CAST(ts_conv AS LONG) div 3600 - CAST(ts_a AS LONG) div 3600").as("gap_hours"))
+        expr(Stages.epochBucketSql("ts_a", 86400)).as("cohort_day"),
+        expr(s"${Stages.epochBucketSql("ts_conv", 3600)} - ${Stages.epochBucketSql("ts_a", 3600)}").as("gap_hours"))
       .groupBy(col("cohort_day"))
       .agg(
         count(lit(1)).as("n_users"),
@@ -510,7 +516,7 @@ object Analytics {
     */
   def dailyDelta(events: DataFrame): DataFrame = {
     val daily = events
-      .select(expr("CAST(ts AS LONG) div 86400").as("day_epoch"))
+      .select(expr(Stages.epochBucketSql("ts", 86400)).as("day_epoch"))
       .groupBy(col("day_epoch"))
       .agg(count(lit(1)).as("n"))
     val w = Window.partitionBy(lit(1)).orderBy(col("day_epoch"))
@@ -544,7 +550,7 @@ object Analytics {
     */
   def dailyAutocorr(events: DataFrame): DataFrame = {
     val daily = events
-      .select(expr("CAST(ts AS LONG) div 86400").as("day"))
+      .select(expr(Stages.epochBucketSql("ts", 86400)).as("day"))
       .groupBy(col("day"))
       .agg(count(lit(1)).as("cnt"))
     val pairs = daily
@@ -577,7 +583,7 @@ object Analytics {
     */
   def crossCorr(events: DataFrame, maxLag: Int = 3): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(
         sum(expr(Stages.centsSql("value"))).as("cents"),
         count(lit(1)).as("cnt"))
@@ -612,7 +618,7 @@ object Analytics {
     */
   def bollingerBands(events: DataFrame, span: Int = 24): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(sum(expr(Stages.centsSql("value"))).as("cents"))
     // ROWS frame = trailing `span` OBSERVED hourly bars, the standard
     // Bollinger definition (N periods of the bar series) — NOT a
@@ -651,7 +657,7 @@ object Analytics {
     */
   def ewmaSeries(events: DataFrame): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(count(lit(1)).as("cnt"))
     val w = Window.orderBy(col("hour"))
     val withLags = (1 to 5).foldLeft(hourly) { (df, i) =>
@@ -683,7 +689,7 @@ object Analytics {
     */
   def seasonalAnomaly(events: DataFrame, minRatio: Double = 1.5): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour_epoch"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour_epoch"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("dow", expr("(hour_epoch div 24 + 4) % 7"))
       .withColumn("hod", expr("hour_epoch % 24"))
@@ -709,7 +715,7 @@ object Analytics {
     */
   def saxSymbols(events: DataFrame): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(count(lit(1)).as("cnt"))
     val stats = hourly.agg(
       count(lit(1)).as("n"),
@@ -738,7 +744,7 @@ object Analytics {
     */
   def gapInterpolate(events: DataFrame): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(count(lit(1)).as("cnt"))
     val spine = hourly
       .agg(min(col("hour")).as("lo"), max(col("hour")).as("hi"))
@@ -791,7 +797,7 @@ object Analytics {
     */
   def rollingMedian(events: DataFrame, span: Int = 24): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(count(lit(1)).as("cnt"))
     val w = Window.orderBy(col("hour")).rowsBetween(-(span - 1), 0)
     hourly
@@ -830,7 +836,7 @@ object Analytics {
       .orderBy(col("ts_sec"))
       .rangeBetween(-86399L, 0L)
     events
-      .select(col("user_id"), expr("CAST(ts AS LONG)").as("ts_sec"))
+      .select(col("user_id"), expr(Stages.epochBucketSql("ts", 1)).as("ts_sec"))
       .withColumn("burst", count(lit(1)).over(w))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), max(col("burst")).as("max_burst"))
@@ -848,7 +854,7 @@ object Analytics {
     */
   def segmentShift(events: DataFrame): DataFrame = {
     val weekly = events
-      .groupBy(col("user_id"), expr("CAST(ts AS LONG) div 604800").as("week"))
+      .groupBy(col("user_id"), expr(Stages.epochBucketSql("ts", 604800)).as("week"))
       .agg(sum(expr(Stages.centsSql("value"))).as("cents"))
     val anchor = weekly.agg(min(col("week")).as("w0"))
     val anchored = weekly
@@ -910,7 +916,7 @@ object Analytics {
     events
       .select(
         col("user_id"), col("event_type"), col("event_id"),
-        expr("CAST(ts AS LONG)").as("ts_sec"))
+        expr(Stages.epochBucketSql("ts", 1)).as("ts_sec"))
       .withColumn("gap", col("ts_sec") - lag(col("ts_sec"), 1).over(w))
       .filter(col("gap").isNotNull)
       .groupBy(col("event_type"))
@@ -931,7 +937,7 @@ object Analytics {
   def ltvCurve(events: DataFrame): DataFrame = {
     val base = events.select(
       col("user_id"),
-      expr("CAST(ts AS LONG) div 86400").as("day"),
+      expr(Stages.epochBucketSql("ts", 86400)).as("day"),
       expr(Stages.centsSql("value")).as("cents"))
     val firsts = base.groupBy(col("user_id")).agg(min(col("day")).as("day0"))
     val cohortSizes = firsts
@@ -965,7 +971,7 @@ object Analytics {
     */
   def ewmaAnomaly(events: DataFrame): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(count(lit(1)).as("cnt"))
     val w = Window.orderBy(col("hour"))
     val withLags = (1 to 5).foldLeft(hourly) { (df, i) =>
@@ -1001,7 +1007,7 @@ object Analytics {
     */
   def stickiness(events: DataFrame): DataFrame = {
     val activity = events
-      .select(col("user_id"), expr("CAST(ts AS LONG) div 86400").as("day"))
+      .select(col("user_id"), expr(Stages.epochBucketSql("ts", 86400)).as("day"))
       .distinct()
     val dau = activity.groupBy(col("day")).agg(count(lit(1)).as("dau"))
     val wau = dau.select(col("day"))
@@ -1025,7 +1031,7 @@ object Analytics {
     */
   def driftBins(events: DataFrame): DataFrame = {
     val base = events.select(
-      expr("CAST(ts AS LONG) div 86400").as("day"),
+      expr(Stages.epochBucketSql("ts", 86400)).as("day"),
       expr(s"least(${Stages.centsSql("value")} div 5000, 9)").as("bin"))
     val split = base.agg(expr("min(day) + 15").as("split_day"))
     val counts = base
@@ -1062,7 +1068,7 @@ object Analytics {
   def linearAttribution(events: DataFrame): DataFrame = {
     val base = events.select(
       col("user_id"), col("event_id"), col("event_type"),
-      expr("CAST(ts AS LONG)").as("ts_sec"),
+      expr(Stages.epochBucketSql("ts", 1)).as("ts_sec"),
       expr(Stages.centsSql("value")).as("cents"))
     val purchases = base
       .filter(col("event_type") === "purchase")
@@ -1103,8 +1109,8 @@ object Analytics {
     val islands = events
       .select(
         col("user_id"), col("event_id"),
-        (expr("CAST(ts AS LONG)") - halfWidthSec).as("start_sec"),
-        (expr("CAST(ts AS LONG)") + halfWidthSec).as("end_sec"))
+        (expr(Stages.epochBucketSql("ts", 1)) - halfWidthSec).as("start_sec"),
+        (expr(Stages.epochBucketSql("ts", 1)) + halfWidthSec).as("end_sec"))
       .withColumn(
         "new_island",
         when(prevMaxEnd.isNull || col("start_sec") > prevMaxEnd, 1L).otherwise(0L))
@@ -1131,7 +1137,7 @@ object Analytics {
     */
   def peakConcurrency(events: DataFrame, halfWidthSec: Long = 900L): DataFrame = {
     val pts = events
-      .select(col("event_id"), expr("CAST(ts AS LONG)").as("ts_sec"))
+      .select(col("event_id"), expr(Stages.epochBucketSql("ts", 1)).as("ts_sec"))
       .select(
         col("event_id"),
         expr("ts_sec div 86400").as("day"),
@@ -1158,7 +1164,7 @@ object Analytics {
     */
   def localPeaks(events: DataFrame): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(count(lit(1)).as("cnt"))
     val w = Window.orderBy(col("hour"))
     hourly
@@ -1213,7 +1219,7 @@ object Analytics {
     */
   def growthAccounting(events: DataFrame): DataFrame = {
     val activity = events
-      .select(col("user_id"), expr("CAST(ts AS LONG) div 604800").as("week"))
+      .select(col("user_id"), expr(Stages.epochBucketSql("ts", 604800)).as("week"))
       .distinct()
     val firsts = activity.groupBy(col("user_id")).agg(min(col("week")).as("first_week"))
     val prev = activity.select(col("user_id"), (col("week") + 1).as("week"))
@@ -1253,7 +1259,7 @@ object Analytics {
   def cupedReport(events: DataFrame): DataFrame = {
     val base = events.select(
       col("user_id"),
-      expr("CAST(ts AS LONG) div 604800").as("week"),
+      expr(Stages.epochBucketSql("ts", 604800)).as("week"),
       expr(Stages.centsSql("value")).as("cents"))
     val anchor = base.agg(min(col("week")).as("w0"))
     val perUser = base
@@ -1287,7 +1293,7 @@ object Analytics {
     events
       .select(
         col("user_id"), col("event_id"),
-        expr("CAST(ts AS LONG)").as("ts_sec"),
+        expr(Stages.epochBucketSql("ts", 1)).as("ts_sec"),
         expr(Stages.centsSql("value")).as("cents"))
       .withColumn("v_lag1", lag(col("cents"), 1).over(w))
       .withColumn("v_lag2", lag(col("cents"), 2).over(w))
@@ -1312,7 +1318,7 @@ object Analytics {
     */
   def errorRateMonitor(events: DataFrame): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("hour"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(
         count(lit(1)).as("n"),
         sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("n_err"))
@@ -1339,7 +1345,7 @@ object Analytics {
   def trendingParts(lineitem: DataFrame, k: Int = 20): DataFrame = {
     val weekly = lineitem
       .select(
-        expr("CAST(l_shipdate AS LONG) div 604800").as("week"),
+        expr(Stages.epochBucketSql("l_shipdate", 604800)).as("week"),
         col("l_partkey"),
         expr(Stages.centsSql("l_extendedprice")).as("cents"))
       .groupBy(col("week"), col("l_partkey"))
@@ -1375,7 +1381,7 @@ object Analytics {
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
-        max(expr("CAST(ts AS LONG)")).as("max_ts"))
+        max(expr(Stages.epochBucketSql("ts", 1))).as("max_ts"))
     perType
       .crossJoin(broadcast(perType.agg(max(col("max_ts")).as("global_max"))))
       .select(
@@ -1393,7 +1399,7 @@ object Analytics {
   def revenueBridge(events: DataFrame): DataFrame = {
     val base = events.select(
       col("event_type"),
-      expr("CAST(ts AS LONG) div 604800").as("week"),
+      expr(Stages.epochBucketSql("ts", 604800)).as("week"),
       expr(Stages.centsSql("value")).as("cents"))
     val anchor = base.agg(min(col("week")).as("w0"))
     base
@@ -1430,7 +1436,7 @@ object Analytics {
     events
       .select(
         col("user_id"), col("event_id"), col("event_type"),
-        expr("CAST(ts AS LONG)").as("ts_sec"))
+        expr(Stages.epochBucketSql("ts", 1)).as("ts_sec"))
       .withColumn("dwell", lead(col("ts_sec"), 1).over(w) - col("ts_sec"))
       .filter(col("dwell").isNotNull)
       .groupBy(col("event_type"))
@@ -1451,7 +1457,7 @@ object Analytics {
     */
   def rollingSums(events: DataFrame): DataFrame = {
     val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("day"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("day"))
       .agg(sum(expr(Stages.centsSql("value"))).as("cents"))
     def trail(days: Int) = Window
       .orderBy(col("day"))
@@ -1582,7 +1588,7 @@ object Analytics {
     // the max-hour aggregate and the window replication — uncached, the
     // corpus-scale distinct would materialize twice per run
     val pairs = events
-      .select(expr("CAST(ts AS LONG) div 3600").as("hour_epoch"), col("user_id"))
+      .select(expr(Stages.epochBucketSql("ts", 3600)).as("hour_epoch"), col("user_id"))
       .distinct()
       .cacheT()
     // clip to the OBSERVED hour range: the window-replication explode
@@ -1683,7 +1689,7 @@ object Analytics {
     */
   def activityStreaks(events: DataFrame): DataFrame = {
     val days = events
-      .select(col("user_id"), expr("CAST(ts AS LONG) div 86400").as("day"))
+      .select(col("user_id"), expr(Stages.epochBucketSql("ts", 86400)).as("day"))
       .distinct()
     val rn = row_number().over(Window.partitionBy(col("user_id")).orderBy(col("day").asc))
     days
@@ -1715,7 +1721,7 @@ object Analytics {
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
       .agg(
-        max(expr("CAST(ts AS LONG) div 86400")).as("recency_day"),
+        max(expr(Stages.epochBucketSql("ts", 86400))).as("recency_day"),
         count(lit(1)).as("frequency"),
         sum(expr(Stages.centsSql("value"))).as("monetary_cents"))
     val nRows = perUser.agg(count(lit(1)).cast("long").as("n"))
@@ -1760,7 +1766,7 @@ object Analytics {
     events
       .select(
         col("user_id"),
-        col("ts").cast("long").as("sec"),
+        expr(Stages.epochBucketSql("ts", 1)).as("sec"),
         expr(Stages.centsSql("value")).as("cents"),
         col("event_id"))
       .withColumn(
@@ -1789,7 +1795,7 @@ object Analytics {
   def ohlcBars(events: DataFrame): DataFrame =
     events
       .select(
-        expr("CAST(ts AS LONG) div 3600").as("hour_epoch"),
+        expr(Stages.epochBucketSql("ts", 3600)).as("hour_epoch"),
         col("ts"), col("event_id"), col("value"))
       .groupBy(col("hour_epoch"))
       .agg(
@@ -1811,7 +1817,7 @@ object Analytics {
     */
   def fanoBurstiness(events: DataFrame): DataFrame =
     events
-      .groupBy(col("event_type"), expr("CAST(ts AS LONG) div 3600").as("hr"))
+      .groupBy(col("event_type"), expr(Stages.epochBucketSql("ts", 3600)).as("hr"))
       .agg(count(lit(1)).as("x"))
       .groupBy(col("event_type"))
       .agg(
@@ -1871,7 +1877,7 @@ object Analytics {
     * All time math is integer epoch days.
     */
   def newVsReturning(events: DataFrame): DataFrame = {
-    val day = expr("CAST(ts AS LONG) div 86400")
+    val day = expr(Stages.epochBucketSql("ts", 86400))
     val activity = events.select(col("user_id"), day.as("day")).distinct()
     val firsts = activity.groupBy(col("user_id")).agg(min(col("day")).as("first_day"))
     activity
@@ -1902,7 +1908,7 @@ object Analytics {
     // event_id ∈ (−10^11, 9·10^11) — and is an order-preserving shift,
     // so non-negative fixtures hash identically.
     val ordKey = expr(
-      """concat(lpad(CAST(CAST(ts AS LONG) + 100000000000 AS STRING), 12, '0'),
+      s"""concat(lpad(CAST(${Stages.epochBucketSql("ts", 1)} + 100000000000 AS STRING), 12, '0'),
                 lpad(CAST(event_id + 100000000000 AS STRING), 12, '0'))""")
     events
       .groupBy(col("user_id"))
@@ -1960,7 +1966,7 @@ object Analytics {
     */
   def cusumChangepoint(events: DataFrame): DataFrame = {
     val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("day"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("day"))
       .agg(count(lit(1)).as("n"))
     val wAll = Window.partitionBy(lit(1))
     val wRun = wAll.orderBy(col("day").asc)
@@ -1992,7 +1998,7 @@ object Analytics {
         max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"),
         count(lit(1)).as("volume"))
       .select(
-        expr("CAST(window.start AS LONG) div 3600").as("hour_epoch"),
+        expr(Stages.epochBucketSql("window.start", 3600)).as("hour_epoch"),
         col("open"), col("high"), col("low"), col("close"), col("volume"))
 
   /** Dense (event_type × hour-of-day) activity grid with zero-filled
@@ -2034,7 +2040,7 @@ object Analytics {
   def latenessAudit(events: DataFrame, batchRows: Long = 250L): DataFrame = {
     val ev = events.select(
       col("event_type"),
-      expr("""CAST(ts AS LONG) - CASE WHEN event_id % 13 = 0 THEN 21600
+      expr(s"""${Stages.epochBucketSql("ts", 1)} - CASE WHEN event_id % 13 = 0 THEN 21600
                                       WHEN event_id % 97 = 0 THEN 86400
                                       ELSE 0 END""").as("ts_sec"),
       expr(s"event_id div $batchRows").as("batch"))
@@ -2430,7 +2436,7 @@ object Analytics {
       .crossJoin(broadcast(tot))
       .filter(col("nl") < col("n"))
       .select(
-        expr("CAST(CAST(d AS TIMESTAMP) AS LONG) div 86400").as("split_day"),
+        expr(Stages.epochBucketSql("CAST(d AS TIMESTAMP)", 86400)).as("split_day"),
         col("nl").as("n_left"),
         (col("n") - col("nl")).as("n_right"),
         expr("""(CAST(ql AS DOUBLE) -
@@ -2454,7 +2460,7 @@ object Analytics {
       .select(expr("CAST(ts AS DATE)").as("d"), expr(Stages.centsSql("value")).as("c"))
       .groupBy(col("d"))
       .agg(sum(col("c")).as("x"))
-      .select(expr("CAST(CAST(d AS TIMESTAMP) AS LONG) div 86400").as("dn"), col("x"))
+      .select(expr(Stages.epochBucketSql("CAST(d AS TIMESTAMP)", 86400)).as("dn"), col("x"))
     daily.as("i")
       .join(daily.as("j"), col("i.dn") < col("j.dn"))
       .select(
@@ -2552,7 +2558,7 @@ object Analytics {
         col("user_id"),
         // +10^11 bias before padding — same negative-value ordering
         // guard (and domain bounds) as [[journeyMatrix]]'s ordKey
-        expr("""concat(lpad(CAST(CAST(ts AS LONG) + 100000000000 AS STRING), 12, '0'),
+        expr(s"""concat(lpad(CAST(${Stages.epochBucketSql("ts", 1)} + 100000000000 AS STRING), 12, '0'),
                        lpad(CAST(event_id + 100000000000 AS STRING), 12, '0'),
                        substring(event_type, 1, 1))""").as("k"))
       .groupBy(col("user_id"))
@@ -2584,7 +2590,7 @@ object Analytics {
   def ridgeRegression(events: DataFrame, lambda: Double = 1000.0): DataFrame = {
     val base = events.select(
       expr("CAST(hour(ts) AS BIGINT)").as("x1"),
-      expr("(CAST(ts AS LONG) div 86400 + 3) % 7 + 1").as("x2"),
+      expr(s"(${Stages.epochBucketSql("ts", 86400)} + 3) % 7 + 1").as("x2"),
       expr(Stages.centsSql("value")).as("y"))
     val det = Stages.det3Sql("a", "b", "c", "b", "e", "f", "c", "f", "i")
     val d1 = Stages.det3Sql("r1", "b", "c", "r2", "e", "f", "r3", "f", "i")
@@ -2665,7 +2671,7 @@ object Analytics {
     */
   def watermarkReco(events: DataFrame, batchRows: Long = 250L): DataFrame = {
     val ev = events.select(
-      expr("""CAST(ts AS LONG) - CASE WHEN event_id % 13 = 0 THEN 21600
+      expr(s"""${Stages.epochBucketSql("ts", 1)} - CASE WHEN event_id % 13 = 0 THEN 21600
                                       WHEN event_id % 97 = 0 THEN 86400
                                       ELSE 0 END""").as("ts_sec"),
       expr(s"event_id div $batchRows").as("batch"))
@@ -2875,7 +2881,7 @@ object Analytics {
       .groupBy(col("user_id"))
       .agg(
         count(lit(1)).as("x1"),
-        countDistinct(expr("CAST(ts AS LONG) div 86400")).as("x2"),
+        countDistinct(expr(Stages.epochBucketSql("ts", 86400))).as("x2"),
         expr(s"sum(${Stages.centsSql("value")}) div 100").as("x3"))
       .withColumn("xt", expr("x1 + x2 + x3"))
     items
@@ -2910,9 +2916,9 @@ object Analytics {
     val perUser = events
       .groupBy(col("user_id"))
       .agg(
-        min(col("ts").cast("long")).as("first_s"),
-        max(col("ts").cast("long")).as("last_s"))
-    val maxS = events.agg(max(col("ts").cast("long")).as("max_s"))
+        min(expr(Stages.epochBucketSql("ts", 1))).as("first_s"),
+        max(expr(Stages.epochBucketSql("ts", 1))).as("last_s"))
+    val maxS = events.agg(max(expr(Stages.epochBucketSql("ts", 1))).as("max_s"))
     val byDay = perUser
       .crossJoin(broadcast(maxS))
       .select(
@@ -3446,7 +3452,7 @@ object Analytics {
   def partialCorrelation(events: DataFrame): DataFrame = {
     val base = events.select(
       expr("CAST(hour(ts) AS BIGINT)").as("x"),
-      expr("(CAST(ts AS LONG) div 86400 + 3) % 7 + 1").as("z"),
+      expr(s"(${Stages.epochBucketSql("ts", 86400)} + 3) % 7 + 1").as("z"),
       expr(Stages.centsSql("value")).as("y"))
     val (rxy, rxz, ryz) =
       (pairwiseCorrSql("x", "y"), pairwiseCorrSql("x", "z"), pairwiseCorrSql("y", "z"))
@@ -3652,13 +3658,13 @@ object Analytics {
     val perUser = events
       .groupBy(col("user_id"))
       .agg(
-        min(col("ts").cast("long")).as("first_s"),
-        max(col("ts").cast("long")).as("last_s"),
+        min(expr(Stages.epochBucketSql("ts", 1))).as("first_s"),
+        max(expr(Stages.epochBucketSql("ts", 1))).as("last_s"),
         when(
           lit(100L) * sum(when(col("event_type") === "error", 1L).otherwise(0L)) >=
             lit(25L) * count(lit(1)),
           1L).otherwise(0L).as("grp_a"))
-    val maxS = events.agg(max(col("ts").cast("long")).as("max_s"))
+    val maxS = events.agg(max(expr(Stages.epochBucketSql("ts", 1))).as("max_s"))
     val u = perUser
       .crossJoin(broadcast(maxS))
       .select(
@@ -3718,7 +3724,7 @@ object Analytics {
     */
   def durbinWatson(events: DataFrame): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("h"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("h"))
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("cents"))
       .select(col("h"), col("cents"))
     val idx = hourly.agg(min(col("h")).as("h0"))
@@ -3817,9 +3823,7 @@ object Analytics {
     * bounded table.
     */
   def acfLadder(events: DataFrame, maxLag: Int = 7): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val tot = daily.agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
     val dm = daily
       .crossJoin(broadcast(tot))
@@ -3853,9 +3857,7 @@ object Analytics {
     * one row; all joins run on the calendar-bounded daily table.
     */
   def acfSuffStats(events: DataFrame, maxLag: Int): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val tot = daily.agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
     val dm = daily
       .crossJoin(broadcast(tot))
@@ -3955,10 +3957,7 @@ object Analytics {
     * division, shared verbatim with the oracle.
     */
   def holtLinear(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
-    daily
+    dailyCents(events)
       .agg(sort_array(collect_list(struct(col("d"), col("y")))).as("xs"))
       // empty series → zero rows (the oracle twin's CTE chain is empty;
       // unguarded, slice(xs, 2, -1) throws on the empty array — r10
@@ -4156,7 +4155,7 @@ object Analytics {
   def burstiness(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = events
-      .select(col("event_type"), expr("CAST(ts AS LONG)").as("t"), col("event_id"))
+      .select(col("event_type"), expr(Stages.epochBucketSql("ts", 1)).as("t"), col("event_id"))
       .withColumn("_hr", expr("t div 3600"))
     val inHour = base
       .withColumn(
@@ -4268,7 +4267,7 @@ object Analytics {
     */
   def seasonalNaiveBacktest(events: DataFrame, seasonHours: Long = 168L): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("h"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("h"))
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
     val joined = hourly.as("t")
       .join(
@@ -4299,7 +4298,7 @@ object Analytics {
     */
   def theilU(events: DataFrame, seasonHours: Long = 168L): DataFrame = {
     val hourly = events
-      .groupBy(expr("CAST(ts AS LONG) div 3600").as("h"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 3600)).as("h"))
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
     hourly.as("t")
       .join(hourly.select((col("h") + lit(seasonHours)).as("h"), col("y").as("fs")), Seq("h"))
@@ -4368,10 +4367,7 @@ object Analytics {
     */
   def crossCorrelationLadder(events: DataFrame, maxLag: Int = 3): DataFrame = {
     def series(t: String) = {
-      val daily = events
-        .filter(col("event_type") === t)
-        .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-        .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+      val daily = dailyCents(events.filter(col("event_type") === t))
       val tot = daily.agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
       daily.crossJoin(broadcast(tot)).select(col("d"), (col("n") * col("y") - col("s")).as("e"))
     }
@@ -4412,9 +4408,7 @@ object Analytics {
     * grid before the one single-partition running-weight window.
     */
   def hodgesLehmann(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val a = daily.select(col("d").as("d1"), col("y").as("y1"))
     val b = daily.select(col("d").as("d2"), col("y").as("y2"))
     val walsh = a
@@ -4449,9 +4443,7 @@ object Analytics {
     * bounded series only.
     */
   def rescaledRange(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val w = Window.partitionBy(lit(1)).orderBy(col("d").asc)
     val prefixed = daily
       .withColumn("k", row_number().over(w).cast("long"))
@@ -4492,7 +4484,7 @@ object Analytics {
     */
   def friedmanPage(events: DataFrame): DataFrame = {
     val cells = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"), col("event_type"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"), col("event_type"))
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
     val k = cells.agg(countDistinct(col("event_type")).cast("long").as("k_treatments"))
     val complete = cells
@@ -4542,9 +4534,7 @@ object Analytics {
     * calibration, dose-response fits) of the training pipeline.
     */
   def isotonicDaily(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val w = Window.partitionBy(lit(1)).orderBy(col("d").asc)
     val idx = daily
       .withColumn("i", row_number().over(w).cast("long"))
@@ -4579,7 +4569,7 @@ object Analytics {
     */
   def demingDaily(events: DataFrame): DataFrame = {
     val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"))
       .agg(
         count(lit(1)).cast("long").as("x"),
         expr(s"sum(${Stages.centsSql("value")})").as("y"))
@@ -4619,7 +4609,7 @@ object Analytics {
     */
   def gumbelReturnLevel(events: DataFrame): DataFrame = {
     val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"))
       .agg(expr(s"max(${Stages.centsSql("value")})").as("m"))
     daily
       .agg(
@@ -4655,9 +4645,7 @@ object Analytics {
     * |days|-bounded series.
     */
   def siegelSlope(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val idx = daily
       .withColumn("i", row_number().over(Window.partitionBy(lit(1)).orderBy(col("d").asc)).cast("long"))
     val a = idx.select(col("i").as("i1"), col("y").as("y1"))
@@ -4699,8 +4687,8 @@ object Analytics {
   def medianPolish(events: DataFrame): DataFrame = {
     val cells0 = events
       .groupBy(
-        expr("(CAST(ts AS LONG) div 86400) % 7").as("i"),
-        expr("(CAST(ts AS LONG) div 86400) div 7").as("j"))
+        expr(s"${Stages.epochBucketSql("ts", 86400)} % 7").as("i"),
+        expr(s"${Stages.epochBucketSql("ts", 86400)} div 7").as("j"))
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("r"))
       .withColumn("a", lit(0L))
       .withColumn("b", lit(0L))
@@ -4743,11 +4731,8 @@ object Analytics {
     * the same frame is a sliding event-time window.
     */
   def hampelFilter(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
     val w = Window.partitionBy(lit(1)).orderBy(col("d").asc).rowsBetween(-3, 3)
-    daily
+    dailyCents(events)
       .withColumn("arr", sort_array(collect_list(col("y")).over(w)))
       .withColumn("med7", expr(sortedLowerMedianSql("arr")))
       .withColumn("devs", expr("sort_array(transform(arr, x -> abs(x - med7)))"))
@@ -4768,9 +4753,7 @@ object Analytics {
     * quantiles are not cross-engine bit-portable; G itself is.
     */
   def grubbsOutlier(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     // DECIMAL(38,0) — Σ(daily cents)² wraps BIGINT at scale (oracle
     // twin: HUGEINT)
     val sums = Stages.momentSums(Map('x' -> col("y")), wide = true)("n_days", "sx", "sxx")
@@ -4815,9 +4798,7 @@ object Analytics {
     * shared-text expression.
     */
   def dickeyFuller(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val pairs = daily.select(col("d").as("d1"), col("y").as("l"))
       .join(daily.select((col("d") - 1).as("d1"), col("y").as("cur")), Seq("d1"))
       .select(col("l"), (col("cur") - col("l")).as("dy"))
@@ -4887,7 +4868,7 @@ object Analytics {
     */
   def mediation(events: DataFrame): DataFrame = {
     val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"))
       .agg(
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
         sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("m"),
@@ -4928,9 +4909,7 @@ object Analytics {
     * no float discipline.
     */
   def monotoneSubseq(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     def foldSql(cmp: String): String =
       s"""array_max(transform(
             aggregate(
@@ -4960,7 +4939,7 @@ object Analytics {
     */
   def seasonalMannKendall(events: DataFrame): DataFrame = {
     val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"))
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("x"))
       .withColumn("g", expr("d % 7"))
     val s = daily.as("i")
@@ -5002,9 +4981,7 @@ object Analytics {
     * [[grangerF]].
     */
   def whiteTest(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
       .withColumn(
         "i",
         row_number().over(Window.partitionBy(lit(1)).orderBy(col("d").asc)).cast("long"))
@@ -5055,11 +5032,8 @@ object Analytics {
     * lag/lead over the calendar-bounded daily rollup.
     */
   def turningPoints(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
     val w = Window.partitionBy(lit(1)).orderBy(col("d").asc)
-    daily
+    dailyCents(events)
       .withColumn("pv", lag(col("y"), 1).over(w))
       .withColumn("nx", lead(col("y"), 1).over(w))
       .agg(
@@ -5100,9 +5074,7 @@ object Analytics {
     (0 until 7).map(r => s"CAST(s$r AS DOUBLE) * ${sin7(r)}").mkString("(", " + ", ")")
 
   def periodogram7(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val aggCols =
       (0 until 7).map(r => sum(when(expr(s"d % 7 = $r"), col("y")).otherwise(0L)).as(s"s$r")) ++
         // DECIMAL(38,0) — Σ(daily cents)² wraps BIGINT at scale (oracle
@@ -5133,9 +5105,7 @@ object Analytics {
     * daily rollup, not the corpus.
     */
   def matrixProfile(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val ord = Window.partitionBy(lit(1)).orderBy(col("d").asc)
     val frame = ord.rowsBetween(0, 4)
     // built twice (def, not val): the pair join below is a self-join, and
@@ -5272,7 +5242,7 @@ object Analytics {
     */
   def dtwWeekly(events: DataFrame): DataFrame = {
     val profiles = events
-      .groupBy(expr("(CAST(ts AS LONG) div 86400) % 7").as("r"))
+      .groupBy(expr(s"${Stages.epochBucketSql("ts", 86400)} % 7").as("r"))
       .agg(
         sum(when(col("event_type") === "purchase", expr(Stages.centsSql("value"))).otherwise(0L))
           .as("pa"),
@@ -5397,7 +5367,7 @@ object Analytics {
   def tvDistance(events: DataFrame): DataFrame = {
     val hours = events
       .filter(col("event_type").isin("purchase", "click"))
-      .groupBy(expr("(CAST(ts AS LONG) div 3600) % 24").as("h"))
+      .groupBy(expr(s"${Stages.epochBucketSql("ts", 3600)} % 24").as("h"))
       .agg(
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("c1"),
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c2"))
@@ -5424,9 +5394,7 @@ object Analytics {
     * rollup). Integer total; one shared division for the mean.
     */
   def pinballLoss(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val joined = daily.select(col("d").as("d1"), col("y").as("f"))
       .join(daily.select((col("d") - 7).as("d1"), col("y")), Seq("d1"))
     joined
@@ -5454,7 +5422,7 @@ object Analytics {
     */
   def mapFuncs(events: DataFrame): DataFrame = {
     val hourly = events
-      .groupBy(col("event_type"), expr("(CAST(ts AS LONG) div 3600) % 24").as("h"))
+      .groupBy(col("event_type"), expr(s"${Stages.epochBucketSql("ts", 3600)} % 24").as("h"))
       .agg(count(lit(1)).as("c"))
       // a null hour (null ts) cannot be a map key — map_from_entries
       // throws NULL_MAP_KEY (r10 degenerate probe). Dropping the null-
@@ -5548,17 +5516,13 @@ object Analytics {
     * mean.
     */
   def sessionPercentiles(events: DataFrame): DataFrame = {
-    val prevTs = lag(col("ts"), 1).over(userOrder)
-    val isNew = when(
-      prevTs.isNull || (col("ts").cast("long") - prevTs.cast("long")) > 1800L,
-      1L).otherwise(0L)
     val durations = events
-      .withColumn("is_new", isNew)
+      .withColumn("is_new", newSessionFlag(1800L))
       .withColumn(
         "session_id",
         sum(col("is_new")).over(userOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col("user_id"), col("session_id"))
-      .agg((max(col("ts").cast("long")) - min(col("ts").cast("long"))).as("dur"))
+      .agg((max(expr(Stages.epochBucketSql("ts", 1))) - min(expr(Stages.epochBucketSql("ts", 1)))).as("dur"))
     def pick(p: Int) = Relational.rankPick(expr(Stages.type1RankSql(p.toString, "n")), col("dur"))
     Relational
       .gridRunningWeight(durations.groupBy(col("dur")).agg(count(lit(1)).as("c")), Nil, "dur", "c")
@@ -5682,10 +5646,7 @@ object Analytics {
     * as part of the operator's contract.
     */
   def holtWinters(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
-    daily
+    dailyCents(events)
       .agg(sort_array(collect_list(struct(col("d"), col("y")))).as("xs"))
       // empty series → zero rows (element_at(xs, 0) throws; see holtLinear)
       .filter(expr("size(xs) > 0"))
@@ -5736,9 +5697,7 @@ object Analytics {
     * integer error sums (|e| in cents) — no float accumulates anywhere.
     */
   def maseWape(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val e7 = daily.select(col("d").as("d1"), col("y").as("f"))
       .join(daily.select((col("d") - 7).as("d1"), col("y")), Seq("d1"))
       .agg(
@@ -5895,9 +5854,7 @@ object Analytics {
     * is integer until the two shared final divisions per row.
     */
   def classicalDecomposition(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val w = Window.partitionBy(lit(1)).orderBy(col("d").asc).rowsBetween(-3, 3)
     val trended = daily
       .withColumn("t7", sum(col("y")).over(w))
@@ -6120,7 +6077,7 @@ object Analytics {
     */
   def perceptronWeekend(events: DataFrame): DataFrame = {
     val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"))
       .agg(
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x1"),
         sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("x2"))
@@ -6159,7 +6116,7 @@ object Analytics {
     */
   def forecastReconciliation(events: DataFrame): DataFrame = {
     val typed = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"), col("event_type"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"), col("event_type"))
       .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
     val maxD = typed.agg(max(col("d")).as("dmax"))
     val window7 = typed
@@ -6202,7 +6159,7 @@ object Analytics {
     */
   def banditReplay(events: DataFrame): DataFrame = {
     val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"))
       .agg(
         sum(when(col("event_type") === "purchase", expr(Stages.centsSql("value"))).otherwise(0L))
           .as("rp"),
@@ -6242,9 +6199,7 @@ object Analytics {
     * integer argmax; the baseline is one shared division.
     */
   def eventStudy(events: DataFrame): DataFrame = {
-    val daily = events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
-      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+    val daily = dailyCents(events)
     val anchor = Relational.rankedTopK(daily, 1, col("y").desc, col("d").asc)
       .select(col("d").as("peak_d"))
     val withOff = daily
@@ -6273,7 +6228,7 @@ object Analytics {
     */
   def activityIslands(events: DataFrame): DataFrame = {
     val userDays = events
-      .select(col("user_id"), expr("CAST(ts AS LONG) div 86400").as("d"))
+      .select(col("user_id"), expr(Stages.epochBucketSql("ts", 86400)).as("d"))
       .distinct()
     val top = Relational
       .rankedTopK(
@@ -6304,9 +6259,16 @@ object Analytics {
   }
 
   /** One pass over events → (day, purchase-revenue cents, click count). */
+  /** The daily cents series: day number `d` and the day's summed value
+    * cents `y`. */
+  private def dailyCents(events: DataFrame): DataFrame =
+    events
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"))
+      .agg(expr(s"sum(${Stages.centsSql("value")})").as("y"))
+
   private def dailyClickPurchase(events: DataFrame): DataFrame =
     events
-      .groupBy(expr("CAST(ts AS LONG) div 86400").as("d"))
+      .groupBy(expr(Stages.epochBucketSql("ts", 86400)).as("d"))
       .agg(
         sum(when(col("event_type") === "purchase", expr(Stages.centsSql("value"))).otherwise(0L))
           .as("y"),

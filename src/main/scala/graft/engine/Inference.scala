@@ -482,10 +482,10 @@ object Inference {
   def diffInDiff(events: DataFrame): DataFrame = {
     val cents = Stages.centsSql("value")
     val arm = Analytics.userArmSql
-    val span = events.agg(
-      min(expr("CAST(ts AS LONG)")).as("t0"), max(expr("CAST(ts AS LONG)")).as("t1"))
+    val secs = Stages.epochBucketSql("ts", 1)
+    val span = events.agg(min(expr(secs)).as("t0"), max(expr(secs)).as("t1"))
     def cell(a: Int, late: Boolean, sfx: String) = {
-      val period = if (late) "CAST(ts AS LONG) * 2 >= t0 + t1" else "CAST(ts AS LONG) * 2 < t0 + t1"
+      val period = if (late) s"$secs * 2 >= t0 + t1" else s"$secs * 2 < t0 + t1"
       Seq(
         sum(when(expr(s"$arm = $a AND $period"), 1L).otherwise(0L)).as(s"n$sfx"),
         sum(when(expr(s"$arm = $a AND $period"), expr(cents)).otherwise(lit(0L))).as(s"s$sfx"),
@@ -671,14 +671,14 @@ object Inference {
     * pass — the "how many users exist that we never saw" estimator.
     */
   def captureRecapture(events: DataFrame): DataFrame = {
-    val span = events.agg(
-      min(expr("CAST(ts AS LONG)")).as("t0"), max(expr("CAST(ts AS LONG)")).as("t1"))
+    val secs = Stages.epochBucketSql("ts", 1)
+    val span = events.agg(min(expr(secs)).as("t0"), max(expr(secs)).as("t1"))
     val perUser = events
       .crossJoin(broadcast(span))
       .groupBy(col("user_id"))
       .agg(
-        max(when(expr("CAST(ts AS LONG) * 2 < t0 + t1"), 1L).otherwise(0L)).as("in_a"),
-        max(when(expr("CAST(ts AS LONG) * 2 >= t0 + t1"), 1L).otherwise(0L)).as("in_b"))
+        max(when(expr(s"$secs * 2 < t0 + t1"), 1L).otherwise(0L)).as("in_a"),
+        max(when(expr(s"$secs * 2 >= t0 + t1"), 1L).otherwise(0L)).as("in_b"))
     perUser
       .agg(
         sum(col("in_a")).as("na"),

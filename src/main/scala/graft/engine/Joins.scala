@@ -78,14 +78,14 @@ object Joins {
         col("event_id").as("event_a"),
         col("ts").as("ts_a"),
         explode(array(
-          expr(s"cast(ts as long) div $w"),
-          expr(s"cast(ts as long) div $w + 1"))).as("bucket"))
+          expr(Stages.epochBucketSql("ts", w)),
+          expr(s"${Stages.epochBucketSql("ts", w)} + 1"))).as("bucket"))
     val candidates = events
       .select(
         col("user_id"),
         col("event_id").as("event_b"),
         col("ts").as("ts_b"),
-        expr(s"cast(ts as long) div $w").as("bucket"))
+        expr(Stages.epochBucketSql("ts", w)).as("bucket"))
     anchors
       .join(candidates, Seq("user_id", "bucket"))
       .filter(col("ts_b") > col("ts_a") && col("ts_b") <= col("ts_a") + expr(s"INTERVAL $w SECONDS"))
@@ -93,7 +93,7 @@ object Joins {
         col("user_id"),
         col("event_a"),
         col("event_b"),
-        (col("ts_b").cast("long") - col("ts_a").cast("long")).as("gap_seconds"))
+        (expr(Stages.epochBucketSql("ts_b", 1)) - expr(Stages.epochBucketSql("ts_a", 1))).as("gap_seconds"))
   }
 
   /** Pre-partitioned join: repartition both sides on the key so the join

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -58,7 +58,7 @@ object RefPipelines {
     val joined = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
     joined
       .withColumn(
-        "lead_sec", col("l_shipdate").cast("long") - col("o_orderdate").cast("long"))
+        "lead_sec", expr(Stages.epochBucketSql("l_shipdate", 1)) - expr(Stages.epochBucketSql("o_orderdate", 1)))
       .withColumn("lead_days", col("lead_sec") / lit(86400))
       .filter(Stages.rangeViolation(col("lead_days"), 1.0, 2000.0))
       .select(
@@ -118,6 +118,12 @@ object RefPipelines {
   val purchaseCents: String = Stages.centsWhenSql("event_type = 'purchase'", "value")
   val signupCents: String = Stages.centsWhenSql("event_type = 'signup'", "value")
 
+  /** The window's start as the reference's (`date`, `hour`) strings (P8),
+    * shared by the three hourly pipelines. */
+  private val windowHour: Seq[Column] = Seq(
+    date_format(col("window.start"), "yyyy-MM-dd").as("date"),
+    date_format(col("window.start"), "HH:mm:ss").as("hour"))
+
   /** Query 4 analog — hourly average revenue (`spark_streaming.py:242-269`).
     * Not-null filter (F3), tumbling 60-minute window (A1), conditional
     * averages per category (A2 — the reference's credit-card/cash split,
@@ -132,12 +138,7 @@ object RefPipelines {
         expr(Stages.halfUpAvgDollarsSql(valueCents)).as("avg_revenue"),
         expr(Stages.halfUpAvgDollarsSql(purchaseCents)).as("avg_purchase"),
         expr(Stages.halfUpAvgDollarsSql(signupCents)).as("avg_signup"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd").as("date"),
-        date_format(col("window.start"), "HH:mm:ss").as("hour"),
-        col("avg_revenue"),
-        col("avg_purchase"),
-        col("avg_signup"))
+      .select(windowHour ++ Seq(col("avg_revenue"), col("avg_purchase"), col("avg_signup")): _*)
 
   /** Query 5 analog — hourly trip count (`spark_streaming.py:272-298`).
     * Windowed COUNT(*) (A3) + conditional counts per category (A4).
@@ -149,12 +150,7 @@ object RefPipelines {
         count(lit(1)).as("total_trips"),
         count(when(col("event_type") === "purchase", lit(1))).as("purchase_trips"),
         count(when(col("event_type") === "signup", lit(1))).as("signup_trips"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd").as("date"),
-        date_format(col("window.start"), "HH:mm:ss").as("hour"),
-        col("total_trips"),
-        col("purchase_trips"),
-        col("signup_trips"))
+      .select(windowHour ++ Seq(col("total_trips"), col("purchase_trips"), col("signup_trips")): _*)
 
   /** Query 6 analog — hourly count per borough
     * (`spark_streaming.py:301-337`): stream–static broadcast LEFT join (J1)
@@ -168,9 +164,5 @@ object RefPipelines {
       .join(broadcast(nation), col("nation_key") === col("n_nationkey"), "left")
       .groupBy(window(col("ts"), "60 minutes"), col("n_name"))
       .agg(count(col("user_id")).as("trip_count"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd").as("date"),
-        date_format(col("window.start"), "HH:mm:ss").as("hour"),
-        col("n_name").as("borough"),
-        col("trip_count"))
+      .select(windowHour ++ Seq(col("n_name").as("borough"), col("trip_count")): _*)
 }

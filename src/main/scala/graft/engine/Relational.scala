@@ -1189,8 +1189,8 @@ object Relational {
       count(col("value")).as("n_value_nonnull"),
       countDistinct(col("user_id")).as("n_users"),
       countDistinct(col("event_type")).as("n_types"),
-      min(col("ts")).cast("long").as("min_ts_epoch"),
-      max(col("ts")).cast("long").as("max_ts_epoch"),
+      expr(Stages.epochBucketSql("min(ts)", 1)).as("min_ts_epoch"),
+      expr(Stages.epochBucketSql("max(ts)", 1)).as("max_ts_epoch"),
       sum(expr(Stages.centsSql("value"))).as("total_cents"))
 
   /** 2-D histogram (hundred-dollar price × ten-unit quantity bins) —
@@ -1388,7 +1388,7 @@ object Relational {
     * neither. |stages| output rows; two aggregates and a broadcast.
     */
   def lifecycleStages(events: DataFrame): DataFrame = {
-    val base = events.select(col("user_id"), expr("CAST(ts AS LONG)").as("ts_sec"))
+    val base = events.select(col("user_id"), expr(Stages.epochBucketSql("ts", 1)).as("ts_sec"))
     val anchor = base.agg(max(col("ts_sec")).as("now_sec"))
     val perUser = base
       .crossJoin(broadcast(anchor))
@@ -1504,7 +1504,7 @@ object Relational {
   def recencyScore(events: DataFrame): DataFrame = {
     val base = events.select(
       col("user_id"),
-      expr("CAST(ts AS LONG)").as("ts_sec"),
+      expr(Stages.epochBucketSql("ts", 1)).as("ts_sec"),
       expr(Stages.centsSql("value")).as("cents"))
     val anchor = base.agg(max(col("ts_sec")).as("now_sec"))
     base
@@ -1552,11 +1552,11 @@ object Relational {
     */
   def shipLatency(lineitem: DataFrame, orders: DataFrame): DataFrame =
     lineitem
-      .select(col("l_orderkey"), expr("CAST(l_shipdate AS LONG)").as("ship_sec"))
+      .select(col("l_orderkey"), expr(Stages.epochBucketSql("l_shipdate", 1)).as("ship_sec"))
       .join(
         orders.select(
           col("o_orderkey"), col("o_orderpriority"),
-          expr("CAST(o_orderdate AS LONG)").as("order_sec")),
+          expr(Stages.epochBucketSql("o_orderdate", 1)).as("order_sec")),
         col("l_orderkey") === col("o_orderkey"))
       .select(
         col("o_orderpriority"),
@@ -1670,9 +1670,9 @@ object Relational {
   def survivorship(events: DataFrame): DataFrame = {
     val base = events.select(
       col("user_id"), col("event_type"),
-      expr("CAST(ts AS LONG) div 86400").as("day"),
+      expr(Stages.epochBucketSql("ts", 86400)).as("day"),
       col("event_id"),
-      expr("CAST(ts AS LONG)").as("ts_sec"),
+      expr(Stages.epochBucketSql("ts", 1)).as("ts_sec"),
       expr(Stages.centsSql("value")).as("cents"))
     val cellKeys = Seq(col("user_id"), col("event_type"), col("day"))
     val latest = Seq(col("ts_sec").desc, col("event_id").asc)
@@ -1773,7 +1773,7 @@ object Relational {
     * plus a broadcast 1-row prior.
     */
   def targetEncoding(events: DataFrame, m: Int = 10): DataFrame = {
-    val cat = expr("concat(event_type, '_', CAST((CAST(ts AS LONG) div 3600) % 4 AS STRING))")
+    val cat = expr(s"concat(event_type, '_', CAST(${Stages.epochBucketSql("ts", 3600)} % 4 AS STRING))")
     val pos = when(col("value") > 100.0, 1L).otherwise(0L)
     val perCat = events
       .select(cat.as("category"), pos.as("pos"))
@@ -1833,9 +1833,9 @@ object Relational {
       .agg(
         count(lit(1)).as("n_events"),
         countDistinct(col("event_type")).as("n_types"),
-        countDistinct(expr("CAST(ts AS LONG) div 86400")).as("active_days"),
-        min(expr("CAST(ts AS LONG)")).as("first_seen"),
-        max(expr("CAST(ts AS LONG)")).as("last_seen"),
+        countDistinct(expr(Stages.epochBucketSql("ts", 86400))).as("active_days"),
+        min(expr(Stages.epochBucketSql("ts", 1))).as("first_seen"),
+        max(expr(Stages.epochBucketSql("ts", 1))).as("last_seen"),
         sum(expr(Stages.centsSql("value"))).as("spend_cents"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"))
       .withColumn("tenure_days", expr("(last_seen - first_seen) div 86400"))
@@ -1854,7 +1854,7 @@ object Relational {
     events
       .groupBy(
         col("user_id"), col("event_type"),
-        expr("CAST(ts AS LONG) div 3600").as("hour"))
+        expr(Stages.epochBucketSql("ts", 3600)).as("hour"))
       .agg(count(lit(1)).as("n_in_cell"))
       .groupBy(col("event_type"))
       .agg(sum(col("n_in_cell")).as("n_raw"), count(lit(1)).as("n_kept"))
@@ -1868,7 +1868,7 @@ object Relational {
         sum(when(col("value") < 0.05 || col("value") > 400.0, 1L).otherwise(0L)).as("r_range"),
         sum(when(!col("event_type").isin("click", "view", "purchase", "signup"), 1L)
           .otherwise(0L)).as("r_type"),
-        sum(when(expr("CAST(ts AS LONG) < 1704153600"), 1L).otherwise(0L)).as("r_stale"),
+        sum(when(expr(s"${Stages.epochBucketSql("ts", 1)} < 1704153600"), 1L).otherwise(0L)).as("r_stale"),
         sum(when(!col("props").rlike("^\\{\"k\": [0-9]+\\}$"), 1L).otherwise(0L)).as("r_props"))
       .select(
         expr("""stack(5,
@@ -2002,7 +2002,7 @@ object Relational {
   def compactionPlan(events: DataFrame, targetRows: Long = 2000L): DataFrame = {
     val files = events
       .select(expr("CAST(CAST(ts AS DATE) AS TIMESTAMP)").as("dts"), col("event_type"))
-      .groupBy(expr("CAST(CAST(dts AS LONG) div 86400 AS BIGINT)").as("day"), col("event_type"))
+      .groupBy(expr(s"CAST(${Stages.epochBucketSql("dts", 86400)} AS BIGINT)").as("day"), col("event_type"))
       .agg(count(lit(1)).as("rows"))
     val w = Window
       .partitionBy(lit(1))

@@ -171,6 +171,32 @@ object Stages {
     s"CAST(CAST('0x' || substring(md5($key), $from, $digits) AS UBIGINT) AS BIGINT)"
   }
 
+  // ---- event time ----------------------------------------------------------
+
+  /** Event-time bucket of the timestamp SQL text `c`, `width` seconds wide:
+    * the one Spark spelling of epoch seconds (`width` 1, no division) and
+    * of hour, day and week numbers (3600, 86400, 604800).
+    *  - The seconds are floored: `CAST(c AS LONG)` rounds toward −∞, so
+    *    `1969-12-31 23:59:59.999999` is −1, not 0.
+    *  - The bucket divides those seconds with `div`, which truncates toward
+    *    zero on both engines.
+    *  - So before 1970 a bucket is not the calendar bucket: the second
+    *    before the epoch is day 0, as is the first day after it.
+    */
+  def epochBucketSql(c: String, width: Long): String = {
+    require(width >= 1, s"an event-time bucket of $width seconds")
+    val secs = s"CAST($c AS LONG)"
+    if (width == 1) secs else s"($secs div $width)"
+  }
+
+  /** [[epochBucketSql]] for the DuckDB oracles. `date_trunc('second', …)`
+    * floors as Spark's cast does; `epoch_us(…) // 1000000` would truncate. */
+  def duckEpochBucketSql(c: String, width: Long): String = {
+    require(width >= 1, s"an event-time bucket of $width seconds")
+    val secs = s"CAST(epoch(date_trunc('second', CAST($c AS TIMESTAMP))) AS BIGINT)"
+    if (width == 1) secs else s"($secs // $width)"
+  }
+
   // ---- order-statistic rank rules ------------------------------------------
   //
   // The 1-based rank of the picked value among a group's n sorted values,

@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   */
 object TpcH {
 
-  private def epochDay(c: String) = s"(CAST($c AS LONG) div 86400)"
+  private val (shipDay, orderDay) =
+    (Stages.epochBucketSql("l_shipdate", 86400), Stages.epochBucketSql("o_orderdate", 86400))
 
   /** The fixture's stand-in for `partsupp`: supplier–part offerings
     * DERIVED from lineitem evidence — one row per (suppkey, partkey)
@@ -69,7 +70,7 @@ object TpcH {
           col("l_orderkey") === col("o_orderkey")),
       "shipLagEvidence")(j =>
       j.groupBy(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-        .agg(max(expr(s"${epochDay("l_shipdate")} - ${epochDay("o_orderdate")}"))
+        .agg(max(expr(s"$shipDay - $orderDay"))
           .as("max_lag_days")))
 
   /** Q2-shaped minimum-cost supplier: for parts of one type, the
@@ -209,7 +210,7 @@ object TpcH {
     o.join(
         lineitem.select(col("l_orderkey"), col("l_shipdate")),
         col("l_orderkey") === col("o_orderkey") &&
-          expr(s"${epochDay("l_shipdate")} > ${epochDay("o_orderdate")} + $lateDays"),
+          expr(s"$shipDay > $orderDay + $lateDays"),
         "left_semi")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("order_count"))
@@ -326,7 +327,7 @@ object TpcH {
           col("l_shipdate") < lit(yearEndExcl).cast("timestamp"))
       .join(orders.select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"),
         col("o_orderstatus")), col("l_orderkey") === col("o_orderkey"))
-      .filter(expr(s"${epochDay("l_shipdate")} > ${epochDay("o_orderdate")} + $lateDays"))
+      .filter(expr(s"$shipDay > $orderDay + $lateDays"))
       .groupBy(col("o_orderstatus"))
       .agg(
         expr("sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END)")

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.engine.Stages
+
 /** Custom stateful streaming operators
   * (`KeyValueGroupedDataset.flatMapGroupsWithState`) — the Structured
   * Streaming escape hatch for state machines the built-in windowed
@@ -218,7 +220,7 @@ object Stateful {
         col("user_id"),
         col("event_a"),
         col("event_b"),
-        (col("ts_b").cast("long") - col("ts_a").cast("long")).as("gap_seconds"))
+        (expr(Stages.epochBucketSql("ts_b", 1)) - expr(Stages.epochBucketSql("ts_a", 1))).as("gap_seconds"))
   }
 
   case class AlertEvent(user_id: Long, event_id: Long, ts: Timestamp, value: Double)

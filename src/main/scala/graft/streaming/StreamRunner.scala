@@ -1,12 +1,13 @@
 package graft.streaming
 
 import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.graft.ListenerFence
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 import graft.engine.{RefPipelines, Stages}
 
@@ -198,6 +199,21 @@ final class StreamRunner(
       startWindowed(events)
   }
 
-  /** Block until termination (reference `:355-360`). */
-  def awaitAll(queries: Seq[StreamingQuery]): Unit = queries.foreach(_.awaitTermination())
+  /** How long [[awaitAll]] waits on one query before it looks at the next. */
+  private val awaitPollMs = 100L
+
+  /** Block until every query has ended (reference `:355-360`). Each query
+    * is awaited in turn for [[awaitPollMs]], so a failure in any of them
+    * is seen within one round: the others are then stopped and the
+    * failure is thrown.
+    */
+  def awaitAll(queries: Seq[StreamingQuery]): Unit = {
+    var running = queries
+    try while (running.nonEmpty) running = running.filterNot(_.awaitTermination(awaitPollMs))
+    catch {
+      case e: StreamingQueryException =>
+        queries.foreach(q => try q.stop() catch { case NonFatal(s) => e.addSuppressed(s) })
+        throw e
+    }
+  }
 }

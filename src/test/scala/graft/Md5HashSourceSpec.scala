@@ -19,7 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - lineitem revenue units (`Stages.lineitemRevUnitsSql`): a
   *    `(100 - <discount cents>` factor, in raw text or over `centsSql`;
   *  - whole lineitem quantities (`Stages.lineitemQtySql`):
-  *    `round(l_quantity) AS BIGINT`.
+  *    `round(l_quantity) AS BIGINT`;
+  *  - event-time seconds and buckets (`Stages.epochBucketSql` for Spark,
+  *    `Stages.duckEpochBucketSql` for DuckDB): a `CAST(<column> AS LONG)`
+  *    or a `.cast("long")` of a timestamp column on the Spark side,
+  *    `epoch(`, `epoch_us(` or `floor(epoch(` on the DuckDB side.
   */
 class Md5HashSourceSpec extends AnyFunSuite {
 
@@ -42,7 +46,16 @@ class Md5HashSourceSpec extends AnyFunSuite {
     Fragment(
       "lineitem revenue unit",
       Seq("""(?i)\(\s*100\s*-\s*(CAST\s*\(\s*round\s*\(\s*\(?\s*l_discount|\$\{\s*(engine\.)?(Stages\.)?centsSql\s*\(\s*"l_discount")""".r)),
-    Fragment("whole lineitem quantity", Seq("""(?i)round\s*\(\s*l_quantity\s*\)\s*AS\s+BIGINT""".r)))
+    Fragment("whole lineitem quantity", Seq("""(?i)round\s*\(\s*l_quantity\s*\)\s*AS\s+BIGINT""".r)),
+    Fragment(
+      "Spark epoch second",
+      Seq(
+        """(?i)CAST\s*\(\s*[\w.$]+\s+AS\s+LONG\s*\)""".r,
+        """(?i)AS\s+TIMESTAMP\s*\)\s*AS\s+LONG\s*\)""".r,
+        // a timestamp column, or its min or max, cast to long
+        """(?i)col\s*\(\s*"[\w.]*(ts|ts_\w+|start|end|date)"\s*\)\s*\.cast\s*\(\s*"long"""".r,
+        """(?i)\b(min|max)\s*\(\s*col\s*\(\s*"[\w.]*(ts|ts_\w+|start|end|date)"\s*\)\s*\)\s*\.cast\s*\(\s*"long"""".r)),
+    Fragment("DuckDB epoch second", Seq("""(?i)\bepoch(_us)?\s*\(""".r, """(?i)floor\s*\(\s*epoch""".r)))
 
   private lazy val root = Paths.get("src/main/scala")
 

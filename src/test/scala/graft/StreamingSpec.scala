@@ -5,7 +5,10 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 
 import graft.engine.RefPipelines
 import graft.streaming._
@@ -31,10 +34,19 @@ final class EvFiles(spark: org.apache.spark.sql.SparkSession, dir: String) {
     spark.readStream.schema(org.apache.spark.sql.Encoders.product[Ev].schema).parquet(dir)
 }
 
-class StreamingSpec extends AnyFunSuite {
+/** A [[CollectingSink]] whose writes to `table` fail. */
+final class FailingSink(table: String) extends BatchSink {
+  val rest = new CollectingSink
+  def write(df: org.apache.spark.sql.DataFrame, epochId: Long, t: String): Unit =
+    if (t == table) throw new IllegalStateException(s"$t sink is down") else rest.write(df, epochId, t)
+}
+
+class StreamingSpec extends AnyFunSuite with TimeLimits {
   import SparkTestSession._
   import spark.implicits._
   implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+  // failAfter interrupts a blocked await instead of waiting it out
+  implicit val signaler: Signaler = ThreadSignaler
 
   private def ev(id: Long, hour: Int, min: Int, value: Double, typ: String = "purchase"): Ev =
     Ev(id, Timestamp.valueOf(f"2024-01-01 $hour%02d:$min%02d:00"), id % 25, typ, value, s"""{"k": ${value.toInt}}""")
@@ -525,6 +537,37 @@ class StreamingSpec extends AnyFunSuite {
         .collect()
       assert(expected.map(_.getAs[String]("hour")).sorted.toSeq == Seq("00:00:00", "01:00:00", "02:00:00"))
       assert(sink.rowsFor(table).map(_.toString).sorted == expected.map(_.toString).toSeq.sorted)
+    } finally queries.foreach(_.stop())
+  }
+
+  test("awaitAll returns once every query has ended") {
+    val files = new EvFiles(spark, tmpDir())
+    files.add(ev(1, 0, 10, 50.0), ev(2, 0, 20, 0.2))
+    val sink = new CollectingSink
+    val runner = new StreamRunner(
+      spark, sink, new CollectingAlerter, tmpDir(), dimDir = sfDir,
+      trigger = Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+    val queries = runner.startAll(files.stream)
+    try {
+      failAfter(2.minutes)(runner.awaitAll(queries))
+      assert(queries.forall(q => !q.isActive && q.exception.isEmpty))
+      assert(sink.rowsFor("events_full").size == 2)
+    } finally queries.foreach(_.stop())
+  }
+
+  test("awaitAll throws when any query fails, and stops the others first") {
+    val files = new EvFiles(spark, tmpDir())
+    files.add(ev(1, 0, 10, 50.0), ev(2, 0, 20, 0.2))
+    val runner = new StreamRunner(spark, new FailingSink("abnormal_value"), new CollectingAlerter, tmpDir(), dimDir = sfDir)
+    val queries = runner.startAll(files.stream)
+    try {
+      // abnormal_value is not the first query: awaiting the queries in
+      // turn would block on events_full, which never ends
+      assert(queries.head.name == "events_full" && queries.exists(_.name == "abnormal_value"))
+      val e = failAfter(2.minutes)(intercept[StreamingQueryException](runner.awaitAll(queries)))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(_.getMessage == "abnormal_value sink is down"), e)
+      assert(queries.forall(!_.isActive))
     } finally queries.foreach(_.stop())
   }
 }
