@@ -201,8 +201,7 @@ object Analytics {
         col("ts_3").isNotNull.as("completed"))
   }
 
-  /** Batch sessionization — the exact batch twin of
-    * [[graft.streaming.Stateful.sessionize]]: a session breaks after
+  /** Batch sessionization: a session breaks after more than
     * `gapMinutes` of inactivity. Classic gaps-and-islands: lag → new-flag
     * → running sum as session id → per-session aggregate. Two window
     * passes + one aggregation, all on the same user_id partitioning (one
@@ -268,8 +267,7 @@ object Analytics {
     * identically under Structured Streaming with a watermark, which is
     * the point of using the native operator over the gaps-and-islands
     * spelling). Session end is last-event-time + gap, per the operator's
-    * contract. BOUNDARY DIVERGENCE from [[sessionizeBatch]] (and the
-    * streaming [[graft.streaming.Stateful.sessionize]]): those treat an
+    * contract. BOUNDARY DIVERGENCE from [[sessionizeBatch]]: it treats an
     * exactly-gap-apart event as the SAME session (strict `>` split),
     * while the native window's half-open interval starts a NEW one — on
     * any other input the two produce identical sessions, but they are
@@ -1980,26 +1978,6 @@ object Analytics {
         col("day"), col("n"), col("cusum"),
         (abs(col("cusum")) === col("max_abs")).as("is_peak"))
   }
-
-  /** [[ohlcBars]] spelled over a tumbling `window()` — IDENTICAL results
-    * (hour_epoch = window start / 3600), but because the group key is a
-    * time window, the same stage runs unchanged as a streaming query:
-    * with a watermark, append mode emits each bar exactly once when its
-    * hour finalizes. The batch/stream unification proof lives in the
-    * streaming spec.
-    */
-  def ohlcBarsWindowed(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "60 minutes"))
-      .agg(
-        min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"),
-        count(lit(1)).as("volume"))
-      .select(
-        expr(Stages.epochBucketSql("window.start", 3600)).as("hour_epoch"),
-        col("open"), col("high"), col("low"), col("close"), col("volume"))
 
   /** Dense (event_type × hour-of-day) activity grid with zero-filled
     * cells — the cross-join + left-join "fill the matrix" shape behind

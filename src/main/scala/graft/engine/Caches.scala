@@ -127,25 +127,4 @@ object Views {
     pins.values.forEach(df => df.unpersist())
     pins.clear()
   }
-
-  /** Unpersist and forget this session's pinned views only — the
-    * per-session analog of [[Caches.freeTransient]], for long-lived
-    * JVMs that cycle many sessions (test suites, repeated fixtures):
-    * without it a retired session's pins hold storage and the session
-    * reference until process exit. Caveat inherited from Spark: sibling
-    * sessions of one SparkContext share the CacheManager, which caches
-    * BY CANONICALIZED PLAN — freeing a pin whose plan another session's
-    * pin shares drops that storage too (the entry stays in `pins` and
-    * simply recomputes uncached).
-    */
-  def free(spark: SparkSession): Unit = {
-    val it = pins.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq spark) {
-        e.getValue.unpersist(blocking = false)
-        it.remove()
-      }
-    }
-  }
 }

@@ -5,26 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Join utilities for cluster-scale data distributions.
   *
-  * The reference has exactly one join (broadcast left, SURVEY.md §2.5);
-  * these are the shapes a 100 TB pipeline additionally needs: salting for
-  * skewed keys and a co-partitioned repartition join. AQE's skew-join
+  * The reference has exactly one join (broadcast left, SURVEY.md §2.5),
+  * which `RefPipelines` writes inline; these are the shapes a 100 TB
+  * pipeline additionally needs, such as salting for skewed keys. AQE's skew-join
   * handling covers sort-merge cases at runtime; explicit salting remains
   * necessary when a single logical key exceeds one task's memory (AQE
   * splits partitions, not keys on the build side of broadcast-ineligible
   * aggregations) and for deterministic plans.
   */
 object Joins {
-
-  /** Broadcast equi-join of a fact side against a small dimension —
-    * reference J1 (`spark_streaming.py:310-312`).
-    */
-  def broadcastLookup(
-      fact: DataFrame,
-      dim: DataFrame,
-      factKey: Column,
-      dimKey: Column,
-      joinType: String = "left"): DataFrame =
-    fact.join(broadcast(dim), factKey === dimKey, joinType)
 
   /** Salted inner equi-join for a skewed LEFT key: the left side gets a
     * random-ish (hash-derived, deterministic) salt in [0, salt), the
@@ -95,14 +84,6 @@ object Joins {
         col("event_b"),
         (expr(Stages.epochBucketSql("ts_b", 1)) - expr(Stages.epochBucketSql("ts_a", 1))).as("gap_seconds"))
   }
-
-  /** Pre-partitioned join: repartition both sides on the key so the join
-    * itself is shuffle-free and the partitioning is reusable by
-    * downstream stages on the same key (bucketing's runtime cousin —
-    * persistent tables would declare `bucketBy` instead).
-    */
-  def copartitionedJoin(left: DataFrame, right: DataFrame, key: String, partitions: Int): DataFrame =
-    left.repartition(partitions, col(key)).join(right.repartition(partitions, col(key)), key)
 
   /** Semi-join with an explicit bloom-filter pre-filter — the manual form
     * of Catalyst's runtime-filter injection, for when the dim side is too

@@ -1,46 +1,12 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
-/** Batch source surface (SURVEY.md §2.1).
-  *
-  * S2 — the reference's CSV dimension load with header + schema inference
-  * (`spark_streaming.py:301-304`) — plus the explicit-schema variants a
-  * production pipeline prefers (inference costs an extra full read and can
-  * drift; at 100 TB schemas are contracts, not guesses).
+/** Batch source surface (SURVEY.md §2.1). The reference's CSV dimension
+  * load (S2) maps to the parquet fixture, read through `Tables.load`; this
+  * object holds the sink-format round trip the `q_roundtrip_*` queries run.
   */
 object Sources {
-
-  /** CSV with header + inferSchema — byte-for-byte the reference's
-    * dimension-table load. Inference reads the file twice; fine for small
-    * dims, wrong for fact tables — use [[csvWithSchema]] there.
-    */
-  def csvInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", true).option("inferSchema", true).csv(path)
-
-  /** CSV with an explicit schema contract (single pass, no drift). */
-  def csvWithSchema(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.option("header", true).schema(schema).csv(path)
-
-  /** JSON-lines with an explicit schema (the batch twin of the streaming
-    * wire format in [[graft.streaming.EventSource]]).
-    */
-  def jsonWithSchema(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
-  /** Parquet — the fixture/lake format; filters and column pruning push
-    * into the scan (verify with `graft.Explain`: PushedFilters/ReadSchema).
-    */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** ORC — the second columnar lake format Spark ships natively
-    * (predicate pushdown and column pruning work the same as parquet;
-    * ORC's row-group indexes additionally min/max-skip inside stripes).
-    */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
 
   /** Write→read roundtrip proof for a batch sink format: projects
     * documents to (doc_id, md5 hash), writes them through the format's
@@ -54,8 +20,8 @@ object Sources {
     */
   def roundtripAudit(
       spark: SparkSession,
-      documents: org.apache.spark.sql.DataFrame,
-      fmt: String): org.apache.spark.sql.DataFrame = {
+      documents: DataFrame,
+      fmt: String): DataFrame = {
     import org.apache.spark.sql.functions._
     // Path is APPLICATION-unique (applicationId): a fixed shared path
     // would let two concurrent processes (a Verify and a Bench run, say)
@@ -83,25 +49,4 @@ object Sources {
       min(col("h")).as("min_h"),
       max(col("h")).as("max_h"))
   }
-
-  /** JDBC batch read with partitioned parallelism — the reverse of the
-    * reference's JDBC sink; `numPartitions` concurrent connections each
-    * read one stride of `partitionColumn`. Requires the driver jar on the
-    * cluster classpath (not in this harness).
-    */
-  def jdbcPartitioned(
-      spark: SparkSession,
-      url: String,
-      table: String,
-      partitionColumn: String,
-      lowerBound: Long,
-      upperBound: Long,
-      numPartitions: Int,
-      props: java.util.Properties): DataFrame =
-    spark.read
-      .option("partitionColumn", partitionColumn)
-      .option("lowerBound", lowerBound)
-      .option("upperBound", upperBound)
-      .option("numPartitions", numPartitions)
-      .jdbc(url, table, props)
 }

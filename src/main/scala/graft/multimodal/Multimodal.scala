@@ -1,7 +1,7 @@
 package graft.multimodal
 
 import graft.engine.Stages
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: treat image/audio/video payloads as opaque
@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
   * embarrassingly parallel; the engine's job is batching and schema).
   */
 object Multimodal {
-
-  /** One decoded "frame" of a media payload. */
-  case class Frame(doc_id: Long, frame_idx: Int, width: Int, height: Int, frame_bytes: Array[Byte])
 
   /** STUB decoder — stands in for libjpeg/ffmpeg, which are not in this
     * container. Deterministic: derives fake dimensions from the payload
@@ -120,35 +117,6 @@ object Multimodal {
                  CAST(ent_micro AS DOUBLE) / (1000000.0 * CAST(n_bytes AS DOUBLE)))
                 / 0.6931471805599453 END""").as("bits_per_byte"))
       .withColumn("high_entropy", col("bits_per_byte") > 6.0)
-  }
-
-  /** Frame sampling: decode every `every`-th frame of each payload via
-    * the partition-wise batch path. `mapPartitions` keeps one codec
-    * context per partition (how a real decoder amortizes init cost); the
-    * output is a typed Dataset with a columnar-friendly schema.
-    */
-  def sampleFrames(spark: SparkSession, media: DataFrame, every: Int): Dataset[Frame] = {
-    // plan-construction-time guard (the Winnow/FrameEnergy convention):
-    // every <= 0 would die per-row as an opaque executor-side
-    // ArithmeticException inside mapPartitions
-    require(every > 0, s"sampleFrames requires every > 0, got $every")
-    import spark.implicits._
-    media
-      .select(col("doc_id"), col("payload"))
-      // Option[Long]: a null doc_id must not trip the non-nullable
-      // primitive encoder's AssertNotNull (r10 degenerate probe) — the
-      // frame keeps a 0 id for a null-id row (Frame is the typed batch
-      // contract; id presence is the fixture key contract's concern)
-      .as[(Option[Long], Array[Byte])]
-      .mapPartitions { it =>
-        // one fake "codec context" per partition
-        it.flatMap { case (id, payload) =>
-          FakeCodec.decode(payload).collect {
-            case (i, w, h, bytes) if i % every == 0 =>
-              Frame(id.getOrElse(0L), i, w, h, bytes)
-          }
-        }
-      }
   }
 
   /** Strided binary slice sampling — the oracle-checkable face of frame
@@ -307,8 +275,8 @@ object Multimodal {
       .orderBy(col("inner_doc"), col("outer_doc"))
   }
 
-  /** Ingest screening for media — the slice-index analog of
-    * [[graft.text.Dedup.screenAgainst]]: an incoming batch of payloads
+  /** Ingest screening for media — the slice-index analog of a MinHash
+    * band screen ([[graft.text.Dedup.incrementalBestMatch]]): an incoming batch of payloads
     * computes its slice fingerprints INLINE (transient data is never
     * pinned) and probes the corpus's PINNED postings table; each batch
     * payload reports whether it hits the corpus (≥ `minShared` shared
@@ -385,24 +353,6 @@ object Multimodal {
       .orderBy(col("n_shards"))
   }
 
-  /** Frame resize: every `factor`-th byte of the payload, halving the
-    * fake dimensions accordingly — the stand-in for a real image resample
-    * (which would swap in libvips/PIL at deployment). Same partition-wise
-    * typed path as [[sampleFrames]]; payload bytes shrink `factor`-fold
-    * BEFORE any shuffle or write, which is the entire point of early
-    * resize in a media pipeline.
-    */
-  def resizeFrames(spark: SparkSession, frames: Dataset[Frame], factor: Int): Dataset[Frame] = {
-    require(factor > 0, s"resizeFrames requires factor > 0, got $factor") // see sampleFrames
-    import spark.implicits._
-    frames.mapPartitions { it =>
-      it.map { f =>
-        val resized = f.frame_bytes.zipWithIndex.collect { case (b, i) if i % factor == 0 => b }
-        Frame(f.doc_id, f.frame_idx, math.max(f.width / factor, 1), math.max(f.height / factor, 1), resized)
-      }
-    }
-  }
-
   /** Feature extraction over sampled frames: per-frame byte statistics
     * (the stand-in for an embedding model forward pass), folded to one
     * row per document inside the SAME partition pass as the decode —
@@ -420,13 +370,17 @@ object Multimodal {
     * payloads).
     */
   def frameFeatures(spark: SparkSession, media: DataFrame, every: Int): DataFrame = {
-    require(every > 0, s"frameFeatures requires every > 0, got $every") // see sampleFrames
+    // plan-construction-time guard (the Winnow/FrameEnergy convention):
+    // every <= 0 would die per-row as an opaque executor-side
+    // ArithmeticException inside mapPartitions
+    require(every > 0, s"frameFeatures requires every > 0, got $every")
     import spark.implicits._
     val Lcm = 720720L // LCM(1..16): exact common denominator for chunk means
     media
       .select(col("doc_id"), col("payload"))
-      // Option[Long] for the same null-id reason as [[sampleFrames]];
-      // the null id survives to the output column here (toDF nullable)
+      // Option[Long]: a null doc_id must not trip the non-nullable
+      // primitive encoder's AssertNotNull (r10 degenerate probe); the
+      // null id survives to the output column (toDF nullable)
       .as[(Option[Long], Array[Byte])]
       .mapPartitions { it =>
         it.map { case (id, payload) =>

@@ -56,16 +56,6 @@ object Similarity {
   def overNorms(d: Column, na: Column, nb: Column): Column =
     d / nullif(na * nb, lit(0.0))
 
-  /** cosine(a, b) with the exact association `dot/(sqrt(aa)*sqrt(bb))` —
-    * mirrored textually in the DuckDB oracle (whose bare division is
-    * NULL at zero norms, matching [[overNorms]]'s guard).
-    */
-  def cosine(a: Column, b: Column): Column = {
-    val ad = asDouble(a)
-    val bd = asDouble(b)
-    overNorms(dot(ad, bd), sqrt(dot(ad, ad)), sqrt(dot(bd, bd)))
-  }
-
   /** Corpus projection with the embedding pre-cast to double and its norm
     * precomputed ONCE per vector — the dominant cost of pairwise cosine is
     * otherwise recomputing `sqrt(dot(v,v))` per pair (3× the flops).
@@ -195,43 +185,6 @@ object Similarity {
         when(dot(asDouble(vec), typedLit(p.toSeq)) > 0, lit(1 << i)).otherwise(lit(0))
       }
       .reduce((a, b) => a.bitwiseOR(b))
-
-  /** One distributed Lloyd (k-means) iteration over the IVF codebook:
-    * assign every vector to its nearest centroid, then recompute each
-    * centroid as its cell's per-dimension mean. The per-dimension
-    * spelling — posexplode to (cell, dim, x) then a map-side-combined
-    * avg — keeps the shuffle at K×dim partial aggregates regardless of
-    * corpus size, which is what makes the training pass viable at 100 TB
-    * (the K×dim result is trivially collected). Empty cells keep their
-    * centroid. Lloyd guarantees the total within-cell squared distance
-    * is non-increasing, which the spec pins.
-    */
-  def kmeansIterate(embeddings: DataFrame, cs: Seq[Array[Double]]): Seq[Array[Double]] = {
-    val dims = embeddings
-      .withColumn("cell", cellId(col("embedding"), cs))
-      .select(col("cell"), posexplode(asDouble(col("embedding"))).as(Seq("pos", "x")))
-      .groupBy(col("cell"), col("pos"))
-      // decimal(38,18) sum, not avg(double): decimal addition is exact
-      // and therefore ORDER-FREE, so the trained codebook is bit-identical
-      // across partition layouts — a raw double avg's partial-merge order
-      // varies with the file split and can flip a boundary vector's
-      // assignment on the next iterate (the same nondeterminism
-      // kmeansAssign's scaled-integer spelling exists to avoid). The
-      // per-coordinate cast rounds each x once (deterministically) to 18
-      // decimal digits; cell sums stay far inside the 20 integer digits.
-      .agg(avg(col("x").cast("decimal(38,18)")).cast("double").as("m"))
-      .collect()
-    val byCell = dims.groupBy(_.getAs[Int]("cell"))
-    cs.indices.map { c =>
-      byCell.get(c) match {
-        case Some(rows) =>
-          val arr = new Array[Double](cs(c).length)
-          rows.foreach(r => arr(r.getAs[Int]("pos")) = r.getAs[Double]("m"))
-          arr
-        case None => cs(c)
-      }
-    }
-  }
 
   /** Bucketed ANN: same contract as [[cosineTopK]] but candidates are
     * restricted to the query's LSH bucket (equi-join on bucket id). With
@@ -1466,8 +1419,8 @@ object Similarity {
     * native kernel [[graft.functions.NearestCentroidDist]], identical
     * fold order to the oracle's dot products), micro-quantized PER ROW
     * so the corpus-wide sum is an order-free BIGINT. Emits total, mean
-    * and max distortion — the k-means objective the Lloyd iteration
-    * ([[kmeansIterate]]) descends, now measurable per build.
+    * and max distortion — the k-means objective a Lloyd iteration
+    * descends, now measurable per build.
     */
   def ivfDistortion(embeddings: DataFrame, numCells: Int = 8): DataFrame = {
     val cs = centroids(numCells, 64)

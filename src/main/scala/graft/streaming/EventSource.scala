@@ -17,7 +17,9 @@ import org.apache.spark.sql.types._
   * API and needs the connector on the cluster classpath at deploy time.
   * Tests drive the same downstream stages through `MemoryStream` (see
   * StreamingSpec) — the point of keeping every stage a pure
-  * `DataFrame => DataFrame`.
+  * `DataFrame => DataFrame`. `StreamMain` reads through [[kafkaJsonStream]]
+  * when its config has a `[kafka]` section; without the connector, Spark's
+  * data-source-not-found error reaches its caller.
   */
 object EventSource {
 

@@ -4,7 +4,12 @@ package graft.streaming
   * `configparser` usage (`spark_streaming.py:16-24`: `[database]`
   * database/user/password/host; `spark_streaming.py:38-42` + producer:
   * `[kafka]` host/port/topic), so a deployer carries one config file
-  * across both engines.
+  * across both engines. `StreamMain` reads its endpoints from it.
+  *
+  * A section is optional, but a section that is present must carry every
+  * key its endpoint reads: [[jdbc]], [[kafkaBootstrap]], [[kafkaTopic]]
+  * and [[smtp]] throw an `IllegalArgumentException` naming the missing
+  * key rather than fall back to a default endpoint.
   *
   * Matches the configparser behaviors the reference relies on:
   * `[section]` headers, `key = value` AND `key: value` delimiters,
@@ -36,25 +41,46 @@ final case class IniConfig(sections: Map[String, Map[String, String]]) {
   def getOrElse(sectionName: String, key: String, default: String): String =
     get(sectionName, key).getOrElse(default)
 
+  /** The value of `key` in a section the caller has found present. */
+  private def required(sectionName: String, key: String): String =
+    get(sectionName, key).getOrElse(
+      throw new IllegalArgumentException(s"config section [$sectionName] has no '$key' key"))
+
+  /** `read` when the config has the section, None when it has not. */
+  private def ifSection[A](sectionName: String)(read: => A): Option[A] =
+    if (sections.contains(sectionName.toLowerCase)) Some(read) else None
+
   /** The reference's Postgres coordinates as a Spark JDBC (url, props)
-    * pair — what `spark_streaming.py:116-124` assembles inline. */
+    * pair — what `spark_streaming.py:116-124` assembles inline from
+    * `[database]` database/user/password/host; `port` is optional (5432). */
   def jdbc: Option[(String, java.util.Properties)] =
-    for {
-      host <- get("database", "host")
-      db <- get("database", "database")
-    } yield {
-      val port = getOrElse("database", "port", "5432")
+    ifSection("database") {
+      val (host, db) = (required("database", "host"), required("database", "database"))
       val props = new java.util.Properties()
-      get("database", "user").foreach(props.setProperty("user", _))
-      get("database", "password").foreach(props.setProperty("password", _))
-      (s"jdbc:postgresql://$host:$port/$db", props)
+      props.setProperty("user", required("database", "user"))
+      props.setProperty("password", required("database", "password"))
+      (s"jdbc:postgresql://$host:${getOrElse("database", "port", "5432")}/$db", props)
     }
 
   /** `host:port` bootstrap string, as `spark_streaming.py:42` builds. */
   def kafkaBootstrap: Option[String] =
-    for { h <- get("kafka", "host"); p <- get("kafka", "port") } yield s"$h:$p"
+    ifSection("kafka")(s"${required("kafka", "host")}:${required("kafka", "port")}")
 
-  def kafkaTopic: Option[String] = get("kafka", "topic")
+  def kafkaTopic: Option[String] = ifSection("kafka")(required("kafka", "topic"))
+
+  /** The alert mail endpoint as (host, port, from, to), from `[email]`
+    * host/port/from/to. The reference's mail settings are not recorded
+    * (SURVEY.md K4), so the section and key names are this rebuild's own.
+    */
+  def smtp: Option[(String, Int, String, String)] =
+    ifSection("email") {
+      val port = required("email", "port")
+      (required("email", "host"),
+        port.toIntOption.getOrElse(
+          throw new IllegalArgumentException(s"config section [email] has a non-numeric port '$port'")),
+        required("email", "from"),
+        required("email", "to"))
+    }
 }
 
 object IniConfig {

@@ -6,9 +6,11 @@ import org.apache.spark.sql.DataFrame
   * JDBC-append writer (`spark_streaming.py:116-124`) with the hard-wired
   * Postgres dependency lifted behind a trait (SURVEY.md §2.2 K1).
   *
-  * Contract: at-least-once, exactly like the reference (append per epoch,
-  * no txn/upsert — SURVEY.md §2.9). Idempotent-upsert would key on
-  * (epoch_id, partition) and is left as a deployment concern.
+  * The reference appends each epoch, so a replayed epoch lands twice
+  * (at-least-once, SURVEY.md §2.9); [[ParquetSink]] keeps that contract.
+  * The sinks `StreamMain` runs, [[IdempotentParquetSink]] and
+  * [[IdempotentJdbcSink]], key each write on its epoch, so a replay
+  * replaces the first write instead.
   *
   * `write` runs exactly one Spark action over `df`. `StreamRunner`'s
   * detectors count their rows inside that action (an `Observation` on
@@ -25,29 +27,10 @@ trait BatchSink extends Serializable {
   def write(df: DataFrame, epochId: Long, table: String): Unit
 }
 
-/** Parquet-append sink (harness/test default — `Verify` has no Postgres). */
+/** Parquet-append sink: at-least-once, like the reference's JDBC append. */
 final class ParquetSink(baseDir: String) extends BatchSink {
   def write(df: DataFrame, epochId: Long, table: String): Unit =
     df.write.mode("append").parquet(s"$baseDir/$table")
-}
-
-/** JDBC-append sink — the reference's production path
-  * (`spark_streaming.py:116-124`): one connection per partition,
-  * executor-side, append mode. Executed for real against embedded Derby
-  * (`JdbcSpec`, `CrashReplaySpec`); the reference's actual target is
-  * Postgres, which no offline-resolvable artifact provides, so the
-  * dialect delta is recorded here instead (round-5 best-effort check):
-  * Spark's `PostgresDialect` maps StringType→TEXT where Derby gets
-  * CLOB, BooleanType→BOOLEAN where Derby gets SMALLINT-backed BOOLEAN,
-  * DoubleType→FLOAT8 vs DOUBLE, and ByteType→SMALLINT on both; all are
-  * handled inside `df.write.jdbc` by the dialect registry, so no graft
-  * code branches on the target — the Derby-verified behavior (create,
-  * append, epoch delete+append, partitioned read-back) carries over
-  * with only those column-DDL differences.
-  */
-final class JdbcSink(url: String, props: java.util.Properties) extends BatchSink {
-  def write(df: DataFrame, epochId: Long, table: String): Unit =
-    df.write.mode("append").jdbc(url, table, props)
 }
 
 /** Idempotent parquet sink: each epoch overwrites its own
@@ -55,9 +38,9 @@ final class JdbcSink(url: String, props: java.util.Properties) extends BatchSink
   * between sink write and checkpoint commit) rewrites identical data
   * instead of appending duplicates — upgrading the reference's
   * at-least-once contract (SURVEY.md §2.9 "exactly-once: NOT achieved")
-  * to effective exactly-once for deterministic batches. The JDBC
-  * equivalent is a txn keyed on (table, epoch) or upsert — deployment
-  * concern.
+  * to effective exactly-once for deterministic batches. `StreamMain`'s
+  * sink when its config has no `[database]` section; [[IdempotentJdbcSink]]
+  * is the JDBC equivalent.
   */
 final class IdempotentParquetSink(baseDir: String) extends BatchSink {
   def write(df: DataFrame, epochId: Long, table: String): Unit =
@@ -69,12 +52,19 @@ final class IdempotentParquetSink(baseDir: String) extends BatchSink {
   * DELETEs the epoch's rows, then appends them. A micro-batch replayed
   * after a crash between sink write and checkpoint commit therefore
   * rewrites identical data instead of appending duplicates — upgrading
-  * the reference's at-least-once JDBC contract (SURVEY.md §2.9) to
-  * effective exactly-once for deterministic batches. The delete runs on
-  * its own connection BEFORE the append: if the append dies part-way,
-  * the next replay's delete clears the partial epoch first.
+  * the reference's at-least-once JDBC append (`spark_streaming.py:116-124`,
+  * SURVEY.md §2.9) to effective exactly-once for deterministic batches.
+  * The delete runs on its own connection BEFORE the append: if the append
+  * dies part-way, the next replay's delete clears the partial epoch first.
+  * `StreamMain` writes through it when its config has a `[database]`
+  * section. Executed for real against embedded Derby (`JdbcSpec`,
+  * `CrashReplaySpec`); the reference's target is Postgres, which no
+  * offline-resolvable artifact provides. Spark's dialect registry maps the
+  * column types inside `df.write.jdbc` (`PostgresDialect`: StringType →
+  * TEXT where Derby gets CLOB, DoubleType → FLOAT8 where Derby gets
+  * DOUBLE), so no code here branches on the target.
   */
-final class IdempotentJdbcSink(url: String, props: java.util.Properties) extends BatchSink {
+final class IdempotentJdbcSink(val url: String, val props: java.util.Properties) extends BatchSink {
   def write(df: DataFrame, epochId: Long, table: String): Unit = {
     val conn = java.sql.DriverManager.getConnection(url, props)
     try {
@@ -186,13 +176,11 @@ final class IdempotentJdbcSink(url: String, props: java.util.Properties) extends
   private val UndefinedTableStates = Set("42P01", "42X05", "42S02")
 }
 
-/** Collects batches in memory for assertions (test double). */
+/** Collects batches in memory (perfbench's checked runs and the specs). */
 final class CollectingSink extends BatchSink {
   val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Array[org.apache.spark.sql.Row])]
   def write(df: DataFrame, epochId: Long, table: String): Unit =
     batches.synchronized { batches += ((epochId, table, df.collect())) }
-  def rowsFor(table: String): Seq[org.apache.spark.sql.Row] =
-    batches.synchronized { batches.filter(_._2 == table).flatMap(_._3).toSeq }
 }
 
 /** Side-effect alert channel — rebuild of the reference's SMTP e-mail
@@ -203,8 +191,8 @@ trait Alerter extends Serializable {
   def alert(subject: String, body: String): Unit
 }
 
-/** Driver-side log alert (default; an SMTP impl would mirror the
-  * reference's `send_email` and is a deployment concern).
+/** Driver-side log alert: `StreamMain`'s alerter when its config has no
+  * `[email]` section ([[SmtpAlerter]] mails the alert instead).
   */
 final class LoggingAlerter extends Alerter {
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[LoggingAlerter])
@@ -218,7 +206,8 @@ final class LoggingAlerter extends Alerter {
   * AUTH (the reference's `starttls()`/`login()` lines) are a deployment
   * concern — the engine owns the protocol framing and message shape.
   * Transparency (dot-stuffing) is applied to the body so payload lines
-  * beginning with '.' cannot terminate DATA early.
+  * beginning with '.' cannot terminate DATA early. `StreamMain`'s alerter
+  * when its config has an `[email]` section.
   */
 final class SmtpAlerter(host: String, port: Int, from: String, to: String) extends Alerter {
   def alert(subject: String, body: String): Unit = {
@@ -258,11 +247,4 @@ final class SmtpAlerter(host: String, port: Int, from: String, to: String) exten
       send("QUIT", "221")
     } finally sock.close()
   }
-}
-
-/** Collects alerts for assertions (test double). */
-final class CollectingAlerter extends Alerter {
-  val alerts = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-  def alert(subject: String, body: String): Unit =
-    alerts.synchronized { alerts += ((subject, body)) }
 }

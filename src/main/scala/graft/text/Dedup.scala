@@ -392,34 +392,6 @@ object Dedup {
       numBands, rowsPerBand, minEstJaccard)
   }
 
-  /** Screen an ARRIVING batch of documents against a standing corpus's
-    * pinned MinHash band index — the two-input face of
-    * [[incrementalBestMatch]] that composes into streaming ingestion:
-    * inside `foreachBatch`, the micro-batch computes its own signatures
-    * inline (map-side, no pinning of transient data) and probes the
-    * corpus index that was materialized once per snapshot. Same verdict
-    * contract: per batch doc, the best corpus match at est-Jaccard ≥
-    * `minEstJaccard` or `admitted`.
-    */
-  def screenAgainst(
-      batch: DataFrame,
-      corpus: DataFrame,
-      numBands: Int = 8,
-      rowsPerBand: Int = 4,
-      minEstJaccard: Double = 0.5): DataFrame = {
-    val batchSigs = batch
-      .withColumn("toks", TextAnalysis.tokens(col("text")))
-      .withColumn("sh", array_distinct(shinglesFromToks(col("toks"), 3)))
-      .select(
-        col("doc_id"),
-        graft.functions.VectorFunctions.minhashSignature(col("sh"), numBands * rowsPerBand)
-          .as("sig"))
-    screenSigs(
-      batchSigs,
-      minhashSignatures(corpus, numBands * rowsPerBand),
-      numBands, rowsPerBand, minEstJaccard)
-  }
-
   /** Shared verdict core: band-probe `batchSigs` (doc_id, sig) against
     * `corpusSigs`, verify candidates by signature-position Jaccard, and
     * report each batch doc's best match or admission. The corpus side

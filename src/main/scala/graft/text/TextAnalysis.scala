@@ -1697,6 +1697,9 @@ object TextAnalysis {
         expr("CAST(f2_est - f2_exact AS DOUBLE) / CAST(f2_exact AS DOUBLE)").as("rel_err"))
   }
 
+  /** Candidate capacity `k` of [[spaceSavingHeavyHitters]]'s top-k summary. */
+  val SpaceSavingCapacity = 64
+
   /** SpaceSaving top-k guarantee contract over the corpus bigram stream:
     * the k-candidate summary, the candidate count, and the three
     * guarantee booleans (estimates never undercount, overestimates stay
@@ -1707,16 +1710,16 @@ object TextAnalysis {
     * count table's TakeOrdered top-k — so est is the EXACT count (est = f,
     * the zero-slack member of the SpaceSaving invariant family) and the
     * booleans hold by construction: the query reports the contract, it
-    * does not run a sketch. The mergeable sketch,
-    * [[graft.functions.SpaceSavingAggregator]], is guarded by
-    * `SpaceSavingSketchSpec`, which folds the same bigram stream through
+    * does not run a sketch. `SpaceSavingSketchSpec` guards the contract
+    * with a mergeable SpaceSaving sketch (a reference model in the test
+    * sources): it folds the same bigram stream through
     * it in merged chunks and requires its buffer to yield this row's
     * candidate count and booleans. (r11 replaced the typed-Aggregator
     * merge here: it never entered whole-stage codegen and ran the stream
     * reduce twice; the row is bit-identical.)
     */
   def spaceSavingHeavyHitters(documents: DataFrame): DataFrame = {
-    val k = graft.functions.SpaceSavingAggregator.Capacity.toLong
+    val k = SpaceSavingCapacity.toLong
     // bigram stream, not unigrams: the fixture vocabulary (31 tokens) is
     // smaller than the candidate capacity, but its ~31² bigram space
     // overfills it, so the top-k cut actually binds

@@ -32,56 +32,6 @@ class CachesViewsSpec extends AnyFunSuite {
     assert(pinned.storageLevel != StorageLevel.NONE, "pin must survive the sweep")
   }
 
-  test("Views.free releases only this session's pins") {
-    val mine = Views.pinned(Tables.region(spark, sfDir), "spec-free")(
-      _.select(col("r_regionkey")))
-    mine.count()
-    assert(mine.storageLevel != StorageLevel.NONE)
-    // a DIFFERENT plan than `mine`: sessions of one SparkContext share
-    // the CacheManager, which uncaches BY PLAN — freeing a same-plan pin
-    // in another session would drop this session's storage too
-    val other = spark.newSession()
-    val theirs = Views.pinned(
-      other.read.parquet(s"$sfDir/nation.parquet"), "spec-free")(
-      _.select(col("n_nationkey")))
-    theirs.count()
-    Views.free(other)
-    assert(theirs.storageLevel == StorageLevel.NONE, "freed session's pin must unpersist")
-    assert(mine.storageLevel != StorageLevel.NONE, "other sessions' pins must survive")
-    val again = Views.pinned(Tables.region(spark, sfDir), "spec-free")(
-      _.select(col("r_regionkey")))
-    assert(again eq mine, "surviving pin still memoized after a foreign free")
-  }
-
-  test("documented hazard: freeing a same-plan pin in a sibling session drops shared storage") {
-    // Sessions of one SparkContext share the CacheManager, which caches
-    // BY CANONICALIZED PLAN (Caches.scala `Views.free` scaladoc): a
-    // foreign session freeing a pin whose plan is identical to ours
-    // drops OUR storage too. This pins that live semantics — fine for
-    // the single-session harness, and correctness-preserving even when
-    // it fires: the pin entry survives and recomputes uncached.
-    val mine = Views.pinned(
-      spark.read.parquet(s"$sfDir/region.parquet"), "spec-hazard")(
-      _.select(col("r_regionkey"), col("r_name")))
-    mine.count()
-    assert(mine.storageLevel != StorageLevel.NONE)
-    val other = spark.newSession()
-    val theirs = Views.pinned(
-      other.read.parquet(s"$sfDir/region.parquet"), "spec-hazard")(
-      _.select(col("r_regionkey"), col("r_name")))
-    theirs.count()
-    Views.free(other)
-    assert(mine.storageLevel == StorageLevel.NONE,
-      "same-plan foreign free drops this session's storage (the documented hazard)")
-    // memoization and results survive — only the warm-index economics reset
-    val again = Views.pinned(
-      spark.read.parquet(s"$sfDir/region.parquet"), "spec-hazard")(
-      _.select(col("r_regionkey"), col("r_name")))
-    assert(again eq mine, "pin entry must survive the foreign free")
-    assert(again.count() > 0, "freed pin recomputes with identical semantics")
-    Views.free(spark)
-  }
-
   test("pinned returns the SAME materialized frame per (session, input, tag)") {
     val a = Views.pinned(Tables.region(spark, sfDir), "spec-same")(_.select(col("r_regionkey")))
     val b = Views.pinned(Tables.region(spark, sfDir), "spec-same")(_.select(col("r_regionkey")))

@@ -60,13 +60,12 @@ class DetectorSinkSpec extends AnyFunSuite {
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("one Spark job and one alert per violating detector micro-batch, on every shipped sink") {
-    // the JDBC sinks are the reference's production path: their write plan
+    // the JDBC sink is the reference's production path: its write plan
     // must settle the row count as the file writes do
     def derby(): String = s"jdbc:derby:memory:graft_detector_${System.nanoTime};create=true"
     val sinks = Seq[(String, () => BatchSink)](
       "ParquetSink" -> (() => new ParquetSink(tmpDir())),
       "IdempotentParquetSink" -> (() => new IdempotentParquetSink(tmpDir())),
-      "JdbcSink" -> (() => new JdbcSink(derby(), new java.util.Properties)),
       "IdempotentJdbcSink" -> (() => new IdempotentJdbcSink(derby(), new java.util.Properties)),
       "CollectingSink" -> (() => new CollectingSink))
     for ((name, mk) <- sinks) {

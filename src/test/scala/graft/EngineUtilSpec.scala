@@ -1,55 +1,13 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{Joins, Sources, Tables}
+import graft.engine.{Joins, Tables}
 
-/** Sources (CSV/JSON paths) and join-utility semantics. */
+/** Join-utility semantics. */
 class EngineUtilSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  test("csvInferred mirrors the reference dim load: header + inferred types") {
-    val dir = Files.createTempDirectory("graft-csv").toString
-    val csv = s"$dir/lookup.csv"
-    Files.writeString(
-      java.nio.file.Paths.get(csv),
-      "LocationID,Borough,Zone,service_zone\n1,EWR,Newark Airport,EWR\n2,Queens,Jamaica Bay,Boro Zone\n")
-    val df = Sources.csvInferred(spark, csv)
-    assert(df.schema("LocationID").dataType == IntegerType)
-    assert(df.schema("Borough").dataType == StringType)
-    assert(df.count() == 2)
-  }
-
-  test("jsonWithSchema reads the wire format") {
-    val dir = Files.createTempDirectory("graft-json").toString
-    Files.writeString(
-      java.nio.file.Paths.get(s"$dir/e.json"),
-      """{"event_id":"1","ts":"2024-01-01 00:00:00","user_id":"5","event_type":"purchase","value":"9.5","props":""}""" + "\n")
-    val df = graft.streaming.EventSource.typed(
-      Sources.jsonWithSchema(spark, dir, graft.streaming.EventSource.wireSchema))
-    val r = df.collect().head
-    assert(r.getAs[Long]("event_id") == 1L)
-    assert(r.getAs[Double]("value") == 9.5)
-    assert(r.isNullAt(r.fieldIndex("props")))
-  }
-
-  test("orc roundtrips the events table and pushes filters into the scan") {
-    val dir = Files.createTempDirectory("graft-orc").toString + "/events"
-    val ev = graft.engine.Tables.events(spark, SparkTestSession.sfDir)
-    ev.write.orc(dir)
-    val back = Sources.orc(spark, dir)
-    assert(back.count() == ev.count())
-    assert(back.schema == ev.schema)
-    // values survive the roundtrip exactly
-    assert(back.except(ev).isEmpty && ev.except(back).isEmpty)
-    // predicate reaches the ORC scan (PushedFilters in the physical plan)
-    val plan = back.filter(col("user_id") === 7L).queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("user_id"), plan)
-  }
 
   test("saltedJoin equals plain join on a skewed key distribution") {
     import spark.implicits._
@@ -97,15 +55,6 @@ class EngineUtilSpec extends AnyFunSuite {
   test("approxDistinctCheck: sketch lands within tolerance on every group") {
     val out = graft.engine.Relational.approxDistinctCheck(Tables.lineitem(spark, sfDir))
     assert(out.collect().forall(_.getAs[Boolean]("hll_within_tol")))
-  }
-
-  test("copartitionedJoin produces the same rows as a plain join") {
-    val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
-    val o = Tables.orders(spark, sfDir).select("o_orderkey", "o_totalprice")
-      .withColumnRenamed("o_orderkey", "l_orderkey")
-    val a = Joins.copartitionedJoin(li, o, "l_orderkey", 4).count()
-    val b = li.join(o, "l_orderkey").count()
-    assert(a == b && a > 0)
   }
 
   test("asOfJoin: latest at-or-before match per key, nulls when no prior row") {
@@ -181,42 +130,29 @@ class EngineUtilSpec extends AnyFunSuite {
       s"forward: NULL-time quote leaked or NULL-time trade matched: $fwd")
   }
 
-  test("graft expressions are SQL-callable after registration") {
-    GraftExtensions.register(spark)
-    val dot = spark.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head.getDouble(0)
-    assert(dot == 11.0)
-    val sq = spark.sql("SELECT graft_sqdist(array(1L, 5L), array(4L, 1L)) AS d").head.getLong(0)
-    assert(sq == 9L + 16L)
-    val dm = spark.sql("SELECT graft_dot_milli(array(2L, -3L), array(10L, 10L)) AS d").head.getLong(0)
-    assert(dm == -10L)
-    val sh = spark.sql("SELECT graft_simhash64(array('a', 'b', 'a')) AS s").head.getLong(0)
-    val sh2 = spark.sql("SELECT graft_simhash64(array('a', 'a', 'b')) AS s").head.getLong(0)
+  test("graft expressions compute their documented values through the Column API") {
+    import graft.functions.VectorFunctions._
+    def one(c: org.apache.spark.sql.Column) = spark.range(1).select(c).head()
+    assert(one(dotProduct(expr("array(1.0d, 2.0d)"), expr("array(3.0d, 4.0d)"))).getDouble(0) == 11.0)
+    assert(one(sqDistMilli(expr("array(1L, 5L)"), expr("array(4L, 1L)"))).getLong(0) == 9L + 16L)
+    assert(one(dotMilli(expr("array(2L, -3L)"), expr("array(10L, 10L)"))).getLong(0) == -10L)
+    val sh = one(simhash64(expr("array('a', 'b', 'a')"))).getLong(0)
+    val sh2 = one(simhash64(expr("array('a', 'a', 'b')"))).getLong(0)
     assert(sh == sh2, "simhash must be order-insensitive")
-    val mh = spark.sql("SELECT graft_minhash(array('x', 'y'), 4) AS m").head.getSeq[Long](0)
+    val mh = one(minhashSignature(expr("array('x', 'y')"), 4)).getSeq[Long](0)
     assert(mh.length == 4)
     assert(mh.forall(v => v >= 0 && v < 2147483647L), "minhash values outside the mod-p family")
     // Empty / all-null shingle input → NULL (never the Long.MaxValue seed):
     // the empty-set signature is undefined, same as DuckDB list_min([]).
-    assert(spark.sql("SELECT graft_minhash(array(), 4) AS m").head.isNullAt(0))
-    assert(spark.sql("SELECT graft_minhash(array(CAST(NULL AS STRING)), 4) AS m").head.isNullAt(0))
-    val wn = spark.sql("SELECT graft_winnow('abcdefghijklmnop', 8, 4) AS w").head.getSeq[Long](0)
+    assert(one(minhashSignature(expr("CAST(array() AS ARRAY<STRING>)"), 4)).isNullAt(0))
+    assert(one(minhashSignature(expr("array(CAST(NULL AS STRING))"), 4)).isNullAt(0))
+    val wn = one(winnow(lit("abcdefghijklmnop"), 8, 4)).getSeq[Long](0)
     assert(wn.nonEmpty && wn == wn.sorted)
     // frame energy: 'abc' in frames of 2 -> [97²+98², 99²]
-    val fe = spark.sql("SELECT graft_frame_energy('abc', 2) AS e").head.getSeq[Long](0)
-    assert(fe == Seq(97L * 97 + 98L * 98, 99L * 99))
+    assert(one(frameEnergy(lit("abc"), 2)).getSeq[Long](0) == Seq(97L * 97 + 98L * 98, 99L * 99))
     // byte entropy: 'aab' -> 3 bytes, 2 distinct, Σ round(c·ln c·10⁶) for c∈{2,1}
-    val be = spark.sql("SELECT graft_byte_entropy('aab') AS s").head.getStruct(0)
+    val be = one(byteEntropyStats(lit("aab"))).getStruct(0)
     assert(be.getLong(0) == 3L && be.getLong(1) == 2L)
     assert(be.getLong(2) == Math.round(2.0 * math.log(2.0) * 1e6))
-  }
-
-  test("broadcastLookup plans a BroadcastHashJoin") {
-    val ev = Tables.events(spark, sfDir)
-    val nation = Tables.nation(spark, sfDir)
-    val joined = Joins.broadcastLookup(
-      ev.withColumn("nk", pmod(col("user_id"), lit(25)).cast("int")),
-      nation, col("nk"), col("n_nationkey"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
   }
 }

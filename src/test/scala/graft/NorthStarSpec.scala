@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Tables
-import graft.multimodal.Multimodal
 import graft.similarity.Similarity
 import graft.text.{Dedup, TextAnalysis}
 
@@ -62,34 +61,6 @@ class NorthStarSpec extends AnyFunSuite {
       assert(sorted.map(_.getAs[Long]("rank")).toSeq == (1L to 5L))
       val sims = sorted.map(_.getAs[Double]("cos_sim"))
       assert(sims.zip(sims.tail).forall { case (a, b) => a >= b })
-    }
-  }
-
-  test("frame sampling: deterministic fake decode produces expected frame count") {
-    val media = Multimodal.mediaTable(Tables.documents(spark, sfDir))
-    val frames = Multimodal.sampleFrames(spark, media, 2).collect()
-    val byteLens = media.select(col("doc_id"), col("byte_len")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
-    val byDoc = frames.groupBy(_.doc_id)
-    byDoc.foreach { case (id, fs) =>
-      val totalFrames = math.ceil(byteLens(id).toDouble / Multimodal.FakeCodec.FrameBytes).toInt
-      val expected = (0 until totalFrames).count(_ % 2 == 0)
-      assert(fs.length == expected, s"doc $id: ${fs.length} frames, expected $expected")
-      assert(fs.forall(f => f.width >= 16 && f.height >= 9))
-    }
-  }
-
-  test("resize shrinks frame bytes and dimensions deterministically") {
-    val media = Multimodal.mediaTable(Tables.documents(spark, sfDir))
-    val frames = Multimodal.sampleFrames(spark, media, 1)
-    val resized = Multimodal.resizeFrames(spark, frames, 2).collect()
-    val orig = frames.collect().map(f => (f.doc_id, f.frame_idx) -> f).toMap
-    assert(resized.nonEmpty)
-    resized.foreach { r =>
-      val o = orig((r.doc_id, r.frame_idx))
-      assert(r.frame_bytes.length == (o.frame_bytes.length + 1) / 2)
-      assert(r.width == math.max(o.width / 2, 1) && r.height == math.max(o.height / 2, 1))
-      assert(r.frame_bytes.sameElements(o.frame_bytes.zipWithIndex.collect { case (b, i) if i % 2 == 0 => b }))
     }
   }
 
@@ -173,29 +144,6 @@ class NorthStarSpec extends AnyFunSuite {
     assert(pairSpace(cells.map(_.getAs[Long]("count")).toSeq) < allPairs / 2)
     assert(pairSpace(buckets.map(_.getAs[Long]("count")).toSeq) < allPairs / 4)
     big.unpersist()
-  }
-
-  test("kmeansIterate: one Lloyd step never increases total within-cell distance") {
-    import org.apache.spark.sql.functions.col
-    val emb = Tables.embeddings(spark, sfDir)
-    val vecs = emb.select(col("embedding").cast("array<double>")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    def cost(cs: Seq[Array[Double]]): Double =
-      vecs.map { v =>
-        cs.map { c =>
-          var d = 0.0
-          v.indices.foreach { j => val t = v(j) - c(j); d += t * t }
-          d
-        }.min
-      }.sum
-    val c0 = Similarity.centroids(8, 64)
-    val c1 = Similarity.kmeansIterate(emb, c0)
-    val c2 = Similarity.kmeansIterate(emb, c1)
-    assert(c1.length == 8 && c1.forall(_.length == 64))
-    assert(cost(c1) <= cost(c0), s"Lloyd step increased cost: ${cost(c1)} > ${cost(c0)}")
-    assert(cost(c2) <= cost(c1))
-    // training actually moves the untrained codebook
-    assert(cost(c1) < cost(c0) * 0.99, "iteration left the random codebook unchanged")
   }
 
   test("multi-probe LSH recall dominates single-probe against the brute-force truth") {

@@ -186,6 +186,6 @@ class PlanAuditSpec extends AnyFunSuite {
       pinned.count() // materialize so the scan resolves to the cached plan
       val downstream = pinned.groupBy(col("l_returnflag")).agg(max(col("rn")).as("m"))
       assert(flags(downstream).contains("FewKeyWindowOverUnboundedInput"))
-    } finally graft.engine.Views.free(spark)
+    } finally graft.engine.Views.clear()
   }
 }

@@ -74,7 +74,7 @@ class RefPipelinesSpec extends AnyFunSuite {
         // a pin materialized by an earlier build or suite would skip its
         // builder's jobs, so every build starts without pins
         Caches.freeTransient(spark)
-        Views.free(spark)
+        Views.clear()
         jobs.set(0)
         spark.sparkContext.setLocalProperty("graft.spec.build", tag)
         try fn(spark, sfDir)
@@ -85,7 +85,7 @@ class RefPipelinesSpec extends AnyFunSuite {
       finally {
         spark.sparkContext.removeSparkListener(listener)
         Caches.freeTransient(spark)
-        Views.free(spark)
+        Views.clear()
       }
     val eager = counts.filter(_._2 > 0)
     assert((eager -- buildJobAllowlist).isEmpty, s"builders that fire jobs: ${eager -- buildJobAllowlist}")

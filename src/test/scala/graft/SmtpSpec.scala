@@ -4,6 +4,44 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.SmtpAlerter
 
+/** Single-connection scripted SMTP server; records commands + DATA. */
+final class FakeSmtp extends AutoCloseable {
+  val server = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
+  val commands = scala.collection.mutable.ArrayBuffer.empty[String]
+  val dataLines = scala.collection.mutable.ArrayBuffer.empty[String]
+  val thread = new Thread(() => {
+    val sock = server.accept()
+    val in = new java.io.BufferedReader(
+      new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
+    val out = new java.io.OutputStreamWriter(sock.getOutputStream, "UTF-8")
+    def reply(s: String): Unit = { out.write(s + "\r\n"); out.flush() }
+    reply("220 fake ESMTP")
+    var inData = false
+    var done = false
+    while (!done) {
+      val line = in.readLine()
+      if (line == null) done = true
+      else if (inData) {
+        if (line == ".") { inData = false; reply("250 ok: queued") }
+        else dataLines += line
+      } else {
+        commands += line
+        line.takeWhile(_ != ' ') match {
+          case "HELO" | "MAIL" | "RCPT" => reply("250 ok")
+          case "DATA" => inData = true; reply("354 go ahead")
+          case "QUIT" => reply("221 bye"); done = true
+          case _ => reply("502 what")
+        }
+      }
+    }
+    sock.close()
+  })
+  thread.setDaemon(true)
+  thread.start()
+  def port: Int = server.getLocalPort
+  def close(): Unit = server.close()
+}
+
 /** Drives [[SmtpAlerter]] against an in-process fake SMTP server (one
   * accept, scripted reply codes), asserting the full command sequence and
   * the delivered message — headers, blank separator, dot-stuffed body,
@@ -11,44 +49,6 @@ import graft.streaming.SmtpAlerter
   * `send_email` (`utils.py:11-30`) minus the TLS/auth deployment layer.
   */
 class SmtpSpec extends AnyFunSuite {
-
-  /** Single-connection scripted SMTP server; records commands + DATA. */
-  private final class FakeSmtp extends AutoCloseable {
-    val server = new java.net.ServerSocket(0, 1, java.net.InetAddress.getLoopbackAddress)
-    val commands = scala.collection.mutable.ArrayBuffer.empty[String]
-    val dataLines = scala.collection.mutable.ArrayBuffer.empty[String]
-    val thread = new Thread(() => {
-      val sock = server.accept()
-      val in = new java.io.BufferedReader(
-        new java.io.InputStreamReader(sock.getInputStream, "UTF-8"))
-      val out = new java.io.OutputStreamWriter(sock.getOutputStream, "UTF-8")
-      def reply(s: String): Unit = { out.write(s + "\r\n"); out.flush() }
-      reply("220 fake ESMTP")
-      var inData = false
-      var done = false
-      while (!done) {
-        val line = in.readLine()
-        if (line == null) done = true
-        else if (inData) {
-          if (line == ".") { inData = false; reply("250 ok: queued") }
-          else dataLines += line
-        } else {
-          commands += line
-          line.takeWhile(_ != ' ') match {
-            case "HELO" | "MAIL" | "RCPT" => reply("250 ok")
-            case "DATA" => inData = true; reply("354 go ahead")
-            case "QUIT" => reply("221 bye"); done = true
-            case _ => reply("502 what")
-          }
-        }
-      }
-      sock.close()
-    })
-    thread.setDaemon(true)
-    thread.start()
-    def port: Int = server.getLocalPort
-    def close(): Unit = server.close()
-  }
 
   test("alert speaks the SMTP sequence and delivers headers + dot-stuffed body") {
     val srv = new FakeSmtp

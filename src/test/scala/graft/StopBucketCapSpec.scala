@@ -19,16 +19,21 @@ class StopBucketCapSpec extends AnyFunSuite {
   // 1100 identical docs (> MaxCandidateBucket = 1024): every band/chunk
   // bucket they form is over the cap. 40 identical docs (≪ cap) from a
   // disjoint vocabulary: their buckets survive and must pair completely.
-  private def degenerateDocs() = {
+  private val bigText =
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
+      "lambda mu nu xi omicron pi rho sigma tau upsilon"
+  private val smallText =
+    "one two three four five six seven eight nine ten " +
+      "eleven twelve thirteen fourteen fifteen sixteen"
+
+  private def docs(bigCopies: Long) = {
     import spark.implicits._
-    val big = (0L until 1100L).map(i => (i,
-      "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"))
-    val small = (5000L until 5040L).map(i => (i,
-      "one two three four five six seven eight nine ten " +
-        "eleven twelve thirteen fourteen fifteen sixteen"))
+    val big = (0L until bigCopies).map(i => (i, bigText))
+    val small = (5000L until 5040L).map(i => (i, smallText))
     (big ++ small).toDF("doc_id", "text")
   }
+
+  private def degenerateDocs() = docs(1100L)
 
   private val smallPairs = 40 * 39 / 2 // C(40,2)
 
@@ -65,21 +70,18 @@ class StopBucketCapSpec extends AnyFunSuite {
     assert(Dedup.stopBucketSweep(empty).count() == 0L)
   }
 
-  test("ingest screen drops over-cap corpus buckets but still matches below-cap families") {
-    import spark.implicits._
-    // one probe doc per family: the big-family probe's only collisions
-    // are stop buckets (admitted); the small-family probe must match
-    val batch = Seq(
-      (900000L,
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-          "lambda mu nu xi omicron pi rho sigma tau upsilon"),
-      (900001L,
-        "one two three four five six seven eight nine ten " +
-          "eleven twelve thirteen fourteen fifteen sixteen"))
-      .toDF("doc_id", "text")
-    val got = Dedup.screenAgainst(batch, degenerateDocs()).collect()
-      .map(r => r.getAs[Long]("new_doc") -> r.getAs[Boolean]("admitted")).toMap
-    assert(got(900000L), "probe against the over-cap family must be admitted (stop bucket)")
-    assert(!got(900001L), "probe against the below-cap family must match")
+  test("incremental screen drops over-cap corpus buckets but still matches below-cap families") {
+    // incrementalBestMatch screens about a tenth of the documents against
+    // the rest, so the big family needs more copies for its corpus side
+    // to stay above the cap
+    val copies = 1300L
+    val got = Dedup.incrementalBestMatch(docs(copies)).collect()
+    val (bigProbes, smallProbes) = got.partition(_.getAs[Long]("new_doc") < 5000L)
+    assert(bigProbes.nonEmpty && smallProbes.nonEmpty, "each family needs a probe")
+    assert(copies - bigProbes.length > Dedup.MaxCandidateBucket, "the big family's corpus side must exceed the cap")
+    assert(bigProbes.forall(_.getAs[Boolean]("admitted")),
+      "probes against the over-cap family must be admitted (stop bucket)")
+    assert(smallProbes.forall(r => !r.getAs[Boolean]("admitted") && r.getAs[Long]("corpus_doc") >= 5000L),
+      "probes against the below-cap family must match it")
   }
 }

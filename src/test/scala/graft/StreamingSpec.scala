@@ -20,8 +20,6 @@ import graft.streaming._
   */
 case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: java.lang.Double, props: String)
 
-case class DocRow(doc_id: Long, text: String)
-
 /** A replayable parquet file source of [[Ev]] rows for `StreamRunner`:
   * MemoryStream truncates on commit and cannot feed six concurrent
   * queries. Each `add` lands as one file, so a query that drains between
@@ -130,37 +128,6 @@ class StreamingSpec extends AnyFunSuite with TimeLimits {
       assert(withEv1.length == 2, s"expected event in exactly 2 windows, got ${withEv1.length}")
       assert(withEv1.map(_.getAs[Long]("ws")).sorted.toSeq
         .sliding(2).forall { case Seq(a, b) => b - a == 1800 })
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join matches its batch twin and keeps state bounded") {
-    val anchors = MemoryStream[Ev]
-    val candidates = MemoryStream[Ev]
-    val joined = graft.streaming.Stateful
-      .followUpsStream(anchors.toDF(), candidates.toDF(), 3600)
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("stream_followups")
-      .option("checkpointLocation", tmpDir())
-      .start()
-    try {
-      // user 0: anchor at 01:00; candidates at 01:30 (in window) and 03:00 (outside)
-      anchors.addData(ev(25, 1, 0, 1.0))
-      candidates.addData(ev(50, 1, 30, 2.0), ev(75, 3, 0, 3.0))
-      q.processAllAvailable()
-      val out = spark.table("stream_followups").collect()
-      assert(out.length == 1, s"expected 1 follow-up pair, got ${out.length}")
-      assert(out.head.getAs[Long]("event_a") == 25 && out.head.getAs[Long]("event_b") == 50)
-      assert(out.head.getAs[Long]("gap_seconds") == 1800)
-
-      // batch twin agrees on the same rows
-      val batchRows = graft.engine.Joins
-        .followUpsWithin(
-          Seq(ev(25, 1, 0, 1.0), ev(50, 1, 30, 2.0), ev(75, 3, 0, 3.0)).toDF(), 3600)
-        .collect()
-      assert(batchRows.map(r => (r.getAs[Long]("event_a"), r.getAs[Long]("event_b"))).toSet ==
-        out.map(r => (r.getAs[Long]("event_a"), r.getAs[Long]("event_b"))).toSet)
     } finally q.stop()
   }
 
@@ -273,55 +240,6 @@ class StreamingSpec extends AnyFunSuite with TimeLimits {
     assert(sink.rowsFor("cat").size == 3)
   }
 
-  test("streaming ingest screen: micro-batches probe the pinned corpus dedup index") {
-    // The production ingest-dedup loop: each arriving micro-batch computes
-    // its own MinHash signatures inline and probes the CORPUS's pinned
-    // band index via foreachBatch — verdicts must equal the batch twin,
-    // exact copies must attribute at est_jaccard = 1.0, novel text must
-    // be admitted.
-    val corpus = graft.engine.Tables.documents(spark, sfDir)
-    val copies = corpus.select("doc_id", "text").orderBy("doc_id").limit(3).collect()
-      .map(r => DocRow(r.getLong(0) + 1000000L, r.getString(1)))
-    val novel = DocRow(9999999L, "utterly novel zxqv text stream never in corpus qwpo")
-    val arriving = copies :+ novel
-    val input = MemoryStream[DocRow]
-    val got = scala.collection.mutable.Map.empty[Long, (Option[Long], Boolean)]
-    val q = input.toDF().writeStream
-      .option("checkpointLocation", tmpDir())
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.text.Dedup.screenAgainst(b, corpus).collect().foreach { r =>
-          got.synchronized {
-            got(r.getAs[Long]("new_doc")) = (
-              if (r.isNullAt(r.fieldIndex("corpus_doc"))) None
-              else Some(r.getAs[Long]("corpus_doc")),
-              r.getAs[Boolean]("admitted"))
-          }
-        }
-      }
-      .start()
-    try {
-      input.addData(arriving.take(2): _*)
-      q.processAllAvailable()
-      input.addData(arriving.drop(2): _*) // second micro-batch
-      q.processAllAvailable()
-    } finally q.stop()
-    val twin = graft.text.Dedup
-      .screenAgainst(arriving.toSeq.toDF(), corpus)
-      .collect()
-      .map { r =>
-        r.getAs[Long]("new_doc") -> (
-          if (r.isNullAt(r.fieldIndex("corpus_doc"))) None
-          else Some(r.getAs[Long]("corpus_doc")),
-          r.getAs[Boolean]("admitted"))
-      }.toMap
-    assert(got.toMap == twin, "streamed verdicts must equal the batch twin")
-    copies.foreach { c =>
-      val (m, admitted) = got(c.doc_id)
-      assert(!admitted && m.isDefined, s"exact copy ${c.doc_id} must attribute to the corpus")
-    }
-    assert(got(novel.doc_id) == (None, true), "novel text must be admitted")
-  }
-
   test("batch stages run unchanged on a stream: stratified sample matches its batch twin") {
     // The engine contract: operators are pure DataFrame => DataFrame
     // stages, so a map-side stage (deterministic hash sampling here)
@@ -347,45 +265,6 @@ class StreamingSpec extends AnyFunSuite with TimeLimits {
         .stratifiedHashSample(events.toDF(), strata, 1, 20)
         .collect().map(_.getAs[Long]("event_id")).sorted
       assert(streamed.nonEmpty && streamed.toSeq == batch.toSeq)
-    } finally q.stop()
-  }
-
-  test("ohlcBarsWindowed streams in append mode and matches the batch ohlcBars exactly") {
-    // OHLC resampling unifies batch/stream because the group key is a
-    // time window: with a watermark, append emits each finalized bar
-    // once, and the min_by/max_by boundary picks are identical to the
-    // batch twin's (one late-ish probe included to exercise ordering).
-    val input = MemoryStream[Ev]
-    val bars = graft.engine.Analytics
-      .ohlcBarsWindowed(input.toDF().withWatermark("ts", "60 minutes"))
-    val q = bars.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName("stream_ohlc")
-      .option("checkpointLocation", tmpDir())
-      .start()
-    try {
-      input.addData(
-        ev(1, 0, 5, 10.0), ev(2, 0, 20, 50.0), ev(3, 0, 40, 3.0),
-        ev(4, 0, 55, 30.0))
-      q.processAllAvailable()
-      input.addData(ev(5, 0, 50, 99.0)) // late within the hour, pre-finalization
-      q.processAllAvailable()
-      input.addData(ev(6, 3, 0, 7.0)) // watermark passes hour 0 → bar finalizes
-      q.processAllAvailable()
-      val streamed = spark.table("stream_ohlc").collect()
-        .map(r => (r.getAs[Long]("hour_epoch"), r.getAs[Double]("open"), r.getAs[Double]("high"),
-          r.getAs[Double]("low"), r.getAs[Double]("close"), r.getAs[Long]("volume")))
-      val all = Seq(
-        ev(1, 0, 5, 10.0), ev(2, 0, 20, 50.0), ev(3, 0, 40, 3.0),
-        ev(4, 0, 55, 30.0), ev(5, 0, 50, 99.0), ev(6, 3, 0, 7.0))
-      val batchHour0 = graft.engine.Analytics.ohlcBars(all.toDF())
-        .filter(org.apache.spark.sql.functions.col("hour_epoch") % 24 === 0)
-        .collect()
-        .map(r => (r.getAs[Long]("hour_epoch"), r.getAs[Double]("open"), r.getAs[Double]("high"),
-          r.getAs[Double]("low"), r.getAs[Double]("close"), r.getAs[Long]("volume")))
-      assert(streamed.toSeq == batchHour0.toSeq)
-      assert(streamed.head._2 == 10.0 && streamed.head._5 == 30.0, "open/close pick boundary events")
     } finally q.stop()
   }
 

@@ -20,11 +20,15 @@ import org.apache.spark.sql.expressions.Aggregator
   * pinned contract in `q_spacesaving` (overestimate ≤ 2n/k, every key
   * with f > 4n/k tracked) holds at ANY parallelism — the booleans, not
   * the raw counters, are the deterministic output surface.
+  *
+  * The query reports that contract from exact counts; this sketch is the
+  * reference model `SpaceSavingSketchSpec` and `SiegelOaxacaSsSpec` hold
+  * the query's row to, at the query's own capacity.
   */
 object SpaceSavingAggregator
     extends Aggregator[String, SpaceSavingBuffer, SpaceSavingBuffer] {
 
-  val Capacity = 64
+  val Capacity: Int = graft.text.TextAnalysis.SpaceSavingCapacity
 
   override def zero: SpaceSavingBuffer = SpaceSavingBuffer(Map.empty, Map.empty, 0L)
 
